@@ -35,7 +35,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from trx_spark.session import get_spark  # noqa: E402
+from trx_spark.session import get_spark, local_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -711,7 +711,7 @@ def main() -> None:
     try:
         from trx_spark import cache as cache_mod
 
-        detail["memo_builds"] = cache_mod.MEMO_BUILDS
+        detail["memo_builds"] = list(cache_mod.MEMO_BUILDS)
     except Exception:
         pass
     # cpus in the artifact + a cpus-tagged copy that is never
@@ -719,8 +719,7 @@ def main() -> None:
     # scaling.per_query can join the 32-core and low-core details
     # (r13 verdict task 1).  BENCH_DETAIL.json stays the canonical
     # latest-run artifact for backward compatibility.
-    n_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    detail["cpus"] = int(n_cpus) if str(n_cpus).isdigit() else None
+    detail["cpus"] = local_cpus()
     out["cpus"] = detail["cpus"]
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(repo_dir, "BENCH_DETAIL.json")

@@ -53,8 +53,14 @@ REF_PATTERNS = [
 ]
 
 
-@pytest.mark.parametrize("ref_idx", REF_PATTERNS)
-def test_interp_references_matches_numpy(spark, ref_idx):
+@pytest.mark.parametrize(
+    "ref_idx, group",
+    [pytest.param(*p.values, ["run"], id=p.id) for p in REF_PATTERNS]
+    + [pytest.param(*p.values, None, id=f"{p.id}-keyless") for p in REF_PATTERNS],
+)
+def test_interp_references_matches_numpy(spark, ref_idx, group):
+    """Both window shapes: partitioned by the run key, and the key-less
+    ordered global spec (the single-run call shape)."""
     n = 14
     rng = np.random.default_rng(7)
     vals = np.round(rng.uniform(10, 100, n), 2)
@@ -66,7 +72,7 @@ def test_interp_references_matches_numpy(spark, ref_idx):
     )
     df = spark.createDataFrame(pdf)
     out = (
-        interp_references(df, group=["run"], idx="idx", is_ref="is_ref", value="i")
+        interp_references(df, group=group, idx="idx", is_ref="is_ref", value="i")
         .orderBy("idx")
         .toPandas()
     )
@@ -76,10 +82,11 @@ def test_interp_references_matches_numpy(spark, ref_idx):
 
 def test_interp_references_multiple_groups(spark):
     """Groups interpolate independently (the 100 TB layout: one window
-    partition per run)."""
+    partition per run); a NULL run key is a group of its own, as
+    ``groupBy`` places it."""
     rng = np.random.default_rng(11)
     frames = []
-    patterns = {"a": [0, 5, 9], "b": [3], "c": [1, 8]}
+    patterns = {"a": [0, 5, 9], "b": [3], "c": [1, 8], None: [2, 4, 7]}
     n = 10
     for run, refs in patterns.items():
         vals = np.round(rng.uniform(1, 50, n), 2)
@@ -92,8 +99,8 @@ def test_interp_references_multiple_groups(spark):
     df = spark.createDataFrame(pdf)
     out = interp_references(df, group=["run"], idx="idx", is_ref="is_ref", value="i").toPandas()
     for run, refs in patterns.items():
-        sub = out[out.run == run].sort_values("idx")
-        vals = pdf[pdf.run == run].sort_values("idx")["i"].to_numpy()
+        sub = (out[out.run.isna()] if run is None else out[out.run == run]).sort_values("idx")
+        vals = sub["i"].to_numpy()
         expected = interp_refs_numpy(vals, np.array(refs))
         np.testing.assert_allclose(sub["iref"].to_numpy(), expected, rtol=1e-12, atol=0)
 

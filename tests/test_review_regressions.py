@@ -41,6 +41,28 @@ def test_diffs_plus_ref_keeps_refless_groups(spark):
     assert out["b"][0] is None and out["b"][1] is None
 
 
+def test_interp_references_null_valued_ref_keeps_its_rung(spark):
+    """A reference shot whose value is NULL is still the first rung of
+    the ladder: the shots before it clamp to it (NULL), not to the next
+    ref with a value."""
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "run": ["a"] * 5,
+                "idx": [0, 1, 2, 3, 4],
+                "is_ref": [False, True, False, True, False],
+                "i": [1.0, None, 5.0, 7.0, 9.0],
+            }
+        )
+    )
+    out = {
+        r["idx"]: r["iref"]
+        for r in reduction.interp_references(df, group=["run"]).collect()
+    }
+    assert out[0] is None
+    assert out[4] == 7.0  # after the last ref: its value
+
+
 def test_average_scan_points_keeps_null_group_keys(spark):
     """Shots whose group key is NULL form their own group (as groupBy
     does) — the totals join back must be null-safe, not drop them."""

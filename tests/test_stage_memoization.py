@@ -70,3 +70,25 @@ def test_every_memo_dict_is_registered():
                     if id(val) not in registered:
                         missing.append(f"{mod.__name__}.{name}")
     assert not missing, f"memo dicts not in cache._all_caches(): {missing}"
+
+
+def test_memo_build_log_is_bounded():
+    """A long-lived session keeps only the last MEMO_BUILDS_KEPT build
+    stamps, oldest dropped first; the bench still serializes a list."""
+    import json
+
+    from trx_spark import cache
+
+    saved = list(cache.MEMO_BUILDS)
+    n = cache.MEMO_BUILDS_KEPT
+    try:
+        t0 = cache.build_start()
+        for k in range(n + 5):
+            cache.build_done(f"memo_{k}", t0)
+        assert len(cache.MEMO_BUILDS) == n
+        assert cache.MEMO_BUILDS[0]["name"] == "memo_5"
+        assert cache.MEMO_BUILDS[-1]["name"] == f"memo_{n + 4}"
+        assert len(json.loads(json.dumps(list(cache.MEMO_BUILDS)))) == n
+    finally:
+        cache.MEMO_BUILDS.clear()
+        cache.MEMO_BUILDS.extend(saved)

@@ -14,6 +14,7 @@ datasets in a long-running service.
 from __future__ import annotations
 
 import time
+from collections import deque
 from contextlib import contextmanager
 
 # Build-time telemetry for the shared-stage memos (r12/r13 verdict
@@ -22,8 +23,11 @@ from contextlib import contextmanager
 # bench sets ``CURRENT_CONSUMER`` to the query paying for the build,
 # so amortized numbers decompose into build vs ride from the artifact
 # alone.  Zero overhead outside the build branch (two perf_counter
-# calls per memo construction).
-MEMO_BUILDS: list[dict] = []
+# calls per memo construction).  Only the last ``MEMO_BUILDS_KEPT``
+# stamps are kept, so a long-lived session's log stays bounded (a
+# bench run's full amortized + cold sweep stamps a few hundred).
+MEMO_BUILDS_KEPT = 1024
+MEMO_BUILDS: deque[dict] = deque(maxlen=MEMO_BUILDS_KEPT)
 CURRENT_CONSUMER: str | None = None
 
 

@@ -145,8 +145,8 @@ def chi2_filter(
         else:
             out = chi2_df.crossJoin(F.broadcast(thr))
         return out.withColumn(flag_out, F.col(chi2) > F.col("chi2_threshold"))
-    return chi2_df.withColumn("chi2_threshold", F.lit(threshold)).withColumn(
-        flag_out, F.col(chi2) > F.lit(threshold)
+    return chi2_df.withColumns(
+        {"chi2_threshold": F.lit(threshold), flag_out: F.col(chi2) > F.lit(threshold)}
     )
 
 

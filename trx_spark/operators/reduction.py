@@ -21,15 +21,19 @@ Semantics mirror the reference implementation exactly
   the mean divides by sqrt of the **full** per-scan-point row count
   (dataReduction.py:196).
 
-Spark-first design: everything is window functions + one broadcast join of
-tiny per-group reference summaries — no UDFs, fully codegen-able, and the
-only shuffles are the window partitioning on the group key (at 100 TB:
-partition by run; each run's shots are one window partition).
+Spark-first design: everything is window functions over the group-key
+partitions — no UDFs, fully codegen-able, and the only shuffle of the shot
+table is the window partitioning on the group key (at 100 TB: partition by
+run; each run's shots are one window partition). Per-group quantities (the
+reference ladder's edges, the per-grain reference totals) are full-frame
+columns of those same partitions, never a summary aggregated apart and
+joined back: such a join re-runs the shot table's whole upstream plan
+(scan, log join, acquisition index) once per summary. The one add-back
+join left is :func:`diffs_plus_ref`'s, onto the already-aggregated scan
+points.
 """
 
 from __future__ import annotations
-
-import functools
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -49,12 +53,11 @@ def interp_references(
     ``df`` must have one row per (group, idx) with a boolean ``is_ref``
     column; ``idx`` orders acquisition within each group. Adds ``out``.
 
-    cf. trx/dataReduction.py:15-85 (numpy loop → two window frames + a
-    broadcast join of per-group reference edge summaries).
+    cf. trx/dataReduction.py:15-85 (numpy loop → window frames over one
+    forward and one reversed acquisition order per group).
     """
     group = group or []
     w = Window.partitionBy(*group).orderBy(idx) if group else Window.orderBy(idx)
-    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
     # "next ref" via the REVERSED ordering with the same cumulative
     # self-excluding frame: Spark evaluates last(...ignorenulls) over
     # (unboundedPreceding, -1) incrementally in O(n), whereas a
@@ -65,48 +68,40 @@ def interp_references(
         if group
         else Window.orderBy(F.col(idx).desc())
     )
+    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
     w_next = w_rev.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    w_rev_all = w_rev.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
 
     ref_idx = F.when(F.col(is_ref), F.col(idx))
     ref_val = F.when(F.col(is_ref), F.col(value))
+    ref_int = F.when(F.col(is_ref), F.lit(1)).otherwise(F.lit(0))
+    # the ladder's edges: nth_value skips NULLs, so each ref's value rides
+    # in a never-NULL struct — a ref whose value is NULL still holds its
+    # rung (as row_number over the refs would count it)
+    ref_cell = F.when(F.col(is_ref), F.struct(F.col(value).alias("v")))
+
+    def nth_ref(n: int, spec) -> Column:
+        return F.nth_value(ref_cell, n, ignoreNulls=True).over(spec)["v"]
 
     # Self-excluding frames give, for ref rows, the *neighbouring* refs —
     # and for non-ref rows the same prev/next refs a (-inf, 0] frame would.
-    with_neighbors = (
-        df.withColumn("_prev_ref_idx", F.last(ref_idx, ignorenulls=True).over(w_prev))
-        .withColumn("_prev_ref_val", F.last(ref_val, ignorenulls=True).over(w_prev))
-        .withColumn("_next_ref_idx", F.last(ref_idx, ignorenulls=True).over(w_next))
-        .withColumn("_next_ref_val", F.last(ref_val, ignorenulls=True).over(w_next))
-        .withColumn(
-            "_ref_rank",
-            F.sum(F.when(F.col(is_ref), F.lit(1)).otherwise(F.lit(0))).over(
-                w.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
-    )
-
-    # Tiny per-group summary of the reference ladder's edges (≤1 row/group,
-    # broadcast back — no extra shuffle of the big side).
-    refs = df.filter(F.col(is_ref))
-    rw = Window.partitionBy(*group).orderBy(idx) if group else Window.orderBy(idx)
-    ref_edges = (
-        refs.withColumn("_rn", F.row_number().over(rw))
-        .withColumn("_n", F.count(F.lit(1)).over(rw.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .groupBy(*group)
-        .agg(
-            F.max("_n").alias("_n_refs"),
-            F.max(F.when(F.col("_rn") == 1, F.col(value))).alias("_first_ref_val"),
-            F.max(F.when(F.col("_rn") == 2, F.col(value))).alias("_second_ref_val"),
-            F.max(F.when(F.col("_rn") == F.col("_n"), F.col(value))).alias("_last_ref_val"),
-            F.max(F.when(F.col("_rn") == F.col("_n") - 1, F.col(value))).alias("_secondlast_ref_val"),
-        )
-    )
-
-    joined = (
-        with_neighbors.join(F.broadcast(ref_edges), on=group, how="left")
-        if group
-        else with_neighbors.crossJoin(F.broadcast(ref_edges))
-    )
+    # Every column rides the two specs (forward and reversed) over the
+    # same group partitions: one Window operator per spec, one shuffle,
+    # no sub-plan joined back.
+    nb = {
+        "_prev_ref_idx": F.last(ref_idx, ignorenulls=True).over(w_prev),
+        "_prev_ref_val": F.last(ref_val, ignorenulls=True).over(w_prev),
+        "_next_ref_idx": F.last(ref_idx, ignorenulls=True).over(w_next),
+        "_next_ref_val": F.last(ref_val, ignorenulls=True).over(w_next),
+        # refs up to and including self → a ref row's own rank
+        "_ref_rank": F.sum(ref_int).over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        "_n_refs": F.sum(ref_int).over(w_all),
+        "_first_ref_val": nth_ref(1, w_all),
+        "_second_ref_val": nth_ref(2, w_all),
+        "_last_ref_val": nth_ref(1, w_rev_all),
+        "_secondlast_ref_val": nth_ref(2, w_rev_all),
+    }
 
     # slope-first form matches the reference's fp evaluation order
     # (dataReduction.py:58-59: slope = Δref/Δidx; ref_before + slope·Δ).
@@ -119,7 +114,6 @@ def interp_references(
         F.when(F.col("_n_refs") == 1, F.col("_first_ref_val"))
         .when(
             F.col(is_ref),
-            # _ref_rank counts refs up to and including self → self's rank.
             F.when(F.col("_ref_rank") == 1, F.col("_second_ref_val"))
             .when(F.col("_ref_rank") == F.col("_n_refs"), F.col("_secondlast_ref_val"))
             .when(F.col("_ref_rank") == F.col("_n_refs") - 1, F.col(value))
@@ -129,20 +123,7 @@ def interp_references(
         .when(F.col("_next_ref_idx").isNull(), F.col("_last_ref_val"))
         .otherwise(interp)
     )
-
-    drop = [
-        "_prev_ref_idx",
-        "_prev_ref_val",
-        "_next_ref_idx",
-        "_next_ref_val",
-        "_ref_rank",
-        "_n_refs",
-        "_first_ref_val",
-        "_second_ref_val",
-        "_last_ref_val",
-        "_secondlast_ref_val",
-    ]
-    return joined.withColumn(out, iref).drop(*drop)
+    return df.withColumns(nb).withColumn(out, iref).drop(*nb)
 
 
 def time_resolved_diff(
@@ -160,11 +141,11 @@ def time_resolved_diff(
 
     cf. trx/dataReduction.py:144-157 (useRatio / lpower branches).
     """
-    res = interp_references(df, group=group, idx=idx, is_ref=is_ref, value=value, out="_iref")
-    diff: Column = (F.col(value) / F.col("_iref")) if use_ratio else (F.col(value) - F.col("_iref"))
+    res = interp_references(df, group=group, idx=idx, is_ref=is_ref, value=value, out="iref")
+    diff: Column = (F.col(value) / F.col("iref")) if use_ratio else (F.col(value) - F.col("iref"))
     if lpower is not None:
         diff = ((diff - 1) / F.col(lpower) + 1) if use_ratio else (diff / F.col(lpower))
-    return res.withColumn(out, diff).withColumnRenamed("_iref", "iref")
+    return res.withColumn(out, diff)
 
 
 def _mark_subsample(
@@ -175,7 +156,7 @@ def _mark_subsample(
     idx: str,
     is_ref: str,
 ) -> DataFrame:
-    """Row numbers + the every-second-reference use flag (W2).
+    """The every-second-reference use flag ``_use`` (W2).
 
     The reference subsamples a scan point only when its shot set IS the
     entire reference set — ``np.all(shot_idx == isRef)``
@@ -185,43 +166,26 @@ def _mark_subsample(
     alone is not enough: if references ever spanned two scan values,
     neither scan point would equal the full reference set and the
     reference subsamples neither. The second condition needs the
-    per-grain total ref count — a tiny agg broadcast back, not a global
-    window."""
+    per-grain total ref count: a window over ``ref_keys``, whose
+    partitions contain the scan point's (``ref_keys`` ⊆ ``keys``), so it
+    rides the same shuffle. A window groups NULL keys together exactly
+    as ``groupBy`` does. With no ``ref_keys`` the total is a scalar
+    aggregate broadcast back, never a key-less window."""
     w_scan = Window.partitionBy(*keys).orderBy(idx)
     w_full = Window.partitionBy(*keys).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     ref_int = F.col(is_ref).cast("int")
-    totals = (
-        df.groupBy(*ref_keys).agg(F.sum(ref_int).alias("_grp_refs"))
-        if ref_keys
-        else df.agg(F.sum(ref_int).alias("_grp_refs"))
-    )
     if ref_keys:
-        # NULL-SAFE equi-join: groupBy above places NULL-keyed rows in
-        # their own group, so the join back must match them too (a
-        # plain equi-join silently drops every shot whose group key is
-        # NULL — e.g. a log row with a missing extra_group value)
-        t = totals
-        for k in ref_keys:
-            t = t.withColumnRenamed(k, f"_t_{k}")
-        cond = functools.reduce(
-            lambda a, b: a & b,
-            [F.col(k).eqNullSafe(F.col(f"_t_{k}")) for k in ref_keys],
-        )
-        joined = df.join(F.broadcast(t), cond).drop(*[f"_t_{k}" for k in ref_keys])
+        marked, grp_refs = df, F.sum(ref_int).over(Window.partitionBy(*ref_keys))
     else:
-        joined = df.crossJoin(F.broadcast(totals))
-    return (
-        joined.withColumn("_rn", F.row_number().over(w_scan))
-        .withColumn(
-            "_all_ref",
-            F.min(ref_int).over(w_full).cast("boolean")
-            & (F.sum(ref_int).over(w_full) == F.col("_grp_refs")),
-        )
-        .withColumn("_use", (~F.col("_all_ref")) | (F.col("_rn") % 2 == 1))
-        .drop("_grp_refs")
+        marked = df.crossJoin(F.broadcast(df.agg(F.sum(ref_int).alias("_grp_refs"))))
+        grp_refs = F.col("_grp_refs")
+    all_ref = F.min(ref_int).over(w_full).cast("boolean") & (
+        F.sum(ref_int).over(w_full) == grp_refs
     )
+    use = (~all_ref) | (F.row_number().over(w_scan) % 2 == 1)
+    return marked.withColumn("_use", use).drop("_grp_refs")
 
 
 def average_scan_points(
@@ -290,15 +254,13 @@ def average_scan_points(
     )
     zmax = (F.col("_dmax") - m) / noise
     zmin = (F.col("_dmin") - m) / noise
-    return (
-        agg.withColumn("err_of_mean", noise / F.sqrt(F.col("n_shots")))
-        .withColumn(
-            "mean_chi2_0",
-            ((ss / (noise * noise)) / nq) / F.col("n_used").cast("double"),
-        )
-        .withColumn("max_chi2_0", F.greatest(zmax * zmax, zmin * zmin) / nq)
-        .drop("_s1", "_s2", "_dmax", "_dmin")
-    )
+    return agg.withColumns(
+        {
+            "err_of_mean": noise / F.sqrt(F.col("n_shots")),
+            "mean_chi2_0": ((ss / (noise * noise)) / nq) / F.col("n_used").cast("double"),
+            "max_chi2_0": F.greatest(zmax * zmax, zmin * zmin) / nq,
+        }
+    ).drop("_s1", "_s2", "_dmax", "_dmin")
 
 
 def ref_average(
@@ -341,7 +303,11 @@ def diffs_plus_ref(
     ``scan_points`` is the per-(group, scan) output of
     :func:`average_scan_points`; ``shots`` is the per-shot table the
     reference average is computed from. The ref average is ≤1 row per
-    group → broadcast join, no reshuffle of either side."""
+    group → broadcast join onto the scan points, no reshuffle of either
+    side. Its branch reads ``shots`` a second time; when ``shots`` comes
+    out of a window stage (as in ``pipeline.data_reduction``), adaptive
+    execution reuses that stage's shuffle output for it, so the source
+    is scanned once."""
     group = group or []
     ref = ref_average(
         shots, group=group, is_ref=is_ref, value=value, out="ref_avg", exact=exact
@@ -395,17 +361,17 @@ def chi2_0_per_shot(
     noise = F.sqrt(F.greatest((s2 - s1 * s1 / n) / n, F.lit(0.0)))
     used = F.when(F.col("_use"), d)
     mean_used = wsum(used) / F.count(used).over(w_full)
-    enriched = enriched.withColumn("_noise", noise).withColumn("_mean_used", mean_used)
+    enriched = enriched.withColumns({"_noise": noise, "_mean_used": mean_used})
     z = (d - F.col("_mean_used")) / F.col("_noise")
     # z·z, not pow(z,2): pow is not guaranteed correctly rounded across
     # engines; multiplication is.
     chi2 = F.when(F.col("_use"), z * z / n_q)
     return (
-        enriched.withColumn("chi2_0", chi2)
-        .withColumn("noise", F.col("_noise"))
-        .withColumn("mean_diff", F.col("_mean_used"))
+        enriched.withColumns(
+            {"chi2_0": chi2, "noise": F.col("_noise"), "mean_diff": F.col("_mean_used")}
+        )
         .withColumnRenamed("_use", "used_in_avg")
-        .drop("_rn", "_noise", "_all_ref", "_mean_used")
+        .drop("_noise", "_mean_used")
     )
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from trx_spark.operators import azav, filters, reduction
@@ -128,9 +128,14 @@ def data_reduction(
 
     Scale note: with no ``extra_group`` the acquisition-order window is
     global — the reference's "one folder = one run" call shape, fine at
-    per-run size. For a multi-run batch ALWAYS pass the run key in
-    ``cfg.extra_group``; every window then partitions by it (the gate
-    queries exercise exactly that shape with a 16-shard run key).
+    per-run size; the reference pick rides that same window's full frame,
+    so the joined frame is read once. For a multi-run batch ALWAYS pass
+    the run key in ``cfg.extra_group``; every window then partitions by
+    it (the gate queries exercise exactly that shape with a 16-shard run
+    key). Every per-group quantity downstream (reference ladder edges,
+    per-grain ref totals) is a window over the (group, q) partitions the
+    interpolation already shuffled to — no summary is aggregated apart
+    and joined back, which would re-run the whole upstream plan.
     """
     # Multi-run batches: per-run file names COLLIDE (img_0001 exists in
     # every run), so any extra_group key present on BOTH sides joins the
@@ -146,51 +151,37 @@ def data_reduction(
     joined = curves.join(log, on=join_key, how="inner")
     # per-image acquisition index from the file ordering (O1: the sorted
     # file list defines acquisition order, trx/utils/files.py:16)
-    from pyspark.sql import Window
-
     w = Window.partitionBy(*group).orderBy(file) if group else Window.orderBy(file)
-    joined = joined.withColumn("_idx", F.dense_rank().over(w))
+    if cfg.reference in ("min", "max"):
+        # 'min' picks scan.min() (dataReduction.py:223-224); with the id9
+        # convention laser-off rows carry -10.0 (id9.py:64), the minimum.
+        # The extremum is the same window's full frame: it rides the _idx
+        # partitions instead of a second pass over the joined frame.
+        agg_fn = F.min if cfg.reference == "min" else F.max
+        ref_delay = agg_fn(F.col(delay)).over(
+            w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        is_ref = F.col(delay) == ref_delay
+    else:
+        # float: isclose(scan, reference, atol=1e-12) → round-12 equality
+        # (dataReduction.py:227-228 + the id9 rounding at id9.py:55)
+        is_ref = F.round(F.col(delay), 12) == F.round(F.lit(float(cfg.reference)), 12)
+    shots = joined.withColumns({"_idx": F.dense_rank().over(w), "is_ref": is_ref})
 
     if cfg.q_norm_window is not None:
         # the monitor window partitions by [group, file] — file alone
         # would pool colliding per-run file names into one median — and
         # the err column rescales with the data (dataReduction.py:240)
-        joined = azav.monitor_normalize(
-            joined,
+        shots = azav.monitor_normalize(
+            shots,
             image=[*group, file],
             q="q",
             intensity="i",
-            err="err" if "err" in joined.columns else None,
+            err="err" if "err" in shots.columns else None,
             q_window=cfg.q_norm_window,
             use_median=True,
         )
 
-    if cfg.reference in ("min", "max"):
-        # 'min' picks scan.min() (dataReduction.py:223-224); with the id9
-        # convention laser-off rows carry -10.0 (id9.py:64), the minimum.
-        agg_fn = F.min if cfg.reference == "min" else F.max
-        if group:
-            w_all = Window.partitionBy(*group)
-            shots = joined.withColumn(
-                "is_ref", F.col(delay) == agg_fn(F.col(delay)).over(w_all)
-            )
-        else:
-            # Global extremum as a scalar AGGREGATE broadcast back
-            # (the global_mad_scalars pattern) — a constant-partition
-            # window would funnel every row through one task.
-            ref_val = joined.agg(agg_fn(F.col(delay)).alias("_ref_delay"))
-            shots = (
-                joined.crossJoin(F.broadcast(ref_val))
-                .withColumn("is_ref", F.col(delay) == F.col("_ref_delay"))
-                .drop("_ref_delay")
-            )
-    else:
-        # float: isclose(scan, reference, atol=1e-12) → round-12 equality
-        # (dataReduction.py:227-228 + the id9 rounding at id9.py:55)
-        shots = joined.withColumn(
-            "is_ref",
-            F.round(F.col(delay), 12) == F.round(F.lit(float(cfg.reference)), 12),
-        )
     q_group = [*group, "q_bin"] if "q_bin" in shots.columns else group
     shots = reduction.time_resolved_diff(
         shots,
@@ -218,9 +209,9 @@ def data_reduction(
                 shot_scores, chi2="chi2_0", threshold=thr, group=group
             )
         else:
-            shot_scores = shot_scores.withColumn(
-                "chi2_threshold", F.lit(None).cast("double")
-            ).withColumn("chi2_excluded", F.lit(False))
+            shot_scores = shot_scores.withColumns(
+                {"chi2_threshold": F.lit(None).cast("double"), "chi2_excluded": F.lit(False)}
+            )
         # one row per shot, joined back onto the exploded (shot, q) rows
         # (keyed by the full [group, shot, scan] grain — shot ids are only
         # unique within a run); shots subsampled away by the every-second-ref

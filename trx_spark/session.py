@@ -9,8 +9,25 @@ partitions) is what we would ship to a 1000-executor cluster — only
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+
+def local_cpus() -> int:
+    """Core count for ``local[...]`` from ``$SPARK_GRAFT_CPUS`` (32 when
+    unset). A value that is not a positive integer warns and falls back
+    to this host's ``os.cpu_count()`` — it never reaches a master URL or
+    a per-core-count artifact name."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32").strip()
+    if raw.isdigit() and int(raw) > 0:
+        return int(raw)
+    fallback = os.cpu_count() or 1
+    warnings.warn(
+        f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer; using {fallback}",
+        stacklevel=2,
+    )
+    return fallback
 
 
 def get_spark(app_name: str = "trx_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -28,9 +45,9 @@ def get_spark(app_name: str = "trx_spark", shuffle_partitions: int | None = None
       cluster this is overridden to ~2-3x total cores (or left to AQE's
       ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
+        shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
