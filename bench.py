@@ -712,6 +712,13 @@ def main() -> None:
         from trx_spark import cache as cache_mod
 
         detail["memo_builds"] = list(cache_mod.MEMO_BUILDS)
+        if len(cache_mod.MEMO_BUILDS) == cache_mod.MEMO_BUILDS_KEPT:
+            print(
+                f"WARNING: memo_builds is at its cap of "
+                f"{cache_mod.MEMO_BUILDS_KEPT} stamps — the oldest "
+                "(amortized-pass) stamps may have been dropped",
+                file=sys.stderr,
+            )
     except Exception:
         pass
     # cpus in the artifact + a cpus-tagged copy that is never

@@ -34,11 +34,15 @@ LOG_HEADER = (
 
 # doFolder_dataRed(...)["scan"]: the log's slice shuffle and broadcast,
 # the acquisition-index shuffle, the reference-average add-back and the
-# result. The bank is scanned by the shot table and by the add-back's
-# branch; every further per-group summary joined back would add a bank
-# scan, a log scan and their jobs.
+# result. The physical plan scans the bank twice: for the shot table and
+# for the add-back's branch. With adaptive execution on, the executed
+# plan reuses the shot table's acquisition-index shuffle for the
+# add-back (a ReusedExchange), so the bank is read once. Every further
+# per-group summary joined back would add a bank scan, a log scan and
+# their jobs.
 REDUCTION_MAX_JOBS = 6
 REDUCTION_MAX_BANK_SCANS = 2
+REDUCTION_MAX_EXECUTED_BANK_SCANS = 1
 
 
 def _bank_and_log(spark, tmp_path):
@@ -90,4 +94,13 @@ def test_doFolder_dataRed_scan_job_budget(spark, tmp_path):
     scans = plan.count("Scan parquet")
     assert scans <= REDUCTION_MAX_BANK_SCANS, f"{scans} bank scans\n{plan[:3000]}"
     # the budget counts a real reduction, not an empty one
-    assert scan.count() == 4 * 5  # 4 delays (off + 3 pumped) x nQ
+    assert len(scan.collect()) == 4 * 5  # 4 delays (off + 3 pumped) x nQ
+    # the collect ran this frame's own adaptive plan to its final form
+    final = scan._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final, final[:3000]
+    final = final.split("== Initial Plan ==")[0]
+    assert "ReusedExchange" in final, final
+    executed_scans = final.count("Scan parquet")
+    assert executed_scans <= REDUCTION_MAX_EXECUTED_BANK_SCANS, (
+        f"{executed_scans} executed bank scans\n{final}"
+    )

@@ -100,7 +100,7 @@ def test_interp_references_multiple_groups(spark):
     out = interp_references(df, group=["run"], idx="idx", is_ref="is_ref", value="i").toPandas()
     for run, refs in patterns.items():
         sub = (out[out.run.isna()] if run is None else out[out.run == run]).sort_values("idx")
-        vals = sub["i"].to_numpy()
+        vals = (pdf[pdf.run.isna()] if run is None else pdf[pdf.run == run]).sort_values("idx")["i"].to_numpy()
         expected = interp_refs_numpy(vals, np.array(refs))
         np.testing.assert_allclose(sub["iref"].to_numpy(), expected, rtol=1e-12, atol=0)
 

@@ -24,8 +24,11 @@ from contextlib import contextmanager
 # so amortized numbers decompose into build vs ride from the artifact
 # alone.  Zero overhead outside the build branch (two perf_counter
 # calls per memo construction).  Only the last ``MEMO_BUILDS_KEPT``
-# stamps are kept, so a long-lived session's log stays bounded (a
-# bench run's full amortized + cold sweep stamps a few hundred).
+# stamps are kept, so a long-lived session's log stays bounded.  A
+# full ``bench.py`` run at sf0.1 stamps 236 builds (38 in the amortized
+# pass, 197 in the cold pass, 1 with no payer; the steady pass builds
+# none), so the cap leaves a 4x margin; ``bench.py`` warns when the log
+# reaches it.
 MEMO_BUILDS_KEPT = 1024
 MEMO_BUILDS: deque[dict] = deque(maxlen=MEMO_BUILDS_KEPT)
 CURRENT_CONSUMER: str | None = None

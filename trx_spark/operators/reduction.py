@@ -304,10 +304,11 @@ def diffs_plus_ref(
     :func:`average_scan_points`; ``shots`` is the per-shot table the
     reference average is computed from. The ref average is ≤1 row per
     group → broadcast join onto the scan points, no reshuffle of either
-    side. Its branch reads ``shots`` a second time; when ``shots`` comes
-    out of a window stage (as in ``pipeline.data_reduction``), adaptive
-    execution reuses that stage's shuffle output for it, so the source
-    is scanned once."""
+    side. Its branch reads ``shots`` a second time, so the physical plan
+    lists the source twice. When ``shots`` comes out of a window stage
+    (as in ``pipeline.data_reduction``) and adaptive execution is on,
+    the executed plan shows a ReusedExchange of that stage's shuffle for
+    this branch (pinned in ``tests/test_job_budget.py``)."""
     group = group or []
     ref = ref_average(
         shots, group=group, is_ref=is_ref, value=value, out="ref_avg", exact=exact
