@@ -158,3 +158,33 @@ def test_gd_round_stats_match_numpy_round1(spark, sf_dir):
         assert abs(g_fp - g_ref[j]) <= (r["n_rows"] + 1) / _GD_SCALE
     gb_fp = (got[_BIAS_DIM]["gq_neg"] - got[_BIAS_DIM]["gq_pos"]) / (2.0 * _GD_SCALE)
     assert gb_fp == pytest.approx(gb_ref, abs=(n + 1) / _GD_SCALE)
+
+
+def test_weight_literal_size_guard_falls_back_to_dataframe(
+    spark, sf_dir, monkeypatch
+):
+    """Above kmeans._LITERAL_SQL_MAX_BYTES the per-round weight
+    relation switches from the VALUES literal to createDataFrame, and
+    training still yields bit-identical weights."""
+    from trx_spark.cache import clear_stage_caches
+    from trx_spark.operators import kmeans
+    from trx_spark.queries.classifier import _w_df
+
+    def weights():
+        return sorted(
+            (r["dim"], r["weight"])
+            for r in quality_classifier_weights(spark, sf_dir).collect()
+        )
+
+    clear_stage_caches()
+    want = weights()
+    monkeypatch.setattr(kmeans, "_LITERAL_SQL_MAX_BYTES", 64)
+    # the guard really fired: the fallback is an RDD scan, not the
+    # VALUES LocalRelation
+    plan = _w_df(spark, {0: 0.5, _BIAS_DIM: -0.25})._jdf.queryExecution()
+    assert "LocalRelation" not in plan.analyzed().toString()
+    clear_stage_caches()
+    try:
+        assert weights() == want
+    finally:
+        clear_stage_caches()

@@ -46,43 +46,71 @@ def test_clear_stage_caches(spark, sf_dir):
     assert _token_stream(spark, sf_dir).count() > 0
 
 
-def test_every_memo_dict_is_registered():
-    """Every module-level ``*_CACHE`` dict in the query/operator
-    modules must be covered by cache._all_caches() — an unregistered
-    memo survives clear_stage_caches() holding an unpersisted
-    localCheckpoint, which crashes the next consumer with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the bench cold pass found
-    exactly this for the knn edge memo)."""
+def test_no_hand_rolled_memo_dicts():
+    """Every memo goes through ``cache.memo``: no ``trx_spark`` module
+    (the query/operator packages, ``tables``, ``sources`` and
+    ``streaming`` alike) keeps a module-level ``*_CACHE`` / ``*_MEMO``
+    dict of its own. A private dict survives clear_stage_caches()
+    holding an unpersisted localCheckpoint, which crashes the next
+    consumer with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the bench cold
+    pass found exactly this for the knn edge memo)."""
     import importlib
     import pkgutil
 
-    from trx_spark import cache as cache_mod
-    import trx_spark.queries as qpkg
-    import trx_spark.operators as opkg
+    import trx_spark
 
-    registered = {id(c) for c in cache_mod._all_caches()}
-    missing = []
-    for pkg in (qpkg, opkg):
-        for info in pkgutil.iter_modules(pkg.__path__):
-            mod = importlib.import_module(f"{pkg.__name__}.{info.name}")
-            for name, val in vars(mod).items():
-                if name.endswith("_CACHE") and isinstance(val, dict):
-                    if id(val) not in registered:
-                        missing.append(f"{mod.__name__}.{name}")
-    assert not missing, f"memo dicts not in cache._all_caches(): {missing}"
+    found = []
+    for info in pkgutil.walk_packages(trx_spark.__path__, "trx_spark."):
+        mod = importlib.import_module(info.name)
+        for name, val in vars(mod).items():
+            if name.endswith(("_CACHE", "_MEMO")) and isinstance(val, dict):
+                found.append(f"{mod.__name__}.{name}")
+    assert not found, f"hand-rolled memo dicts: {found}"
+
+
+def test_cold_sweep_clears_every_memo(spark, sf_dir):
+    """The cold sweep empties the one store: memos built by three
+    different families (trx diff bank, graph spine, token stream) are
+    all listed, all gone after clear_stage_caches(), and the next call
+    rebuilds a new frame with identical rows."""
+    from trx_spark.cache import clear_stage_caches, stage_cache_stats
+    from trx_spark.queries.curation import _token_stream
+    from trx_spark.queries.graphq import capped_basket_items
+    from trx_spark.queries.trxdomain import _diffs, scanpoint_stats
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    builders = {
+        "events_diff_bank": lambda: _diffs(spark, sf_dir),
+        "capped_basket_items": lambda: capped_basket_items(spark, sf_dir),
+        "token_stream": lambda: _token_stream(spark, sf_dir),
+    }
+    clear_stage_caches()
+    scanpoint_stats(spark, sf_dir)
+    before = {name: build() for name, build in builders.items()}
+    assert set(builders) <= set(stage_cache_stats())
+    want = {name: rows(df) for name, df in before.items()}
+    assert clear_stage_caches() >= len(builders)
+    assert stage_cache_stats() == {}
+    for name, build in builders.items():
+        again = build()
+        assert again is not before[name], name
+        assert rows(again) == want[name], name
 
 
 def test_memo_build_log_is_bounded():
     """A long-lived session keeps only the last MEMO_BUILDS_KEPT build
     stamps, oldest dropped first; the bench still serializes a list."""
     import json
+    import time
 
     from trx_spark import cache
 
     saved = list(cache.MEMO_BUILDS)
     n = cache.MEMO_BUILDS_KEPT
     try:
-        t0 = cache.build_start()
+        t0 = time.perf_counter()
         for k in range(n + 5):
             cache.build_done(f"memo_{k}", t0)
         assert len(cache.MEMO_BUILDS) == n

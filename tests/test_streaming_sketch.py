@@ -445,9 +445,9 @@ def test_mg_landing_memoized_and_cold_rebuilt(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from trx_spark.cache import clear_stage_caches
+    from trx_spark.cache import clear_stage_caches, stage_cache_stats
     from trx_spark.queries.mgsketch import _MG_B
-    from trx_spark.queries.streamingq import _MG_LANDING_CACHE, _mg_landing
+    from trx_spark.queries.streamingq import _mg_landing
 
     clear_stage_caches()
     landing1, schema1 = _mg_landing(spark, sf_dir)
@@ -468,6 +468,6 @@ def test_mg_landing_memoized_and_cold_rebuilt(spark, sf_dir):
         got = spark.read.parquet(os.path.join(landing1, f"batch_{b}.parquet"))
         assert got.filter(F.col("doc_id") % _MG_B != b).count() == 0
     clear_stage_caches()
-    assert (spark, sf_dir) not in _MG_LANDING_CACHE
+    assert "mg_landing" not in stage_cache_stats()
     landing3, _ = _mg_landing(spark, sf_dir)
     assert landing3 != landing1  # cold pass rebuilds a fresh fixture

@@ -51,13 +51,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
+
 _SEP = "\x1f"  # unit separator — cannot occur inside [a-z]+ tokens
 _BPE_VOCAB = 256  # words in the training dictionary (top-K by freq)
 _BPE_MERGES = 8  # merge rounds (static unroll, mirrored in the oracle)
-
-# trained state memo per (session, sf_dir): (merges_df, words_df) —
-# bpe_encode rides the same training run as bpe_merges
-_BPE_CACHE: dict = {}
 
 # symbol-aligned merge application (see module docstring): fold the
 # symbol array, fusing exact adjacent symbols (l, r) only. Runs over
@@ -103,58 +101,55 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
+# trained state memo: (merges_df, words_df) — bpe_encode rides the
+# same training run as bpe_merges
 def _train(spark: SparkSession, sf_dir: str):
-    key = (spark, sf_dir)
-    if key in _BPE_CACHE:
-        return _BPE_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    def build():
+        # initial symbol sequence: chars joined by the separator
+        words = _word_freq(spark, sf_dir).select(
+            "word",
+            "freq",
+            F.expr("substring(regexp_replace(word, '(.)', '$1\x1f'), 1, "
+                   "2 * length(word) - 1)").alias("seq"),
+        ).localCheckpoint()
+        merge_rows = []
+        for rank in range(1, _BPE_MERGES + 1):
+            # checkpointed: the 1-row result feeds BOTH the merge table and
+            # the rewrite join — one pair-count job per round, not two
+            best = (
+                _pair_counts(words)
+                .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
+                .limit(1)
+                .localCheckpoint()
+            )
+            merge_rows.append(
+                best.select(
+                    F.lit(rank).alias("merge_rank"),
+                    F.col("l").alias("left_sym"),
+                    F.col("r").alias("right_sym"),
+                    F.col("cnt").alias("pair_count"),
+                )
+            )
+            # LEFT join so an exhausted trainer (no pairs left — every word
+            # fully merged) no-ops instead of wiping the dictionary; the
+            # 1-row build side keeps this a broadcast loop join by design
+            words = (
+                words.join(F.broadcast(best), F.lit(True), "left")
+                .select(
+                    "word",
+                    "freq",
+                    F.when(F.col("l").isNull(), F.col("seq"))
+                    .otherwise(F.expr(_APPLY_MERGE_EXPR))
+                    .alias("seq"),
+                )
+                .localCheckpoint()
+            )
+        merges = merge_rows[0]
+        for m in merge_rows[1:]:
+            merges = merges.unionByName(m)
+        return (merges.localCheckpoint(), words)
 
-    _t0 = build_start()
-    # initial symbol sequence: chars joined by the separator
-    words = _word_freq(spark, sf_dir).select(
-        "word",
-        "freq",
-        F.expr("substring(regexp_replace(word, '(.)', '$1\x1f'), 1, "
-               "2 * length(word) - 1)").alias("seq"),
-    ).localCheckpoint()
-    merge_rows = []
-    for rank in range(1, _BPE_MERGES + 1):
-        # checkpointed: the 1-row result feeds BOTH the merge table and
-        # the rewrite join — one pair-count job per round, not two
-        best = (
-            _pair_counts(words)
-            .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .localCheckpoint()
-        )
-        merge_rows.append(
-            best.select(
-                F.lit(rank).alias("merge_rank"),
-                F.col("l").alias("left_sym"),
-                F.col("r").alias("right_sym"),
-                F.col("cnt").alias("pair_count"),
-            )
-        )
-        # LEFT join so an exhausted trainer (no pairs left — every word
-        # fully merged) no-ops instead of wiping the dictionary; the
-        # 1-row build side keeps this a broadcast loop join by design
-        words = (
-            words.join(F.broadcast(best), F.lit(True), "left")
-            .select(
-                "word",
-                "freq",
-                F.when(F.col("l").isNull(), F.col("seq"))
-                .otherwise(F.expr(_APPLY_MERGE_EXPR))
-                .alias("seq"),
-            )
-            .localCheckpoint()
-        )
-    merges = merge_rows[0]
-    for m in merge_rows[1:]:
-        merges = merges.unionByName(m)
-    _BPE_CACHE[key] = (merges.localCheckpoint(), words)
-    build_done("bpe_trained", _t0)
-    return _BPE_CACHE[key]
+    return memo("bpe_trained", (spark, sf_dir), build)
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,44 +46,38 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.exact import dsum, sql_dsum
 from trx_spark.tables import load_table
 
 N_BUCKETS = 8
 
-_BUCKETED_CACHE: dict = {}
-
 
 def bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write bucketed copies of lineitem and orders (keyed by orderkey,
     ``N_BUCKETS`` buckets, one file per bucket) and register them in
-    the session catalog. Memoized per (session, sf_dir); returns the
-    two catalog table names ``(lineitem, orders)``."""
-    key = (spark, sf_dir)
-    if key in _BUCKETED_CACHE:
-        return _BUCKETED_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    the session catalog. Memoized; returns the two catalog table names
+    ``(lineitem, orders)``."""
+    def build():
+        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        run = uuid.uuid4().hex[:8]
+        base = tempfile.mkdtemp(prefix="trx_bucketed_")
+        names = []
+        for table, bkey in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+            name = f"trx_bkt_{table}_{tag}_{run}"
+            df = load_table(spark, sf_dir, table)
+            (
+                df.repartition(N_BUCKETS, F.col(bkey))
+                .write.bucketBy(N_BUCKETS, bkey)
+                .sortBy(bkey)
+                .option("path", f"{base}/{table}")
+                .mode("overwrite")
+                .saveAsTable(name)
+            )
+            names.append(name)
+        return (names[0], names[1])
 
-    _t0 = build_start()
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    run = uuid.uuid4().hex[:8]
-    base = tempfile.mkdtemp(prefix="trx_bucketed_")
-    names = []
-    for table, bkey in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
-        name = f"trx_bkt_{table}_{tag}_{run}"
-        df = load_table(spark, sf_dir, table)
-        (
-            df.repartition(N_BUCKETS, F.col(bkey))
-            .write.bucketBy(N_BUCKETS, bkey)
-            .sortBy(bkey)
-            .option("path", f"{base}/{table}")
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-        names.append(name)
-    _BUCKETED_CACHE[key] = (names[0], names[1])
-    build_done("bucketed_tables", _t0)
-    return _BUCKETED_CACHE[key]
+    return memo("bucketed_tables", (spark, sf_dir), build)
 
 
 def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,60 +30,53 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
+
 _CLF_ITERS = 10
 _CLF_LR = 1.0
 _BIAS_DIM = -1  # the bias term rides the same (dim, w) table
 
-# trained weights memo per (session, sf_dir)
-_CLF_CACHE: dict = {}
-# featurized corpus memo per (session, sf_dir): training builds it
-# once, scoring reuses the same checkpointed frame instead of paying
-# the tokenize + hashed-TF + norm pass a second time
-_FEATS_CACHE: dict = {}
 
-
+# featurized corpus memo: training builds it once, scoring reuses the
+# same checkpointed frame instead of paying the tokenize + hashed-TF +
+# norm pass a second time
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dim, x, y): L1-normalized signed hashed-TF features
     plus the per-doc label (docs with zero tokens emit no rows).
-    Checkpointed + memoized per (session, sf_dir)."""
-    key = (spark, sf_dir)
-    if key in _FEATS_CACHE:
-        return _FEATS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-    from trx_spark.queries.curation import _DSIR_TARGET_SOURCE
-    from trx_spark.queries.ranking import hashed_tf_features
-    from trx_spark.tables import load_table
+    Checkpointed + memoized."""
+    def build():
+        from trx_spark.queries.curation import _DSIR_TARGET_SOURCE
+        from trx_spark.queries.ranking import hashed_tf_features
+        from trx_spark.tables import load_table
 
-    _t0 = build_start()
-
-    tf = hashed_tf_features(spark, sf_dir)
-    norms = tf.groupBy("doc_id").agg(F.sum(F.abs("value")).alias("n1"))
-    labels = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.col("source") == _DSIR_TARGET_SOURCE).cast("double").alias("y"),
-    )
-    feats = (
-        # a doc whose signed features fully cancel (n1 = 0) has an
-        # undefined normalization (0/0) — excluded, like zero-token docs
-        tf.join(norms.filter(F.col("n1") > 0), "doc_id")
-        .join(labels, "doc_id")
-        .select(
+        tf = hashed_tf_features(spark, sf_dir)
+        norms = tf.groupBy("doc_id").agg(F.sum(F.abs("value")).alias("n1"))
+        labels = load_table(spark, sf_dir, "documents").select(
             "doc_id",
-            "dim",
-            (F.col("value").cast("double") / F.col("n1").cast("double")).alias("x"),
-            "y",
+            (F.col("source") == _DSIR_TARGET_SOURCE).cast("double").alias("y"),
         )
-    )
-    # the bias rides as a constant feature (dim=_BIAS_DIM, x=1): one
-    # margin join and one gradient groupBy cover weights AND bias —
-    # no separate bias branch, two fewer stages per GD iteration
-    bias_rows = feats.select("doc_id", "y").distinct().select(
-        "doc_id", F.lit(_BIAS_DIM).cast("long").alias("dim"),
-        F.lit(1.0).alias("x"), "y",
-    )
-    _FEATS_CACHE[key] = feats.unionByName(bias_rows).localCheckpoint()
-    build_done("classifier_features", _t0)
-    return _FEATS_CACHE[key]
+        feats = (
+            # a doc whose signed features fully cancel (n1 = 0) has an
+            # undefined normalization (0/0) — excluded, like zero-token docs
+            tf.join(norms.filter(F.col("n1") > 0), "doc_id")
+            .join(labels, "doc_id")
+            .select(
+                "doc_id",
+                "dim",
+                (F.col("value").cast("double") / F.col("n1").cast("double")).alias("x"),
+                "y",
+            )
+        )
+        # the bias rides as a constant feature (dim=_BIAS_DIM, x=1): one
+        # margin join and one gradient groupBy cover weights AND bias —
+        # no separate bias branch, two fewer stages per GD iteration
+        bias_rows = feats.select("doc_id", "y").distinct().select(
+            "doc_id", F.lit(_BIAS_DIM).cast("long").alias("dim"),
+            F.lit(1.0).alias("x"), "y",
+        )
+        return feats.unionByName(bias_rows).localCheckpoint()
+
+    return memo("classifier_features", (spark, sf_dir), build)
 
 
 def _w_df(spark: SparkSession, w: dict) -> DataFrame:
@@ -94,13 +87,21 @@ def _w_df(spark: SparkSession, w: dict) -> DataFrame:
     through the repr round-trip (bit-exact, kmeans._dlit_sql), and the
     broadcast hash join on the probe side preserves feats row order
     either way, so the margin sums are unchanged bit-for-bit (verified
-    at three SFs, OPTIMIZATION_r14.md)."""
-    from trx_spark.operators.kmeans import _dlit_sql
+    at three SFs, OPTIMIZATION_r14.md).  Above kmeans'
+    ``_LITERAL_SQL_MAX_BYTES`` the weights fall back to
+    ``createDataFrame`` (the same doubles, one scan job per round)
+    rather than hand Catalyst a multi-MB VALUES text to parse."""
+    from trx_spark.operators import kmeans
 
     rows = ", ".join(
-        f"(CAST({int(d)} AS BIGINT), {_dlit_sql(float(v))})"
+        f"(CAST({int(d)} AS BIGINT), {kmeans._dlit_sql(float(v))})"
         for d, v in sorted(w.items())
     )
+    if len(rows) > kmeans._LITERAL_SQL_MAX_BYTES:
+        return spark.createDataFrame(
+            [(int(d), float(v)) for d, v in sorted(w.items())],
+            "dim long, w double",
+        )
     return spark.sql(f"SELECT * FROM VALUES {rows} AS t(dim, w)")
 
 
@@ -123,49 +124,45 @@ def _train(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape paid per round and this one does not: the weight-frame
     localCheckpoint job, the checkpointed-broadcast build job, the
     n_docs crossJoin re-aggregation, and the w⋈grad update subtree."""
-    key = (spark, sf_dir)
-    if key in _CLF_CACHE:
-        return _CLF_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-    from trx_spark.queries.ranking import _FH_DIM
+    def build():
+        from trx_spark.queries.ranking import _FH_DIM
 
-    feats = _features(spark, sf_dir)
-    _t0 = build_start()
-    # bounded scalar (one count job, was re-broadcast every round)
-    nd = float(feats.select("doc_id", "y").distinct().count())
+        feats = _features(spark, sf_dir)
+        # bounded scalar (one count job, was re-broadcast every round)
+        nd = float(feats.select("doc_id", "y").distinct().count())
 
-    w = {d: 0.0 for d in range(_FH_DIM)}
-    w[_BIAS_DIM] = 0.0
+        w = {d: 0.0 for d in range(_FH_DIM)}
+        w[_BIAS_DIM] = 0.0
 
-    for _ in range(_CLF_ITERS):
-        # every doc has the bias row, so margin covers xw + b in one
-        # aggregation and the sigmoid error needs no left-join fallback
-        err = (
-            feats.join(F.broadcast(_w_df(spark, w)), "dim")
-            .groupBy("doc_id", "y")
-            .agg(F.sum(F.col("x") * F.col("w")).alias("z"))
-            .select(
-                "doc_id",
-                (
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z"))) - F.col("y")
-                ).alias("e"),
+        for _ in range(_CLF_ITERS):
+            # every doc has the bias row, so margin covers xw + b in one
+            # aggregation and the sigmoid error needs no left-join fallback
+            err = (
+                feats.join(F.broadcast(_w_df(spark, w)), "dim")
+                .groupBy("doc_id", "y")
+                .agg(F.sum(F.col("x") * F.col("w")).alias("z"))
+                .select(
+                    "doc_id",
+                    (
+                        F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("z"))) - F.col("y")
+                    ).alias("e"),
+                )
             )
-        )
-        grad_rows = (
-            feats.join(err, "doc_id")
-            .groupBy("dim")
-            .agg(F.sum(F.col("x") * F.col("e")).alias("g"))
-            .collect()  # ≤ dim+1 rows BY CONSTRUCTION (hashed features)
-        )
-        for r in grad_rows:
-            g = r["g"]
-            if g is None:  # the former coalesce(g, 0.0): w unchanged
-                continue
-            # same op order as the former Spark column: w − (lr·g)/nd
-            w[int(r["dim"])] = w[int(r["dim"])] - (_CLF_LR * float(g)) / nd
-    _CLF_CACHE[key] = _w_df(spark, w)
-    build_done("quality_classifier", _t0)
-    return _CLF_CACHE[key]
+            grad_rows = (
+                feats.join(err, "doc_id")
+                .groupBy("dim")
+                .agg(F.sum(F.col("x") * F.col("e")).alias("g"))
+                .collect()  # ≤ dim+1 rows BY CONSTRUCTION (hashed features)
+            )
+            for r in grad_rows:
+                g = r["g"]
+                if g is None:  # the former coalesce(g, 0.0): w unchanged
+                    continue
+                # same op order as the former Spark column: w − (lr·g)/nd
+                w[int(r["dim"])] = w[int(r["dim"])] - (_CLF_LR * float(g)) / nd
+        return _w_df(spark, w)
+
+    return memo("quality_classifier", (spark, sf_dir), build)
 
 
 def quality_classifier_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.operators import graph
 from trx_spark.queries import textdata
 from trx_spark.tables import fan_out_small_scan, load_table
@@ -37,16 +38,12 @@ from trx_spark.tables import fan_out_small_scan, load_table
 # ---------------------------------------------------------------------
 
 
-# cluster labels memoized per (session, sf_dir): the iterative
-# component search (multi-job label propagation) is consumed by FIVE
-# gates per session — dedup_clusters itself, corpus_keep_list,
-# dedup_report, curation_funnel_report and training_set_manifest — so
-# the propagation rounds run once and every consumer rides the
-# checkpointed verdict table (the _SIGNALS_CACHE discipline; cleared
-# by trx_spark.cache.clear_stage_caches so cold benches re-pay it)
-_CLUSTERS_CACHE: dict = {}
-
-
+# cluster labels memoized: the iterative component search (multi-job
+# label propagation) is consumed by FIVE gates per session —
+# dedup_clusters itself, corpus_keep_list, dedup_report,
+# curation_funnel_report and training_set_manifest — so the
+# propagation rounds run once and every consumer rides the
+# checkpointed verdict table (the quality-signals discipline)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group the MinHash-LSH near-dup pairs into connected components
     and assign every document a cluster id (= the smallest doc_id in
@@ -57,22 +54,18 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected_components` (min-label propagation + pointer jumping);
     docs that appear in no pair are joined back as singletons here.
     """
-    key = (spark, sf_dir)
-    if key not in _CLUSTERS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
+    def build():
         docs = load_table(spark, sf_dir, "documents").select("doc_id")
         pairs = textdata.minhash_lsh_pairs(spark, sf_dir)  # memoized checkpoint
-        _t0 = build_start()
         labels = graph.connected_components(pairs, src="doc_a", dst="doc_b")
-        _CLUSTERS_CACHE[key] = (
+        return (
             docs.join(labels.withColumnRenamed("id", "doc_id"), "doc_id", "left")
             .select("doc_id", F.coalesce("lbl", F.col("doc_id")).alias("cluster_id"))
             .withColumn("is_canonical", F.col("cluster_id") == F.col("doc_id"))
             .localCheckpoint()
         )
-        build_done("dedup_cluster_labels", _t0)
-    return _CLUSTERS_CACHE[key]
+
+    return memo("dedup_cluster_labels", (spark, sf_dir), build)
 
 
 # Oracle: transitive closure via a recursive CTE (UNION dedups per
@@ -461,23 +454,16 @@ def quality_signals(docs: DataFrame) -> DataFrame:
 
 # quality_filter and curation.source_quality_rollup both consume the
 # signals projection (regex-heavy but zero-shuffle) — memoize its
-# localCheckpoint per (session, sf_dir)
-_SIGNALS_CACHE: dict = {}
-
-
+# localCheckpoint
 def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate entry: :func:`quality_signals` over the documents table."""
-    key = (spark, sf_dir)
-    if key not in _SIGNALS_CACHE:
-        from trx_spark.cache import build_done, build_start
-        from trx_spark.tables import fan_out_small_scan
-
-        _t0 = build_start()
-        _SIGNALS_CACHE[key] = quality_signals(
+    return memo(
+        "quality_signals",
+        (spark, sf_dir),
+        lambda: quality_signals(
             fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-        ).localCheckpoint()
-        build_done("quality_signals", _t0)
-    return _SIGNALS_CACHE[key]
+        ).localCheckpoint(),
+    )
 
 
 def _qf_marker_sql(lang: str) -> str:
@@ -556,48 +542,41 @@ FROM r
 
 # the composed verdict table is itself a shared stage (dedup_report,
 # curation_funnel_report and training_set_manifest all join it), so the
-# exact-dedup groupBy + three joins run once per (session, sf_dir)
-_KEEP_LIST_CACHE: dict = {}
-
-
+# exact-dedup groupBy + three joins run once per session
 def corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc final keep verdict: exact-keeper ∧ cluster-canonical ∧
     quality-keep."""
-    key = (spark, sf_dir)
-    if key in _KEEP_LIST_CACHE:
-        return _KEEP_LIST_CACHE[key]
-    docs = load_table(spark, sf_dir, "documents")
-    exact_keep = (
-        docs.withColumn("_h", F.md5(F.col("text").cast("binary")))
-        .groupBy("_h")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id", F.lit(True).alias("exact_keeper"))
-    )
-    clusters = dedup_clusters(spark, sf_dir).select("doc_id", "is_canonical")
-    quality = quality_filter(spark, sf_dir).select("doc_id", "keep")
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
-    _KEEP_LIST_CACHE[key] = (
-        docs.select("doc_id")
-        .join(exact_keep, "doc_id", "left")
-        .join(clusters, "doc_id")
-        .join(quality, "doc_id")
-        .select(
-            "doc_id",
-            F.coalesce("exact_keeper", F.lit(False)).alias("exact_keeper"),
-            "is_canonical",
-            F.col("keep").alias("quality_keep"),
-            (
-                F.coalesce("exact_keeper", F.lit(False))
-                & F.col("is_canonical")
-                & F.col("keep")
-            ).alias("keep"),
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        exact_keep = (
+            docs.withColumn("_h", F.md5(F.col("text").cast("binary")))
+            .groupBy("_h")
+            .agg(F.min("doc_id").alias("doc_id"))
+            .select("doc_id", F.lit(True).alias("exact_keeper"))
         )
-        .localCheckpoint()
-    )
-    build_done("corpus_keep_list", _t0)
-    return _KEEP_LIST_CACHE[key]
+        clusters = dedup_clusters(spark, sf_dir).select("doc_id", "is_canonical")
+        quality = quality_filter(spark, sf_dir).select("doc_id", "keep")
+
+        return (
+            docs.select("doc_id")
+            .join(exact_keep, "doc_id", "left")
+            .join(clusters, "doc_id")
+            .join(quality, "doc_id")
+            .select(
+                "doc_id",
+                F.coalesce("exact_keeper", F.lit(False)).alias("exact_keeper"),
+                "is_canonical",
+                F.col("keep").alias("quality_keep"),
+                (
+                    F.coalesce("exact_keeper", F.lit(False))
+                    & F.col("is_canonical")
+                    & F.col("keep")
+                ).alias("keep"),
+            )
+            .localCheckpoint()
+        )
+
+    return memo("corpus_keep_list", (spark, sf_dir), build)
 
 
 def _keep_list_sql() -> str:

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.tables import load_table
 
 _TOKEN_RE = "[a-z]+"
@@ -53,35 +54,29 @@ _P = 2147483647  # 2^31 − 1
 _SHINGLE_N = 8
 _BENCH_MOD = 20
 
+
 # The corpus-stats stages all start from the regex tokenization of
 # every document — the single most repeated piece of work in the set.
 # Memoize the tokenized base (doc_id, source, toks ARRAY) once per
-# (session, sf_dir); the shingle/bigram/token streams derive from its
-# checkpoint with pure array math, never re-running the regex.
-_TOKS_CACHE: dict = {}
-_SHINGLED_CACHE: dict = {}
-
-
+# session; the shingle/bigram/token streams derive from its checkpoint
+# with pure array math, never re-running the regex.
 def _toks_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _TOKS_CACHE:
-        from trx_spark.cache import timed_build
+    def build():
         from trx_spark.tables import fan_out_small_scan
 
         # regex tokenize is map-only — fan the small scan out so it
         # parallelizes (no-op at cluster scale; tables.py docstring)
         docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
         toks = F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), 0)
-        with timed_build("tokenized_base"):
-            _TOKS_CACHE[key] = docs.select(
-                "doc_id", "source", toks.alias("toks")
-            ).localCheckpoint()
-    return _TOKS_CACHE[key]
+        return docs.select(
+            "doc_id", "source", toks.alias("toks")
+        ).localCheckpoint()
+
+    return memo("tokenized_base", (spark, sf_dir), build)
 
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _SHINGLED_CACHE:
+    def build():
         base = _toks_base(spark, sf_dir)
         n = F.size(F.col("toks"))
         # gated on n >= _SHINGLE_N: Spark's sequence(1, 0) is the
@@ -99,13 +94,11 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        from trx_spark.cache import timed_build
+        return base.select(
+            "doc_id", F.explode(shingles).alias("shingle")
+        ).localCheckpoint()
 
-        with timed_build("shingle_stream"):
-            _SHINGLED_CACHE[key] = base.select(
-                "doc_id", F.explode(shingles).alias("shingle")
-            ).localCheckpoint()
-    return _SHINGLED_CACHE[key]
+    return memo("shingle_stream", (spark, sf_dir), build)
 
 
 # ---------------------------------------------------------------------
@@ -129,26 +122,23 @@ _BLOOM_BITS = 131072  # m >> k*n keeps FPR low; still only 4096 words to broadca
 _BLOOM_WORDS = _BLOOM_BITS // 32
 _BLOOM_A2, _BLOOM_B2 = 1103515245, 12345
 
+
 # the built filter (≤_BLOOM_WORDS rows, ~32 KiB) is a shared stage like
 # the shingle stream itself: decontam probes it twice (k=2 word
 # lookups), and rebuilding the bench-side aggregation under each
 # broadcast doubled the query's first-run cost (the r7 bench
 # regression — the aggregation ran once per broadcast instead of once)
-_BLOOM_WORDS_CACHE: dict = {}
-
-
 def _bloom_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     from trx_spark.queries.textdata import _tok_hash
 
-    key = (spark, sf_dir)
-    if key not in _BLOOM_WORDS_CACHE:
+    def build():
         sh = _shingled(spark, sf_dir)
         h1 = _tok_hash(F.col("shingle"))
         h2 = (h1 * _BLOOM_A2 + _BLOOM_B2) % _P
         bits = F.explode(
             F.array((h1 % _BLOOM_BITS), (h2 % _BLOOM_BITS))
         ).alias("bit")
-        _BLOOM_WORDS_CACHE[key] = (
+        return (
             sh.where(F.col("doc_id") % _BENCH_MOD == 0)
             .select(bits)
             .select(
@@ -161,26 +151,25 @@ def _bloom_words(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.bit_or("m").alias("mask"))
             .localCheckpoint()
         )
-    return _BLOOM_WORDS_CACHE[key]
+
+    return memo("bloom_filter_words", (spark, sf_dir), build)
 
 
 def _bloom_masks_lit(spark: SparkSession, sf_dir: str) -> str:
     """The packed filter as a DENSE _BLOOM_WORDS-long SQL literal array
     (missing words = 0, the former left-join coalesce(mask, 0)) —
-    bounded at 4096 longs BY CONSTRUCTION, collected once per (session,
-    sf_dir) beside the words checkpoint and constant-folded into one
+    bounded at 4096 longs BY CONSTRUCTION, collected once per session
+    beside the words checkpoint and constant-folded into one
     Literal ArrayData, so every probe is a map-side element_at instead
     of two broadcast hash joins per call (the codebook-literal
     discipline, operators/kmeans.py)."""
-    key = (spark, sf_dir, "masks_lit")
-    if key not in _BLOOM_WORDS_CACHE:
+    def build():
         dense = [0] * _BLOOM_WORDS
         for r in _bloom_words(spark, sf_dir).collect():
             dense[int(r["word"])] = int(r["mask"])
-        _BLOOM_WORDS_CACHE[key] = "array({})".format(
-            ", ".join(f"{v}L" for v in dense)
-        )
-    return _BLOOM_WORDS_CACHE[key]
+        return "array({})".format(", ".join(f"{v}L" for v in dense))
+
+    return memo("bloom_masks_lit", (spark, sf_dir), build)
 
 
 def decontam_bloom_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -459,17 +448,13 @@ WHERE (d.doc_id % {_P} * {_SAMPLE_A} + {_SAMPLE_B}) % {_P} % 100 < {_rate_case_s
 
 _NGRAM_K = 20
 
+
 # topk_ngrams and bigram_rarity consume the SAME exploded (doc_id,
 # bigram) stream; cms_heavy_hitters and dsir_weights the same (doc_id,
-# source, token) stream. Memoize each localCheckpoint per (session,
-# sf_dir) — same pattern as the shingle table above.
-_BIGRAM_CACHE: dict = {}
-_TOKEN_CACHE: dict = {}
-
-
+# source, token) stream. Memoize each localCheckpoint — same pattern
+# as the shingle table above.
 def _bigram_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _BIGRAM_CACHE:
+    def build():
         base = _toks_base(spark, sf_dir)
         n = F.size(F.col("toks"))
         # gated on n >= 2 — same sequence(1, 0) footgun as _shingled
@@ -480,26 +465,21 @@ def _bigram_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda i: F.array_join(F.slice(F.col("toks"), i, 2), " "),
             ),
         )
-        from trx_spark.cache import timed_build
+        return base.select(
+            "doc_id", F.explode(bigrams).alias("ngram")
+        ).localCheckpoint()
 
-        with timed_build("bigram_stream"):
-            _BIGRAM_CACHE[key] = base.select(
-                "doc_id", F.explode(bigrams).alias("ngram")
-            ).localCheckpoint()
-    return _BIGRAM_CACHE[key]
+    return memo("bigram_stream", (spark, sf_dir), build)
 
 
 def _token_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _TOKEN_CACHE:
-        from trx_spark.cache import timed_build
-
-        base = _toks_base(spark, sf_dir)
-        with timed_build("token_stream"):
-            _TOKEN_CACHE[key] = base.select(
-                "doc_id", "source", F.explode(F.col("toks")).alias("token")
-            ).localCheckpoint()
-    return _TOKEN_CACHE[key]
+    return memo(
+        "token_stream",
+        (spark, sf_dir),
+        lambda: _toks_base(spark, sf_dir).select(
+            "doc_id", "source", F.explode(F.col("toks")).alias("token")
+        ).localCheckpoint(),
+    )
 
 
 def topk_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,7 +6,7 @@ schemas side by side. Spark's answer is ``mergeSchema``: the scan
 unions the file footers' schemas and fills missing columns with NULL
 per file. This module stages a two-generation corpus (generation 1
 without the ``lang`` column, generation 2 with it — written by the
-engine itself, memoized per session×sf in a registered stage cache)
+engine itself, memoized like every shared stage)
 and gates the merged read: per-source row counts, NULL census of the
 evolved column, and an exact sum that must survive both generations.
 
@@ -32,28 +32,26 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.tables import load_table
-
-_EVO_CACHE: dict = {}
 
 
 def _staged_generations(spark: SparkSession, sf_dir: str) -> str:
     """Write the two-generation corpus; returns the base directory."""
-    key = (spark, sf_dir)
-    if key in _EVO_CACHE:
-        return _EVO_CACHE[key]
-    base = tempfile.mkdtemp(prefix="trx_schema_evo_")
-    docs = load_table(spark, sf_dir, "documents")
-    gen1 = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", "source", "n_chars"
-    )
-    gen2 = docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", "source", "n_chars", "lang"
-    )
-    gen1.repartition(4).write.mode("overwrite").parquet(f"{base}/gen=1")
-    gen2.repartition(4).write.mode("overwrite").parquet(f"{base}/gen=2")
-    _EVO_CACHE[key] = base
-    return base
+    def build():
+        base = tempfile.mkdtemp(prefix="trx_schema_evo_")
+        docs = load_table(spark, sf_dir, "documents")
+        gen1 = docs.filter(F.col("doc_id") % 2 == 0).select(
+            "doc_id", "source", "n_chars"
+        )
+        gen2 = docs.filter(F.col("doc_id") % 2 == 1).select(
+            "doc_id", "source", "n_chars", "lang"
+        )
+        gen1.repartition(4).write.mode("overwrite").parquet(f"{base}/gen=1")
+        gen2.repartition(4).write.mode("overwrite").parquet(f"{base}/gen=2")
+        return base
+
+    return memo("schema_evo_generations", (spark, sf_dir), build)
 
 
 def schema_evolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,8 +91,6 @@ FROM merged GROUP BY source
 # Snapshot time-travel diff: the versioned store under the gate
 # ---------------------------------------------------------------------
 
-_SNAP_CACHE: dict = {}
-
 
 def _staged_snapshots(spark: SparkSession, sf_dir: str) -> str:
     """Write two customer snapshots into a versioned store (memoized):
@@ -102,26 +98,25 @@ def _staged_snapshots(spark: SparkSession, sf_dir: str) -> str:
     balance of every 3rd — a deterministic add/remove/change mix."""
     from trx_spark.sources.sinks import save_snapshot
 
-    key = (spark, sf_dir)
-    if key in _SNAP_CACHE:
-        return _SNAP_CACHE[key]
-    base = tempfile.mkdtemp(prefix="trx_snap_store_")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal"
-    )
-    v0 = cust.filter(F.col("c_custkey") % 10 != 0)
-    v1 = cust.filter(F.col("c_custkey") % 7 != 0).select(
-        "c_custkey",
-        F.when(
-            F.col("c_custkey") % 3 == 0, F.col("c_acctbal") * 2.0
+    def build():
+        base = tempfile.mkdtemp(prefix="trx_snap_store_")
+        cust = load_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_acctbal"
         )
-        .otherwise(F.col("c_acctbal"))
-        .alias("c_acctbal"),
-    )
-    save_snapshot(v0, base, note="initial load")
-    save_snapshot(v1, base, note="monthly refresh")
-    _SNAP_CACHE[key] = base
-    return base
+        v0 = cust.filter(F.col("c_custkey") % 10 != 0)
+        v1 = cust.filter(F.col("c_custkey") % 7 != 0).select(
+            "c_custkey",
+            F.when(
+                F.col("c_custkey") % 3 == 0, F.col("c_acctbal") * 2.0
+            )
+            .otherwise(F.col("c_acctbal"))
+            .alias("c_acctbal"),
+        )
+        save_snapshot(v0, base, note="initial load")
+        save_snapshot(v1, base, note="monthly refresh")
+        return base
+
+    return memo("snapshot_store", (spark, sf_dir), build)
 
 
 def snapshot_diff_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.tables import load_table
 
 _PR_ROUNDS = 6          # fixed iteration budget (unrolled in the oracle)
@@ -62,39 +63,30 @@ _PR_MAX_BASKET = 64     # quadratic guard, same cap as copurchase_lift
 _PR_TOPK = 20
 
 
-_GRAPH_CACHE: dict = {}
-
-
 def capped_basket_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (l_orderkey, l_partkey) with baskets over
     ``_PR_MAX_BASKET`` distinct parts dropped — the shared spine of
     every co-purchase pair enumeration (this graph, `copurchase_lift`,
-    which asserts its own cap equals ours).  Memoized + checkpointed
-    per (session, sf_dir): the pair self-join, the per-part order
-    counts and the order total all read the materialized table instead
-    of re-running the distinct + basket-size chain."""
-    key = (spark, sf_dir, "items")
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
-    items = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    sized = items.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("_bs"))
-    capped = (
-        items.join(
-            sized.filter(F.col("_bs") <= _PR_MAX_BASKET), "l_orderkey"
+    which asserts its own cap equals ours).  Memoized + checkpointed:
+    the pair self-join, the per-part order counts and the order total
+    all read the materialized table instead of re-running the distinct
+    + basket-size chain."""
+    def build():
+        items = (
+            load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey")
+            .distinct()
         )
-        .drop("_bs")
-        .localCheckpoint()
-    )
-    _GRAPH_CACHE[key] = capped
-    build_done("capped_basket_items", _t0)
-    return capped
+        sized = items.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("_bs"))
+        return (
+            items.join(
+                sized.filter(F.col("_bs") <= _PR_MAX_BASKET), "l_orderkey"
+            )
+            .drop("_bs")
+            .localCheckpoint()
+        )
+
+    return memo("capped_basket_items", (spark, sf_dir), build)
 
 
 def copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,31 +95,25 @@ def copurchase_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed — the co-purchase graph consumes the (already
     distinct) key set and `copurchase_lift` the counts, so the
     quadratic-in-basket self-join materializes exactly once per
-    (session, sf_dir)."""
-    key = (spark, sf_dir, "pairs")
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    session."""
+    def build():
+        kept = capped_basket_items(spark, sf_dir)
+        a, b = kept.alias("a"), kept.alias("b")
+        return (
+            a.join(
+                b,
+                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+            )
+            .groupBy(
+                F.col("a.l_partkey").alias("src"),
+                F.col("b.l_partkey").alias("dst"),
+            )
+            .agg(F.count(F.lit(1)).alias("n_ab"))
+            .localCheckpoint()
+        )
 
-    kept = capped_basket_items(spark, sf_dir)
-    _t0 = build_start()
-    a, b = kept.alias("a"), kept.alias("b")
-    counts = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("src"),
-            F.col("b.l_partkey").alias("dst"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-        .localCheckpoint()
-    )
-    _GRAPH_CACHE[key] = counts
-    build_done("copurchase_pair_counts", _t0)
-    return counts
+    return memo("copurchase_pair_counts", (spark, sf_dir), build)
 
 
 def _copurchase_graph(spark: SparkSession, sf_dir: str):
@@ -135,8 +121,8 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
     outdeg) distinct part pairs sharing an order (both directions, so
     outdeg == indeg per node), basket-capped; deg = (src, outdeg).
 
-    Built once per (session, sf_dir) and localCheckpoint'd — the warm
-    memo the other trained/derived structures use — since every
+    Built once per session and localCheckpoint'd — the warm memo the
+    other trained/derived structures use — since every
     PageRank round rescans it.  The a<b half rides the shared
     `copurchase_pair_counts` memo (its keys ARE the distinct pairs, and
     `copurchase_lift` reads the same checkpoint), so the quadratic
@@ -144,21 +130,19 @@ def _copurchase_graph(spark: SparkSession, sf_dir: str):
     consumer.  The deg join is left to AQE: at bench SF it broadcasts
     the node-sized side; at 100 TB both sides are large and it
     degrades to the co-partitioned shuffle join."""
-    key = (spark, sf_dir)
-    if key in _GRAPH_CACHE:
-        return _GRAPH_CACHE[key]
-    half = copurchase_pair_counts(spark, sf_dir).select("src", "dst")
-    pairs = half.unionAll(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = (
-        pairs.groupBy("src")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .localCheckpoint()
-    )
-    edges = pairs.join(deg, "src").localCheckpoint()
-    _GRAPH_CACHE[key] = (edges, deg)
-    return _GRAPH_CACHE[key]
+    def build():
+        half = copurchase_pair_counts(spark, sf_dir).select("src", "dst")
+        pairs = half.unionAll(
+            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        deg = (
+            pairs.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("outdeg"))
+            .localCheckpoint()
+        )
+        return pairs.join(deg, "src").localCheckpoint(), deg
+
+    return memo("copurchase_graph", (spark, sf_dir), build)
 
 
 def pagerank_fixed_point(edges: DataFrame, rounds: int = _PR_ROUNDS) -> DataFrame:

@@ -35,6 +35,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.tables import fan_out_small_scan, load_table
 
 # fixed-point parameters: F fraction bits, Q mantissa buckets
@@ -108,14 +109,11 @@ _BG_SQL = (
 )
 
 
-# trained model memo per (session, docs-plan, langs): the (lang, bg)
+# trained model memo per (docs-plan, langs): the (lang, bg)
 # likelihood table and the per-lang denominator/prior row are BOUNDED
 # (langs·charset² and |langs| rows), so checkpointing them follows the
 # trained-state discipline of the BPE/WordPiece/classifier caches —
 # a steady-state caller pays only the scoring pass, not the re-train
-_NB_CACHE: dict = {}
-
-
 def nb_lang_scores(docs: DataFrame, langs: tuple = _LANGS) -> DataFrame:
     """Train multinomial NB (Laplace-smoothed char bigrams) on
     ``docs`` (doc_id, lang, text) and score every doc against every
@@ -142,13 +140,7 @@ def nb_lang_scores(docs: DataFrame, langs: tuple = _LANGS) -> DataFrame:
     # in EVERY scoring call, so it is memoized alongside: a steady
     # session pays one join + two keyed aggs instead of re-running the
     # corpus bigram explode + groupBy per call.
-    key = (docs.sparkSession, docs.semanticHash(), langs)
-    if key in _NB_CACHE:
-        ml, lden, docbg = _NB_CACHE[key]
-    else:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
+    def build():
         docbg = (
             bg.groupBy("doc_id", "bg")
             .agg(F.count(F.lit(1)).alias("cnt"))
@@ -178,8 +170,13 @@ def nb_lang_scores(docs: DataFrame, langs: tuple = _LANGS) -> DataFrame:
             )
             .localCheckpoint()
         )
-        _NB_CACHE[key] = (ml, lden, docbg)
-        build_done("nb_langid_model", _t0)
+        return ml, lden, docbg
+
+    ml, lden, docbg = memo(
+        "nb_langid_model",
+        (docs.sparkSession, docs.semanticHash(), langs),
+        build,
+    )
     mdoc = docbg.groupBy("doc_id").agg(F.sum("cnt").alias("m_doc"))
     obs = (
         docbg.join(F.broadcast(ml), "bg")

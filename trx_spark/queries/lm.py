@@ -28,67 +28,62 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
+
 _LM_VOCAB = 4096  # top-K unigrams kept; the rest fold to UNK
 _LM_UNK = "\x00unk"  # sorts outside [a-z]+, cannot collide with a token
 _LM_K = 0.5  # add-k smoothing mass
 _LM_SCALE = 1e12  # fixed-point scale for the log2 sum (decimal-summed)
 
-# trained model memo per (session, sf_dir): (doc_bi_df, uni_df, bi_df)
-_LM_CACHE: dict = {}
 
-
+# trained model memo: (doc_bi_df, uni_df, bi_df)
 def _train_lm(spark: SparkSession, sf_dir: str):
     from trx_spark.queries.curation import _bigram_stream, _token_stream
 
-    key = (spark, sf_dir)
-    if key in _LM_CACHE:
-        return _LM_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
-    toks = _token_stream(spark, sf_dir)
-    vocab = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("token"))
-        .limit(_LM_VOCAB)
-        .select("token")
-        .localCheckpoint()
-    )
-    # mapped unigram counts (UNK included): broadcast the V-row vocab
-    mapped = toks.join(
-        F.broadcast(vocab.withColumn("_in", F.lit(True))), "token", "left"
-    ).select(
-        F.when(F.col("_in"), F.col("token")).otherwise(F.lit(_LM_UNK)).alias("w")
-    )
-    uni = mapped.groupBy("w").agg(F.count(F.lit(1)).alias("c1")).localCheckpoint()
-    # the VOCAB-MAPPED per-doc bigram table is built once and shared by
-    # training (count aggregation) and scoring (per-doc join) — one
-    # pass over the raw bigram stream instead of two
-    vmap = F.broadcast(vocab.withColumn("_in", F.lit(True)))
-    doc_bi = (
-        _bigram_stream(spark, sf_dir)
-        .select(
-            "doc_id",
-            F.split_part(F.col("ngram"), F.lit(" "), F.lit(1)).alias("w1"),
-            F.split_part(F.col("ngram"), F.lit(" "), F.lit(2)).alias("w2"),
+    def build():
+        toks = _token_stream(spark, sf_dir)
+        vocab = (
+            toks.groupBy("token")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .orderBy(F.desc("cnt"), F.asc("token"))
+            .limit(_LM_VOCAB)
+            .select("token")
+            .localCheckpoint()
         )
-        .join(vmap.withColumnRenamed("token", "w1"), "w1", "left")
-        .withColumn("m1", F.when(F.col("_in"), F.col("w1")).otherwise(F.lit(_LM_UNK)))
-        .drop("_in")
-        .join(vmap.withColumnRenamed("token", "w2"), "w2", "left")
-        .withColumn("m2", F.when(F.col("_in"), F.col("w2")).otherwise(F.lit(_LM_UNK)))
-        .select("doc_id", F.col("m1").alias("w1"), F.col("m2").alias("w2"))
-        .localCheckpoint()
-    )
-    bi = (
-        doc_bi.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint()
-    )
-    _LM_CACHE[key] = (doc_bi, uni, bi)
-    build_done("lm_model", _t0)
-    return _LM_CACHE[key]
+        # mapped unigram counts (UNK included): broadcast the V-row vocab
+        mapped = toks.join(
+            F.broadcast(vocab.withColumn("_in", F.lit(True))), "token", "left"
+        ).select(
+            F.when(F.col("_in"), F.col("token")).otherwise(F.lit(_LM_UNK)).alias("w")
+        )
+        uni = mapped.groupBy("w").agg(F.count(F.lit(1)).alias("c1")).localCheckpoint()
+        # the VOCAB-MAPPED per-doc bigram table is built once and shared by
+        # training (count aggregation) and scoring (per-doc join) — one
+        # pass over the raw bigram stream instead of two
+        vmap = F.broadcast(vocab.withColumn("_in", F.lit(True)))
+        doc_bi = (
+            _bigram_stream(spark, sf_dir)
+            .select(
+                "doc_id",
+                F.split_part(F.col("ngram"), F.lit(" "), F.lit(1)).alias("w1"),
+                F.split_part(F.col("ngram"), F.lit(" "), F.lit(2)).alias("w2"),
+            )
+            .join(vmap.withColumnRenamed("token", "w1"), "w1", "left")
+            .withColumn("m1", F.when(F.col("_in"), F.col("w1")).otherwise(F.lit(_LM_UNK)))
+            .drop("_in")
+            .join(vmap.withColumnRenamed("token", "w2"), "w2", "left")
+            .withColumn("m2", F.when(F.col("_in"), F.col("w2")).otherwise(F.lit(_LM_UNK)))
+            .select("doc_id", F.col("m1").alias("w1"), F.col("m2").alias("w2"))
+            .localCheckpoint()
+        )
+        bi = (
+            doc_bi.groupBy("w1", "w2")
+            .agg(F.count(F.lit(1)).alias("c2"))
+            .localCheckpoint()
+        )
+        return (doc_bi, uni, bi)
+
+    return memo("lm_model", (spark, sf_dir), build)
 
 
 def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:

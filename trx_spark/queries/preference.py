@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.tables import load_table
 
 _BT_ROUNDS = 4          # fixed MM iteration budget (unrolled oracle)
@@ -163,26 +164,21 @@ def bt_fit(pk: DataFrame, rounds: int = _BT_ROUNDS) -> DataFrame:
     )
 
 
-_PK_CACHE: dict = {}
-
-
 def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-``_BT_TOPK`` items of the fixed-point Bradley–Terry fit over
     co-purchase duels after ``_BT_ROUNDS`` MM rounds.
 
     Columns: item, n_duels, wins, losses, strength_fp (BIGINT at
     _BT_SCALE, total mass normalized to K·S each round).  The duel
-    table (the only data-sized work) is memoized per (session, sf_dir)
-    like the other derived structures; the MM rounds re-run."""
-    key = (spark, sf_dir)
-    if key not in _PK_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        _PK_CACHE[key] = _duel_pairs(spark, sf_dir).localCheckpoint()
-        build_done("bt_duel_pairs", _t0)
+    table (the only data-sized work) is memoized like the other
+    derived structures; the MM rounds re-run."""
+    pk = memo(
+        "bt_duel_pairs",
+        (spark, sf_dir),
+        lambda: _duel_pairs(spark, sf_dir).localCheckpoint(),
+    )
     return (
-        bt_fit(_PK_CACHE[key])
+        bt_fit(pk)
         .orderBy(F.desc("strength_fp"), F.asc("item"))
         .limit(_BT_TOPK)
     )

@@ -16,6 +16,7 @@ import math as _pymath
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.exact import dlit
 from trx_spark.operators.kmeans import (
     _SCALE as _KM_SCALE,
@@ -168,25 +169,22 @@ _N_CELLS = 16
 _N_PROBE = 2
 
 
-_CELLS_ASSIGN_CACHE: dict = {}
-
-
 def _init_cents_lit(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, list[float]]]:
     """The first _N_CELLS vectors as a collected literal codebook
     (bounded: 16 x 64 doubles BY CONSTRUCTION).  Memoized alongside the
     assignment so the probe ranking reuses the same collect."""
-    key = (spark, sf_dir, "init_cents")
-    if key not in _CELLS_ASSIGN_CACHE:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        _CELLS_ASSIGN_CACHE[key] = sorted(
+        return sorted(
             (int(r[0]), [float(v) for v in r[1]])
             for r in emb.filter(F.col("vec_id") < _N_CELLS).collect()
         )
-    return _CELLS_ASSIGN_CACHE[key]
+
+    return memo("ivf_init_cents", (spark, sf_dir), build)
 
 
 def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,25 +196,20 @@ def _cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlined as literals, so the assignment is ONE map-side pass (no
     broadcast join, no n x k argmax shuffle — `kmeans.assign_literal`;
     the struct-max tie-break equals the former window's
-    ORDER BY dot DESC, cid).  Memoized per (session, sf_dir) — the
-    assignment is consumed by ann_ivf_topk and the LSH/IVF composites."""
-    key = (spark, sf_dir)
-    if key in _CELLS_ASSIGN_CACHE:
-        return _CELLS_ASSIGN_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    ORDER BY dot DESC, cid).  Memoized — the assignment is consumed by
+    ann_ivf_topk and the LSH/IVF composites."""
+    def build():
+        cents = _init_cents_lit(spark, sf_dir)
+        emb = fan_out_small_scan(
+            load_table(spark, sf_dir, "embeddings")
+        ).select("vec_id", "embedding")
+        return (
+            assign_literal(emb, cents)
+            .select("vec_id", "cid")
+            .localCheckpoint()
+        )
 
-    cents = _init_cents_lit(spark, sf_dir)
-    _t0 = build_start()
-    emb = fan_out_small_scan(
-        load_table(spark, sf_dir, "embeddings")
-    ).select("vec_id", "embedding")
-    _CELLS_ASSIGN_CACHE[key] = (
-        assign_literal(emb, cents)
-        .select("vec_id", "cid")
-        .localCheckpoint()
-    )
-    build_done("ivf_cells_assign", _t0)
-    return _CELLS_ASSIGN_CACHE[key]
+    return memo("ivf_cells_assign", (spark, sf_dir), build)
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,9 +230,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> list:
-    """The query vector (vec_id 0) collected once per (session,
-    sf_dir) — ONE bounded row, shared with the exact re-rank's memo
-    (textdata._Q0_CACHE) so the two never collect it twice."""
+    """The query vector (vec_id 0) collected once per session — ONE
+    bounded row, shared with the exact re-rank's memo
+    (textdata._query_vec0) so the two never collect it twice."""
     v = _query_vec0(spark, sf_dir)
     if v is None:
         raise IndexError("embeddings table has no vec_id 0 row")
@@ -323,36 +316,27 @@ WHERE rank <= 10
 
 _KM_ROUNDS = 2
 
+
 # kmeans_cells / ann_ivf_trained_topk / semantic_dedup all train the
 # SAME coarse codebook (lloyd_centroids, k=_N_CELLS, one update), and
 # pq_codes / ann_pq_topk the same grouped PQ codebooks — memoize the
-# localCheckpoint'ed results per (session, sf_dir), like the trxdomain3
-# curve bank. The codebook is k×dim rows (tiny); what the cache saves
+# localCheckpoint'ed results, like the trxdomain3 curve bank. The codebook is k×dim rows (tiny); what the cache saves
 # is the training passes over the corpus.
-_CENTS_CACHE: dict = {}
-_PQ_CACHE: dict = {}
-_ASSIGN_CACHE: dict = {}
-
-
 def _trained_cents(spark: SparkSession, sf_dir: str) -> list:
     """The Lloyd-trained coarse codebook as a collected literal list
     (k x dim BY CONSTRUCTION — bounded driver state, the pca-moment
     discipline).  Training runs through the literal path: 2 bounded
     collects (init rows + updated centroids), every corpus pass
     map-side.  Bit-identical centroids to the former DataFrame chain."""
-    key = (spark, sf_dir)
-    if key not in _CENTS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
+    def build():
         emb = fan_out_small_scan(
             load_table(spark, sf_dir, "embeddings")
         ).select("vec_id", "embedding")
-        _CENTS_CACHE[key] = lloyd_centroids_collected(
+        return lloyd_centroids_collected(
             emb, k=_N_CELLS, updates=_KM_ROUNDS - 1
         )
-        build_done("coarse_codebook", _t0)
-    return _CENTS_CACHE[key]
+
+    return memo("coarse_codebook", (spark, sf_dir), build)
 
 
 def _trained_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,18 +345,14 @@ def _trained_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     join into an n x k score table + groupBy argmax shuffle), shared by
     kmeans_cells / ann_ivf_trained_topk / ann_ivfpq_topk /
     semantic_dedup / cluster_balanced_sample / contrastive_triples."""
-    key = (spark, sf_dir)
-    if key not in _ASSIGN_CACHE:
-        from trx_spark.cache import build_done, build_start
-
+    def build():
         cents = _trained_cents(spark, sf_dir)
-        _t0 = build_start()
         emb = fan_out_small_scan(
             load_table(spark, sf_dir, "embeddings")
         ).select("vec_id", "embedding")
-        _ASSIGN_CACHE[key] = assign_literal(emb, cents).localCheckpoint()
-        build_done("trained_assign", _t0)
-    return _ASSIGN_CACHE[key]
+        return assign_literal(emb, cents).localCheckpoint()
+
+    return memo("trained_assign", (spark, sf_dir), build)
 
 
 def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,71 +522,64 @@ _SEMDEDUP_COS = 0.30
 # oracle SQL, so the gate checks the capped semantics bit-exactly.
 _SEMDEDUP_CELL_CAP = 256
 
+
 # the verdict table is a derived structure like the keep-list chain's
-# (cell-bounded pair join + distinct — rebuildable, cleared cold):
+# (cell-bounded pair join + distinct — rebuildable):
 # steady-state consumers read the checkpoint instead of re-running the
 # within-cell quadratic join per call (guide §2.1)
-_SEMDEDUP_CACHE: dict = {}
-
-
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector SemDeDup verdict: trained cell + keep/drop flag.
-    Memoized + checkpointed per (session, sf_dir)."""
-    key = (spark, sf_dir)
-    if key in _SEMDEDUP_CACHE:
-        return _SEMDEDUP_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    emb = fan_out_small_scan(
-        load_table(spark, sf_dir, "embeddings")
-    ).select("vec_id", "embedding")
-    # identical computation to argmax over the trained codebook — the
-    # assignment is the memoized map-side corpus pass shared with
-    # kmeans_cells / ann_ivf_trained_topk / contrastive_triples, so a
-    # steady-state session skips the corpus x centroid rescoring
-    assign = _trained_assign(spark, sf_dir).select("vec_id", "cid")
-    _t0 = build_start()
-    # cell sizes: ≤ k rows BY CONSTRUCTION → aggregate + broadcast join
-    # (a count window would sort the whole assignment table instead)
-    small_cells = (
-        assign.groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("_csz"))
-        .filter(F.col("_csz") <= _SEMDEDUP_CELL_CAP)
-        .select("cid")
-    )
-    pairable = assign.join(F.broadcast(small_cells), "cid", "left_semi")
-    m = pairable.join(emb, "vec_id").withColumn("n1", _norm(F.col("embedding")))
-    a = m.select(
-        F.col("vec_id").alias("vec_a"),
-        "cid",
-        F.col("embedding").alias("ea"),
-        F.col("n1").alias("na"),
-    )
-    b = m.select(
-        F.col("vec_id").alias("vec_b"),
-        "cid",
-        F.col("embedding").alias("eb"),
-        F.col("n1").alias("nb"),
-    )
-    pairs = a.join(b, ["cid"]).filter(F.col("vec_a") < F.col("vec_b"))
-    cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
-    dropped = (
-        pairs.filter(cos >= F.lit(float(_SEMDEDUP_COS)))
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-        .withColumn("_dup", F.lit(1))
-    )
-    _SEMDEDUP_CACHE[key] = (
-        assign.join(dropped, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("cid").cast("long").alias("cid"),
-            F.col("_dup").isNull().alias("keep"),
+    Memoized + checkpointed."""
+    def build():
+        emb = fan_out_small_scan(
+            load_table(spark, sf_dir, "embeddings")
+        ).select("vec_id", "embedding")
+        # identical computation to argmax over the trained codebook — the
+        # assignment is the memoized map-side corpus pass shared with
+        # kmeans_cells / ann_ivf_trained_topk / contrastive_triples, so a
+        # steady-state session skips the corpus x centroid rescoring
+        assign = _trained_assign(spark, sf_dir).select("vec_id", "cid")
+        # cell sizes: ≤ k rows BY CONSTRUCTION → aggregate + broadcast join
+        # (a count window would sort the whole assignment table instead)
+        small_cells = (
+            assign.groupBy("cid")
+            .agg(F.count(F.lit(1)).alias("_csz"))
+            .filter(F.col("_csz") <= _SEMDEDUP_CELL_CAP)
+            .select("cid")
         )
-        .localCheckpoint()
-    )
-    build_done("semdedup_verdicts", _t0)
-    return _SEMDEDUP_CACHE[key]
+        pairable = assign.join(F.broadcast(small_cells), "cid", "left_semi")
+        m = pairable.join(emb, "vec_id").withColumn("n1", _norm(F.col("embedding")))
+        a = m.select(
+            F.col("vec_id").alias("vec_a"),
+            "cid",
+            F.col("embedding").alias("ea"),
+            F.col("n1").alias("na"),
+        )
+        b = m.select(
+            F.col("vec_id").alias("vec_b"),
+            "cid",
+            F.col("embedding").alias("eb"),
+            F.col("n1").alias("nb"),
+        )
+        pairs = a.join(b, ["cid"]).filter(F.col("vec_a") < F.col("vec_b"))
+        cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+        dropped = (
+            pairs.filter(cos >= F.lit(float(_SEMDEDUP_COS)))
+            .select(F.col("vec_b").alias("vec_id"))
+            .distinct()
+            .withColumn("_dup", F.lit(1))
+        )
+        return (
+            assign.join(dropped, "vec_id", "left")
+            .select(
+                "vec_id",
+                F.col("cid").cast("long").alias("cid"),
+                F.col("_dup").isNull().alias("keep"),
+            )
+            .localCheckpoint()
+        )
+
+    return memo("semdedup_verdicts", (spark, sf_dir), build)
 
 
 _SEMDEDUP_SQL = f"""
@@ -774,15 +747,11 @@ def _pq_train_encode(spark: SparkSession, sf_dir: str):
     """All subspace codebooks trained through the literal-codebook path
     (2 bounded collects: the k init vectors + the <= M*K*D updated
     centroid coordinates; every corpus pass map-side), the code table
-    encoded in one fused pass, localCheckpoint'ed and memoized per
-    (session, sf_dir) so pq_codes and ann_pq_topk share one training.
+    encoded in one fused pass, localCheckpoint'ed and memoized so
+    pq_codes and ann_pq_topk share one training.
     Returns (cents, codes): the literal list [(m, cid, cent)] and the
     (vec_id, m, cid, dot) frame."""
-    key = (spark, sf_dir)
-    if key not in _PQ_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
+    def build():
         emb = fan_out_small_scan(
             load_table(spark, sf_dir, "embeddings")
         ).select("vec_id", "embedding")
@@ -797,9 +766,9 @@ def _pq_train_encode(spark: SparkSession, sf_dir: str):
         ]
         cents = _pq_update_collect(emb, init)
         codes = _pq_encode_literal(emb, cents).localCheckpoint()
-        _PQ_CACHE[key] = (cents, codes)
-        build_done("pq_train_encode", _t0)
-    return _PQ_CACHE[key]
+        return (cents, codes)
+
+    return memo("pq_train_encode", (spark, sf_dir), build)
 
 
 def _pq_adc_df(spark: SparkSession, q: list, cents: list) -> DataFrame:
@@ -1095,7 +1064,6 @@ WHERE rank <= 10
 # ---------------------------------------------------------------------
 
 _OPQ_D = 6  # rotation acts on the PCA'd leading block (embstats._COV_DIMS)
-_OPQ_CACHE: dict = {}
 
 
 def _opq_nrm_text() -> str:
@@ -1121,53 +1089,43 @@ def _opq_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     training, encode and ADC table all ride one rotation pass."""
     from trx_spark.queries.embstats import pca_leading_component
 
-    key = (spark, sf_dir)
-    if key in _OPQ_CACHE:
-        return _OPQ_CACHE[key][0]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
-    v = pca_leading_component(spark, sf_dir).select(
-        *[F.col(f"v_{i}") for i in range(1, _OPQ_D + 1)]
-    )
-    emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", "embedding"
-    )
-    j = emb.join(F.broadcast(v)).withColumn("nrm", F.expr(_opq_nrm_text()))
-    for i in range(1, _OPQ_D + 1):
-        j = j.withColumn(f"u_{i}", F.expr(_opq_u_text(i)))
-        j = j.withColumn(
-            f"x_{i}", F.expr(f"CAST(element_at(embedding, {i}) AS DOUBLE)")
+    def build():
+        v = pca_leading_component(spark, sf_dir).select(
+            *[F.col(f"v_{i}") for i in range(1, _OPQ_D + 1)]
         )
-    j = j.withColumn("ud", F.expr(_OPQ_UD_TEXT))
-    rot_head = F.array(
-        *[
-            F.expr(f"x_{i} - 2.0 * u_{i} * ud").alias(f"y_{i}")
-            for i in range(1, _OPQ_D + 1)
-        ]
-    )
-    tail = F.expr(
-        f"transform(slice(embedding, {_OPQ_D + 1}, size(embedding) - {_OPQ_D}), "
-        f"t -> CAST(t AS DOUBLE))"
-    )
-    rot = j.select(
-        "vec_id", F.concat(rot_head, tail).alias("embedding")
-    ).localCheckpoint()
-    _OPQ_CACHE[key] = (rot,)
-    build_done("opq_rotation", _t0)
-    return rot
+        emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings")).select(
+            "vec_id", "embedding"
+        )
+        j = emb.join(F.broadcast(v)).withColumn("nrm", F.expr(_opq_nrm_text()))
+        for i in range(1, _OPQ_D + 1):
+            j = j.withColumn(f"u_{i}", F.expr(_opq_u_text(i)))
+            j = j.withColumn(
+                f"x_{i}", F.expr(f"CAST(element_at(embedding, {i}) AS DOUBLE)")
+            )
+        j = j.withColumn("ud", F.expr(_OPQ_UD_TEXT))
+        rot_head = F.array(
+            *[
+                F.expr(f"x_{i} - 2.0 * u_{i} * ud").alias(f"y_{i}")
+                for i in range(1, _OPQ_D + 1)
+            ]
+        )
+        tail = F.expr(
+            f"transform(slice(embedding, {_OPQ_D + 1}, size(embedding) - {_OPQ_D}), "
+            f"t -> CAST(t AS DOUBLE))"
+        )
+        return j.select(
+            "vec_id", F.concat(rot_head, tail).alias("embedding")
+        ).localCheckpoint()
+
+    return memo("opq_rotation", (spark, sf_dir), build)
 
 
 def _opq_train_encode(spark: SparkSession, sf_dir: str):
     """OPQ twin of _pq_train_encode over the rotated vectors (same
     literal-codebook path: bounded collects of init rows + updated
     centroids, map-side scoring/encode)."""
-    key = (spark, sf_dir)
-    if key not in _OPQ_CACHE or len(_OPQ_CACHE[key]) == 1:
-        from trx_spark.cache import build_done, build_start
-
+    def build():
         rot = _opq_rotated(spark, sf_dir)
-        _t0 = build_start()
         rows = sorted(
             (int(r[0]), [float(v) for v in r[1]])
             for r in rot.filter(F.col("vec_id") < _PQ_K).collect()
@@ -1178,25 +1136,24 @@ def _opq_train_encode(spark: SparkSession, sf_dir: str):
             for m in range(_PQ_M)
         ]
         cents = _pq_update_collect(rot, init)
-        codes = _pq_encode_literal(rot, cents).localCheckpoint()
-        _OPQ_CACHE[key] = (rot, cents, codes)
-        build_done("opq_train_encode", _t0)
-    return _OPQ_CACHE[key][1:]
+        return cents, _pq_encode_literal(rot, cents).localCheckpoint()
+
+    return memo("opq_train_encode", (spark, sf_dir), build)
 
 
 def _opq_query_vec(spark: SparkSession, sf_dir: str) -> list:
-    """The ROTATED query vector (vec_id 0) collected once per
-    (session, sf_dir) — ONE bounded row off the rotation checkpoint."""
-    key = (spark, sf_dir, "q0")
-    if key not in _OPQ_CACHE:
+    """The ROTATED query vector (vec_id 0) collected once per session
+    — ONE bounded row off the rotation checkpoint."""
+    def build():
         row = (
             _opq_rotated(spark, sf_dir)
             .filter(F.col("vec_id") == 0)
             .select("embedding")
             .collect()
         )
-        _OPQ_CACHE[key] = [float(v) for v in row[0][0]]
-    return _OPQ_CACHE[key]
+        return [float(v) for v in row[0][0]]
+
+    return memo("opq_query_vec", (spark, sf_dir), build)
 
 
 def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1349,12 +1306,10 @@ LEFT JOIN o ON o.vec_id = t.vec_id
 
 _KNN_K = 3
 
+
 # the edge table is consumed by knn_graph itself AND knn_pagerank —
-# memoize the localCheckpoint per (session, sf_dir) like the LSH bucket
-# table, so the bucket self-join + rank window runs once per session
-_KNN_CACHE: dict = {}
-
-
+# memoize the localCheckpoint like the LSH bucket table, so the bucket
+# self-join + rank window runs once per session
 def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed k-nearest-neighbor graph over the embedding corpus —
     the backbone structure for graph-based dedup clustering, label
@@ -1371,56 +1326,51 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (vec_id, nbr_id, cos_sim, knn_rank), ≤ _KNN_K rows per
     vec_id."""
-    key = (spark, sf_dir)
-    if key in _KNN_CACHE:
-        return _KNN_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
-    emb = fan_out_small_scan(
-        load_table(spark, sf_dir, "embeddings")
-    ).select("vec_id", "embedding")
-    b = (
-        ann_lsh_buckets(spark, sf_dir)
-        .join(emb, "vec_id")
-        .withColumn("n1", _norm(F.col("embedding")))
-    )
-    w = Window.partitionBy("bucket")
-    capped = (
-        b.withColumn("_bsz", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bsz") <= _LSH_BUCKET_CAP)
-        .drop("_bsz")
-    )
-    src = capped.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("bucket"),
-        F.col("embedding").alias("ea"),
-        F.col("n1").alias("na"),
-    )
-    nbr = capped.select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("bucket"),
-        F.col("embedding").alias("eb"),
-        F.col("n1").alias("nb"),
-    )
-    pairs = src.join(nbr, ["bucket"]).filter(F.col("src_id") != F.col("nbr_id"))
-    cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
-    wk = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.asc("nbr_id"))
-    out = (
-        pairs.withColumn("cos_sim", cos)
-        .filter(F.col("cos_sim").isNotNull())
-        .withColumn("knn_rank", F.row_number().over(wk))
-        .filter(F.col("knn_rank") <= _KNN_K)
-        .select(
-            F.col("src_id").alias("vec_id"),
-            "nbr_id",
-            "cos_sim",
-            F.col("knn_rank").cast("int").alias("knn_rank"),
+    def build():
+        emb = fan_out_small_scan(
+            load_table(spark, sf_dir, "embeddings")
+        ).select("vec_id", "embedding")
+        b = (
+            ann_lsh_buckets(spark, sf_dir)
+            .join(emb, "vec_id")
+            .withColumn("n1", _norm(F.col("embedding")))
         )
-    )
-    _KNN_CACHE[key] = out.localCheckpoint()
-    build_done("knn_edges", _t0)
-    return _KNN_CACHE[key]
+        w = Window.partitionBy("bucket")
+        capped = (
+            b.withColumn("_bsz", F.count(F.lit(1)).over(w))
+            .filter(F.col("_bsz") <= _LSH_BUCKET_CAP)
+            .drop("_bsz")
+        )
+        src = capped.select(
+            F.col("vec_id").alias("src_id"),
+            F.col("bucket"),
+            F.col("embedding").alias("ea"),
+            F.col("n1").alias("na"),
+        )
+        nbr = capped.select(
+            F.col("vec_id").alias("nbr_id"),
+            F.col("bucket"),
+            F.col("embedding").alias("eb"),
+            F.col("n1").alias("nb"),
+        )
+        pairs = src.join(nbr, ["bucket"]).filter(F.col("src_id") != F.col("nbr_id"))
+        cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+        wk = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.asc("nbr_id"))
+        out = (
+            pairs.withColumn("cos_sim", cos)
+            .filter(F.col("cos_sim").isNotNull())
+            .withColumn("knn_rank", F.row_number().over(wk))
+            .filter(F.col("knn_rank") <= _KNN_K)
+            .select(
+                F.col("src_id").alias("vec_id"),
+                "nbr_id",
+                "cos_sim",
+                F.col("knn_rank").cast("int").alias("knn_rank"),
+            )
+        )
+        return out.localCheckpoint()
+
+    return memo("knn_edges", (spark, sf_dir), build)
 
 
 _KNN_SQL = f"""
@@ -2346,46 +2296,40 @@ SELECT vec_id, label, rnd FROM {prev}
 _MRR_QMOD = 97  # eval-query sample: vec_id % _MRR_QMOD == 0
 _MRR_K = 10  # hit@k / ndcg@k cutoff
 
-_RANKED_EVAL_CACHE: dict = {}
 
 
 def _ranked_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared retrieval-eval ranking (qid, qlabel, label, rank):
     every non-query vector ranked by exact cosine per sampled query.
-    Memoized per (session, sf_dir) — MRR and nDCG score the same
+    Memoized — MRR and nDCG score the same
     ranking, so the brute-force leg runs once."""
-    key = (spark, sf_dir)
-    if key in _RANKED_EVAL_CACHE:
-        return _RANKED_EVAL_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    def build():
+        emb = (
+            fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
+            .select("vec_id", "embedding", "label")
+            .withColumn("n1", _norm(F.col("embedding")))
+        )
+        q = emb.filter(F.col("vec_id") % _MRR_QMOD == 0).select(
+            F.col("vec_id").alias("qid"),
+            F.col("label").alias("qlabel"),
+            F.col("embedding").alias("qe"),
+            F.col("n1").alias("qn1"),
+        )
+        scored = emb.join(
+            F.broadcast(q), F.col("vec_id") != F.col("qid")
+        ).withColumn(
+            "sim",
+            _dot(F.col("embedding"), F.col("qe"))
+            / F.sqrt(F.col("n1") * F.col("qn1")),
+        )
+        w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
+        return (
+            scored.select(
+                "qid", "qlabel", "label", F.row_number().over(w).alias("rank")
+            ).localCheckpoint()
+        )
 
-    _t0 = build_start()
-    emb = (
-        fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-        .select("vec_id", "embedding", "label")
-        .withColumn("n1", _norm(F.col("embedding")))
-    )
-    q = emb.filter(F.col("vec_id") % _MRR_QMOD == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("label").alias("qlabel"),
-        F.col("embedding").alias("qe"),
-        F.col("n1").alias("qn1"),
-    )
-    scored = emb.join(
-        F.broadcast(q), F.col("vec_id") != F.col("qid")
-    ).withColumn(
-        "sim",
-        _dot(F.col("embedding"), F.col("qe"))
-        / F.sqrt(F.col("n1") * F.col("qn1")),
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    _RANKED_EVAL_CACHE[key] = (
-        scored.select(
-            "qid", "qlabel", "label", F.row_number().over(w).alias("rank")
-        ).localCheckpoint()
-    )
-    build_done("ranked_eval", _t0)
-    return _RANKED_EVAL_CACHE[key]
+    return memo("ranked_eval", (spark, sf_dir), build)
 
 
 def retrieval_mrr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:

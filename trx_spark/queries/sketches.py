@@ -38,6 +38,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.exact import dlit
 from trx_spark.queries.curation import _token_stream
 from trx_spark.queries.textdata import _P, _TOKEN_RE, _tok_hash, _tok_hash_sql
@@ -356,15 +357,12 @@ _KMV_K = 128
 _KMV_A, _KMV_B = 16807, 17
 _KMV_UNION_NUM = float((_KMV_K - 1) * _P)  # (K-1)·P, exact in a double
 
-_BIGRAM_SRC_CACHE: dict = {}
-
 
 def _source_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct (source, bigram) table, memoized per (session, sf_dir):
-    the only corpus-sized stage of the KMV query — ~sources·vocab rows
-    after the distinct, so everything downstream is bounded."""
-    key = (spark, sf_dir)
-    if key not in _BIGRAM_SRC_CACHE:
+    """Distinct (source, bigram) table, memoized: the only corpus-sized
+    stage of the KMV query — ~sources·vocab rows after the distinct, so
+    everything downstream is bounded."""
+    def build():
         from trx_spark.queries.curation import _toks_base
 
         base = _toks_base(spark, sf_dir)
@@ -378,15 +376,13 @@ def _source_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda i: F.array_join(F.slice(F.col("toks"), i, 2), " "),
             ),
         )
-        from trx_spark.cache import timed_build
+        return (
+            base.select("source", F.explode(bigrams).alias("token"))
+            .distinct()
+            .localCheckpoint()
+        )
 
-        with timed_build("source_bigrams"):
-            _BIGRAM_SRC_CACHE[key] = (
-                base.select("source", F.explode(bigrams).alias("token"))
-                .distinct()
-                .localCheckpoint()
-            )
-    return _BIGRAM_SRC_CACHE[key]
+    return memo("source_bigrams", (spark, sf_dir), build)
 
 
 def kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,6 +16,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.queries.relational import _PRICING_SQL
 from trx_spark.streaming.incremental import release_state_stores, run_catchup
 
@@ -699,13 +700,9 @@ FROM documents d JOIN q ON q.doc_id = d.doc_id
 
 # the landed batch files are an INPUT FIXTURE (the same corpus split
 # both MG gates drain), not part of either gate's streaming compute —
-# built once per (session, sf_dir) like the bucketed-table fixture and
-# cleared by cache.py's cold sweep; each gate call still creates its
-# OWN fresh sketch/checkpoint dirs, so the replay itself is never
-# skipped or shared
-_MG_LANDING_CACHE: dict = {}
-
-
+# built once per session like the bucketed-table fixture; each gate
+# call still creates its OWN fresh sketch/checkpoint dirs, so the
+# replay itself is never skipped or shared
 def _mg_landing(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
     """Land the documents corpus as one parquet file per deterministic
     ``doc_id % B`` batch (one file per batch id keeps the MG merge's
@@ -721,44 +718,39 @@ def _mg_landing(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
 
     from trx_spark.queries.mgsketch import _MG_B
 
-    key = (spark, sf_dir)
-    if key in _MG_LANDING_CACHE:
-        return _MG_LANDING_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    def build():
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
+            "doc_id", "text"
+        )
+        work = tempfile.mkdtemp(prefix="trx_mg_stream_")
+        landing = os.path.join(work, "landing")
+        os.makedirs(landing)
+        staged = os.path.join(work, "staged")
+        (
+            docs.withColumn("_b", F.col("doc_id") % _MG_B)
+            .repartition(_MG_B, F.col("_b"))
+            .write.mode("overwrite")
+            .partitionBy("_b")
+            .parquet(staged)
+        )
+        for b in range(_MG_B):
+            parts = _glob.glob(os.path.join(staged, f"_b={b}", "part-*.parquet"))
+            if parts:
+                os.rename(parts[0], os.path.join(landing, f"batch_{b}.parquet"))
+            else:
+                # residue with no docs (never at the bench SFs): land an
+                # empty batch file, as the former per-batch write did
+                tmp = os.path.join(work, f"w{b}")
+                docs.filter(F.lit(False)).coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(tmp)
+                part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
+                os.rename(part, os.path.join(landing, f"batch_{b}.parquet"))
+        return (landing, docs.schema)
 
-    _t0 = build_start()
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    work = tempfile.mkdtemp(prefix="trx_mg_stream_")
-    landing = os.path.join(work, "landing")
-    os.makedirs(landing)
-    staged = os.path.join(work, "staged")
-    (
-        docs.withColumn("_b", F.col("doc_id") % _MG_B)
-        .repartition(_MG_B, F.col("_b"))
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(staged)
-    )
-    for b in range(_MG_B):
-        parts = _glob.glob(os.path.join(staged, f"_b={b}", "part-*.parquet"))
-        if parts:
-            os.rename(parts[0], os.path.join(landing, f"batch_{b}.parquet"))
-        else:
-            # residue with no docs (never at the bench SFs): land an
-            # empty batch file, as the former per-batch write did
-            tmp = os.path.join(work, f"w{b}")
-            docs.filter(F.lit(False)).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = _glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            os.rename(part, os.path.join(landing, f"batch_{b}.parquet"))
-    _MG_LANDING_CACHE[key] = (landing, docs.schema)
-    build_done("mg_landing", _t0)
-    return _MG_LANDING_CACHE[key]
+    return memo("mg_landing", (spark, sf_dir), build)
 
 
 def streaming_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:

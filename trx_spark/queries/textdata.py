@@ -18,6 +18,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.tables import fan_out_small_scan, load_table
 
 logger = logging.getLogger(__name__)
@@ -277,51 +278,43 @@ _LSH_BUCKET_CAP = 64
 
 
 # consumed by the gate query AND dedup_clusters' connected components —
-# memoize the pair table per (session, sf_dir)
-_LSH_PAIRS_CACHE: dict = {}
-
-
+# memoize the pair table
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding (4 bands × 2 rows) over the MinHash signatures:
     candidate near-dup pairs = docs sharing any band. The quadratic pair
     search becomes an equi-join on (band, h_even, h_odd), and buckets
     with more than _LSH_BUCKET_CAP members are dropped pre-join (see
     cap note above)."""
-    key = (spark, sf_dir)
-    if key in _LSH_PAIRS_CACHE:
-        return _LSH_PAIRS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    _t0 = build_start()
-    # the self-join would recompute the signature lineage on both sides
-    # — a local checkpoint materializes the tiny signature table once
-    sig = minhash_signatures(spark, sf_dir).localCheckpoint()
-    bands = sig.selectExpr(
-        "doc_id",
-        "stack(4, 0, mh0, mh1, 1, mh2, mh3, 2, mh4, mh5, 3, mh6, mh7) AS (band, hx, hy)",
-    )
-    w_bucket = Window.partitionBy("band", "hx", "hy")
-    capped = (
-        bands.withColumn("_bsz", F.count(F.lit(1)).over(w_bucket))
-        .filter(F.col("_bsz") <= _LSH_BUCKET_CAP)
-        .drop("_bsz")
-    )
-    a = capped.alias("a")
-    b = capped.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.hx") == F.col("b.hx"))
-            & (F.col("a.hy") == F.col("b.hy"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    def build():
+        # the self-join would recompute the signature lineage on both sides
+        # — a local checkpoint materializes the tiny signature table once
+        sig = minhash_signatures(spark, sf_dir).localCheckpoint()
+        bands = sig.selectExpr(
+            "doc_id",
+            "stack(4, 0, mh0, mh1, 1, mh2, mh3, 2, mh4, mh5, 3, mh6, mh7) AS (band, hx, hy)",
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    _LSH_PAIRS_CACHE[key] = pairs.localCheckpoint()
-    build_done("lsh_pairs", _t0)
-    return _LSH_PAIRS_CACHE[key]
+        w_bucket = Window.partitionBy("band", "hx", "hy")
+        capped = (
+            bands.withColumn("_bsz", F.count(F.lit(1)).over(w_bucket))
+            .filter(F.col("_bsz") <= _LSH_BUCKET_CAP)
+            .drop("_bsz")
+        )
+        a = capped.alias("a")
+        b = capped.alias("b")
+        pairs = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.hx") == F.col("b.hx"))
+                & (F.col("a.hy") == F.col("b.hy"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .distinct()
+        )
+        return pairs.localCheckpoint()
+
+    return memo("lsh_pairs", (spark, sf_dir), build)
 
 
 # The CTE chain ending in ``pairs`` is shared with the connected-
@@ -361,49 +354,42 @@ SELECT doc_a, doc_b FROM pairs
 
 _JACCARD_MIN = 0.2
 
+
 # consumed by the gate query AND lsh_tuning_curve's similarity
-# histogram — memoize the verified pair table per (session, sf_dir) so
-# one bench session builds the shingle self-join once (r11 advice)
-_JACCARD_PAIRS_CACHE: dict = {}
-
-
+# histogram — memoize the verified pair table so one bench session
+# builds the shingle self-join once (r11 advice)
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard near-dup pairs: shingle sets per doc, pair
     candidates = docs sharing a shingle (the shingle join IS the
     blocking), J = |∩| / |∪| ≥ 0.2."""
-    key = (spark, sf_dir)
-    if key in _JACCARD_PAIRS_CACHE:
-        return _JACCARD_PAIRS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    def build():
+        # identical construction to the AllPairs/MinHash shingle spine —
+        # ride the shared checkpointed memo instead of rebuilding it
+        sh = _shingle_table(spark, sf_dir)
+        sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        a = sh.alias("a")
+        b = sh.alias("b")
+        inter = (
+            a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+            .agg(F.count(F.lit(1)).alias("n_inter"))
+        )
+        out = (
+            # sizes is one row per doc (scales with the corpus) — no hint,
+            # AQE broadcasts at test scale and shuffles at corpus scale
+            inter.join(sizes.withColumnRenamed("n_sh", "n_a"), inter.doc_a == F.col("doc_id"))
+            .drop("doc_id")
+            .join(sizes.withColumnRenamed("n_sh", "n_b"), F.col("doc_b") == F.col("doc_id"))
+            .drop("doc_id")
+            .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
+            .filter(F.col("jaccard") >= _JACCARD_MIN)
+            .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
+        )
+        # the pair table is tiny (near-dups only) — checkpoint it so the
+        # second consumer in a session skips the shingle self-join entirely
+        return out.localCheckpoint()
 
-    _t0 = build_start()
-    # identical construction to the AllPairs/MinHash shingle spine —
-    # ride the shared checkpointed memo instead of rebuilding it
-    sh = _shingle_table(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        # sizes is one row per doc (scales with the corpus) — no hint,
-        # AQE broadcasts at test scale and shuffles at corpus scale
-        inter.join(sizes.withColumnRenamed("n_sh", "n_a"), inter.doc_a == F.col("doc_id"))
-        .drop("doc_id")
-        .join(sizes.withColumnRenamed("n_sh", "n_b"), F.col("doc_b") == F.col("doc_id"))
-        .drop("doc_id")
-        .withColumn("jaccard", F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-        .filter(F.col("jaccard") >= _JACCARD_MIN)
-        .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
-    )
-    # the pair table is tiny (near-dups only) — checkpoint it so the
-    # second consumer in a session skips the shingle self-join entirely
-    _JACCARD_PAIRS_CACHE[key] = out.localCheckpoint()
-    build_done("jaccard_pairs", _t0)
-    return _JACCARD_PAIRS_CACHE[key]
+    return memo("jaccard_pairs", (spark, sf_dir), build)
 
 
 _JACCARD_SQL = f"""
@@ -453,32 +439,20 @@ _ALLPAIRS_KEY_CAP = 4096  # docs per prefix blocking key before the key
 # the dedup family, not an exact pairwise join.
 
 
-# memoized AllPairs result per (session, sf_dir, key_cap): the exact
-# pair table is the shared truth side of shingle_minhash_recall and a
-# bench sibling of edit-distance style verifies — build it once
-_ALLPAIRS_CACHE: dict = {}
-
 # the distinct (doc_id, shingle) spine both the AllPairs truth build
 # and the MinHash signature table derive from — the tokenize + 3-gram
 # shingle pass is the dominant shared compute, materialized once per
-# (session, sf_dir) (guide §2.1; cleared by cache.py like every memo)
-_SHINGLE_TABLE_CACHE: dict = {}
-
-
+# session (guide §2.1)
 def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct word-3-gram shingles per doc (doc_id, shingle),
     checkpointed + memoized."""
-    key = (spark, sf_dir)
-    if key not in _SHINGLE_TABLE_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
+    def build():
         docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
         toks = docs.select(
             "doc_id", F.posexplode(_tokens_col()).alias("pos", "t")
         )
         w = Window.partitionBy("doc_id").orderBy("pos")
-        _SHINGLE_TABLE_CACHE[key] = (
+        return (
             toks.withColumn("t1", F.lead("t", 1).over(w))
             .withColumn("t2", F.lead("t", 2).over(w))
             .filter(F.col("t2").isNotNull())
@@ -488,25 +462,23 @@ def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint()
         )
-        build_done("shingle_table", _t0)
-    return _SHINGLE_TABLE_CACHE[key]
+
+    return memo("shingle_table", (spark, sf_dir), build)
 
 
+# the exact pair table is the shared truth side of
+# shingle_minhash_recall and a bench sibling of edit-distance style
+# verifies — build it once per key_cap
 def allpairs_jaccard_join(
     spark: SparkSession, sf_dir: str, *, key_cap: int = _ALLPAIRS_KEY_CAP
 ) -> DataFrame:
     """Memoizing wrapper over :func:`_allpairs_jaccard_join_build`
     (the algorithm and its guarantees are documented there)."""
-    key = (spark, sf_dir, key_cap)
-    if key not in _ALLPAIRS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        _ALLPAIRS_CACHE[key] = _allpairs_jaccard_join_build(
-            spark, sf_dir, key_cap
-        ).localCheckpoint()
-        build_done("allpairs_truth", _t0)
-    return _ALLPAIRS_CACHE[key]
+    return memo(
+        "allpairs_truth",
+        (spark, sf_dir, key_cap),
+        lambda: _allpairs_jaccard_join_build(spark, sf_dir, key_cap).localCheckpoint(),
+    )
 
 
 def _allpairs_jaccard_join_build(
@@ -708,14 +680,6 @@ WHERE i.n_inter / (sa.n + sb.n - i.n_inter) >= {_ALLPAIRS_T!r}
 
 _SHMH_BANDS = 4  # 4 bands x 2 rows over the 8-permutation family
 
-# shingle-grain MinHash signature table, memoized per (session,
-# sf_dir): the tokenize + 3-gram shingle + 8-permutation fold is the
-# recall audit's entire per-call compute (~90 % of its wall time), and
-# the result is a doc-keyed 9-column table the cold pass can always
-# rebuild — the same derived-structure discipline as the LSH bucket
-# and AllPairs truth memos it joins against
-_SHMH_SIGS_CACHE: dict = {}
-
 
 def _shingle_ids_col():
     """3-gram shingle set of a doc → char-fold id array (the _tok_hash
@@ -748,12 +712,14 @@ def shingle_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = allpairs_jaccard_join(spark, sf_dir).select(
         "doc_a", "doc_b", "jaccard"
     )
-    key = (spark, sf_dir)
-    if key not in _SHMH_SIGS_CACHE:
-        from trx_spark.cache import build_done, build_start
 
-        _t0 = build_start()
-
+    # shingle-grain MinHash signature table, memoized: the tokenize +
+    # 3-gram shingle + 8-permutation fold is the recall audit's entire
+    # per-call compute (~90 % of its wall time), and the result is a
+    # doc-keyed 9-column table the cold pass can always rebuild — the
+    # same derived-structure discipline as the LSH bucket and AllPairs
+    # truth memos it joins against
+    def build():
         def _affine(a, b):
             return lambda x: (F.lit(a) * x + F.lit(b)) % _P
 
@@ -770,7 +736,7 @@ def shingle_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min(_affine(a, b)(hid)).alias(f"mh{j}")
             for j, (a, b) in enumerate(_MINHASH_COEF)
         ]
-        _SHMH_SIGS_CACHE[key] = (
+        return (
             sh.groupBy("doc_id")
             .agg(*aggs)
             # materialize ONCE: both join sides below read this frame,
@@ -779,8 +745,8 @@ def shingle_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             # two BroadcastExchanges each fed by their own scan)
             .localCheckpoint()
         )
-        build_done("shmh_signatures", _t0)
-    sigs = _SHMH_SIGS_CACHE[key]
+
+    sigs = memo("shmh_signatures", (spark, sf_dir), build)
     a = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{j}").alias(f"a{j}") for j in range(8)],
@@ -1093,57 +1059,48 @@ _PLANE_COEF = [(2654435761, 40503), (2246822519, 30089), (3266489917, 20021),
 
 # the bucket table is consumed by four queries (itself, ann_topk_lsh,
 # ann_topk_multiprobe, embedding_neardup_pairs) — memoize the
-# localCheckpoint per (session, sf_dir) so the 8-plane scoring runs
-# once per bench/driver session
-_LSH_BUCKET_TABLE_CACHE: dict = {}
-
-
+# localCheckpoint so the 8-plane scoring runs once per session
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH bucket per embedding: 8 deterministic
     integer hyperplanes (components derived arithmetically from the
     position index -> oracle-exact); bucket = sign-bit vector of the dot
     products. The scale path for similarity search: candidate pairs are
     an equi-join on bucket instead of a cross join."""
-    key = (spark, sf_dir)
-    if key in _LSH_BUCKET_TABLE_CACHE:
-        return _LSH_BUCKET_TABLE_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-    from trx_spark.exact import dsum
+    def build():
+        from trx_spark.exact import dsum
 
-    _t0 = build_start()
-
-    emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-    ex = (
-        emb.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
-        .withColumn("x", F.col("x").cast("double"))
-        # posexplode's pos is INT — a 32-bit a·pos product would silently
-        # overflow for the coefficients that fit in int32
-        .withColumn("pos", F.col("pos").cast("long"))
-    )
-    # all 8 plane dot products in ONE keyed aggregation (8 agg columns)
-    # instead of a union of 8 per-plane copies — same fixed-point sums,
-    # 1 shuffle of the exploded rows rather than 8
-    def comp(a: int, b: int) -> F.Column:
-        return ((F.lit(a) * (F.col("pos") + 1) + F.lit(b)) % 97 - 48).cast("double")
-
-    dots = ex.groupBy("vec_id").agg(
-        *[
-            dsum(F.col("x") * comp(a, b), 1e9).alias(f"dot{j}")
-            for j, (a, b) in enumerate(_PLANE_COEF)
-        ]
-    )
-    bits = [
-        F.when(F.col(f"dot{j}") > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
+        emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
+        ex = (
+            emb.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
+            .withColumn("x", F.col("x").cast("double"))
+            # posexplode's pos is INT — a 32-bit a·pos product would silently
+            # overflow for the coefficients that fit in int32
+            .withColumn("pos", F.col("pos").cast("long"))
         )
-        for j in range(len(_PLANE_COEF))
-    ]
-    bucket = dots.select(
-        "vec_id", sum(bits[1:], bits[0]).alias("bucket")
-    )
-    _LSH_BUCKET_TABLE_CACHE[key] = bucket.localCheckpoint()
-    build_done("lsh_bucket_table", _t0)
-    return _LSH_BUCKET_TABLE_CACHE[key]
+        # all 8 plane dot products in ONE keyed aggregation (8 agg columns)
+        # instead of a union of 8 per-plane copies — same fixed-point sums,
+        # 1 shuffle of the exploded rows rather than 8
+        def comp(a: int, b: int) -> F.Column:
+            return ((F.lit(a) * (F.col("pos") + 1) + F.lit(b)) % 97 - 48).cast("double")
+
+        dots = ex.groupBy("vec_id").agg(
+            *[
+                dsum(F.col("x") * comp(a, b), 1e9).alias(f"dot{j}")
+                for j, (a, b) in enumerate(_PLANE_COEF)
+            ]
+        )
+        bits = [
+            F.when(F.col(f"dot{j}") > 0, F.lit(1 << j).cast("long")).otherwise(
+                F.lit(0).cast("long")
+            )
+            for j in range(len(_PLANE_COEF))
+        ]
+        bucket = dots.select(
+            "vec_id", sum(bits[1:], bits[0]).alias("bucket")
+        )
+        return bucket.localCheckpoint()
+
+    return memo("lsh_bucket_table", (spark, sf_dir), build)
 
 
 def _plane_sql(j: int, a: int, b: int) -> str:
@@ -1259,24 +1216,21 @@ _PROBE_MASKS = (
 )
 
 
-# the query vector (vec_id 0) collected once per (session, sf_dir):
-# every ANN consumer re-ranks against the same ONE bounded row, so the
-# collect is a shared derived value like the codebooks (None = the
-# table has no vec 0; rebuilt cold like every memo — cache.py)
-_Q0_CACHE: dict = {}
-
-
+# the query vector (vec_id 0) collected once per session: every ANN
+# consumer re-ranks against the same ONE bounded row, so the collect
+# is a shared derived value like the codebooks (None = the table has
+# no vec 0)
 def _query_vec0(spark: SparkSession, sf_dir: str) -> list | None:
-    key = (spark, sf_dir)
-    if key not in _Q0_CACHE:
+    def build():
         rows = (
             load_table(spark, sf_dir, "embeddings")
             .filter(F.col("vec_id") == 0)
             .select("embedding")
             .collect()
         )
-        _Q0_CACHE[key] = [float(v) for v in rows[0][0]] if rows else None
-    return _Q0_CACHE[key]
+        return [float(v) for v in rows[0][0]] if rows else None
+
+    return memo("query_vec0", (spark, sf_dir), build)
 
 
 # sentinel: distinguishes "caller did not pass q0" (collect it here)
@@ -1447,49 +1401,42 @@ WHERE rank <= {_TOP_K}
 
 _VERIFY_JACCARD_MIN = 0.5
 
+
 # (doc_a, doc_b, n_inter, n_a, n_b) per candidate pair — shared by the
 # Jaccard verifier and the containment scorer (one token explode, one
 # intersection join, one checkpoint for both)
-_PAIR_STATS_CACHE: dict = {}
-
-
 def _pair_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-token intersection statistics over the memoized LSH
     candidate pairs: (doc_a, doc_b, n_inter, n_a, n_b). The verifier
     (exact Jaccard) and the containment scorer (Broder c(A→B)) are
     both pure arithmetic over this frame — the intersection machinery
     exists ONCE in each engine."""
-    key = (spark, sf_dir)
-    if key in _PAIR_STATS_CACHE:
-        return _PAIR_STATS_CACHE[key]
-    from trx_spark.cache import build_done, build_start
-
-    pairs = minhash_lsh_pairs(spark, sf_dir)
-    _t0 = build_start()
-    tok = (
-        fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", F.explode(F.array_distinct(_tokens_col())).alias("t"))
-        .localCheckpoint()
-    )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(tok.alias("ta"), pairs.doc_a == F.col("ta.doc_id"))
-        .join(
-            tok.alias("tb"),
-            (pairs.doc_b == F.col("tb.doc_id")) & (F.col("ta.t") == F.col("tb.t")),
+    def build():
+        pairs = minhash_lsh_pairs(spark, sf_dir)
+        tok = (
+            fan_out_small_scan(load_table(spark, sf_dir, "documents"))
+            .select("doc_id", F.explode(F.array_distinct(_tokens_col())).alias("t"))
+            .localCheckpoint()
         )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("n_sh", "n_a"), inter.doc_a == F.col("doc_id"))
-        .drop("doc_id")
-        .join(sizes.withColumnRenamed("n_sh", "n_b"), F.col("doc_b") == F.col("doc_id"))
-        .drop("doc_id")
-    )
-    _PAIR_STATS_CACHE[key] = out.localCheckpoint()
-    build_done("pair_token_stats", _t0)
-    return _PAIR_STATS_CACHE[key]
+        sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+        inter = (
+            pairs.join(tok.alias("ta"), pairs.doc_a == F.col("ta.doc_id"))
+            .join(
+                tok.alias("tb"),
+                (pairs.doc_b == F.col("tb.doc_id")) & (F.col("ta.t") == F.col("tb.t")),
+            )
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
+        )
+        out = (
+            inter.join(sizes.withColumnRenamed("n_sh", "n_a"), inter.doc_a == F.col("doc_id"))
+            .drop("doc_id")
+            .join(sizes.withColumnRenamed("n_sh", "n_b"), F.col("doc_b") == F.col("doc_id"))
+            .drop("doc_id")
+        )
+        return out.localCheckpoint()
+
+    return memo("pair_token_stats", (spark, sf_dir), build)
 
 
 def lsh_pairs_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1627,7 +1574,6 @@ FROM pstats
 WHERE CAST(n_inter AS DOUBLE) / CAST(n_a AS DOUBLE) >= CAST({_CONTAIN_MIN!r} AS DOUBLE)
    OR CAST(n_inter AS DOUBLE) / CAST(n_b AS DOUBLE) >= CAST({_CONTAIN_MIN!r} AS DOUBLE)
 """
-
 
 
 # ---------------------------------------------------------------------

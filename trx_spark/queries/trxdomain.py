@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.exact import sql_davg, sql_dstddev_pop, sql_dsum
 from trx_spark.operators import azav, cell, filters, reduction
 from trx_spark.tables import load_table
@@ -117,24 +118,17 @@ diffs AS (SELECT *, i - iref AS diff FROM interp)"""
 
 # asof_interp_refs / scanpoint_stats / diffs_plus_ref /
 # chi2_filter_auto all consume the SAME interpolated diff bank over the
-# events shots; memoize its localCheckpoint per (session, sf_dir) so
-# one bench/driver session builds it once (same pattern as the
-# trxdomain3 curve bank).
-_DIFFS_CACHE: dict = {}
-
-
+# events shots; memoize its localCheckpoint so one session builds it
+# once (same pattern as the trxdomain3 curve bank).
 def _diffs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _DIFFS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        _DIFFS_CACHE[key] = reduction.time_resolved_diff(
+    return memo(
+        "events_diff_bank",
+        (spark, sf_dir),
+        lambda: reduction.time_resolved_diff(
             _events_shots(spark, sf_dir), group=["run"], idx="idx",
             is_ref="is_ref", value="i",
-        ).localCheckpoint()
-        build_done("events_diff_bank", _t0)
-    return _DIFFS_CACHE[key]
+        ).localCheckpoint(),
+    )
 
 
 # ---------------------------------------------------------------------

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.exact import sql_davg, sql_dstddev_pop, sql_dsum
 from trx_spark.operators import reduction
 from trx_spark.tables import load_table
@@ -168,25 +169,18 @@ diffs AS (SELECT *, i - iref AS diff FROM interp)"""
 
 
 # Both curve-bank queries consume the SAME interpolated-diff bank; the
-# localCheckpoint is memoized per (session, sf_dir) so the second query
-# reuses the materialized blocks instead of rebuilding the 600 k-row
-# bank (the dominant cost of each query). Keyed on the live session —
-# a fresh session misses and rebuilds, so stale checkpoints never leak.
-_DIFFS_CACHE: dict = {}
-
-
+# localCheckpoint is memoized so the second query reuses the
+# materialized blocks instead of rebuilding the 600 k-row bank (the
+# dominant cost of each query).
 def _diffs_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    if key not in _DIFFS_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
-        _DIFFS_CACHE[key] = reduction.time_resolved_diff(
+    return memo(
+        "curve_diff_bank",
+        (spark, sf_dir),
+        lambda: reduction.time_resolved_diff(
             _curves(spark, sf_dir), group=["run", "q_idx"], idx="idx",
             is_ref="is_ref", value="i",
-        ).localCheckpoint()
-        build_done("curve_diff_bank", _t0)
-    return _DIFFS_CACHE[key]
+        ).localCheckpoint(),
+    )
 
 
 def curves_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

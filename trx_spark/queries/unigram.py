@@ -67,6 +67,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.queries.bpe import _BPE_VOCAB
 from trx_spark.queries.curation import _TOKEN_RE
 
@@ -78,9 +79,6 @@ _UG_MAXP = 4  # max piece length considered
 _UG_SEED = 48  # multi-char seed pieces kept (plus all single chars)
 _UG_ROUNDS = 4  # hard-EM rounds (static unroll, mirrored in the oracle)
 _UG_MAXW = 12  # max word length the DP segments (longer → fallback)
-
-# trained state memo per (session, sf_dir): (stats_df, final_vocab_df)
-_UG_CACHE: dict = {}
 
 # Viterbi DP over one word as a single Spark SQL expression: acc[k] =
 # best (score, segmentation) for the prefix of length k-1; step j
@@ -176,57 +174,53 @@ def _prob_map(vocab: DataFrame) -> DataFrame:
     )
 
 
+# trained state memo: (stats_df, final_vocab_df)
 def _ug_train(spark: SparkSession, sf_dir: str):
-    key = (spark, sf_dir)
-    if key in _UG_CACHE:
-        return _UG_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    def build():
+        words = _ug_words(spark, sf_dir).localCheckpoint()
+        v0 = _seed_vocab(spark, sf_dir).localCheckpoint()
+        vocab = v0
+        stats_rows = []
+        for r in range(1, _UG_ROUNDS + 1):
+            seg = words.crossJoin(F.broadcast(_prob_map(vocab))).select(
+                "freq", F.expr(_UG_DP_EXPR).alias("seg")
+            )
+            vitc = (
+                seg.select("freq", F.explode("seg").alias("piece"))
+                .groupBy("piece")
+                .agg(F.sum("freq").alias("c"))
+            )
+            # M-step: +1 smoothing over the FULL seed set keeps every
+            # probability positive (coverage for later rounds + encode)
+            vocab = (
+                v0.select("piece")
+                .join(vitc, "piece", "left")
+                .select(
+                    "piece",
+                    (F.lit(1) + F.coalesce(F.col("c"), F.lit(0)))
+                    .cast("long")
+                    .alias("cnt"),
+                )
+                .localCheckpoint()
+            )
+            stats_rows.append(
+                vocab.crossJoin(
+                    F.broadcast(vocab.agg(F.sum("cnt").alias("tot")))
+                ).select(
+                    F.lit(r).alias("em_round"),
+                    "piece",
+                    F.col("cnt").alias("piece_count"),
+                    (
+                        F.col("cnt").cast("double") / F.col("tot").cast("double")
+                    ).alias("piece_prob"),
+                )
+            )
+        stats = stats_rows[0]
+        for s in stats_rows[1:]:
+            stats = stats.unionByName(s)
+        return (stats.localCheckpoint(), vocab)
 
-    _t0 = build_start()
-    words = _ug_words(spark, sf_dir).localCheckpoint()
-    v0 = _seed_vocab(spark, sf_dir).localCheckpoint()
-    vocab = v0
-    stats_rows = []
-    for r in range(1, _UG_ROUNDS + 1):
-        seg = words.crossJoin(F.broadcast(_prob_map(vocab))).select(
-            "freq", F.expr(_UG_DP_EXPR).alias("seg")
-        )
-        vitc = (
-            seg.select("freq", F.explode("seg").alias("piece"))
-            .groupBy("piece")
-            .agg(F.sum("freq").alias("c"))
-        )
-        # M-step: +1 smoothing over the FULL seed set keeps every
-        # probability positive (coverage for later rounds + encode)
-        vocab = (
-            v0.select("piece")
-            .join(vitc, "piece", "left")
-            .select(
-                "piece",
-                (F.lit(1) + F.coalesce(F.col("c"), F.lit(0)))
-                .cast("long")
-                .alias("cnt"),
-            )
-            .localCheckpoint()
-        )
-        stats_rows.append(
-            vocab.crossJoin(
-                F.broadcast(vocab.agg(F.sum("cnt").alias("tot")))
-            ).select(
-                F.lit(r).alias("em_round"),
-                "piece",
-                F.col("cnt").alias("piece_count"),
-                (
-                    F.col("cnt").cast("double") / F.col("tot").cast("double")
-                ).alias("piece_prob"),
-            )
-        )
-    stats = stats_rows[0]
-    for s in stats_rows[1:]:
-        stats = stats.unionByName(s)
-    _UG_CACHE[key] = (stats.localCheckpoint(), vocab)
-    build_done("unigram_trained", _t0)
-    return _UG_CACHE[key]
+    return memo("unigram_trained", (spark, sf_dir), build)
 
 
 def unigram_em_round_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,10 +40,10 @@ import string
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
+
 _WP_VOCAB = 128  # top-K corpus words kept as whole pieces
 _WP_MAXLEN = 20  # BERT's max_input_chars_per_word rule → UNK
-
-_WP_CACHE: dict = {}
 
 
 def _wp_fold_expr(vocab: list[str], word_col: str = "word") -> str:
@@ -77,11 +77,7 @@ def _wp_vocab(spark: SparkSession, sf_dir: str) -> list[str]:
     matcher's inlined array literal."""
     from trx_spark.queries.curation import _token_stream
 
-    key = (spark, sf_dir)
-    if key not in _WP_CACHE:
-        from trx_spark.cache import build_done, build_start
-
-        _t0 = build_start()
+    def build():
         top = (
             _token_stream(spark, sf_dir)
             .groupBy("token")
@@ -96,9 +92,9 @@ def _wp_vocab(spark: SparkSession, sf_dir: str) -> list[str]:
         # unreachable, and this guard keeps that true if _TOKEN_RE or
         # the vocab construction ever changes
         assert set(string.ascii_lowercase) <= set(vocab), "vocab must cover [a-z]"
-        _WP_CACHE[key] = vocab
-        build_done("wordpiece_vocab", _t0)
-    return _WP_CACHE[key]
+        return vocab
+
+    return memo("wordpiece_vocab", (spark, sf_dir), build)
 
 
 def wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -199,9 +195,6 @@ GROUP BY t.doc_id
 
 _WPT_MERGES = 6  # likelihood merge rounds (static unroll, mirrored in SQL)
 
-# trained state memo per (session, sf_dir): (merges_df, words_df)
-_WPT_CACHE: dict = {}
-
 
 def _sym_counts(words: DataFrame) -> DataFrame:
     """(sym, c): freq-weighted symbol occurrences over the current
@@ -217,75 +210,71 @@ def _sym_counts(words: DataFrame) -> DataFrame:
     )
 
 
+# trained state memo: (merges_df, words_df)
 def _wpt_train(spark: SparkSession, sf_dir: str):
     from trx_spark.queries.bpe import _APPLY_MERGE_EXPR, _word_freq, _pair_counts
 
-    key = (spark, sf_dir)
-    if key in _WPT_CACHE:
-        return _WPT_CACHE[key]
-    from trx_spark.cache import build_done, build_start
+    def build():
+        words = _word_freq(spark, sf_dir).select(
+            "word",
+            "freq",
+            F.expr(
+                "substring(regexp_replace(word, '(.)', '$1\x1f'), 1, "
+                "2 * length(word) - 1)"
+            ).alias("seq"),
+        ).localCheckpoint()
+        merge_rows = []
+        for rank in range(1, _WPT_MERGES + 1):
+            pairs = _pair_counts(words)
+            syms = _sym_counts(words)
+            ul = syms.select(F.col("sym").alias("l"), F.col("c").alias("cl"))
+            ur = syms.select(F.col("sym").alias("r"), F.col("c").alias("cr"))
+            # checkpointed: the 1-row argmax feeds BOTH the merge table and
+            # the rewrite join — one dictionary-scale job per round
+            best = (
+                pairs.join(ul, "l")
+                .join(ur, "r")
+                .withColumn(
+                    "score",
+                    F.col("cnt").cast("double")
+                    / (F.col("cl").cast("double") * F.col("cr").cast("double")),
+                )
+                .orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
+                .limit(1)
+                .localCheckpoint()
+            )
+            merge_rows.append(
+                best.select(
+                    F.lit(rank).alias("merge_rank"),
+                    F.col("l").alias("left_sym"),
+                    F.col("r").alias("right_sym"),
+                    F.col("cnt").alias("pair_count"),
+                    F.col("cl").alias("left_count"),
+                    F.col("cr").alias("right_count"),
+                    F.col("score"),
+                )
+            )
+            # LEFT join so an exhausted trainer no-ops (see bpe._train);
+            # 1-row build side keeps this a broadcast loop join by design
+            words = (
+                words.join(
+                    F.broadcast(best.select("l", "r")), F.lit(True), "left"
+                )
+                .select(
+                    "word",
+                    "freq",
+                    F.when(F.col("l").isNull(), F.col("seq"))
+                    .otherwise(F.expr(_APPLY_MERGE_EXPR))
+                    .alias("seq"),
+                )
+                .localCheckpoint()
+            )
+        merges = merge_rows[0]
+        for m in merge_rows[1:]:
+            merges = merges.unionByName(m)
+        return (merges.localCheckpoint(), words)
 
-    _t0 = build_start()
-    words = _word_freq(spark, sf_dir).select(
-        "word",
-        "freq",
-        F.expr(
-            "substring(regexp_replace(word, '(.)', '$1\x1f'), 1, "
-            "2 * length(word) - 1)"
-        ).alias("seq"),
-    ).localCheckpoint()
-    merge_rows = []
-    for rank in range(1, _WPT_MERGES + 1):
-        pairs = _pair_counts(words)
-        syms = _sym_counts(words)
-        ul = syms.select(F.col("sym").alias("l"), F.col("c").alias("cl"))
-        ur = syms.select(F.col("sym").alias("r"), F.col("c").alias("cr"))
-        # checkpointed: the 1-row argmax feeds BOTH the merge table and
-        # the rewrite join — one dictionary-scale job per round
-        best = (
-            pairs.join(ul, "l")
-            .join(ur, "r")
-            .withColumn(
-                "score",
-                F.col("cnt").cast("double")
-                / (F.col("cl").cast("double") * F.col("cr").cast("double")),
-            )
-            .orderBy(F.desc("score"), F.asc("l"), F.asc("r"))
-            .limit(1)
-            .localCheckpoint()
-        )
-        merge_rows.append(
-            best.select(
-                F.lit(rank).alias("merge_rank"),
-                F.col("l").alias("left_sym"),
-                F.col("r").alias("right_sym"),
-                F.col("cnt").alias("pair_count"),
-                F.col("cl").alias("left_count"),
-                F.col("cr").alias("right_count"),
-                F.col("score"),
-            )
-        )
-        # LEFT join so an exhausted trainer no-ops (see bpe._train);
-        # 1-row build side keeps this a broadcast loop join by design
-        words = (
-            words.join(
-                F.broadcast(best.select("l", "r")), F.lit(True), "left"
-            )
-            .select(
-                "word",
-                "freq",
-                F.when(F.col("l").isNull(), F.col("seq"))
-                .otherwise(F.expr(_APPLY_MERGE_EXPR))
-                .alias("seq"),
-            )
-            .localCheckpoint()
-        )
-    merges = merge_rows[0]
-    for m in merge_rows[1:]:
-        merges = merges.unionByName(m)
-    _WPT_CACHE[key] = (merges.localCheckpoint(), words)
-    build_done("wordpiece_trained", _t0)
-    return _WPT_CACHE[key]
+    return memo("wordpiece_trained", (spark, sf_dir), build)
 
 
 def wordpiece_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

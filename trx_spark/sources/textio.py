@@ -15,7 +15,7 @@ Scale notes: both writers are plain ``df.write`` — each task writes
 its own shard, no driver involvement, no collect. Both readers are
 Spark's native JSON/CSV data sources (JVM line parsing, splittable
 input, predicate/column pushdown where the format allows). The gate
-queries stage a small deterministic fixture per (session, sf_dir) —
+queries stage a small deterministic fixture once per session —
 the staging itself is a distributed write — and append ONE corrupt
 line driver-side to pin the quarantine path; the DuckDB oracle
 recomputes the expected per-source stats arithmetically from the
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from trx_spark.cache import memo
 from trx_spark.tables import load_table
 
 DOC_SCHEMA = T.StructType(
@@ -133,18 +134,15 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
 # Gate queries: roundtrip documents through each format + quarantine
 # ---------------------------------------------------------------------
 
-_STAGE_CACHE: dict = {}
-
 _CORRUPT_JSONL = '{"doc_id": 9999999, "text": "truncated...\n'
 _CORRUPT_CSV = "not-a-bigint,only,two\n"
 _CORRUPT_XML = "<docs><doc><doc_id>not-a-bigint</doc_id></doc></docs>\n"
 
 
 def _staged(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """Write the documents table as fmt shards once per (session,
-    sf_dir), then append one malformed line in an extra shard file."""
-    key = (spark, sf_dir, fmt)
-    if key not in _STAGE_CACHE:
+    """Write the documents table as fmt shards once per session, then
+    append one malformed line in an extra shard file."""
+    def build():
         tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
         path = os.path.join(
             tempfile.gettempdir(), "trx_spark_textio", f"{tag}_{fmt}"
@@ -161,8 +159,9 @@ def _staged(spark: SparkSession, sf_dir: str, fmt: str) -> str:
         if corrupt is not None:
             with open(os.path.join(path, fname), "w") as fh:
                 fh.write(corrupt)
-        _STAGE_CACHE[key] = path
-    return _STAGE_CACHE[key]
+        return path
+
+    return memo("textio_staged", (spark, sf_dir, fmt), build)
 
 
 def _ingest_stats(df: DataFrame) -> DataFrame:

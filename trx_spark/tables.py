@@ -11,6 +11,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -100,19 +102,13 @@ def fan_out_small_scan(df: DataFrame, target: int | None = None) -> DataFrame:
         key = (spark, df.semanticHash(), hash(tuple(df.inputFiles())), target)
     except Exception:  # pragma: no cover - semanticHash unavailable
         key = None
-    n = _FAN_MEMO.get(key) if key is not None else None
-    if n is None:
+    if key is None:
         n = df.rdd.getNumPartitions()
-        if key is not None:
-            _FAN_MEMO[key] = n
+    else:
+        n = memo("fan_out_partitions", key, lambda: df.rdd.getNumPartitions())
     if n >= target:
         return df
     return df.repartition(target)
-
-
-# (session, semanticHash, target) -> planned partition count; cleared
-# with the stage caches so cold benchmarks re-pay planning honestly
-_FAN_MEMO: dict = {}
 
 
 def raw_dtype(spark: SparkSession, sf_dir: str, name: str, col: str) -> str | None:
