@@ -353,8 +353,8 @@ HEADLINE = [
     "dp_heavy_hitters",
     "dp_epsilon_ledger",
     # the third DP mechanism: quantile via the base-2 exponential
-    # mechanism, global + per-group (landed after the r13 window
-    # sealed; see LOCAL_VERIFICATION)
+    # mechanism, global + per-group (first driver rows in
+    # CORRECTNESS_r14.json)
     "dp_quantile",
     "dp_group_quantiles",
 ]
@@ -600,60 +600,34 @@ def main() -> None:
     detail["loadavg"] = load
     detail["pass_loads"] = pass_loads
     detail["pass_gc_ms"] = pass_gc
-    # registry-currency telemetry (r9 verdict task 8): window health is
-    # observable from the committed artifact instead of rotation-note
-    # comments — per-name newest driver row from the CORRECTNESS_r*.json
-    # ledger union
-    try:
-        import glob as _glob
+    # registry-currency telemetry: window health is observable from the
+    # committed artifact — per-name newest driver row from the shared
+    # CORRECTNESS_r*.json ledger reader
+    from trx_spark.queries import GATE_WINDOW, ORACLES, ledger_rounds
 
-        repo = os.path.dirname(os.path.abspath(__file__))
-        newest: dict[str, int] = {}
-        from trx_spark.queries import GATE_WINDOW
-
-        for fpath in sorted(_glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-            # basename only: an ancestor directory containing '_r<n>'
-            # must not shadow the ledger filename's round number
-            rnd = int(re.search(r"_r(\d+)", os.path.basename(fpath)).group(1))
-            for qname in json.load(open(fpath)):
-                newest[qname] = max(rnd, newest.get(qname, 0))
-        from trx_spark.queries import ORACLES
-
-        names = list(QUERIES)
-        # "no oracle BY DESIGN" (r10 verdict task 8): registry names with
-        # no ORACLES entry can never hash-match (zlib/log2/exp — not
-        # DuckDB-computable); each has a golden-tested integer-statistics
-        # companion.  Listing them separately keeps the currency metrics
-        # honest: never_checked / oldest_row_round track only names an
-        # oracle COULD verify, so rotation notes stop spending window
-        # slots re-recording known no_oracle rows.
-        no_oracle = sorted(n for n in names if n not in ORACLES)
-        oracled = [n for n in names if n in ORACLES]
-        rows = sorted(newest[n] for n in oracled if n in newest)
-        never = sorted(n for n in oracled if n not in newest)
-        # per-name provenance for never-checked entries (r12 verdict
-        # task 6): the artifact records why each is expected-green
-        # before its first driver row — the builder's in-session
-        # cell-exact verification vs the DuckDB oracle
-        from trx_spark.queries import LOCAL_VERIFICATION
-
-        detail["registry"] = {
-            "n_queries": len(names),
-            "n_benched": len(set(HEADLINE) | set(STREAMING)),
-            "gate_window": GATE_WINDOW,
-            "no_oracle_by_design": no_oracle,
-            "never_checked": len(never),
-            "never_checked_names": never,
-            "local_verification": {
-                n: LOCAL_VERIFICATION[n] for n in never if n in LOCAL_VERIFICATION
-            },
-            "oldest_row_round": rows[0] if rows else None,
-            "rows_by_round": {
-                str(r): rows.count(r) for r in sorted(set(rows))
-            },
-        }
-    except Exception:
-        pass
+    newest = ledger_rounds()
+    names = list(QUERIES)
+    # "no oracle BY DESIGN": registry names with no ORACLES entry can
+    # never hash-match (zlib/log2/exp — not DuckDB-computable); each has
+    # a golden-tested integer-statistics companion.  Listing them
+    # separately keeps the currency metrics honest: never_checked /
+    # oldest_row_round track only names an oracle COULD verify.
+    no_oracle = sorted(n for n in names if n not in ORACLES)
+    oracled = [n for n in names if n in ORACLES]
+    rows = sorted(newest[n] for n in oracled if n in newest)
+    never = sorted(n for n in oracled if n not in newest)
+    detail["registry"] = {
+        "n_queries": len(names),
+        "n_benched": len(set(HEADLINE) | set(STREAMING)),
+        "gate_window": GATE_WINDOW,
+        "no_oracle_by_design": no_oracle,
+        "never_checked": len(never),
+        "never_checked_names": never,
+        "oldest_row_round": rows[0] if rows else None,
+        "rows_by_round": {
+            str(r): rows.count(r) for r in sorted(set(rows))
+        },
+    }
     # stamp the source tree the numbers were recorded against, so a
     # committed BENCH_DETAIL that predates later commits is detectable
     # from the artifact alone (r9 closed with a 6-commit gap)

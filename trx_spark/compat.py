@@ -190,6 +190,35 @@ def doFolder_dataRed(
     return data_reduction(curves, log, cfg)
 
 
+def _sink_inputs(
+    res: dict[str, DataFrame],
+    folder: str,
+    basename: str,
+    curves: DataFrame | None,
+    *,
+    auto_end: str,
+) -> tuple[DataFrame, str, str, str]:
+    """Shared front of the text sinks: ``(scan, x, folder, basename)``.
+    ``x`` is the scan's q axis — ``q``, else ``q_bin``, which the curve
+    bank's (q_bin, q) map turns back into physical ``q`` when ``curves``
+    is given. ``folder`` is made absolute; ``basename='auto'`` becomes
+    the folder's last two path components joined with ``_``, plus
+    ``auto_end``."""
+    import os
+
+    scan = res["scan"]
+    x = "q" if "q" in scan.columns else "q_bin"
+    if x == "q_bin" and curves is not None and {"q_bin", "q"} <= set(curves.columns):
+        qmap = curves.select("q_bin", "q").distinct()
+        scan = scan.join(qmap, "q_bin")
+        x = "q"
+    folder = os.path.abspath(folder)
+    if basename == "auto":
+        sep = os.sep
+        basename = "_".join(folder.rstrip(sep).split(sep)[-2:]) + auto_end
+    return scan, x, folder, basename
+
+
 def saveTxt(
     res: dict[str, DataFrame],
     folder: str,
@@ -232,16 +261,7 @@ def saveTxt(
 
     from trx_spark.functions.strings import time_to_str
 
-    scan = res["scan"]
-    x = "q" if "q" in scan.columns else "q_bin"
-    if x == "q_bin" and curves is not None and {"q_bin", "q"} <= set(curves.columns):
-        qmap = curves.select("q_bin", "q").distinct()
-        scan = scan.join(qmap, "q_bin")
-        x = "q"
-    folder = os.path.abspath(folder)
-    if basename == "auto":
-        sep = os.sep
-        basename = "_".join(folder.rstrip(sep).split(sep)[-2:]) + "_"
+    scan, x, folder, basename = _sink_inputs(res, folder, basename, curves, auto_end="_")
     label = (
         time_to_str(F.col(delay))
         if delay_to_str
@@ -358,18 +378,13 @@ def save_diffs_xy(
     from trx_spark.functions.scattering import q_to_two_theta
     from trx_spark.functions.strings import time_to_str
 
-    scan = res["scan"]
-    if "diff_plus_ref" not in scan.columns:
+    if "diff_plus_ref" not in res["scan"].columns:
         raise ValueError(
             "save_diffs_xy needs the 'diff_plus_ref' column (the "
             "reference writes diffs_plus_ref, misc.py:77-80) — pass the "
             "'scan' frame from doFolder_dataRed"
         )
-    x = "q" if "q" in scan.columns else "q_bin"
-    if x == "q_bin" and curves is not None and {"q_bin", "q"} <= set(curves.columns):
-        qmap = curves.select("q_bin", "q").distinct()
-        scan = scan.join(qmap, "q_bin")
-        x = "q"
+    scan, x, folder, basename = _sink_inputs(res, folder, basename, curves, auto_end="")
     if "twotheta_deg" in scan.columns:
         tt = F.col("twotheta_deg")
     elif x == "q" and (energy is not None or wavelength is not None):
@@ -379,10 +394,6 @@ def save_diffs_xy(
             "no 2theta axis: provide a 'twotheta_deg' column, or a "
             "physical 'q' column (via curves=) plus energy=/wavelength="
         )
-    folder = os.path.abspath(folder)
-    if basename == "auto":
-        sep = os.sep
-        basename = "_".join(folder.rstrip(sep).split(sep)[-2:])
     pdf = (
         scan.withColumn("_tt", tt)
         .withColumn("_dstr", time_to_str(F.col(delay)))

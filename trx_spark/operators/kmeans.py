@@ -117,93 +117,6 @@ def lloyd_assign(
 
 
 # ---------------------------------------------------------------------
-# Grouped Lloyd: train MANY independent codebooks in one pass (one per
-# value of the group key — e.g. every PQ subspace at once). Same
-# arithmetic as the ungrouped stages (the PQ oracle, which unrolls the
-# per-subspace math, pins the equivalence); the win is the job count:
-# O(rounds) driver round-trips and ONE keyed shuffle per stage instead
-# of O(groups x rounds) sequential jobs — the difference between
-# M=4 and M=64 subspaces on a real cluster.
-# ---------------------------------------------------------------------
-
-
-def score_cells_grouped(
-    emb: DataFrame,
-    cents: DataFrame,
-    group: list[str],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """cents carries the group key: broadcast equi-join on it (each
-    vector meets only its own group's k centroids)."""
-    return emb.join(F.broadcast(cents), group).select(
-        *group, id_col, "cid", _dot(F.col(vec_col), F.col("cent")).alias("dot")
-    )
-
-
-def argmax_cell_grouped(
-    scored: DataFrame, group: list[str], id_col: str = "vec_id"
-) -> DataFrame:
-    return (
-        scored.groupBy(*group, id_col)
-        .agg(F.max(F.struct(F.col("dot"), (-F.col("cid")).alias("ncid"))).alias("_mx"))
-        .select(
-            *group,
-            id_col,
-            (-F.col("_mx.ncid")).alias("cid"),
-            F.col("_mx.dot").alias("dot"),
-        )
-    )
-
-
-def _update_centroids_grouped(
-    emb: DataFrame, assign: DataFrame, group: list[str], id_col: str, vec_col: str
-) -> DataFrame:
-    ex = emb.join(assign.select(*group, id_col, "cid"), [*group, id_col]).select(
-        *group, "cid", F.posexplode(F.col(vec_col)).alias("pos", "x")
-    )
-    cent_val = (F.col("s").cast("double") / F.lit(_SCALE)) / F.col("n")
-    return (
-        ex.groupBy(*group, "cid", "pos")
-        .agg(
-            F.sum(
-                F.floor(F.col("x").cast("double") * F.lit(_SCALE)).cast("long")
-            ).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .withColumn("c", cent_val)
-        .groupBy(*group, "cid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-            ).alias("cent")
-        )
-    )
-
-
-def lloyd_centroids_grouped(
-    emb: DataFrame,
-    k: int,
-    updates: int,
-    group: list[str],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-group codebooks after ``updates`` Lloyd updates (init = the
-    first ``k`` vectors by id WITHIN each group). Returns
-    (group..., cid, cent)."""
-    cents = emb.filter(F.col(id_col) < k).select(
-        *group, F.col(id_col).alias("cid"), F.col(vec_col).alias("cent")
-    )
-    for _ in range(updates):
-        assign = argmax_cell_grouped(
-            score_cells_grouped(emb, cents, group, id_col, vec_col), group, id_col
-        )
-        cents = _update_centroids_grouped(emb, assign, group, id_col, vec_col)
-    return cents
-
-
-# ---------------------------------------------------------------------
 # Literal-codebook scoring: the codebook is k x dim BY CONSTRUCTION
 # (bounded state, like the pca moment block), so instead of broadcast-
 # joining a centroid table into the corpus and shuffling n*k score rows
@@ -311,28 +224,6 @@ def assign_literal(
             F.col("_m.dot").alias("dot"),
         )
     )
-
-
-def scores_literal(
-    emb: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, cid, dot) for every vector x centroid, map-side — same rows
-    as score_cells(emb, cents_df)."""
-    entries = ", ".join(
-        f"named_struct('cid', CAST({int(cid)} AS BIGINT), "
-        f"'dot', {dot_literal_sql(vec_col, c)})"
-        for cid, c in cents
-    )
-    if len(entries) > _LITERAL_SQL_MAX_BYTES:
-        return score_cells(
-            emb, _cents_df(emb.sparkSession, cents), id_col, vec_col
-        )
-    return emb.select(
-        id_col, F.explode(F.expr(f"array({entries})")).alias("_p")
-    ).select(id_col, F.col("_p.cid").alias("cid"), F.col("_p.dot").alias("dot"))
 
 
 def update_centroids_literal(

@@ -704,7 +704,8 @@ def _pq_update_collect(emb: DataFrame, cents: list) -> list:
     """One grouped Lloyd update with the assignment fused into the same
     map pass (one corpus scan, one partial-aggregated <= M*K*D-row
     shuffle), collected to the literal list (bounded BY CONSTRUCTION).
-    Same fixed-point arithmetic as `_update_centroids_grouped`."""
+    Same fixed-point arithmetic as `kmeans._update_centroids`, applied
+    per subspace."""
     per_m = ", ".join(
         f"named_struct('m', CAST({m} AS BIGINT), "
         f"'cid', -({_pq_group_best_sql(cents, m)}.ncid), "

@@ -681,24 +681,6 @@ WHERE i.n_inter / (sa.n + sb.n - i.n_inter) >= {_ALLPAIRS_T!r}
 _SHMH_BANDS = 4  # 4 bands x 2 rows over the 8-permutation family
 
 
-def _shingle_ids_col():
-    """3-gram shingle set of a doc → char-fold id array (the _tok_hash
-    fold applied to shingle text; order-independent downstream since
-    MinHash takes a min over the set)."""
-    toks = _tokens_col()
-    n = F.size(toks)
-    sh = F.when(
-        n >= 3,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - 2),
-                lambda i: F.array_join(F.slice(toks, i, 3), " "),
-            )
-        ),
-    )
-    return F.transform(sh, _tok_hash)
-
-
 def shingle_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per TRUE pair (the complete AllPairs J ≥ 0.8 truth): how many
     of the _SHMH_BANDS MinHash bands collide, and whether the banded

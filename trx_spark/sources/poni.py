@@ -34,7 +34,6 @@ import json
 import math
 import os
 import pathlib
-import re
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
@@ -234,10 +233,3 @@ def poni_geometry_table(
         solid.alias("solid_angle"),
         pol.alias("pol_corr"),
     )
-
-
-_PONI_RE = re.compile(r"\.poni$", re.IGNORECASE)
-
-
-def is_poni_name(s: object) -> bool:
-    return isinstance(s, str) and bool(_PONI_RE.search(s))

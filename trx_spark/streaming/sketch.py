@@ -169,10 +169,6 @@ def compact_cms_store(spark: SparkSession, sketch_dir: str) -> None:
     compact_store(spark, sketch_dir, merged_sketch)
 
 
-def compact_hll_store(spark: SparkSession, sketch_dir: str) -> None:
-    compact_store(spark, sketch_dir, merged_hll_registers)
-
-
 def _run_catchup(
     spark: SparkSession,
     *,

@@ -13,21 +13,6 @@ from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # columns written as parquet TIMESTAMP(NANOS); with nanosAsLong they read
 # as BIGINT nanoseconds — we keep a ``<col>_ns`` long (total-ordering key,
 # exactly what DuckDB's TIMESTAMP_NS compares by) and derive a proper
@@ -119,13 +104,3 @@ def raw_dtype(spark: SparkSession, sf_dir: str, name: str, col: str) -> str | No
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     return dict(df.dtypes).get(col)
-
-
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so queries can use spark.sql."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
