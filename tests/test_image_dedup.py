@@ -91,7 +91,7 @@ def test_image_neardup_groups_e2e(spark, tmp_path):
     from trx_spark.operators.multimodal import read_binary_assets
 
     assets = read_binary_assets(spark, str(tmp_path / "*.edf"), "image")
-    pixels = decode_image(assets, shape=_SHAPE, codec="edf", real_codec=True)
+    pixels = decode_image(assets, shape=_SHAPE, codec="edf")
     groups = image_neardup_groups(pixels, src_shape=_SHAPE).collect()
     sizes = sorted(r["n_images"] for r in groups)
     assert sizes == [1, 2]

@@ -146,3 +146,26 @@ def test_datasource_missing_path_option_raises(spark):
     register_image_datasource(spark)
     with pytest.raises(Exception, match="path"):
         spark.read.format("detector_image").load().count()
+
+
+def test_package_zip_is_built_fresh_not_reused(tmp_path, monkeypatch):
+    """The shipped package holds the current source, even when the temp
+    dir keeps a zip that an earlier process left under this pid."""
+    import os
+    import tempfile
+    import zipfile
+
+    from trx_spark.sources import imageds
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    (tmp_path / f"trx_spark_pkg_{os.getpid()}.zip").write_bytes(b"stale")
+    imageds._package_zip.cache_clear()
+    try:
+        path = imageds._package_zip()
+        assert imageds._package_zip() == path  # built once per process
+        with zipfile.ZipFile(path) as zf:
+            shipped = zf.read("trx_spark/sources/imageds.py")
+        with open(imageds.__file__, "rb") as fh:
+            assert shipped == fh.read()
+    finally:
+        imageds._package_zip.cache_clear()

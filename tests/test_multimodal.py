@@ -9,7 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from trx_spark.operators.multimodal import (
+    audio_frame_features,
     decode_image,
+    decode_video,
     frame_sample,
     image_features,
     read_binary_assets,
@@ -1273,10 +1275,10 @@ def test_decode_png_distributed(spark, tmp_path):
 
 
 def test_decode_png_distributed_adam7(spark):
-    """decode_image's self-contained PNG twin decodes Adam7-interlaced
-    blobs too (parity with decode_png / the census path): sequential
-    and interlaced encodings of the same pixels give identical
-    distributed luma sums."""
+    """decode_image(codec='png') decodes Adam7-interlaced blobs in the
+    distributed pixel pipeline (through decode_png, like the census
+    path): sequential and interlaced encodings of the same pixels give
+    identical distributed luma sums."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -1612,9 +1614,9 @@ def test_jpeg_progressive_restart_resync():
 
 def test_decode_jpeg_distributed_progressive(spark):
     """decode_image(codec='auto') decodes progressive JPEGs in the
-    distributed pixel pipeline too: the twin's SOF2 branch imports the
-    real decoder via the shipped package zip, so baseline and
-    progressive blobs of the same image give identical luma sums."""
+    distributed pixel pipeline too (decode_jpeg's SOF2 path on the
+    worker), so baseline and progressive blobs of the same image give
+    identical luma sums."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -1650,10 +1652,10 @@ def test_decode_jpeg_distributed_progressive(spark):
 
 
 def test_decode_image_ships_package_for_jpeg(spark, monkeypatch):
-    """decode_image(codec='jpeg'/'auto') must invoke the executor
-    package shipping (the SOF2 escape hatch depends on it) — local-mode
+    """decode_image ships the executor package for every codec (its
+    kernel imports the module codecs on the worker) — local-mode
     workers resolve `import trx_spark` from the cwd, so the distributed
-    progressive test alone cannot catch a dropped shipping call."""
+    decode tests alone cannot catch a dropped shipping call."""
     import numpy as np
 
     from trx_spark.operators import multimodal
@@ -1667,7 +1669,7 @@ def test_decode_image_ships_package_for_jpeg(spark, monkeypatch):
         [("a.jpg", bytearray(multimodal.encode_jpeg(np.zeros((8, 8)))))],
         "path string, content binary",
     )
-    for codec, expected in (("jpeg", 1), ("auto", 2), ("png", 2)):
+    for expected, codec in enumerate(("jpeg", "auto", "png", "edf", "fake"), 1):
         multimodal.decode_image(assets, codec=codec)
         assert len(calls) == expected, codec
     # restart_interval validation: clear errors, not OverflowError
@@ -1940,7 +1942,8 @@ def test_wav_g711_companded_roundtrip():
 
 def test_wav_g711_distributed(spark, tmp_path):
     """Companded WAV through the distributed audio feature path: the
-    nested twin's G.711 tables match the module tables exactly."""
+    worker's decode_wav gives the same frame RMS as a driver-side
+    decode_wav of the same file."""
     import numpy as np
 
     from trx_spark.operators.multimodal import (
@@ -2002,7 +2005,7 @@ def test_tiff_packbits_roundtrip_and_distributed(spark, tmp_path):
             encode_tiff(noisy, byte_order=order, compression=32773)
         )
         np.testing.assert_array_equal(back, noisy)
-    # distributed: the nested twin decompresses identically
+    # distributed: decode_image(codec='tiff') decompresses identically
     (tmp_path / "pb_0.tif").write_bytes(encode_tiff(noisy, compression=32773))
     assets = read_binary_assets(spark, str(tmp_path / "pb_*.tif"), "image")
     px = decode_image(assets, codec="tiff").toPandas().sort_values(["y", "x"])
@@ -2017,7 +2020,7 @@ def test_tiff_lzw_roundtrip_and_distributed(spark, tmp_path):
     independently of the encoder; roundtrips cross the 9→10→11 bit
     boundaries and the KwKwK self-reference; predictor 2 (horizontal
     differencing) roundtrips and actually compresses a smooth ramp;
-    the distributed twin decodes identically."""
+    decode_image(codec='tiff') decodes it identically."""
     import numpy as np
 
     from trx_spark.operators.multimodal import (
@@ -2063,3 +2066,93 @@ def test_tiff_lzw_roundtrip_and_distributed(spark, tmp_path):
     np.testing.assert_array_equal(
         px["intensity"].to_numpy().reshape(40, 50), img.astype(float)
     )
+
+
+def _marccd_header_dims_disagree() -> bytes:
+    from trx_spark.operators.multimodal import encode_marccd
+
+    blob = bytearray(encode_marccd(np.arange(12, dtype="u2").reshape(3, 4)))
+    blob[1024 + 80 : 1024 + 84] = (5).to_bytes(4, "little")  # nfast 5, IFD width 4
+    return bytes(blob)
+
+
+def _tiff_zeroed_magic() -> bytes:
+    from trx_spark.operators.multimodal import encode_tiff
+
+    blob = bytearray(encode_tiff(np.arange(12, dtype="u2").reshape(3, 4)))
+    blob[2:4] = b"\x00\x00"  # the magic word 42
+    return bytes(blob)
+
+
+@pytest.mark.parametrize(
+    "make, codec, msg",
+    [
+        (_marccd_header_dims_disagree, "marccd", "MarCCD frame header dims disagree"),
+        (_tiff_zeroed_magic, "tiff", "not a TIFF stream"),
+    ],
+    ids=["marccd_header_dims", "tiff_zeroed_magic"],
+)
+def test_malformed_blob_raises_on_every_decode_path(spark, tmp_path, make, codec, msg):
+    """One decoder per format: a blob the module codec rejects is
+    rejected the same way by decode_any, by decode_image's distributed
+    kernel (auto and the explicit codec) and by the detector_image
+    reader."""
+    from trx_spark.operators.multimodal import decode_any
+    from trx_spark.sources.imageds import DetectorImageReader, _FilePartition
+
+    blob = make()
+    with pytest.raises(ValueError, match=msg):
+        decode_any(blob)
+    assets = spark.createDataFrame(
+        [("bad.img", bytearray(blob))], "path string, content binary"
+    )
+    for c in ("auto", codec):
+        with pytest.raises(Exception, match=f"ValueError: {msg}"):
+            decode_image(assets, codec=c).collect()
+    path = tmp_path / "bad.img"
+    path.write_bytes(blob)
+    reader = DetectorImageReader({"path": str(path)})
+    with pytest.raises(ValueError, match=msg):
+        list(reader.read(_FilePartition(str(path))))
+
+
+class _KernelCapture:
+    """DataFrame stand-in for a kernel builder: records every function
+    handed to mapInPandas and runs nothing."""
+
+    def __init__(self, spark, kernels):
+        self.sparkSession = spark
+        self.kernels = kernels
+
+    def select(self, *cols):
+        return self
+
+    def withColumnRenamed(self, *names):
+        return self
+
+    def mapInPandas(self, fn, schema):
+        self.kernels.append(fn)
+        return self
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        lambda df: decode_image(df, codec="auto"),
+        lambda df: decode_video(df, every_n=2),
+        audio_frame_features,
+    ],
+    ids=["decode_image", "decode_video", "audio_frame_features"],
+)
+def test_decode_kernel_closure_stays_small(spark, build):
+    """The codecs ride to the workers in the shipped package, not in
+    the pickled kernel: every function a decode builder hands to
+    mapInPandas pickles to under 4 KB (the nested codec copies these
+    kernels once carried pickled to 7-49 KB)."""
+    from pyspark import cloudpickle
+
+    kernels = []
+    build(_KernelCapture(spark, kernels))
+    assert kernels
+    for fn in kernels:
+        assert len(cloudpickle.dumps(fn)) < 4096, fn.__qualname__

@@ -728,9 +728,7 @@ def web_image_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     decodable files carry exact luma sums, broken files carry
     verdict='corrupt' rows instead of exceptions."""
     from trx_spark.operators.multimodal import image_census
-    from trx_spark.sources.imageds import ensure_executor_package
 
-    ensure_executor_package(spark)
     return image_census(_web_assets(spark))
 
 

@@ -38,6 +38,8 @@ RecordBatches (one per frame), never a per-row Python loop.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import glob as _glob
 import os
 import tempfile
@@ -141,9 +143,8 @@ class DetectorImageReader(DataSourceReader):
         import pyarrow as pa
 
         from trx_spark.operators.multimodal import (
-            decode_any,
             decode_avi_frames,
-            decode_edf_frames,
+            decode_frames,
             decode_jpeg,
             maybe_gunzip,
             png_luma,
@@ -155,27 +156,20 @@ class DetectorImageReader(DataSourceReader):
         fmt = sniff_codec(buf) if self.codec == "auto" else self.codec
         if fmt == "avi":
             blobs, _ = decode_avi_frames(buf)
-            frames = [
-                (k, None if not _matches_frame(self.frame_filters, k) else blobs[k])
-                for k in range(len(blobs))
-            ]
             decoded = [
-                (k, png_luma(decode_jpeg(b)[0]))
-                for k, b in frames
-                if b is not None  # skipped frames: no entropy decode
-            ]
-        elif fmt == "edf":
-            stack = decode_edf_frames(buf)
-            decoded = [
-                (k, img)
-                for k, (img, _hdr) in enumerate(stack)
-                if _matches_frame(self.frame_filters, k)
+                (k, png_luma(decode_jpeg(b)[0]).astype(np.float64))
+                for k, b in enumerate(blobs)
+                if _matches_frame(self.frame_filters, k)  # skipped: no entropy decode
             ]
         else:
-            if not _matches_frame(self.frame_filters, 0):
+            # a single-frame file whose frame 0 is filtered out is never decoded
+            if fmt != "edf" and not _matches_frame(self.frame_filters, 0):
                 return
-            img, _hdr = decode_any(buf)
-            decoded = [(0, png_luma(img) if img.ndim == 3 else img)]
+            decoded = [
+                (k, img)
+                for k, img in enumerate(decode_frames(buf, fmt))
+                if _matches_frame(self.frame_filters, k)
+            ]
         for k, img in decoded:
             iy, ix = np.mgrid[0 : img.shape[0], 0 : img.shape[1]]
             yield pa.RecordBatch.from_pydict(
@@ -184,7 +178,7 @@ class DetectorImageReader(DataSourceReader):
                     "frame": np.full(img.size, k, dtype=np.int32),
                     "y": iy.ravel().astype(np.int32),
                     "x": ix.ravel().astype(np.int32),
-                    "intensity": img.ravel().astype(np.float64),
+                    "intensity": img.ravel(),
                 }
             )
 
@@ -201,28 +195,30 @@ class DetectorImageDataSource(DataSource):
         return DetectorImageReader(self.options)
 
 
+@functools.cache
 def _package_zip() -> str:
-    """Zip the installed trx_spark package to a temp file (cached per
-    process) — the addPyFile payload that makes executor Python
-    workers able to import the codec module."""
+    """Zip the installed trx_spark package to a fresh temp file, once
+    per process, removed at exit — the addPyFile payload that makes
+    executor Python workers able to import the codec module. The name
+    is unique per build: a zip left in the temp dir by an earlier
+    process would carry that process's code."""
     import trx_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(trx_spark.__file__))
-    out = os.path.join(
-        tempfile.gettempdir(), f"trx_spark_pkg_{os.getpid()}.zip"
-    )
-    if not os.path.exists(out):
-        with zipfile.ZipFile(out, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(
-                            "trx_spark", os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
+    fd, out = tempfile.mkstemp(prefix="trx_spark_pkg_", suffix=".zip")
+    os.close(fd)
+    atexit.register(os.remove, out)
+    with zipfile.ZipFile(out, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            if "__pycache__" in root:
+                continue
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    rel = os.path.join(
+                        "trx_spark", os.path.relpath(full, pkg_dir)
+                    )
+                    zf.write(full, rel)
     return out
 
 
