@@ -5,7 +5,8 @@ stack: the same mixed-folder shapes as the batch journey) → the
 incremental curve bank equals the batch ``doFolder`` of the final
 folder BIT-FOR-BIT; the retryMax empty-poll cutoff is honored; a
 restarted poller re-derives its processed set from the store instead
-of re-appending (idempotent per-file partitions)."""
+of re-appending, and numbers its epochs from the store (one epoch per
+productive poll)."""
 
 from __future__ import annotations
 
@@ -91,8 +92,8 @@ def test_online_journey_real_files(spark, tmp_path):
 
 def test_restart_remembers_zero_curve_files(spark, tmp_path):
     """A file whose every curve is filtered out (here: a mask covering
-    the whole detector) never appears as a ``file`` partition in the
-    store; the persisted manifest must still mark it processed, or a
+    the whole detector) never reaches the store; the persisted
+    manifest must still mark it processed, or a
     restarted poller re-lists it as new on every poll and the retryMax
     give-up never fires (the ADVICE r11 livelock)."""
     folder = tmp_path / "run_zero"
@@ -108,11 +109,53 @@ def test_restart_remembers_zero_curve_files(spark, tmp_path):
     p = compat.FolderPoller(spark, str(folder), **kw)
     _write_wave(folder, 0)
     assert p.poll() == 2  # files are NEW and get azav'd...
-    # ...but every curve is filtered away: no file= partition exists
+    # ...but every curve is filtered away: no epoch reached the store
     store = tmp_path / "bank_zero"
-    assert not list(store.glob("file=*"))
+    assert not list(store.glob("_epoch=*"))
 
     # restart: the manifest alone carries the processed set
     p2 = compat.FolderPoller(spark, str(folder), **kw)
     assert p2.poll() == 0 and p2.empty_polls == 1
     assert p2.poll() == 0 and p2.done  # give-up fires; no livelock
+
+
+def test_restarted_poller_numbers_epochs_from_the_store(spark, tmp_path):
+    """Each productive poll is ONE epoch of the store (not one directory
+    per frame), and the next epoch id comes from the store — the newest
+    epoch or the compaction watermark, plus one — never from the poll
+    count: a restarted poller (``n_polls`` back at 0) must not overwrite
+    an earlier wave, also after the store was compacted."""
+    from trx_spark.sources.sinks import compact_store
+    from trx_spark.streaming import store
+
+    folder = tmp_path / "run_epochs"
+    folder.mkdir()
+    bank = str(tmp_path / "bank_epochs")
+    kw = dict(store_dir=bank, files="*.edf*", nQ=5, qlims=(0.0, 0.2), poni=PONI)
+
+    def batch():
+        return compat.doFolder(
+            spark, str(folder), files="*.edf*", nQ=5, qlims=(0.0, 0.2), poni=PONI
+        )
+
+    p = compat.FolderPoller(spark, str(folder), **kw)
+    assert p.poll() == 0  # an empty poll writes no epoch
+    _write_wave(folder, 0)
+    assert p.poll() == 2
+    _write_wave(folder, 1)
+    assert p.poll() == 2
+    assert store.epochs(bank) == [0, 1]
+
+    p2 = compat.FolderPoller(spark, str(folder), **kw)
+    _write_wave(folder, 2)
+    assert p2.poll() == 2 and p2.n_polls == 1
+    assert store.epochs(bank) == [0, 1, 2]
+    assert _curve_rows(p2.bank()) == _curve_rows(batch())
+
+    compact_store(spark, bank)
+    assert store.epochs(bank) == [-1] and store.compacted_through(bank) == 2
+    p3 = compat.FolderPoller(spark, str(folder), **kw)
+    _write_wave(folder, 3)
+    assert p3.poll() == 2
+    assert store.epochs(bank) == [-1, 3]
+    assert _curve_rows(p3.bank()) == _curve_rows(batch())

@@ -251,6 +251,7 @@ def test_compact_store_skips_replayed_folded_epoch(spark, tmp_path):
     overwrite a no-op instead of landing the rows a second time."""
     import pandas as pd
 
+    from trx_spark.streaming import store as epoch_store
     from trx_spark.streaming.incremental import make_batch_handler
 
     store = str(tmp_path / "store")
@@ -258,7 +259,7 @@ def test_compact_store_skips_replayed_folded_epoch(spark, tmp_path):
     for e in range(4):
         handler(spark.createDataFrame(pd.DataFrame({"v": [float(e)] * 2})), e)
     sinks.compact_store(spark, store, target_file_mb=128)
-    assert sinks.compacted_through(store) == 3
+    assert epoch_store.compacted_through(store) == 3
     assert spark.read.parquet(store).count() == 8
     # replay of an absorbed epoch: no-op, rows NOT duplicated
     handler(spark.createDataFrame(pd.DataFrame({"v": [2.0] * 2})), 2)

@@ -227,3 +227,34 @@ def test_empty_landing_returns_typed_empty(spark, tmp_path):
     )
     assert got.count() == 0
     assert got.columns == ["doc_id", "quality_keep", "exact_first", "near_dup", "keep"]
+
+
+def test_handler_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """The overlapped legs and appends run in pool threads; each thread
+    inherits the caller's job group, so cancelling that group (what
+    ``query.stop()`` does to a stream's micro-batch) reaches every job
+    the handler starts — none runs ungrouped."""
+    from trx_spark.streaming.curation import make_curation_batch_handler
+
+    handler = make_curation_batch_handler(
+        str(tmp_path / "hashes"), str(tmp_path / "bands"), str(tmp_path / "verdicts")
+    )
+
+    def wave(rows):
+        return spark.createDataFrame(
+            [(d, t, "s", "en", len(t)) for d, t in rows], _SCHEMA
+        )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "curation-handler-job-group"
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "every handler job carries this group")
+    try:
+        handler(wave([(1, _GOOD), (2, _GOOD2)]), 0)
+        handler(wave([(10, _GOOD), (11, _GOOD2.replace("atomic", "nuclear"))]), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup(group)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()

@@ -316,11 +316,11 @@ def test_replay_of_folded_epoch_is_skipped(spark, tmp_path):
     no longer exclude them — a replay would double-count them into the
     saturation totals and double-store the keys. The compaction
     watermark makes the replayed epoch a no-op."""
-    from trx_spark.sources.sinks import compacted_through
     from trx_spark.streaming.dedup_index import (
         compact_band_store,
         make_lsh_batch_handler,
     )
+    from trx_spark.streaming.store import compacted_through
 
     band_store = str(tmp_path / "bands")
     pairs_dir = str(tmp_path / "pairs")

@@ -120,14 +120,14 @@ def test_compact_then_continue_and_replay(spark, sf_dir, tmp_path):
     assert _sketch_dict(merged_sketch(spark, sketch_dir)) == want
 
     # (c) the watermark never regresses: compacting twice with no new
-    # epochs in between must NOT lower _compacted_through (a lowered
+    # epochs in between must NOT lower the watermark (a lowered
     # marker would re-enable replay double-counting)
-    from trx_spark.streaming.sketch import _compacted_through
+    from trx_spark.streaming.store import compacted_through
 
     compact_cms_store(spark, sketch_dir)
-    assert _compacted_through(sketch_dir) == 2
+    assert compacted_through(sketch_dir) == 2
     compact_cms_store(spark, sketch_dir)  # store now holds only _epoch=-1
-    assert _compacted_through(sketch_dir) == 2
+    assert compacted_through(sketch_dir) == 2
     handle(b2, 1)  # replay of an absorbed epoch stays a no-op
     assert _sketch_dict(merged_sketch(spark, sketch_dir)) == want
 
@@ -414,25 +414,19 @@ def test_mg_duplicate_batch_partials_fail_loudly(spark, sf_dir, tmp_path):
     silently drop one epoch's decrement and token mass (the r12
     ADVICE item)."""
     import pytest
-    from pyspark.sql import functions as F
 
+    from trx_spark.streaming import store
     from trx_spark.streaming.sketch import merged_mg
 
-    store = str(tmp_path / "sketch")
+    sketch_dir = str(tmp_path / "sketch")
     rows = [(0, "alpha", 3, 0, 10), (0, None, None, 0, 10)]
     df = spark.createDataFrame(
         rows, "batch long, token string, pc long, d_part long, n_part long"
     )
     for epoch in (0, 1):  # same batch id landing in two epochs
-        (
-            df.withColumn("_epoch", F.lit(epoch))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(store)
-        )
+        store.write(df, sketch_dir, epoch)
     with pytest.raises(ValueError, match="multiple epochs"):
-        merged_mg(spark, store)
+        merged_mg(spark, sketch_dir)
 
 
 def test_mg_landing_memoized_and_cold_rebuilt(spark, sf_dir):

@@ -30,6 +30,7 @@ from trx_spark.pipeline import (
     data_reduction,
     integrate_folder,
 )
+from trx_spark.streaming import store
 
 
 def _as_mask(mask: str | Column | None) -> Column | None:
@@ -541,16 +542,20 @@ class FolderPoller:
     ``doFolder`` of the final folder (pinned by the online compat
     journey test).
 
-    Idempotency/restart: the store is partitioned by ``file`` with
-    dynamic partition overwrite, so re-processing a file (crash between
-    write and bookkeeping, or a restarted poller re-listing the folder)
-    rewrites its own partition instead of duplicating curves; the
-    processed set is persisted in ``_processed_manifest.json`` inside
-    the store (the ``_`` prefix keeps Spark's parquet reader from
-    touching it) and unioned with the store's partition names on
-    construction — the manifest covers files that produced ZERO curves
-    (e.g. every q-bin filtered by qlims), which never appear as a
-    ``file`` partition and would otherwise be re-listed as new on every
+    Idempotency/restart: the store is an epoch store
+    (:mod:`trx_spark.streaming.store`, the same layout and compactor as
+    :func:`doFolder_online`'s): each productive poll writes its curves
+    as ONE epoch, so the store grows one directory per wave, not per
+    frame. The epoch id comes from the store itself (the highest
+    epoch or compaction watermark, plus one), never from the poll
+    count, so a restarted poller cannot overwrite an earlier wave.
+    The processed set is persisted in ``_processed_manifest.json``
+    inside the store (the ``_`` prefix keeps Spark's parquet reader
+    from touching it) and unioned with the store's ``file`` values on
+    construction: the store covers a crash between the epoch write and
+    the manifest update, and the manifest covers files that produced
+    ZERO curves (e.g. every q-bin filtered by qlims), which never
+    reach the store and would otherwise be re-listed as new on every
     restarted poll, resetting the retry_max give-up counter forever.
     Folder listing uses local-filesystem glob — the
     reference's own ``os.listdir`` semantics (its acquisition folder is
@@ -591,18 +596,16 @@ class FolderPoller:
                 self._processed.update(_json.load(fh))
         except Exception:
             pass  # no manifest yet
-        try:
+        curves = store.read(spark, store_dir)
+        if curves is not None:
             self._processed |= {
-                r["file"]
-                for r in spark.read.parquet(store_dir).select("file").distinct().collect()
+                r["file"] for r in curves.select("file").distinct().collect()
             }
-        except Exception:
-            pass  # no store yet — fresh start
 
     def _save_manifest(self) -> None:
         # atomic local write (tmp + rename): a crash mid-write leaves
-        # the previous manifest intact, and the store partitions still
-        # back-fill any curve-bearing file on the next construction
+        # the previous manifest intact, and the store's file column
+        # still back-fills any curve-bearing file on the next construction
         import json as _json
 
         self._os.makedirs(self._os.path.dirname(self._manifest), exist_ok=True)
@@ -634,12 +637,7 @@ class FolderPoller:
             files="{" + ",".join(new) + "}",
             **self._kw,
         )
-        (
-            curves.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("file")
-            .parquet(self._store)
-        )
+        store.write(curves, self._store, store.next_epoch(self._store))
         self._processed.update(new)
         self._save_manifest()
         return len(new)
@@ -647,7 +645,7 @@ class FolderPoller:
     def bank(self) -> DataFrame:
         """The accumulated curve bank (≡ batch doFolder of everything
         processed so far)."""
-        return self._spark.read.parquet(self._store)
+        return self._spark.read.parquet(self._store).drop(store.EPOCH)
 
     def run(self, *, poll_seconds: float = 30.0, max_polls: int | None = None) -> None:
         """The reference-faithful loop: poll, sleep, give up after

@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
 from trx_spark.queries.relational import _PRICING_SQL
-from trx_spark.streaming.incremental import release_state_stores, run_catchup
+from trx_spark.streaming import store
+from trx_spark.streaming.incremental import run_catchup
 
 
 def _make_ts_prepare(schema):
@@ -552,29 +553,29 @@ def streaming_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = os.path.join(work, "updates")
     ckpt = os.path.join(work, "ckpt")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select(
-            F.col("event_type").alias("k"),
-            F.floor(F.col("value") * 1e6).cast("double").alias("v"),
+    def plan(stream: DataFrame) -> DataFrame:
+        return running_key_stats(
+            stream.select(
+                F.col("event_type").alias("k"),
+                F.floor(F.col("value") * 1e6).cast("double").alias("v"),
+            ),
+            key="k",
+            value="v",
         )
-    )
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        batch.write.mode("append").parquet(out_dir)
+        store.write(batch, out_dir, epoch_id)
 
-    q = (
-        running_key_stats(stream, key="k", value="v")
-        .writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    store.drain(
+        spark,
+        landing_dir=sf_dir,
+        schema=schema,
+        path_glob_filter="events.parquet",
+        plan=plan,
+        handler=sink,
+        checkpoint_dir=ckpt,
+        output_mode="update",
     )
-    q.awaitTermination()
-    release_state_stores(spark)
     upd = spark.read.parquet(out_dir)
     # update mode emits one row per (key, batch); the final state is
     # the row with the largest n per key

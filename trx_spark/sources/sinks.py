@@ -109,19 +109,12 @@ def compact_store(
     column so the file-count target applies per layout, not
     per-layout × per-task) — flattening it would leave an unreadable
     mixed flat/partitioned layout after the next append. The
-    incremental sink's ``_epoch=N`` layout is special-cased: all
-    existing epochs FOLD into the single compacted generation
-    ``_epoch=-1``, and a ``_compacted_through`` marker (written INTO
-    the compacted copy before the atomic swap, so data and marker
-    install together) records the highest folded epoch —
-    ``streaming/incremental``'s handler skips any replayed epoch at or
-    below it, because an epoch that was written but NOT yet committed
-    in the streaming checkpoint at crash time CAN be replayed after a
-    compaction has already folded its rows (the per-epoch overwrite
-    would otherwise land those rows a second time). A stale
-    ``._compact_old`` left by a crashed earlier compaction is cleared
-    before the swap."""
-    import shutil
+    incremental sinks' epoch stores (``_epoch=N`` directories) fold
+    through :func:`trx_spark.streaming.store.compact` instead: every
+    epoch goes into ``_epoch=-1``, the bucket sub-partition is kept,
+    and the replay watermark advances. A stale ``._compact_old`` left
+    by a crashed earlier compaction is cleared before the swap."""
+    from trx_spark.streaming import store
 
     if partition_by is None:
         part_dirs = {
@@ -141,54 +134,20 @@ def compact_store(
         if f.endswith(".parquet")
     )
     n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
+    if partition_by == store.EPOCH:
+        store.compact(spark, store_dir, n_files=int(n_files))
+        return int(n_files)
     df = spark.read.parquet(store_dir)
-    high = None
-    if partition_by == "_epoch":
-        row = df.agg(F.max("_epoch").alias("m")).collect()[0]["m"]
-        # never regress the watermark: a store holding only a folded
-        # _epoch=-1 generation reports max=-1
-        high = max(
-            int(row) if row is not None else -1, compacted_through(store_dir)
-        )
-        df = df.withColumn("_epoch", F.lit(-1))
-    tmp = store_dir.rstrip("/") + "._compact_tmp"
-    if partition_by and partition_by != "_epoch":
+    if partition_by:
         # partitioned store: spread WITHIN the layout — round-robin
         # repartition(n) would write up to n files per partition value
-        rep = df.repartition(int(n_files), partition_by)
+        writer = df.repartition(int(n_files), partition_by).write.partitionBy(partition_by)
     else:
-        # flat store, or the single-valued _epoch=-1 fold (hashing a
-        # constant would funnel every row through one task)
-        rep = df.repartition(int(n_files))
-    writer = rep.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
-    if high is not None:
-        with open(os.path.join(tmp, _COMPACT_MARKER), "w") as fh:
-            fh.write(str(int(high)))
-    old = store_dir.rstrip("/") + "._compact_old"
-    shutil.rmtree(old, ignore_errors=True)  # stale crash leftover
-    os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    shutil.rmtree(old)
+        writer = df.repartition(int(n_files)).write
+    tmp = store_dir.rstrip("/") + "._compact_tmp"
+    writer.mode("overwrite").parquet(tmp)
+    store.swap(store_dir, tmp)
     return int(n_files)
-
-
-_COMPACT_MARKER = "_compacted_through"
-
-
-def compacted_through(store_dir: str) -> int:
-    """Highest epoch folded into a store's compacted generation (-1
-    when the store was never compacted). Streaming handlers must skip
-    replayed epochs at or below this watermark — their rows are
-    already inside ``_epoch=-1`` and a per-epoch overwrite would land
-    them twice."""
-    try:
-        with open(os.path.join(store_dir, _COMPACT_MARKER)) as fh:
-            return int(fh.read().strip())
-    except (FileNotFoundError, NotADirectoryError, ValueError):
-        return -1
 
 
 def _config_hash(config: dict) -> str:

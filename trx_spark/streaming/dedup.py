@@ -14,12 +14,10 @@ dedup_exact`` is that batch pass).
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-_MEM_NAMES = itertools.count()
+from trx_spark.streaming import store
 
 
 def dedup_stream(
@@ -45,34 +43,16 @@ def run_dedup_catchup(
     """availableNow pass of :func:`dedup_stream` over a parquet folder,
     collected through a memory sink (append mode — dedup emits each
     surviving row exactly once)."""
-    reader = spark.readStream.schema(schema)
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(landing_dir)
-    if prepare is not None:
-        stream = prepare(stream)
-    out = dedup_stream(stream, keys, ts, watermark)
-    name = f"trx_dedup_{next(_MEM_NAMES)}"
-    from trx_spark.streaming.tuning import replay_state_width
 
-    # dedup state width sized to state volume (see tuning.py)
-    with replay_state_width(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from trx_spark.streaming.incremental import release_state_stores
+    def plan(stream: DataFrame) -> DataFrame:
+        if prepare is not None:
+            stream = prepare(stream)
+        return dedup_stream(stream, keys, ts, watermark)
 
-    release_state_stores(spark)
-    # materialize OFF the memory sink, then drop it: memory-sink tables
-    # pin their result rows on the driver for the session's lifetime, so
-    # a long-lived service leaks one table per replay (the state-store
-    # provider leak's sibling).  localCheckpoint is eager, so the rows
-    # move to executor blocks (freed by unpersist/GC) before the drop.
-    out = spark.table(name).localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    return store.drain(
+        spark,
+        landing_dir=landing_dir,
+        schema=schema,
+        plan=plan,
+        path_glob_filter=path_glob_filter,
+    )

@@ -29,10 +29,9 @@ Scale shape (designed for a store that dwarfs every micro-batch):
   construction) is broadcast into both the cross join and the
   saturation anti-join, so the accumulated store is scanned in place
   with no Exchange, whatever its size.
-* Both writes are epoch-partitioned with dynamic overwrite, so an
-  at-least-once replay of a batch rewrites its own partition instead
-  of duplicating rows (same idempotence contract as
-  streaming/incremental.py).
+* The pairs and the band keys are epoch stores
+  (:mod:`trx_spark.streaming.store`), so an at-least-once replay of a
+  batch rewrites its own epoch instead of duplicating rows.
 
 Equivalence (pinned by tests/test_streaming_dedup_index.py): when no
 band key saturates, the distinct emitted pair set after the backlog
@@ -47,10 +46,11 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from trx_spark.streaming import store
 
 logger = logging.getLogger(__name__)
 
@@ -112,39 +112,27 @@ def band_keys(docs: DataFrame) -> DataFrame:
 
 
 def _read_band_store(spark: SparkSession, band_store: str) -> DataFrame | None:
-    """Read the accumulated store; ``None`` only when the store does
-    not exist yet (first batch). Any other failure — transient IO,
-    corruption — re-raises so the streaming query fails loudly instead
-    of silently skipping the cross-batch join for a micro-batch (which
+    """Read the accumulated store; ``None`` only when nothing was
+    written yet (see :func:`trx_spark.streaming.store.read`). Any other
+    failure re-raises so the streaming query fails loudly instead of
+    silently skipping the cross-batch join for a micro-batch (which
     would permanently lose those pairs: later batches never re-pair
-    old docs against old docs)."""
-    try:
-        # mergeSchema so a MIXED-generation store (pre-upgrade epochs
-        # without _zc next to new epochs with it) always surfaces the
-        # column, regardless of which file Spark's single-file schema
-        # inference would have picked.
-        df = spark.read.option("mergeSchema", "true").parquet(band_store)
-        if {"hx", "hy"} <= set(df.columns) and "_zc" not in df.columns:
-            # all-legacy store: derive the z-cell (a pure function of
-            # (hx, hy)) so probes can filter uniformly.  In a MIXED
-            # store the merged schema carries _zc and legacy rows read
-            # it as NULL — left as-is here; probes go through zc_probe
-            # (null-tolerant + recompute) and the compaction coalesces,
-            # so the NULLs can never silently drop rows.
-            df = df.withColumn("_zc", band_z_cell())
-        return df
-    except AnalysisException as exc:
-        msg = str(exc)
-        # UNABLE_TO_INFER_SCHEMA: the dir exists but holds no parquet —
-        # a fully-saturated (or all-empty-text) prior batch wrote only
-        # _SUCCESS. Same "empty store" meaning as a missing path.
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            return None
-        raise
+    old docs against old docs).
+
+    The read merges schemas so a MIXED-generation store (pre-upgrade
+    epochs without _zc next to new epochs with it) always surfaces the
+    column, regardless of which file Spark's single-file schema
+    inference would have picked."""
+    df = store.read(spark, band_store, merge_schema=True)
+    if df is not None and {"hx", "hy"} <= set(df.columns) and "_zc" not in df.columns:
+        # all-legacy store: derive the z-cell (a pure function of
+        # (hx, hy)) so probes can filter uniformly.  In a MIXED
+        # store the merged schema carries _zc and legacy rows read
+        # it as NULL — left as-is here; probes go through zc_probe
+        # (null-tolerant + recompute) and the compaction coalesces,
+        # so the NULLs can never silently drop rows.
+        df = df.withColumn("_zc", band_z_cell())
+    return df
 
 
 def zc_probe(df: DataFrame, touched_zc: list) -> DataFrame:
@@ -227,9 +215,7 @@ def make_lsh_batch_handler(
     kb = F.pmod(F.xxhash64("band", "hx", "hy"), F.lit(store_partitions))
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        from trx_spark.sources.sinks import compacted_through
-
-        if int(epoch_id) <= compacted_through(band_store):
+        if store.absorbed(band_store, epoch_id):
             # replayed epoch already folded into _epoch=-1 (see
             # compact_band_store): its pairs/bands are in place
             return
@@ -264,16 +250,16 @@ def make_lsh_batch_handler(
         touched_rows = new.select("_kb", "_zc").distinct().collect()
         touched = sorted({r["_kb"] for r in touched_rows})
         touched_zc = sorted({r["_zc"] for r in touched_rows})
-        store = _read_band_store(spark, band_store)
+        bstore = _read_band_store(spark, band_store)
         seen = (
             zc_probe(
-                store.filter(
+                bstore.filter(
                     F.col("_kb").isin(touched)
                     & (F.col("_epoch") != int(epoch_id))
                 ),
                 touched_zc,
             ).drop("_epoch", "_kb", "_zc")
-            if store is not None
+            if bstore is not None
             else None
         )
 
@@ -301,21 +287,8 @@ def make_lsh_batch_handler(
                     F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
                 )
             )
-        (
-            pairs.distinct()
-            .withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(pairs_dir)
-        )
-        (
-            ok.withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch", "_kb")
-            .parquet(band_store)
-        )
+        store.write(pairs.distinct(), pairs_dir, epoch_id)
+        store.write(ok, band_store, epoch_id, bucket="_kb")
 
     return handle
 
@@ -330,73 +303,36 @@ def compact_band_store(
     """Fold all committed epochs of the band store into the single
     compacted generation ``_epoch=-1`` while PRESERVING the ``_kb``
     hash-bucket layout (the partition-pruning index the per-batch read
-    depends on — the generic ``sinks.compact_store`` would flatten it)
-    and Z-CLUSTERING each bucket's rows by the ``_zc`` Morton cell of
-    (hx, hy): files (and row groups) inside a bucket then carry narrow
-    ``_zc`` min/max envelopes, so the per-batch probe's
-    ``_zc IN (cells)`` filter prunes most of a large bucket instead of
-    scanning all of it — both key dimensions prune, the
+    depends on) and Z-CLUSTERING each bucket's rows by the ``_zc``
+    Morton cell of (hx, hy): files (and row groups) inside a bucket
+    then carry narrow ``_zc`` min/max envelopes, so the per-batch
+    probe's ``_zc IN (cells)`` filter prunes most of a large bucket
+    instead of scanning all of it — both key dimensions prune, the
     queries/layout.py contract applied to the stream's own state.
     ``max_records_per_file`` bounds file size so a hot bucket splits
     into several z-narrow files (tests use a small value to make the
     file-level pruning measurable).
 
     After thousands of micro-batches the store's file count, not its
-    byte size, is what kills scan planning. A committed epoch can never
-    be replayed, but an epoch whose rows were WRITTEN while the
-    checkpoint commit was lost in a crash CAN be — and once folded its
-    rows sit at ``_epoch=-1`` where the handler's own-epoch filter no
-    longer excludes them (they would double-count into saturation
-    totals and double-store) — so the compaction records a
-    ``_compacted_through`` watermark and the handler skips replayed
-    epochs at or below it. Swap order is crash-safe: the old store is renamed ASIDE first,
-    the compacted copy renamed into place, and only then is the old
-    copy deleted — a crash in the window leaves either the old or the
-    new store at the path, never nothing (a vanished store would
-    silently restart the index empty and lose every cross-batch pair;
-    on an object store, use the FileSystem API's atomic rename).
-    Returns the compacted row count."""
-    import os
-    import shutil
+    byte size, is what kills scan planning. The fold, its watermark and
+    its crash-safe swap are :func:`trx_spark.streaming.store.compact`'s;
+    legacy rows get their ``_zc`` cell on the way. Returns the compacted
+    row count (0 when nothing was written yet)."""
 
-    from trx_spark.sources.sinks import _COMPACT_MARKER, compacted_through
-
-    df = _read_band_store(spark, band_store)  # adds _zc to legacy stores
-    if df is None:
-        # nothing written yet (a scheduled compaction racing the first
-        # micro-batch): clean no-op, not an AttributeError
-        logger.warning("compact_band_store: %s does not exist yet", band_store)
-        return 0
-    if "_zc" in df.columns:
+    def fold(s: SparkSession, d: str) -> DataFrame:
         # mixed-generation stores read pre-upgrade rows with NULL _zc:
         # re-materialize it so every folded row carries a real cell
-        df = df.withColumn("_zc", F.coalesce(F.col("_zc"), band_z_cell()))
-    row = df.agg(F.max("_epoch").alias("m")).collect()[0]["m"]
-    high = max(int(row) if row is not None else -1, compacted_through(band_store))
-    tmp = band_store.rstrip("/") + "._compact_tmp"
-    writer = (
-        df.withColumn("_epoch", F.lit(-1))
-        .repartition("_kb")
-        .sortWithinPartitions("_kb", "_zc")
-        .write.mode("overwrite")
+        return (
+            _read_band_store(s, d)
+            .withColumn("_zc", F.coalesce(F.col("_zc"), band_z_cell()))
+            .drop(store.EPOCH)
+        )
+
+    store.compact(
+        spark, band_store, fold, sort=("_zc",), max_records_per_file=max_records_per_file
     )
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", int(max_records_per_file))
-    writer.partitionBy("_epoch", "_kb").parquet(tmp)
-    n = spark.read.parquet(tmp).count()
-    # the watermark rides inside the compacted copy so data and marker
-    # swap in together: an epoch written-but-uncommitted at crash time
-    # CAN be replayed after its rows were folded — the handler's
-    # `_epoch != epoch_id` filter no longer excludes them (they now sit
-    # at _epoch=-1), so the replay must be skipped outright
-    with open(os.path.join(tmp, _COMPACT_MARKER), "w") as fh:
-        fh.write(str(int(high)))
-    old = band_store.rstrip("/") + "._compact_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(band_store, old)
-    os.rename(tmp, band_store)
-    shutil.rmtree(old)
-    return int(n)
+    folded = store.read(spark, band_store)
+    return 0 if folded is None else folded.count()
 
 
 def run_lsh_dedup_catchup(
@@ -415,35 +351,18 @@ def run_lsh_dedup_catchup(
     index; returns the distinct accumulated pair set. Set
     ``max_files_per_trigger=1`` to force one micro-batch per file (the
     multi-wave arrival the equivalence test exercises)."""
-    reader = spark.readStream.schema(schema)
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-    from trx_spark.streaming.tuning import replay_state_width
-
-    # replay width: right-sizes the handlers' store writes (tuning.py)
-    with replay_state_width(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                make_lsh_batch_handler(band_store, pairs_dir, key_cap=key_cap)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from trx_spark.streaming.incremental import release_state_stores
-
-    release_state_stores(spark)
-    try:
-        return spark.read.parquet(pairs_dir).select("doc_a", "doc_b").distinct()
-    except AnalysisException as exc:
-        msg = str(exc)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            # No candidate pair was ever emitted → the partitioned
-            # overwrite wrote no files; return an explicitly-typed
-            # empty pair set instead of raising at read time.
-            return spark.createDataFrame([], "doc_a BIGINT, doc_b BIGINT")
-        raise
+    store.drain(
+        spark,
+        landing_dir=landing_dir,
+        schema=schema,
+        handler=make_lsh_batch_handler(band_store, pairs_dir, key_cap=key_cap),
+        checkpoint_dir=checkpoint_dir,
+        path_glob_filter=path_glob_filter,
+        max_files_per_trigger=max_files_per_trigger,
+    )
+    pairs = store.read(spark, pairs_dir)
+    if pairs is None:
+        # no candidate pair was ever emitted: an explicitly-typed
+        # empty pair set instead of a read-time failure
+        return spark.createDataFrame([], "doc_a BIGINT, doc_b BIGINT")
+    return pairs.select("doc_a", "doc_b").distinct()

@@ -3,13 +3,15 @@
 The reference's online loop (SURVEY ST1/ST2; trx/id9.py:305-335
 ``doFolder`` and the skip-processed-files logic of azav.py:300-362)
 re-scans a folder every 30 s, processes only new files, appends to the
-saved result and re-runs the reduction. In Spark this is exactly the
-file-source streaming contract: ``readStream`` tracks processed files
-in the checkpoint (replacing the HDF5 'files' list), ``foreachBatch``
-appends new curves and re-runs the batch reduction query, and the
-trigger choice maps the 30 s poll (processingTime) or one-shot catch-up
-(availableNow — the batch-equivalence semantics FIXTURES.md B8 asks
-for: results after wave N equal a batch run over waves 1..N).
+saved result and re-runs the reduction. In Spark this is the
+file-source streaming contract: the stream's checkpoint tracks
+processed files (replacing the HDF5 'files' list), ``foreachBatch``
+appends new curves to an epoch store (:mod:`trx_spark.streaming.store`,
+which owns the layout, the replay rules and the compaction) and re-runs
+the batch reduction query, and the trigger choice maps the 30 s poll
+(processingTime) or one-shot catch-up (availableNow — the
+batch-equivalence semantics FIXTURES.md B8 asks for: results after
+wave N equal a batch run over waves 1..N).
 
 State stays trivially small at any scale: the checkpoint holds file
 names only; the aggregation is re-run as a batch query over the
@@ -27,6 +29,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from trx_spark.streaming import store
+
 
 def make_batch_handler(
     store_dir: str,
@@ -34,33 +38,17 @@ def make_batch_handler(
     reduce_fn: Callable[[DataFrame], DataFrame] | None = None,
     reduced_dir: str | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The foreachBatch handler, IDEMPOTENT under replay: foreachBatch
-    is at-least-once, so a batch replayed after a crash must not
-    duplicate rows in the store. Each epoch lands in its own partition
-    directory with DYNAMIC partition overwrite — a replay of epoch N
-    rewrites ``_epoch=N`` in place instead of appending a second copy,
-    with no read-side dedupe. An epoch at or below the store's
-    ``_compacted_through`` watermark is SKIPPED entirely: its rows were
-    written (then folded into ``_epoch=-1`` by ``sinks.compact_store``)
-    before the crash lost the checkpoint commit, so the per-epoch
-    overwrite would land them a second time next to the fold."""
+    """The foreachBatch handler: append the batch to the epoch store
+    ``store_dir`` (idempotent under replay, see
+    :mod:`trx_spark.streaming.store`) and, with ``reduce_fn``, overwrite
+    ``reduced_dir`` with the reduction of the whole store."""
 
     def handle_batch(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from trx_spark.sources.sinks import compacted_through
-
-        if int(epoch_id) <= compacted_through(store_dir):
+        if store.absorbed(store_dir, epoch_id):
             return
-        (
-            batch.withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(store_dir)
-        )
+        store.write(batch, store_dir, epoch_id)
         if reduce_fn is not None and reduced_dir is not None:
-            full = batch.sparkSession.read.parquet(store_dir).drop("_epoch")
+            full = store.read(batch.sparkSession, store_dir).drop(store.EPOCH)
             reduce_fn(full).write.mode("overwrite").parquet(reduced_dir)
 
     return handle_batch
@@ -88,25 +76,11 @@ def incremental_pipeline(
     tests); otherwise a processingTime trigger mirrors the reference's
     30 s cadence (id9.py:330).
     """
-    reader = spark.readStream.schema(schema)
-    if path_glob_filter is not None:
-        # the file source wants a directory basePath; a glob filter
-        # selects specific files inside it
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(landing_dir)
-
+    stream = store.source(spark, landing_dir, schema, path_glob_filter=path_glob_filter)
     handle_batch = make_batch_handler(
         store_dir, reduce_fn=reduce_fn, reduced_dir=reduced_dir
     )
-
-    writer = stream.writeStream.foreachBatch(handle_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if poll_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{int(poll_seconds)} seconds")
-    return writer.start()
+    return store.start(stream, handle_batch, checkpoint_dir, poll_seconds=poll_seconds)
 
 
 def run_catchup(
@@ -114,30 +88,11 @@ def run_catchup(
     **kwargs,
 ) -> None:
     """One availableNow pass: process everything currently in the
-    landing dir, then return (the ST1 'new files only' batch re-run)."""
-    from trx_spark.streaming.tuning import replay_state_width
-
-    # foreachBatch handlers inherit the replay width too: their tiny
-    # per-batch shuffles/writes stop fanning into 32 near-empty files
-    with replay_state_width(spark):
-        q = incremental_pipeline(spark, poll_seconds=None, **kwargs)
-        q.awaitTermination()
-    release_state_stores(spark)
-
-
-def release_state_stores(spark) -> None:
-    """Unload every cached state-store provider.
-
-    Safe between replays: the engine's availableNow catchups run
-    SEQUENTIALLY, and a terminated replay's providers can never be
-    reused (their temporary checkpoints are already deleted) — yet
-    they stay loaded on the executor, each holding its state map and
-    a maintenance task.  Across a long session that accumulation
-    measurably slows later stateful replays (round-12 probe:
-    stream-stream join reps 15 → 22 → 47 s without the release,
-    17 → 11 → 12 → 9 s with it).  Spark restarts the maintenance pool
-    lazily on the next state-store use, so this is pure hygiene."""
-    try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:
-        pass  # JVM-internal API: best-effort hygiene, never correctness
+    landing dir, then return (the ST1 'new files only' batch re-run).
+    Takes :func:`incremental_pipeline`'s keywords."""
+    handler = make_batch_handler(
+        kwargs.pop("store_dir"),
+        reduce_fn=kwargs.pop("reduce_fn", None),
+        reduced_dir=kwargs.pop("reduced_dir", None),
+    )
+    store.drain(spark, handler=handler, **kwargs)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trx_spark.streaming import store
+
 
 def interval_stream_join(
     left: DataFrame,
@@ -49,9 +51,6 @@ def interval_stream_join(
     )
 
 
-_MEM_NAMES = __import__("itertools").count()
-
-
 def run_interval_join_catchup(
     spark,
     *,
@@ -73,43 +72,24 @@ def run_interval_join_catchup(
     input this equals the batch inequality join, so the gate query
     carries a full oracle."""
 
-    def _stream():
-        reader = spark.readStream.schema(schema)
-        if path_glob_filter is not None:
-            reader = reader.option("pathGlobFilter", path_glob_filter)
-        return reader.parquet(landing_dir)
-
-    left, right = _stream(), _stream()
-    if prepare_left is not None:
-        left = prepare_left(left)
-    if prepare_right is not None:
-        right = prepare_right(right)
-    joined = interval_stream_join(
-        left, right, on=on, l_ts=l_ts, r_ts=r_ts, window=window, watermark=watermark
-    )
-    name = f"trx_ivjoin_{next(_MEM_NAMES)}"
-    from trx_spark.streaming.tuning import replay_state_width
+    def plan(left: DataFrame, right: DataFrame) -> DataFrame:
+        if prepare_left is not None:
+            left = prepare_left(left)
+        if prepare_right is not None:
+            right = prepare_right(right)
+        return interval_stream_join(
+            left, right, on=on, l_ts=l_ts, r_ts=r_ts, window=window, watermark=watermark
+        )
 
     # a stream-stream join builds FOUR state stores per shuffle
-    # partition; width sized to state volume, not batch compute width
-    # (see tuning.py — 15.7 s → 3.1 s on the identical replay)
-    with replay_state_width(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from trx_spark.streaming.incremental import release_state_stores
-
-    release_state_stores(spark)
-    # materialize OFF the memory sink, then drop it: memory-sink tables
-    # pin their result rows on the driver for the session's lifetime, so
-    # a long-lived service leaks one table per replay (the state-store
-    # provider leak's sibling).  localCheckpoint is eager, so the rows
-    # move to executor blocks (freed by unpersist/GC) before the drop.
-    out = spark.table(name).localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    # partition; the drain's replay width sizes them to state volume,
+    # not batch compute width (see tuning.py — 15.7 s → 3.1 s on the
+    # identical replay)
+    return store.drain(
+        spark,
+        landing_dir=landing_dir,
+        schema=schema,
+        plan=plan,
+        streams=2,
+        path_glob_filter=path_glob_filter,
+    )

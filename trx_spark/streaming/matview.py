@@ -16,13 +16,13 @@ This is the Spark-first replacement for the reference's online loop
 "recompute the reduction after each new file" (trx/id9.py:330):
 instead of recomputing over the accumulated store, the view merges
 per-epoch partials — per-epoch work is O(batch), merge work is
-O(groups · epochs), and compaction (inherited from the sketch store)
-folds history to O(groups).
+O(groups · epochs), and compaction folds history to O(groups).
 
-Reuses the sketch harness verbatim: epoch-partitioned idempotent
-writes, the compaction watermark, and the availableNow catch-up driver
-— one mechanism, three state shapes (CMS cells / HLL registers /
-aggregate partials).
+The partials live in an epoch store (:mod:`trx_spark.streaming.store`:
+idempotent epoch writes, the compaction watermark, the availableNow
+drain) and the pricing view drains through the sketch family's
+partial handler — one mechanism, several state shapes (CMS cells /
+HLL registers / aggregate partials).
 """
 
 from __future__ import annotations
@@ -32,7 +32,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from trx_spark.exact import SCALE, fint
-from trx_spark.streaming.sketch import _run_catchup, compact_store
+from trx_spark.streaming import store
+from trx_spark.streaming.sketch import _run_catchup
 
 _KEYS = ["l_returnflag", "l_linestatus"]
 
@@ -116,7 +117,7 @@ def compact_pricing_view(spark: SparkSession, view_dir: str) -> None:
     the sketch stores). Folds the PARTIAL columns via the shared
     :func:`_merge_partials` — never the finalized view, whose averages
     are not associative."""
-    compact_store(spark, view_dir, _merge_partials)
+    store.compact(spark, view_dir, _merge_partials)
 
 
 # ---------------------------------------------------------------------
@@ -191,7 +192,6 @@ def make_manifest_batch_handler(
     partition and gated on the manifest store's OWN compaction
     watermark."""
     from trx_spark.queries.packing import _N_PACK_SHARDS
-    from trx_spark.sources.sinks import compacted_through
     from trx_spark.streaming.curation import (
         _STREAM_KEY_CAP,
         make_curation_batch_handler,
@@ -206,26 +206,22 @@ def make_manifest_batch_handler(
     def handle(batch: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
         curate(batch, epoch_id)
-        if e <= compacted_through(manifest_dir):
-            return  # this epoch's rollup already lives in _epoch=-1
-        (
-            _manifest_partial(batch, verdict_dir, e, shards)
-            .withColumn("_epoch", F.lit(e))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(manifest_dir)
-        )
+        if store.absorbed(manifest_dir, e):
+            return
+        store.write(_manifest_partial(batch, verdict_dir, e, shards), manifest_dir, e)
 
     return handle
 
 
-def _merge_manifest_partials(spark: SparkSession, manifest_dir: str) -> DataFrame:
+def _merge_manifest_partials(spark: SparkSession, manifest_dir: str) -> DataFrame | None:
     """Key-wise sum of the epoch partials (shared by finalize and
-    compaction — partial columns only, never the finalized n_seqs)."""
+    compaction — partial columns only, never the finalized n_seqs);
+    None when nothing was written yet."""
+    parts = store.read(spark, manifest_dir)
+    if parts is None:
+        return None
     return (
-        spark.read.parquet(manifest_dir)
-        .groupBy("shard")
+        parts.groupBy("shard")
         .agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("n_tokens").alias("n_tokens"),
@@ -237,23 +233,13 @@ def merged_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """Merged partials finalized to the batch capstone's schema:
     (shard, n_docs, n_tokens, n_seqs) — n_seqs is derived from the
     MERGED token sum, the same expression the batch query evaluates."""
-    from pyspark.errors import AnalysisException
-
     from trx_spark.queries.packing import _SEQ_BUDGET
 
-    try:
-        m = _merge_manifest_partials(spark, manifest_dir)
-    except AnalysisException as exc:
-        msg = str(exc)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            return spark.createDataFrame(
-                [], "shard BIGINT, n_docs BIGINT, n_tokens BIGINT, n_seqs BIGINT"
-            )
-        raise
+    m = _merge_manifest_partials(spark, manifest_dir)
+    if m is None:
+        return spark.createDataFrame(
+            [], "shard BIGINT, n_docs BIGINT, n_tokens BIGINT, n_seqs BIGINT"
+        )
     return m.select(
         "shard",
         "n_docs",
@@ -266,7 +252,7 @@ def merged_manifest(spark: SparkSession, manifest_dir: str) -> DataFrame:
 def compact_manifest_view(spark: SparkSession, manifest_dir: str) -> None:
     """Fold the manifest's epoch history to one partial per shard
     (watermarked, like every store in this family)."""
-    compact_store(spark, manifest_dir, _merge_manifest_partials)
+    store.compact(spark, manifest_dir, _merge_manifest_partials)
 
 
 def run_manifest_catchup(
@@ -284,30 +270,17 @@ def run_manifest_catchup(
 ) -> DataFrame:
     """Drain the landing dir (availableNow) through the curation +
     manifest handler; return the finalized merged manifest."""
-    reader = spark.readStream.schema(schema)
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-    from trx_spark.streaming.tuning import replay_state_width
-
-    # replay width: right-sizes the handlers' store writes (tuning.py)
-    with replay_state_width(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                make_manifest_batch_handler(
-                    hash_store, band_store, verdict_dir, manifest_dir
-                )
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from trx_spark.streaming.incremental import release_state_stores
-
-    release_state_stores(spark)
+    store.drain(
+        spark,
+        landing_dir=landing_dir,
+        schema=schema,
+        handler=make_manifest_batch_handler(
+            hash_store, band_store, verdict_dir, manifest_dir
+        ),
+        checkpoint_dir=checkpoint_dir,
+        path_glob_filter=path_glob_filter,
+        max_files_per_trigger=max_files_per_trigger,
+    )
     return merged_manifest(spark, manifest_dir)
 
 

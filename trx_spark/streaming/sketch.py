@@ -9,22 +9,17 @@ streams. That property is exactly what a streaming deployment needs:
 each micro-batch contributes its own bounded partial (≤ 256 CMS cells,
 ≤ 64 HLL registers BY CONSTRUCTION, whatever the batch size), and the
 accumulated state is the merge. The store grows O(epochs · partial)
-rows and :func:`compact_store` folds history back to one partial.
+rows and compaction folds history back to one partial.
 
-Write idempotency follows the engine's streaming convention
-(`streaming/incremental.make_batch_handler`): each epoch lands in its
-own ``_epoch`` partition with dynamic partition overwrite, so an
-at-least-once replay rewrites its partition instead of double-counting.
-Compaction preserves that guarantee with a WATERMARK: the folded
-partial (``_epoch=-1``) records the highest epoch it absorbed in a
-``_compacted_through`` marker file, and the handler SKIPS any replayed
-epoch at or below the watermark — its counts already live inside the
-folded partial, so re-writing them would double-count.
+Each epoch's partial is one epoch of an epoch store
+(:mod:`trx_spark.streaming.store`): an at-least-once replay rewrites its
+own epoch instead of double-counting, and compaction folds the history
+through the family's merge into ``_epoch=-1`` under a watermark that
+makes replays of absorbed epochs no-ops.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,8 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from trx_spark.queries.curation import _cms_cells
-
-_MARKER = "_compacted_through"
+from trx_spark.streaming import store
 
 
 def _batch_cells(batch: DataFrame) -> DataFrame:
@@ -68,35 +62,17 @@ def _batch_hll_registers(batch: DataFrame) -> DataFrame:
     )
 
 
-def _compacted_through(sketch_dir: str) -> int:
-    """Highest epoch folded into the ``_epoch=-1`` partial (or a
-    sentinel below every real epoch when never compacted)."""
-    try:
-        with open(os.path.join(sketch_dir, _MARKER)) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return -1
-
-
 def make_partial_handler(
     sketch_dir: str, partial_fn: Callable[[DataFrame], DataFrame]
 ):
-    """foreachBatch handler shared by both sketches: write this epoch's
-    bounded partial into its own ``_epoch`` partition (idempotent under
-    replay), skipping epochs already absorbed by a compaction (see
-    module doc — the watermark keeps replay + compaction consistent)."""
+    """foreachBatch handler shared by every sketch family: write this
+    epoch's bounded partial as one epoch of the store, unless a
+    compaction already absorbed it."""
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        if int(epoch_id) <= _compacted_through(sketch_dir):
-            return  # this epoch's counts already live in _epoch=-1
-        (
-            partial_fn(batch)
-            .withColumn("_epoch", F.lit(int(epoch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_epoch")
-            .parquet(sketch_dir)
-        )
+        if store.absorbed(sketch_dir, epoch_id):
+            return
+        store.write(partial_fn(batch), sketch_dir, epoch_id)
 
     return handle
 
@@ -123,50 +99,8 @@ def merged_hll_registers(spark: SparkSession, sketch_dir: str) -> DataFrame:
     )
 
 
-def compact_store(
-    spark: SparkSession,
-    sketch_dir: str,
-    merge_fn: Callable[[SparkSession, str], DataFrame],
-) -> None:
-    """Fold the epoch history into a single merged partial at
-    ``_epoch=-1`` (same partitioned layout as the live writes, so the
-    next micro-batch coexists with the compacted data) so the store
-    stays O(partial) rows over an unbounded stream. The merge is
-    associative, so the merged sketch is unchanged; the watermark
-    marker keeps subsequent replays of absorbed epochs no-ops."""
-    store = spark.read.parquet(sketch_dir)
-    high = store.agg(F.max("_epoch").alias("m")).collect()[0]["m"]
-    # a store holding only the folded _epoch=-1 partial reports max=-1;
-    # the watermark must never REGRESS (a lowered marker re-enables
-    # replay double-counting of the epochs absorbed earlier)
-    high = max(int(high), _compacted_through(sketch_dir))
-    merged = merge_fn(spark, sketch_dir).withColumn("_epoch", F.lit(-1))
-    # write-to-temp + rename swap, with the watermark INSIDE the temp
-    # copy: a direct overwrite of sketch_dir would delete the old
-    # marker before the new one lands — a crash in that window
-    # regresses the watermark to -1 while the epochs are already
-    # folded, re-enabling exactly the replay double-count the marker
-    # exists to prevent
-    import shutil
-
-    tmp = sketch_dir.rstrip("/") + "._compact_tmp"
-    (
-        merged.localCheckpoint()
-        .write.mode("overwrite")
-        .partitionBy("_epoch")
-        .parquet(tmp)
-    )
-    with open(os.path.join(tmp, _MARKER), "w") as fh:
-        fh.write(str(int(high)))
-    old = sketch_dir.rstrip("/") + "._compact_old"
-    shutil.rmtree(old, ignore_errors=True)  # stale crash leftover
-    os.rename(sketch_dir, old)
-    os.rename(tmp, sketch_dir)
-    shutil.rmtree(old)
-
-
 def compact_cms_store(spark: SparkSession, sketch_dir: str) -> None:
-    compact_store(spark, sketch_dir, merged_sketch)
+    store.compact(spark, sketch_dir, merged_sketch)
 
 
 def _run_catchup(
@@ -182,30 +116,16 @@ def _run_catchup(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Drain the landing dir (availableNow) through a partial handler;
-    return the merged sketch. One harness for both sketch families —
-    the idempotent-write recipe lives in exactly one place."""
-    reader = spark.readStream.schema(schema)
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(landing_dir)
-    from trx_spark.streaming.tuning import replay_state_width
-
-    # replay width: right-sizes the handlers' partial writes (tuning.py)
-    with replay_state_width(spark):
-        q = (
-            stream.writeStream.foreachBatch(
-                make_partial_handler(sketch_dir, partial_fn)
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from trx_spark.streaming.incremental import release_state_stores
-
-    release_state_stores(spark)
+    return the merged sketch."""
+    store.drain(
+        spark,
+        landing_dir=landing_dir,
+        schema=schema,
+        handler=make_partial_handler(sketch_dir, partial_fn),
+        checkpoint_dir=checkpoint_dir,
+        path_glob_filter=path_glob_filter,
+        max_files_per_trigger=max_files_per_trigger,
+    )
     return merge_fn(spark, sketch_dir)
 
 
@@ -287,7 +207,7 @@ def merged_kmv_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
 
 
 def compact_kmv_store(spark: SparkSession, sketch_dir: str) -> None:
-    compact_store(spark, sketch_dir, merged_kmv_sketch)
+    store.compact(spark, sketch_dir, merged_kmv_sketch)
 
 
 def run_kmv_catchup(spark: SparkSession, **kw) -> DataFrame:
@@ -333,8 +253,8 @@ def merged_qsketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     sketch of everything ingested so far, bit-for-bit."""
     from trx_spark.queries.sketches import _QS_TZC_SQL, qs_kept
 
-    store = spark.read.parquet(sketch_dir)
-    floor = store.groupBy("g").agg(F.max("lvl").alias("lfloor"))
+    parts = spark.read.parquet(sketch_dir)
+    floor = parts.groupBy("g").agg(F.max("lvl").alias("lfloor"))
     # NO distinct here: the batch one-shot keeps duplicate (g, cv, h)
     # rows (two events colliding on the key hash each survive), so a
     # distinct would make streamed ≠ batch exactly in that corner.
@@ -342,7 +262,7 @@ def merged_qsketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     # partition (dynamic overwrite) and compaction watermarks absorbed
     # epochs, the same idempotency contract as the CMS/HLL/KMV stores.
     cand = (
-        store.select("g", "cv", "h")
+        parts.select("g", "cv", "h")
         .withColumn("tzc", F.expr(_QS_TZC_SQL))
         .join(F.broadcast(floor), "g")
         .filter(F.col("tzc") >= F.col("lfloor"))
@@ -354,7 +274,7 @@ def merged_qsketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
 
 
 def compact_qsketch_store(spark: SparkSession, sketch_dir: str) -> None:
-    compact_store(spark, sketch_dir, merged_qsketch)
+    store.compact(spark, sketch_dir, merged_qsketch)
 
 
 def run_qsketch_catchup(spark: SparkSession, **kw) -> DataFrame:

@@ -16,13 +16,11 @@ streaming query with a full DuckDB oracle.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-_MEM_NAMES = itertools.count()
+from trx_spark.streaming import store
 
 
 def windowed_counts(
@@ -67,36 +65,19 @@ def run_windowed_catchup(
     aggregation result is small: one row per (window, key)).
     ``prepare`` (DataFrame → DataFrame) runs before the aggregation,
     e.g. to derive a proper timestamp column from raw nanos."""
-    reader = spark.readStream.schema(schema)
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(landing_dir)
-    if prepare is not None:
-        stream = prepare(stream)
-    agg = windowed_counts(
-        stream, ts=ts, keys=keys, window=window, watermark=watermark
-    )
-    name = f"trx_windowed_{next(_MEM_NAMES)}"
-    from trx_spark.streaming.tuning import replay_state_width
 
-    # windowed-agg state width sized to state volume (see tuning.py)
-    with replay_state_width(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+    def plan(stream: DataFrame) -> DataFrame:
+        if prepare is not None:
+            stream = prepare(stream)
+        return windowed_counts(
+            stream, ts=ts, keys=keys, window=window, watermark=watermark
         )
-        q.awaitTermination()
-    from trx_spark.streaming.incremental import release_state_stores
 
-    release_state_stores(spark)
-    # materialize OFF the memory sink, then drop it: memory-sink tables
-    # pin their result rows on the driver for the session's lifetime, so
-    # a long-lived service leaks one table per replay (the state-store
-    # provider leak's sibling).  localCheckpoint is eager, so the rows
-    # move to executor blocks (freed by unpersist/GC) before the drop.
-    out = spark.table(name).localCheckpoint()
-    spark.catalog.dropTempView(name)
-    return out
+    return store.drain(
+        spark,
+        landing_dir=landing_dir,
+        schema=schema,
+        plan=plan,
+        output_mode="complete",
+        path_glob_filter=path_glob_filter,
+    )
