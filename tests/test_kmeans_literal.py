@@ -11,12 +11,12 @@ import math
 
 from pyspark.sql import functions as F
 
+from trx_spark.exact import dot_fixed_py
 from trx_spark.operators.kmeans import (
     _SCALE,
     argmax_cell,
     assign_literal,
     collect_codebook,
-    dot_fixed_py,
     lloyd_centroids,
     lloyd_centroids_collected,
     score_cells,
@@ -70,7 +70,7 @@ def test_update_centroids_literal_matches_python_fold(spark, sf_dir):
     sums: dict = {}
     for _vid, vec in rows:
         best = max(
-            ((dot_fixed_py(vec, c), -cid) for cid, c in cents),
+            ((dot_fixed_py(vec, c, _SCALE), -cid) for cid, c in cents),
         )
         cid = -best[1]
         s, n = sums.setdefault(cid, ([0] * len(vec), 0))
@@ -118,4 +118,4 @@ def test_dot_fixed_py_matches_jvm_fold(spark, sf_dir):
     vecs = {int(r[0]): [float(v) for v in r[1]] for r in emb.collect()}
     for (vid, cid), dot in jvm.items():
         c = dict(cents)[cid]
-        assert dot_fixed_py(vecs[vid], c) == dot  # bit-equal doubles
+        assert dot_fixed_py(vecs[vid], c, _SCALE) == dot  # bit-equal doubles

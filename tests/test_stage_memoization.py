@@ -120,3 +120,41 @@ def test_memo_build_log_is_bounded():
     finally:
         cache.MEMO_BUILDS.clear()
         cache.MEMO_BUILDS.extend(saved)
+
+
+def test_stopped_session_entries_are_evicted_on_a_miss():
+    """The store holds sessions strongly; a miss drops every entry whose
+    key holds a stopped session (``sparkContext._jsc is None``), so a
+    process that starts session after session keeps only the live ones'
+    entries. Stub sessions: the shared fixture session is never stopped."""
+    from types import SimpleNamespace
+
+    from trx_spark import cache
+
+    class Session:  # hashable by identity, like SparkSession
+        def __init__(self):
+            self.sparkContext = SimpleNamespace(_jsc=object())
+
+    session = Session
+
+    saved = dict(cache._STORE)
+    saved_log = list(cache.MEMO_BUILDS)
+    cache._STORE.clear()
+    try:
+        old, live = session(), session()
+        cache.memo("stage_a", (old, "sf"), lambda: 1)
+        cache.memo("stage_b", (old, "sf", 7), lambda: 2)
+        cache.memo("stage_a", (live, "sf"), lambda: 3)
+        old.sparkContext._jsc = None  # what SparkContext.stop() leaves
+        # a hit evicts nothing
+        assert cache.memo("stage_a", (live, "sf"), lambda: 0) == 3
+        assert cache.stage_cache_stats() == {"stage_a": 2, "stage_b": 1}
+        # a miss drops both of the stopped session's entries
+        assert cache.memo("stage_c", (live, "sf"), lambda: 4) == 4
+        assert cache.stage_cache_stats() == {"stage_a": 1, "stage_c": 1}
+        assert all(k[1][0] is live for k in cache._STORE)
+    finally:
+        cache._STORE.clear()
+        cache._STORE.update(saved)
+        cache.MEMO_BUILDS.clear()
+        cache.MEMO_BUILDS.extend(saved_log)

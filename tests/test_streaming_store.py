@@ -294,3 +294,14 @@ def test_compaction_never_lowers_watermark_and_next_epoch_follows_it(spark, tmp_
     assert store.compacted_through(d) == 1 and store.next_epoch(d) == 2
     assert store.absorbed(d, 1) and not store.absorbed(d, 2)
     assert store.read(spark, d).count() == 2
+
+
+def test_replay_state_width_follows_default_parallelism(spark):
+    """The replay width comes from the session, not from the process
+    environment, and the batch width is restored afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    want = max(2, min(8, spark.sparkContext.defaultParallelism))
+    with store.replay_state_width(spark):
+        assert spark.conf.get(key) == str(want)
+    assert spark.conf.get(key) == before

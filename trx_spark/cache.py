@@ -14,6 +14,9 @@ that:
   so a fresh session misses and can never read a stale checkpoint from
   another. The reference is strong on purpose: a cached DataFrame
   references its session anyway, so a weak key would free nothing.
+  Instead every miss evicts the entries of sessions that have been
+  stopped, so a long-lived process that starts session after session
+  holds only the live sessions' entries.
 - **Stamps.** Every build appends ``{name, sec, payer}`` to
   ``MEMO_BUILDS`` through :func:`build_done`; ``CURRENT_CONSUMER`` names
   the query that paid for it. Stamps are inclusive: a build that
@@ -44,13 +47,24 @@ _STORE: dict[tuple, object] = {}
 
 def memo(name: str, key, build):
     """Return the value stored under ``(name, key)``; on a miss call
-    ``build()``, store its result and stamp the build."""
+    ``build()``, store its result and stamp the build. A miss first
+    drops every entry whose key holds a stopped session."""
     k = (name, key)
     if k not in _STORE:
+        for dead in [sk for sk in _STORE if _holds_stopped_session(sk[1])]:
+            del _STORE[dead]
         t0 = time.perf_counter()
         _STORE[k] = build()
         build_done(name, t0)
     return _STORE[k]
+
+
+def _holds_stopped_session(key) -> bool:
+    """A session whose context is stopped has ``sparkContext._jsc is None``."""
+    parts = key if isinstance(key, tuple) else (key,)
+    return any(
+        getattr(getattr(p, "sparkContext", None), "_jsc", True) is None for p in parts
+    )
 
 
 def build_done(name: str, t0: float) -> None:

@@ -50,30 +50,6 @@ def phosphor_correction(
     return corr
 
 
-def liquid_sheet_absorption_correction(
-    twotheta_deg: Column | str,
-    *,
-    thickness: float,
-    att_len: float,
-    normalize_to_zero_angle: bool = False,
-) -> Column:
-    """Sample self-absorption correction
-    (trx/utils/absorption.py:83-108): 1/[1/(μl)·cosθ/(1−cosθ)·(T1−T2)]
-    with θ clamped below at 0.001 rad."""
-    tt = F.col(twotheta_deg) if isinstance(twotheta_deg, str) else twotheta_deg
-    theta = F.greatest(F.radians(tt), F.lit(0.001))
-    cos = F.cos(theta)
-    import math
-
-    t1 = math.exp(-thickness / att_len)
-    t2 = F.exp(-F.lit(thickness) / cos / F.lit(att_len))
-    arg = thickness / att_len
-    temp = (F.lit(1.0 / arg)) * cos / (1 - cos) * (F.lit(t1) - t2)
-    if normalize_to_zero_angle:
-        temp = temp / F.lit(t1)
-    return F.lit(1.0) / temp
-
-
 def charge_to_photon(
     charge: Column | str,
     *,

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from trx_spark.exact import dsum, wdsum
+
 
 def q_bin(q: Column | str, *, q_min: float, q_max: float, n_bins: int) -> Column:
     """Uniform radial bin index in [0, n_bins-1], clamping out-of-range
@@ -60,8 +62,6 @@ def integrate_1d(
       err = sqrt(Σ(I−dark)) / count       (Poisson error model, azav.py:150)
       n_pix, q_center
     """
-    from trx_spark.exact import dsum
-
     image = image or ["file"]
     df = pixels
     if masked is not None:
@@ -100,8 +100,6 @@ def integrate_2d(
 ) -> DataFrame:
     """2-D (q, azimuth) integration — cake plot (trx/azav.py:156-171
     ``do2d``). Same aggregation with a second bucket key."""
-    from trx_spark.exact import dsum
-
     image = image or ["file"]
     df = pixels
     if masked is not None:
@@ -175,8 +173,6 @@ def monitor_normalize(
     (dataReduction.py:236-237 uses the *median* over the window). Adds
     ``monitor`` and replaces i (and err) by i/monitor via an analytic
     window — no self-join, single pass."""
-    from trx_spark.exact import SCALE, fint
-
     image = image or ["file"]
     w = Window.partitionBy(*image)
     sel = F.col(intensity)
@@ -194,9 +190,7 @@ def monitor_normalize(
         if use_median:
             mon = F.expr(f"percentile({intensity}, 0.5)").over(w)
         elif exact:
-            mon = (
-                F.sum(fint(sel)).over(w).cast("double") / F.lit(SCALE)
-            ) / F.count(sel).over(w)
+            mon = wdsum(sel, w) / F.count(sel).over(w)
         else:
             mon = F.avg(sel).over(w)
         out = curves.withColumn("monitor", mon)

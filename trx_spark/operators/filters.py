@@ -74,37 +74,6 @@ def mad_columns(
     return out.withColumn(mad_out, mad).drop("_absdev")
 
 
-def remove_zingers(
-    df: DataFrame,
-    *,
-    value: str = "i",
-    curve: list[str] | None = None,
-    point: list[str] | None = None,
-    threshold: float = 10.0,
-    flag_out: str = "is_zinger",
-) -> DataFrame:
-    """Flag zingers: per-curve mean-normalize, then per-point (q-column)
-    robust z-score |x − median| / MAD > threshold (trx/filters.py:51-81).
-
-    ``curve`` keys identify one curve (e.g. file), ``point`` keys identify
-    one abscissa (e.g. q_idx). The reference sets NaN; we set a boolean —
-    downstream aggs use ``WHERE NOT is_zinger``.
-    """
-    curve = curve or ["file"]
-    point = point or ["q_idx"]
-    w_curve = Window.partitionBy(*curve)
-    normed = df.withColumn("_norm", F.avg(value).over(w_curve)).withColumn(
-        "_x", F.col(value) / F.col("_norm")
-    )
-    withstats = mad_columns(normed, value="_x", partition=point, median_out="_med", mad_out="_mad")
-    z = F.abs(F.col("_x") - F.col("_med")) / F.col("_mad")
-    return (
-        withstats.withColumn("zscore", z)
-        .withColumn(flag_out, z > F.lit(threshold))
-        .drop("_norm", "_x", "_med", "_mad")
-    )
-
-
 def chi2_filter_threshold(
     chi2_df: DataFrame,
     *,
@@ -149,22 +118,3 @@ def chi2_filter(
         {"chi2_threshold": F.lit(threshold), flag_out: F.col(chi2) > F.lit(threshold)}
     )
 
-
-def filter_outlier(
-    df: DataFrame,
-    *,
-    value: str = "i",
-    curve: list[str] | None = None,
-    threshold: float = 10.0,
-) -> DataFrame:
-    """Curve-level robust chi2 vs the global median/MAD
-    (trx/filters.py:83-101): drop whole curves whose
-    mean((|x − median|/MAD)²) ≥ threshold."""
-    curve = curve or ["file"]
-    withstats = mad_columns(df, value=value, partition=[], median_out="_med", mad_out="_mad")
-    z2 = F.pow(F.abs(F.col(value) - F.col("_med")) / F.col("_mad"), 2)
-    per_curve = withstats.groupBy(*curve).agg(F.avg(z2).alias("curve_chi2"))
-    keep = per_curve.filter(F.col("curve_chi2") < threshold).select(*curve)
-    # keep is one row per surviving curve — it scales with the data, so
-    # no broadcast hint: AQE broadcasts it when small, shuffles at scale
-    return df.join(keep, on=curve, how="left_semi")

@@ -27,17 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from trx_spark.exact import array_dot, dfinal, dlit_array, fint, sql_array_dot
+
 _SCALE = 1e12  # == textdata._EMB_SCALE; int64-safe for |x|<=~1, dim 64
-
-
-def _fp_terms(x, y):
-    return F.floor((x.cast("double") * y.cast("double")) * F.lit(_SCALE)).cast("long")
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, _fp_terms), F.lit(0).cast("long"), lambda acc, v: acc + v
-    ).cast("double") / F.lit(_SCALE)
 
 
 def score_cells(
@@ -46,7 +38,7 @@ def score_cells(
     """(id, cid, dot) for every vector x centroid — broadcast join,
     map-side folds, no shuffle until the consumer aggregates."""
     return emb.crossJoin(F.broadcast(cents)).select(
-        id_col, "cid", _dot(F.col(vec_col), F.col("cent")).alias("dot")
+        id_col, "cid", array_dot(F.col(vec_col), F.col("cent"), _SCALE).alias("dot")
     )
 
 
@@ -66,13 +58,11 @@ def _update_centroids(
     ex = emb.join(assign.select(id_col, "cid"), id_col).select(
         "cid", F.posexplode(F.col(vec_col)).alias("pos", "x")
     )
-    cent_val = (F.col("s").cast("double") / F.lit(_SCALE)) / F.col("n")
+    cent_val = dfinal(F.col("s"), _SCALE) / F.col("n")
     return (
         ex.groupBy("cid", "pos")
         .agg(
-            F.sum(
-                F.floor(F.col("x").cast("double") * F.lit(_SCALE)).cast("long")
-            ).alias("s"),
+            F.sum(fint(F.col("x").cast("double"), _SCALE)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .withColumn("c", cent_val)
@@ -123,9 +113,10 @@ def lloyd_assign(
 # through a groupBy argmax, collect it once and inline the centroids as
 # LITERALS — every score/argmax becomes one map-side projection over
 # the corpus, with zero joins and zero shuffles.  The dot expression is
-# the identical `_fp_terms` zip_with fold (literal second operand), and
-# the argmax is `array_max` over struct(dot, -cid) — the same struct
-# ordering `max(struct(dot, ncid))` uses — so assignments, dots and
+# the identical `exact.array_dot` fold, as `exact.sql_array_dot` text
+# with the literal centroid as second operand, and the argmax is
+# `array_max` over struct(dot, -cid) — the same struct ordering
+# `max(struct(dot, ncid))` uses — so assignments, dots and
 # trained centroids stay bit-for-bit equal to the DataFrame path.
 # At cluster scale this is the textbook shape: k-means scoring is a
 # map-only pass against in-closure centroids; only the centroid UPDATE
@@ -133,48 +124,11 @@ def lloyd_assign(
 # ---------------------------------------------------------------------
 
 
-def dot_fixed_py(a: list[float], b: list[float]) -> float:
-    """Driver-Python twin of `_dot`, bit-exact: per element
-    floor((x * y) * SCALE) in IEEE doubles (Python floats ARE IEEE
-    doubles and * / floor are the same operations the JVM runs), exact
-    integer sum, one double division by SCALE.  Used only on BOUNDED
-    operands (the 1-row query vector x the k x dim codebook)."""
-    import math
-
-    acc = 0
-    for x, y in zip(a, b):
-        acc += math.floor((float(x) * float(y)) * _SCALE)
-    return acc / _SCALE
-
-
-def _dlit_sql(v: float) -> str:
-    """A double literal as SQL text: string→double CAST, the same parse
-    Python's repr round-trips through, so the value is bit-exact."""
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
-
-
-def dot_literal_sql(vec_sql: str, cent: list[float]) -> str:
-    """The `_dot` fixed-point fold with a literal centroid, as SQL text.
-
-    Text, not Column ops, ON PURPOSE: a py4j Column call costs
-    milliseconds, so building k x dim literal trees through the
-    DataFrame API costs SECONDS of driver time per query construction
-    (measured: ~5 ms/F.lit, 51 s to construct one 16x64 scoring plan).
-    One `F.expr` parse of a generated string is a single round-trip and
-    resolves to the identical expression tree."""
-    arr = f"array({', '.join(_dlit_sql(c) for c in cent)})"
-    return (
-        f"(CAST(aggregate(zip_with({vec_sql}, {arr}, (x, y) -> "
-        f"CAST(FLOOR((CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) * {_dlit_sql(_SCALE)}) AS BIGINT)), "
-        f"CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE) / {_dlit_sql(_SCALE)})"
-    )
-
-
 def best_cell_sql(vec_sql: str, cents: list[tuple[int, list[float]]]) -> str:
     """struct(dot, ncid) of the winning centroid as SQL text (ties ->
     smallest cid; array_max's struct ordering == the groupBy max's)."""
     entries = ", ".join(
-        f"named_struct('dot', {dot_literal_sql(vec_sql, c)}, "
+        f"named_struct('dot', {sql_array_dot(vec_sql, dlit_array(c), _SCALE)}, "
         f"'ncid', CAST({-int(cid)} AS BIGINT))"
         for cid, c in cents
     )
@@ -252,13 +206,11 @@ def update_centroids_literal(
         (-F.col("_m.ncid")).alias("cid"),
         F.posexplode(F.col("_v")).alias("pos", "x"),
     )
-    cent_val = (F.col("s").cast("double") / F.lit(_SCALE)) / F.col("n")
+    cent_val = dfinal(F.col("s"), _SCALE) / F.col("n")
     return (
         ex.groupBy("cid", "pos")
         .agg(
-            F.sum(
-                F.floor(F.col("x").cast("double") * F.lit(_SCALE)).cast("long")
-            ).alias("s"),
+            F.sum(fint(F.col("x").cast("double"), _SCALE)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .withColumn("c", cent_val)

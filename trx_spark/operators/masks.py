@@ -121,15 +121,6 @@ def mask_border(shape: tuple[int, int], width: int) -> Column:
     )
 
 
-def mask_center_lines(shape: tuple[int, int], width: int) -> Column:
-    """Central cross (trx/mask.py:264-285 ``maskCenterLines``)."""
-    ny, nx = shape
-    cx, cy = nx // 2, ny // 2
-    return ((F.col("x") >= cx - width) & (F.col("x") < cx + width)) | (
-        (F.col("y") >= cy - width) & (F.col("y") < cy + width)
-    )
-
-
 def combine_masks(components: list[tuple[str, Column]]) -> Column:
     """Ordered add/subtract composition with last-writer-wins
     (trx/mask.py:128-135): later components override earlier ones where

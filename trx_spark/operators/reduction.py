@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from trx_spark.exact import davg, dstddev_pop, dsum, wdsum
+
 
 def interp_references(
     df: DataFrame,
@@ -220,8 +222,6 @@ def average_scan_points(
     where it agrees with the two-pass form to ~1 ulp (golden-tested at
     rtol 1e-9).
     """
-    from trx_spark.exact import davg, dstddev_pop, dsum
-
     group = group or []
     keys = [*group, scan]
 
@@ -275,8 +275,6 @@ def ref_average(
     """A9: the average of the REFERENCE shots per group (per q for curve
     layouts) — ``ref_average = nanmean(data[isRef], axis=0)``
     (trx/dataReduction.py:137). A tiny agg: one row per (run, q)."""
-    from trx_spark.exact import davg
-
     group = group or []
     mean_fn = davg if exact else F.avg
     agg = mean_fn(F.col(value)).alias(out)
@@ -324,6 +322,11 @@ def diffs_plus_ref(
     return joined.withColumn(out, F.col(diff) + F.col("ref_avg"))
 
 
+def _wsum(col: Column, w, exact: bool) -> Column:
+    """Σ col over the window ``w``: fixed-point when ``exact``, else native."""
+    return wdsum(col, w) if exact else F.sum(col).over(w)
+
+
 def chi2_0_per_shot(
     df: DataFrame,
     *,
@@ -339,29 +342,20 @@ def chi2_0_per_shot(
     keeps every row, adding ``chi2_0`` (NULL for rows dropped by the
     every-second-reference rule, which the reference never scores),
     plus ``noise`` and ``mean_diff`` context columns."""
-    from trx_spark.exact import SCALE, fint
-
     group = group or []
     keys = [*group, scan]
     w_full = Window.partitionBy(*keys).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
 
-    def wsum(col):
-        if exact:
-            # fint is THE fixed-point addend — the parity argument
-            # rests on this tree staying identical everywhere
-            return F.sum(fint(col)).over(w_full).cast("double") / F.lit(SCALE)
-        return F.sum(col).over(w_full)
-
     d = F.col(diff)
     enriched = _mark_subsample(df, keys=keys, ref_keys=group, idx=idx, is_ref=is_ref)
     n = F.count(d).over(w_full)
-    s1 = wsum(d)
-    s2 = wsum(d * d)
+    s1 = _wsum(d, w_full, exact)
+    s2 = _wsum(d * d, w_full, exact)
     noise = F.sqrt(F.greatest((s2 - s1 * s1 / n) / n, F.lit(0.0)))
     used = F.when(F.col("_use"), d)
-    mean_used = wsum(used) / F.count(used).over(w_full)
+    mean_used = _wsum(used, w_full, exact) / F.count(used).over(w_full)
     enriched = enriched.withColumns({"_noise": noise, "_mean_used": mean_used})
     z = (d - F.col("_mean_used")) / F.col("_noise")
     # z·z, not pow(z,2): pow is not guaranteed correctly rounded across
@@ -398,32 +392,23 @@ def chi2_0_per_shot_curves(
     groupBy(shot). Subsampling (W2) applies per shot, which on
     rectangular curves equals the per-(scan,q) row-number rule used
     here."""
-    from trx_spark.exact import SCALE, fint
-
     group = group or []
     keys = [*group, scan, q]
     w_full = Window.partitionBy(*keys).rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
 
-    def wsum(col):
-        if exact:
-            return F.sum(fint(col)).over(w_full).cast("double") / F.lit(SCALE)
-        return F.sum(col).over(w_full)
-
     d = F.col(diff)
     enriched = _mark_subsample(df, keys=keys, ref_keys=[*group, q], idx=idx, is_ref=is_ref)
     n = F.count(d).over(w_full)
-    s1 = wsum(d)
-    s2 = wsum(d * d)
+    s1 = _wsum(d, w_full, exact)
+    s2 = _wsum(d * d, w_full, exact)
     noise = F.sqrt(F.greatest((s2 - s1 * s1 / n) / n, F.lit(0.0)))
     used = F.when(F.col("_use"), d)
-    mean_used = wsum(used) / F.count(used).over(w_full)
+    mean_used = _wsum(used, w_full, exact) / F.count(used).over(w_full)
     z = (d - mean_used) / noise
     per_row = enriched.withColumn("_z2", z * z)
-    chi2_sum = (
-        (F.sum(fint(F.col("_z2"))).cast("double") / F.lit(SCALE)) if exact else F.sum("_z2")
-    )
+    chi2_sum = dsum(F.col("_z2")) if exact else F.sum("_z2")
     # the q-sum groups by (group, shot, scan) — shot identifiers are
     # only unique WITHIN a run (per-run folders reuse img_0001 etc.),
     # so omitting the run key would blend colliding shots across runs

@@ -84,17 +84,18 @@ def _w_df(spark: SparkSession, w: dict) -> DataFrame:
     via VALUES — ``createDataFrame`` on a Python list builds an
     RDD-backed frame whose per-round broadcast build is a scan JOB; a
     VALUES relation broadcasts with no job at all.  Weight literals go
-    through the repr round-trip (bit-exact, kmeans._dlit_sql), and the
+    through the repr round-trip (bit-exact, ``exact.dlit``), and the
     broadcast hash join on the probe side preserves feats row order
     either way, so the margin sums are unchanged bit-for-bit (verified
     at three SFs, OPTIMIZATION_r14.md).  Above kmeans'
     ``_LITERAL_SQL_MAX_BYTES`` the weights fall back to
     ``createDataFrame`` (the same doubles, one scan job per round)
     rather than hand Catalyst a multi-MB VALUES text to parse."""
+    from trx_spark.exact import dlit
     from trx_spark.operators import kmeans
 
     rows = ", ".join(
-        f"(CAST({int(d)} AS BIGINT), {kmeans._dlit_sql(float(v))})"
+        f"(CAST({int(d)} AS BIGINT), {dlit(v)})"
         for d, v in sorted(w.items())
     )
     if len(rows) > kmeans._LITERAL_SQL_MAX_BYTES:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
+from trx_spark.exact import dfinal, dsum, fint, sql_dsum
 from trx_spark.tables import load_table
 
 _TOKEN_RE = "[a-z]+"
@@ -945,7 +946,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
     # fixed-point weight: floor(sqrt(n)·1e6) — exact on both engines
-    w = F.floor(F.sqrt(F.col("n_s").cast("double")) * F.lit(1e6)).cast("long")
+    w = fint(F.sqrt(F.col("n_s").cast("double")))
     weights = counts.withColumn("w_s", w)
     total = weights.agg(F.sum("w_s").alias("w_tot"))  # exact BIGINT sum
     rates = weights.crossJoin(F.broadcast(total)).select(
@@ -1005,7 +1006,6 @@ def source_quality_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zero-shuffle projection) with ONE groupBy on the source key;
     map-side partials make the shuffle tiny (one row per source).
     """
-    from trx_spark.exact import dsum
     from trx_spark.queries.corpus import quality_filter
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1036,10 +1036,8 @@ SELECT source,
   CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
   CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-  CAST(SUM(CAST(FLOOR(dup_word_frac * 1000000.0) AS BIGINT)) AS DOUBLE)
-    / 1000000.0 AS sum_dup_frac,
-  CAST(SUM(CAST(FLOOR(mean_word_len * 1000000.0) AS BIGINT)) AS DOUBLE)
-    / 1000000.0 AS sum_word_len
+  {sql_dsum('dup_word_frac')} AS sum_dup_frac,
+  {sql_dsum('mean_word_len')} AS sum_word_len
 FROM j GROUP BY source
 """
 
@@ -1376,11 +1374,11 @@ def source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         / exp
     )
     g = grid.withColumn(
-        "term_fp", F.floor(term * F.lit(_DRIFT_SCALE)).cast("long")
+        "term_fp", fint(term, _DRIFT_SCALE)
     )
     return g.groupBy("source").agg(
         F.max("s_tot").alias("n_tokens"),
-        (F.sum("term_fp").cast("double") / F.lit(_DRIFT_SCALE)).alias("chisq"),
+        dfinal(F.sum("term_fp"), _DRIFT_SCALE).alias("chisq"),
         F.max(F.struct(F.col("term_fp"), F.col("bucket"))).getField("bucket")
         .alias("top_token"),
         (

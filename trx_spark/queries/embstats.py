@@ -40,7 +40,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trx_spark.exact import dsum
+from trx_spark.exact import dfinal, dsum, sql_dsum, sql_fint
 from trx_spark.tables import fan_out_small_scan, load_table
 
 _EMB_SCALE = 1e12
@@ -86,15 +86,11 @@ WITH d AS (
 )
 SELECT dim,
   CAST(COUNT(*) AS BIGINT) AS n,
-  (CAST(SUM(CAST(FLOOR(v * {_EMB_SCALE}) AS BIGINT)) AS DOUBLE)
-     / {_EMB_SCALE}) / COUNT(*) AS mean,
+  {sql_dsum('v', _EMB_SCALE)} / COUNT(*) AS mean,
   sqrt(greatest(
-    ((CAST(SUM(CAST(FLOOR(v * v * {_EMB_SCALE}) AS BIGINT)) AS DOUBLE)
-        / {_EMB_SCALE})
-     - (CAST(SUM(CAST(FLOOR(v * {_EMB_SCALE}) AS BIGINT)) AS DOUBLE)
-          / {_EMB_SCALE})
-       * (CAST(SUM(CAST(FLOOR(v * {_EMB_SCALE}) AS BIGINT)) AS DOUBLE)
-            / {_EMB_SCALE}) / COUNT(*)) / COUNT(*),
+    ({sql_dsum('v * v', _EMB_SCALE)}
+     - {sql_dsum('v', _EMB_SCALE)}
+       * {sql_dsum('v', _EMB_SCALE)} / COUNT(*)) / COUNT(*),
     CAST(0.0 AS DOUBLE))) AS std_pop,
   MIN(v) AS v_min,
   MAX(v) AS v_max
@@ -167,12 +163,9 @@ WITH d AS (
 )
 SELECT dim_i, dim_j,
   CAST(COUNT(*) AS BIGINT) AS n,
-  (CAST(SUM(CAST(FLOOR(x * y * {_EMB_SCALE}) AS BIGINT)) AS DOUBLE)
-     / {_EMB_SCALE}) / COUNT(*)
-  - ((CAST(SUM(CAST(FLOOR(x * {_EMB_SCALE}) AS BIGINT)) AS DOUBLE)
-        / {_EMB_SCALE}) / COUNT(*))
-    * ((CAST(SUM(CAST(FLOOR(y * {_EMB_SCALE}) AS BIGINT)) AS DOUBLE)
-         / {_EMB_SCALE}) / COUNT(*)) AS cov_pop
+  {sql_dsum('x * y', _EMB_SCALE)} / COUNT(*)
+  - ({sql_dsum('x', _EMB_SCALE)} / COUNT(*))
+    * ({sql_dsum('y', _EMB_SCALE)} / COUNT(*)) AS cov_pop
 FROM d GROUP BY dim_i, dim_j
 """
 
@@ -193,6 +186,14 @@ _JL_DIMS = 16
 _JL_A, _JL_B = 1664525, 1013904223
 
 
+def _jl_sign_sql(i: str, j: str) -> str:
+    """s(i, j) as a DOUBLE, the same text in Spark and DuckDB."""
+    return (
+        f"CAST(CASE (CAST({_JL_A} AS BIGINT) * {i} + CAST({_JL_B} AS BIGINT) * {j}) % 6 "
+        f"WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END AS DOUBLE)"
+    )
+
+
 def jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, out_dim, proj): the unscaled sparse JL projection
     Σ_i s(i,j)·x_i as exact fixed-point sums (the √(3/k) factor is a
@@ -200,20 +201,17 @@ def jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Entirely map-side: the per-vector fold runs inside one expression,
     rows fan out ×_JL_DIMS with ZERO shuffle."""
     emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
+    term = f"CAST(element_at(embedding, i) AS DOUBLE) * {_jl_sign_sql('i', 'j')}"
     projs = F.expr(
         f"transform(sequence(1, {_JL_DIMS}), j -> named_struct("
         f"'j', CAST(j AS BIGINT), "
         f"'acc', aggregate(sequence(1, size(embedding)), 0L, (acc, i) -> "
-        f"acc + CAST(FLOOR((CAST(element_at(embedding, i) AS DOUBLE) * "
-        f"CAST(CASE (CAST({_JL_A} AS BIGINT) * i "
-        f"+ CAST({_JL_B} AS BIGINT) * j) % 6 "
-        f"WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END AS DOUBLE)) "
-        f"* {_EMB_SCALE!r}) AS BIGINT))))"
+        f"acc + {sql_fint(term, _EMB_SCALE)})))"
     )
     return emb.select("vec_id", F.explode(projs).alias("p")).select(
         "vec_id",
         F.col("p.j").alias("out_dim"),
-        (F.col("p.acc").cast("double") / F.lit(_EMB_SCALE)).alias("proj"),
+        dfinal(F.col("p.acc"), _EMB_SCALE).alias("proj"),
     )
 
 
@@ -224,11 +222,7 @@ WITH d AS (
        UNNEST(generate_series(1, len(embedding))) AS u(i)
 )
 SELECT d.vec_id, CAST(j.j AS BIGINT) AS out_dim,
-  CAST(SUM(CAST(FLOOR((d.x *
-    CAST(CASE (CAST({_JL_A} AS BIGINT) * d.i
-               + CAST({_JL_B} AS BIGINT) * j.j) % 6
-         WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END AS DOUBLE))
-    * {_EMB_SCALE!r}) AS BIGINT)) AS DOUBLE) / {_EMB_SCALE!r} AS proj
+  {sql_dsum(f"d.x * {_jl_sign_sql('d.i', 'j.j')}", _EMB_SCALE)} AS proj
 FROM d, UNNEST(generate_series(1, {_JL_DIMS})) AS j(j)
 GROUP BY d.vec_id, j.j
 """
@@ -352,14 +346,10 @@ def pca_leading_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pca_sql() -> str:
     d = _COV_DIMS
     s = _EMB_SCALE
-    fp = (
-        lambda e: f"CAST(SUM(CAST(FLOOR(({e}) * {s!r}) AS BIGINT)) AS DOUBLE)"
-        f" / {s!r}"
-    )
     base_cols = ["CAST(COUNT(*) AS DOUBLE) AS n"]
-    base_cols += [f"{fp(f'x{i}')} AS s_{i}" for i in range(1, d + 1)]
+    base_cols += [f"{sql_dsum(f'x{i}', s)} AS s_{i}" for i in range(1, d + 1)]
     base_cols += [
-        f"{fp(f'x{i} * x{j}')} AS s_{i}_{j}"
+        f"{sql_dsum(f'x{i} * x{j}', s)} AS s_{i}_{j}"
         for i in range(1, d + 1)
         for j in range(i, d + 1)
     ]

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trx_spark.exact import fint, sql_dsum
+from trx_spark.exact import dfinal, fint, sql_dsum
 from trx_spark.queries.curation import _token_stream, _toks_base
 from trx_spark.queries.textdata import _TOKEN_RE
 
@@ -82,7 +82,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_terms_hit"),
-            (F.sum("ts_fp").cast("double") / F.lit(_BM25_SCALE)).alias("bm25_score"),
+            dfinal(F.sum("ts_fp"), _BM25_SCALE).alias("bm25_score"),
         )
         .orderBy(F.desc("bm25_score"), F.asc("doc_id"))
         .limit(_BM25_TOPK)

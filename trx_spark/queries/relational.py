@@ -312,7 +312,7 @@ def salted_skewjoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     result (fixed-point sums are associative), so the oracle is the
     plain join + GROUP BY — the gate checks the salted plan computes
     exactly the unsalted answer."""
-    from trx_spark.exact import SCALE, fint
+    from trx_spark.exact import dfinal, fint
     from trx_spark.operators.skew import salted_agg, salted_join
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
@@ -332,7 +332,7 @@ def salted_skewjoin_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("_c"),
         ],
         finals=[
-            (F.sum("_p").cast("double") / F.lit(SCALE)).alias("wsum"),
+            dfinal(F.sum("_p")).alias("wsum"),
             F.sum("_c").alias("n"),
         ],
     )

@@ -17,12 +17,22 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
-from trx_spark.exact import dlit
+from trx_spark.exact import (
+    array_dot,
+    array_norm2,
+    dfinal,
+    dlit,
+    dlit_array,
+    dot_fixed_py,
+    fint,
+    sql_array_dot,
+    sql_dfinal,
+    sql_dsum,
+    sql_fint,
+)
 from trx_spark.operators.kmeans import (
     _SCALE as _KM_SCALE,
     assign_literal,
-    dot_fixed_py,
-    dot_literal_sql,
     lloyd_centroids_collected,
 )
 from trx_spark.queries.textdata import (
@@ -39,27 +49,6 @@ from trx_spark.tables import fan_out_small_scan, load_table
 _NEARDUP_COS = 0.25  # isotropic test corpus tops out near 0.44
 
 
-def _fp_terms(x, y):
-    """One fixed-point integer dot-product term: floor(x·y·scale)."""
-    return F.floor((x.cast("double") * y.cast("double")) * F.lit(_EMB_SCALE)).cast(
-        "long"
-    )
-
-
-def _fold_sum(arr) -> F.Column:
-    return F.aggregate(arr, F.lit(0).cast("long"), lambda acc, v: acc + v).cast(
-        "double"
-    ) / F.lit(_EMB_SCALE)
-
-
-def _dot(a, b) -> F.Column:
-    return _fold_sum(F.zip_with(a, b, _fp_terms))
-
-
-def _norm(a) -> F.Column:
-    return _fold_sum(F.transform(a, lambda x: _fp_terms(x, x)))
-
-
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, LSH-bucket-blocked: candidates
     share the 8-plane hyperplane bucket (equi-join — never all-pairs),
@@ -74,7 +63,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         ann_lsh_buckets(spark, sf_dir)
         .join(emb, "vec_id")
-        .withColumn("n1", _norm(F.col("embedding")))
+        .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
     )
     w = Window.partitionBy("bucket")
     capped = (
@@ -95,7 +84,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n1").alias("nb"),
     )
     pairs = a.join(c, ["bucket"]).filter(F.col("vec_a") < F.col("vec_b"))
-    cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+    cos = array_dot(F.col("ea"), F.col("eb"), _EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
     return (
         pairs.withColumn("cos_sim", cos)
         .filter(F.col("cos_sim") >= F.lit(float(_NEARDUP_COS)))
@@ -116,7 +105,7 @@ allp AS (
 ),
 dots0 AS (
   SELECT vec_id, plane,
-    (CAST(CAST(SUM(CAST(FLOOR((x * v) * 1000000000.0) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000000.0) AS dot
+    {sql_dsum('x * v', 1e9)} AS dot
   FROM allp GROUP BY vec_id, plane
 ),
 buckets AS (
@@ -126,18 +115,11 @@ buckets AS (
 )"""
 
 
-def _fpsum_sql(expr: str) -> str:
-    return (
-        f"(CAST(CAST(SUM(CAST(FLOOR(({expr}) * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT) "
-        f"AS DOUBLE) / {_EMB_SCALE!r})"
-    )
-
-
 _NEARDUP_SQL = f"""
 WITH {_EX_CTE},
 {_BUCKETS_CTE},
 norms AS (
-  SELECT vec_id, {_fpsum_sql('x * x')} AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, {sql_dsum('x * x', _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
 ),
 bsz AS (SELECT bucket, count(*) AS c FROM buckets GROUP BY bucket),
 capped AS (
@@ -149,7 +131,7 @@ pairs AS (
   FROM capped a JOIN capped b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 ),
 pd AS (
-  SELECT p.vec_a, p.vec_b, {_fpsum_sql('xa.x * xb.x')} AS dot
+  SELECT p.vec_a, p.vec_b, {sql_dsum('xa.x * xb.x', _EMB_SCALE)} AS dot
   FROM pairs p
   JOIN ex xa ON xa.vec_id = p.vec_a
   JOIN ex xb ON xb.vec_id = p.vec_b AND xb.pos = xa.pos
@@ -247,7 +229,7 @@ def _probe_df(spark: SparkSession, q: list, cents: list) -> DataFrame:
     Catalyst analysis per call; a 2-row local relation costs nothing
     (measured: ~5 ms per py4j call, 2-4 s per big-tree analysis)."""
     ranked = sorted(
-        ((dot_fixed_py(q, c), cid) for cid, c in cents),
+        ((dot_fixed_py(q, c, _KM_SCALE), cid) for cid, c in cents),
         key=lambda t: (-t[0], t[1]),
     )
     return spark.createDataFrame(
@@ -272,7 +254,7 @@ def _query_cell_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CELLS_CTES = f"""{_EX_CTE},
 cents AS (SELECT vec_id AS cid, pos, x AS c FROM ex WHERE vec_id < {_N_CELLS}),
 celldots AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
+  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', _EMB_SCALE)} AS dot
   FROM ex e JOIN cents c USING (pos) GROUP BY e.vec_id, c.cid
 ),
 cells AS (
@@ -296,8 +278,8 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {_fpsum_sql('e.x * q.y')} AS dot,
-    {_fpsum_sql('e.x * e.x')} AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -315,6 +297,42 @@ WHERE rank <= 10
 # ---------------------------------------------------------------------
 
 _KM_ROUNDS = 2
+
+
+def _lloyd_round_sql(src: str, k: int, sfx: str = "") -> str:
+    """The oracle twin of the trained codebook (``_KM_ROUNDS`` = 2
+    assignment steps, one update between) over ``src`` (vec_id, pos, x)
+    as CTEs: init = the first ``k`` vectors (cents0), assign (cd0 → a0),
+    update (cents1), re-assign (cd1 → a1, with the winning dot). Every
+    CTE name carries the suffix ``sfx``."""
+    return f"""cents0{sfx} AS (SELECT vec_id AS cid, pos, x AS c FROM {src} WHERE vec_id < {k}),
+cd0{sfx} AS (
+  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', _EMB_SCALE)} AS dot
+  FROM {src} e JOIN cents0{sfx} c USING (pos) GROUP BY e.vec_id, c.cid
+),
+a0{sfx} AS (
+  SELECT vec_id, cid FROM (
+    SELECT vec_id, cid,
+           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
+    FROM cd0{sfx}) t
+  WHERE rn = 1
+),
+cents1{sfx} AS (
+  SELECT a.cid, e.pos, {sql_dsum('e.x', _EMB_SCALE)} / COUNT(*) AS c
+  FROM {src} e JOIN a0{sfx} a USING (vec_id)
+  GROUP BY a.cid, e.pos
+),
+cd1{sfx} AS (
+  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', _EMB_SCALE)} AS dot
+  FROM {src} e JOIN cents1{sfx} c USING (pos) GROUP BY e.vec_id, c.cid
+),
+a1{sfx} AS (
+  SELECT vec_id, cid, dot FROM (
+    SELECT vec_id, cid, dot,
+           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
+    FROM cd1{sfx}) t
+  WHERE rn = 1
+)"""
 
 
 # kmeans_cells / ann_ivf_trained_topk / semantic_dedup all train the
@@ -372,34 +390,8 @@ def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KMEANS_SQL = f"""
 WITH {_EX_CTE},
-cents0 AS (SELECT vec_id AS cid, pos, x AS c FROM ex WHERE vec_id < {_N_CELLS}),
-cd0 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents0 c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a0 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd0) t
-  WHERE rn = 1
-),
-cents1 AS (
-  SELECT a.cid, e.pos,
-         (CAST(SUM(CAST(FLOOR(e.x * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT)::DOUBLE
-            / {_EMB_SCALE!r}) / COUNT(*) AS c
-  FROM ex e JOIN a0 a USING (vec_id)
-  GROUP BY a.cid, e.pos
-),
-cd1 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents1 c USING (pos) GROUP BY e.vec_id, c.cid
-)
-SELECT vec_id, CAST(cid AS BIGINT) AS cid, dot FROM (
-  SELECT vec_id, cid, dot,
-         row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-  FROM cd1) t
-WHERE rn = 1
+{_lloyd_round_sql("ex", _N_CELLS)}
+SELECT vec_id, CAST(cid AS BIGINT) AS cid, dot FROM a1
 """
 
 
@@ -435,36 +427,7 @@ def _trained_query_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVF_TRAINED_SQL = f"""
 WITH {_EX_CTE},
-cents0 AS (SELECT vec_id AS cid, pos, x AS c FROM ex WHERE vec_id < {_N_CELLS}),
-cd0 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents0 c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a0 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd0) t
-  WHERE rn = 1
-),
-cents1 AS (
-  SELECT a.cid, e.pos,
-         (CAST(SUM(CAST(FLOOR(e.x * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT)::DOUBLE
-            / {_EMB_SCALE!r}) / COUNT(*) AS c
-  FROM ex e JOIN a0 a USING (vec_id)
-  GROUP BY a.cid, e.pos
-),
-cd1 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents1 c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd1) t
-  WHERE rn = 1
-),
+{_lloyd_round_sql("ex", _N_CELLS)},
 qprobe AS (
   SELECT cid FROM (
     SELECT cid, row_number() OVER (ORDER BY dot DESC, cid) AS rn
@@ -476,11 +439,11 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {_fpsum_sql('e.x * q.y')} AS dot,
-    {_fpsum_sql('e.x * e.x')} AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
-nq AS (SELECT {_fpsum_sql('x * x')} AS nq FROM ex WHERE vec_id = 0),
+nq AS (SELECT {sql_dsum('x * x', _EMB_SCALE)} AS nq FROM ex WHERE vec_id = 0),
 scored AS (SELECT vec_id, dot / SQRT(n1 * nq) AS cos_sim FROM per, nq
           WHERE dot / SQRT(n1 * nq) IS NOT NULL)
 SELECT vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM (
@@ -548,7 +511,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("cid")
         )
         pairable = assign.join(F.broadcast(small_cells), "cid", "left_semi")
-        m = pairable.join(emb, "vec_id").withColumn("n1", _norm(F.col("embedding")))
+        m = pairable.join(emb, "vec_id").withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
         a = m.select(
             F.col("vec_id").alias("vec_a"),
             "cid",
@@ -562,7 +525,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n1").alias("nb"),
         )
         pairs = a.join(b, ["cid"]).filter(F.col("vec_a") < F.col("vec_b"))
-        cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+        cos = array_dot(F.col("ea"), F.col("eb"), _EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
         dropped = (
             pairs.filter(cos >= F.lit(float(_SEMDEDUP_COS)))
             .select(F.col("vec_b").alias("vec_id"))
@@ -584,37 +547,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEMDEDUP_SQL = f"""
 WITH {_EX_CTE},
-cents0 AS (SELECT vec_id AS cid, pos, x AS c FROM ex WHERE vec_id < {_N_CELLS}),
-cd0 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents0 c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a0 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd0) t
-  WHERE rn = 1
-),
-cents1 AS (
-  SELECT a.cid, e.pos,
-         (CAST(SUM(CAST(FLOOR(e.x * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT)::DOUBLE
-            / {_EMB_SCALE!r}) / COUNT(*) AS c
-  FROM ex e JOIN a0 a USING (vec_id)
-  GROUP BY a.cid, e.pos
-),
-cd1 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents1 c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd1) t
-  WHERE rn = 1
-),
-norms AS (SELECT vec_id, {_fpsum_sql('x * x')} AS n1 FROM ex GROUP BY vec_id),
+{_lloyd_round_sql("ex", _N_CELLS)},
+norms AS (SELECT vec_id, {sql_dsum('x * x', _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id),
 pairable AS (
   SELECT vec_id, cid FROM (
     SELECT vec_id, cid, count(*) OVER (PARTITION BY cid) AS csz FROM a1) t
@@ -625,7 +559,7 @@ pairs AS (
   FROM pairable a JOIN pairable b ON a.cid = b.cid AND a.vec_id < b.vec_id
 ),
 pd AS (
-  SELECT p.vec_a, p.vec_b, {_fpsum_sql('xa.x * xb.x')} AS dot
+  SELECT p.vec_a, p.vec_b, {sql_dsum('xa.x * xb.x', _EMB_SCALE)} AS dot
   FROM pairs p
   JOIN ex xa ON xa.vec_id = p.vec_a
   JOIN ex xb ON xb.vec_id = p.vec_b AND xb.pos = xa.pos
@@ -669,12 +603,12 @@ def _pq_sub_sql(m: int, vec_sql: str = "embedding") -> str:
 
 def _pq_group_best_sql(cents: list, m: int, vec_sql: str = "embedding") -> str:
     """struct(dot, ncid) of subspace ``m``'s winning centroid as SQL
-    text (the py4j-cheap literal path — see `dot_literal_sql`) — the
+    text (the py4j-cheap literal path — see `exact.sql_array_dot`) — the
     dot runs over the same 1-indexed sub-vector slice, against the
     group's literal centroids (k x dim bounded BY CONSTRUCTION)."""
     sub = _pq_sub_sql(m, vec_sql)
     entries = ", ".join(
-        f"named_struct('dot', {dot_literal_sql(sub, c)}, "
+        f"named_struct('dot', {sql_array_dot(sub, dlit_array(c), _KM_SCALE)}, "
         f"'ncid', CAST({-int(cid)} AS BIGINT))"
         for g, cid, c in cents
         if g == m
@@ -720,16 +654,14 @@ def _pq_update_collect(emb: DataFrame, cents: list) -> list:
     upd = (
         ex.groupBy("m", "cid", "pos")
         .agg(
-            F.sum(
-                F.floor(F.col("x").cast("double") * F.lit(_KM_SCALE)).cast("long")
-            ).alias("s"),
+            F.sum(fint(F.col("x").cast("double"), _KM_SCALE)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .select(
             "m",
             "cid",
             "pos",
-            ((F.col("s").cast("double") / F.lit(_KM_SCALE)) / F.col("n")).alias(
+            (dfinal(F.col("s"), _KM_SCALE) / F.col("n")).alias(
                 "c"
             ),
         )
@@ -785,7 +717,7 @@ def _pq_adc_df(spark: SparkSession, q: list, cents: list) -> DataFrame:
             int(cid),
             int(
                 math.floor(
-                    dot_fixed_py(q[m * _PQ_DIM : (m + 1) * _PQ_DIM], c)
+                    dot_fixed_py(q[m * _PQ_DIM : (m + 1) * _PQ_DIM], c, _KM_SCALE)
                     * _PQ_TSCALE
                 )
             ),
@@ -817,7 +749,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         codes.join(F.broadcast(table), ["m", "code"])  # M*K rows: tiny by construction
         .groupBy("vec_id")
-        .agg((F.sum("t_fp").cast("double") / F.lit(_PQ_TSCALE)).alias("adc_score"))
+        .agg(dfinal(F.sum("t_fp"), _PQ_TSCALE).alias("adc_score"))
     )
     cand = scored.orderBy(F.desc("adc_score"), F.asc("vec_id")).limit(
         _PQ_SHORTLIST
@@ -834,44 +766,16 @@ _PQ_SHORTLIST = 50
 
 
 def _pq_sql_parts(src: str = "ex") -> str:
-    ctes = []
-    for m in range(_PQ_M):
-        lo, hi = m * _PQ_DIM, (m + 1) * _PQ_DIM
-        ctes.append(f"""
+    """One Lloyd round per PQ subspace ``m`` over its slice ``ex_{m}``."""
+    return ",".join(
+        f"""
 ex_{m} AS (
-  SELECT vec_id, x, pos - {lo} AS pos FROM {src} WHERE pos > {lo} AND pos <= {hi}
+  SELECT vec_id, x, pos - {m * _PQ_DIM} AS pos FROM {src}
+  WHERE pos > {m * _PQ_DIM} AND pos <= {(m + 1) * _PQ_DIM}
 ),
-cents0_{m} AS (SELECT vec_id AS cid, pos, x AS c FROM ex_{m} WHERE vec_id < {_PQ_K}),
-cd0_{m} AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex_{m} e JOIN cents0_{m} c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a0_{m} AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd0_{m}) t
-  WHERE rn = 1
-),
-cents1_{m} AS (
-  SELECT a.cid, e.pos,
-         (CAST(SUM(CAST(FLOOR(e.x * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT)::DOUBLE
-            / {_EMB_SCALE!r}) / COUNT(*) AS c
-  FROM ex_{m} e JOIN a0_{m} a USING (vec_id)
-  GROUP BY a.cid, e.pos
-),
-cd1_{m} AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex_{m} e JOIN cents1_{m} c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a1_{m} AS (
-  SELECT vec_id, cid, dot FROM (
-    SELECT vec_id, cid, dot,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd1_{m}) t
-  WHERE rn = 1
-)""")
-    return ",".join(ctes)
+{_lloyd_round_sql(f"ex_{m}", _PQ_K, f"_{m}")}"""
+        for m in range(_PQ_M)
+    )
 
 
 _PQ_CODES_SQL = f"""
@@ -887,14 +791,14 @@ WITH {_EX_CTE},
 {_pq_sql_parts()},
 tbl AS ({' UNION ALL '.join(
     f"SELECT CAST({m} AS BIGINT) AS m, cid AS code, "
-    f"CAST(FLOOR(dot * {_PQ_TSCALE!r}) AS BIGINT) AS t_fp FROM cd1_{m} WHERE vec_id = 0"
+    f"{sql_fint('dot', _PQ_TSCALE)} AS t_fp FROM cd1_{m} WHERE vec_id = 0"
     for m in range(_PQ_M))}),
 codes AS ({' UNION ALL '.join(
     f"SELECT vec_id, CAST({m} AS BIGINT) AS m, cid AS code FROM a1_{m}"
     for m in range(_PQ_M))}),
 adc AS (
   SELECT c.vec_id,
-         CAST(SUM(t.t_fp) AS DOUBLE) / {_PQ_TSCALE!r} AS adc_score
+         {sql_dfinal('SUM(t.t_fp)', _PQ_TSCALE)} AS adc_score
   FROM codes c JOIN tbl t USING (m, code)
   GROUP BY c.vec_id
 ),
@@ -908,8 +812,8 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {_fpsum_sql('e.x * q.y')} AS dot,
-    {_fpsum_sql('e.x * e.x')} AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -945,7 +849,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     adc = (
         codes.join(F.broadcast(table), ["m", "code"])  # M*K rows: tiny
         .groupBy("vec_id")
-        .agg((F.sum("t_fp").cast("double") / F.lit(_PQ_TSCALE)).alias("adc_score"))
+        .agg(dfinal(F.sum("t_fp"), _PQ_TSCALE).alias("adc_score"))
     )
     cand = (
         adc.orderBy(F.desc("adc_score"), F.asc("vec_id"))
@@ -961,36 +865,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _IVFPQ_SQL = f"""
 WITH {_EX_CTE},
-cents0 AS (SELECT vec_id AS cid, pos, x AS c FROM ex WHERE vec_id < {_N_CELLS}),
-cd0 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents0 c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a0 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd0) t
-  WHERE rn = 1
-),
-cents1 AS (
-  SELECT a.cid, e.pos,
-         (CAST(SUM(CAST(FLOOR(e.x * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT)::DOUBLE
-            / {_EMB_SCALE!r}) / COUNT(*) AS c
-  FROM ex e JOIN a0 a USING (vec_id)
-  GROUP BY a.cid, e.pos
-),
-cd1 AS (
-  SELECT e.vec_id, c.cid, {_fpsum_sql('e.x * c.c')} AS dot
-  FROM ex e JOIN cents1 c USING (pos) GROUP BY e.vec_id, c.cid
-),
-a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY dot DESC, cid) AS rn
-    FROM cd1) t
-  WHERE rn = 1
-),
+{_lloyd_round_sql("ex", _N_CELLS)},
 qprobe AS (
   SELECT cid FROM (
     SELECT cid, row_number() OVER (ORDER BY dot DESC, cid) AS rn
@@ -1001,14 +876,14 @@ ccand AS (SELECT vec_id FROM a1 WHERE cid IN (SELECT cid FROM qprobe)),
 {_pq_sql_parts()},
 tbl AS ({' UNION ALL '.join(
     f"SELECT CAST({m} AS BIGINT) AS m, cid AS code, "
-    f"CAST(FLOOR(dot * {_PQ_TSCALE!r}) AS BIGINT) AS t_fp FROM cd1_{m} WHERE vec_id = 0"
+    f"{sql_fint('dot', _PQ_TSCALE)} AS t_fp FROM cd1_{m} WHERE vec_id = 0"
     for m in range(_PQ_M))}),
 codes AS ({' UNION ALL '.join(
     f"SELECT vec_id, CAST({m} AS BIGINT) AS m, cid AS code FROM a1_{m}"
     for m in range(_PQ_M))}),
 adc AS (
   SELECT c.vec_id,
-         CAST(SUM(t.t_fp) AS DOUBLE) / {_PQ_TSCALE!r} AS adc_score
+         {sql_dfinal('SUM(t.t_fp)', _PQ_TSCALE)} AS adc_score
   FROM codes c JOIN tbl t USING (m, code)
   WHERE c.vec_id IN (SELECT vec_id FROM ccand)
   GROUP BY c.vec_id
@@ -1023,11 +898,11 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {_fpsum_sql('e.x * q.y')} AS dot,
-    {_fpsum_sql('e.x * e.x')} AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
-nq AS (SELECT {_fpsum_sql('x * x')} AS nq FROM ex WHERE vec_id = 0),
+nq AS (SELECT {sql_dsum('x * x', _EMB_SCALE)} AS nq FROM ex WHERE vec_id = 0),
 scored AS (SELECT vec_id, dot / SQRT(n1 * nq) AS cos_sim FROM per, nq
           WHERE dot / SQRT(n1 * nq) IS NOT NULL)
 SELECT vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM (
@@ -1169,7 +1044,7 @@ def ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         codes.join(F.broadcast(table), ["m", "code"])
         .groupBy("vec_id")
-        .agg((F.sum("t_fp").cast("double") / F.lit(_PQ_TSCALE)).alias("adc_score"))
+        .agg(dfinal(F.sum("t_fp"), _PQ_TSCALE).alias("adc_score"))
     )
     cand = (
         scored.orderBy(F.desc("adc_score"), F.asc("vec_id"))
@@ -1222,14 +1097,14 @@ WITH {_EX_CTE},
 {_pq_sql_parts(src="exr")},
 tbl AS ({' UNION ALL '.join(
     f"SELECT CAST({m} AS BIGINT) AS m, cid AS code, "
-    f"CAST(FLOOR(dot * {_PQ_TSCALE!r}) AS BIGINT) AS t_fp FROM cd1_{m} WHERE vec_id = 0"
+    f"{sql_fint('dot', _PQ_TSCALE)} AS t_fp FROM cd1_{m} WHERE vec_id = 0"
     for m in range(_PQ_M))}),
 codes AS ({' UNION ALL '.join(
     f"SELECT vec_id, CAST({m} AS BIGINT) AS m, cid AS code FROM a1_{m}"
     for m in range(_PQ_M))}),
 adc AS (
   SELECT c.vec_id,
-         CAST(SUM(t.t_fp) AS DOUBLE) / {_PQ_TSCALE!r} AS adc_score
+         {sql_dfinal('SUM(t.t_fp)', _PQ_TSCALE)} AS adc_score
   FROM codes c JOIN tbl t USING (m, code)
   GROUP BY c.vec_id
 ),
@@ -1243,8 +1118,8 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {_fpsum_sql('e.x * q.y')} AS dot,
-    {_fpsum_sql('e.x * e.x')} AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -1334,7 +1209,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = (
             ann_lsh_buckets(spark, sf_dir)
             .join(emb, "vec_id")
-            .withColumn("n1", _norm(F.col("embedding")))
+            .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
         )
         w = Window.partitionBy("bucket")
         capped = (
@@ -1355,7 +1230,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n1").alias("nb"),
         )
         pairs = src.join(nbr, ["bucket"]).filter(F.col("src_id") != F.col("nbr_id"))
-        cos = _dot(F.col("ea"), F.col("eb")) / F.sqrt(F.col("na") * F.col("nb"))
+        cos = array_dot(F.col("ea"), F.col("eb"), _EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
         wk = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.asc("nbr_id"))
         out = (
             pairs.withColumn("cos_sim", cos)
@@ -1378,7 +1253,7 @@ _KNN_SQL = f"""
 WITH {_EX_CTE},
 {_BUCKETS_CTE},
 norms AS (
-  SELECT vec_id, {_fpsum_sql('x * x')} AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, {sql_dsum('x * x', _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
 ),
 bsz AS (SELECT bucket, count(*) AS c FROM buckets GROUP BY bucket),
 capped AS (
@@ -1390,7 +1265,7 @@ pairs AS (
   FROM capped a JOIN capped b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
 ),
 pd AS (
-  SELECT p.src_id, p.nbr_id, {_fpsum_sql('xa.x * xb.x')} AS dot
+  SELECT p.src_id, p.nbr_id, {sql_dsum('xa.x * xb.x', _EMB_SCALE)} AS dot
   FROM pairs p
   JOIN ex xa ON xa.vec_id = p.src_id
   JOIN ex xb ON xb.vec_id = p.nbr_id AND xb.pos = xa.pos
@@ -1772,7 +1647,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainers)."""
     emb = fan_out_small_scan(
         load_table(spark, sf_dir, "embeddings")
-    ).select("vec_id", "embedding").withColumn("n1", _norm(F.col("embedding")))
+    ).select("vec_id", "embedding").withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"), F.col("n1").alias("qn")
     )
@@ -1783,7 +1658,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "n1",
-            (_dot(F.col("embedding"), F.col("qe")) / F.sqrt(F.col("n1") * F.col("qn"))).alias("rel"),
+            (array_dot(F.col("embedding"), F.col("qe"), _EMB_SCALE) / F.sqrt(F.col("n1") * F.col("qn"))).alias("rel"),
         )
         .localCheckpoint()
     )
@@ -1819,7 +1694,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         sim_new = (
-            _dot(F.col("c.embedding"), F.col("s.embedding"))
+            array_dot(F.col("c.embedding"), F.col("s.embedding"), _EMB_SCALE)
             / F.sqrt(F.col("c.n1") * F.col("s.n1"))
         )
         fold = (
@@ -1864,7 +1739,7 @@ def _mmr_sql() -> str:
     lam = "CAST(0.5 AS DOUBLE)"
     parts = [f"""
 rel0 AS MATERIALIZED (
-  SELECT a.vec_id, {_fpsum_sql('a.x * q.x')} AS dot
+  SELECT a.vec_id, {sql_dsum('a.x * q.x', _EMB_SCALE)} AS dot
   FROM ex a JOIN ex q ON q.vec_id = 0 AND q.pos = a.pos
   WHERE a.vec_id <> 0 GROUP BY a.vec_id
 ),
@@ -1880,7 +1755,7 @@ sel1 AS MATERIALIZED (SELECT vec_id FROM s1)"""]
         prev = i - 1
         parts.append(f"""
 p{i} AS MATERIALIZED (
-  SELECT a.vec_id, s.vec_id AS sid, {_fpsum_sql('a.x * b.x')} AS dot
+  SELECT a.vec_id, s.vec_id AS sid, {sql_dsum('a.x * b.x', _EMB_SCALE)} AS dot
   FROM ex a JOIN sel{prev} s ON TRUE JOIN ex b ON b.vec_id = s.vec_id AND b.pos = a.pos
   WHERE a.vec_id <> 0 AND a.vec_id NOT IN (SELECT vec_id FROM sel{prev})
   GROUP BY a.vec_id, s.vec_id
@@ -1903,7 +1778,7 @@ sel{i} AS MATERIALIZED (SELECT vec_id FROM sel{prev} UNION ALL SELECT vec_id FRO
     return (
         "WITH " + _EX_CTE.replace("ex AS (", "ex AS MATERIALIZED (", 1) + """,
 norms AS MATERIALIZED (
-  SELECT vec_id, """ + _fpsum_sql("x * x") + """ AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, """ + sql_dsum("x * x", _EMB_SCALE) + """ AS n1 FROM ex GROUP BY vec_id
 ),""" + ",".join(parts) + "\n" + union
     )
 
@@ -1942,7 +1817,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
-        .withColumn("n1", _norm(F.col("embedding")))
+        .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
         .localCheckpoint()
     )
     seed = emb.filter(F.col("vec_id") == 0)
@@ -1956,7 +1831,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = (
         F.col("c.n1")
         + F.col("s.n1")
-        - F.lit(2.0) * _dot(F.col("c.embedding"), F.col("s.embedding"))
+        - F.lit(2.0) * array_dot(F.col("c.embedding"), F.col("s.embedding"), _EMB_SCALE)
     )
     def pick_side(df):
         # the 1-row build side; qualified as "s" so d2's s.* refs bind
@@ -2012,7 +1887,7 @@ def _kcenter_sql() -> str:
         prev = i - 1
         parts.append(f"""
 kp{i} AS MATERIALIZED (
-  SELECT a.vec_id, s.vec_id AS sid, {_fpsum_sql('a.x * b.x')} AS dot
+  SELECT a.vec_id, s.vec_id AS sid, {sql_dsum('a.x * b.x', _EMB_SCALE)} AS dot
   FROM ex a JOIN sel{prev} s ON TRUE
        JOIN ex b ON b.vec_id = s.vec_id AND b.pos = a.pos
   WHERE a.vec_id NOT IN (SELECT vec_id FROM sel{prev})
@@ -2037,7 +1912,7 @@ sel{i} AS (SELECT vec_id FROM sel{prev} UNION ALL SELECT vec_id FROM ks{i})""")
     return (
         "WITH " + _EX_CTE.replace("ex AS (", "ex AS MATERIALIZED (", 1) + """,
 norms AS MATERIALIZED (
-  SELECT vec_id, """ + _fpsum_sql("x * x") + """ AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, """ + sql_dsum("x * x", _EMB_SCALE) + """ AS n1 FROM ex GROUP BY vec_id
 ),""" + ",".join(parts) + f"""
 SELECT 1 AS rank, vec_id, CAST(NULL AS DOUBLE) AS min_dist2
 FROM embeddings WHERE vec_id = 0
@@ -2308,7 +2183,7 @@ def _ranked_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = (
             fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
             .select("vec_id", "embedding", "label")
-            .withColumn("n1", _norm(F.col("embedding")))
+            .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
         )
         q = emb.filter(F.col("vec_id") % _MRR_QMOD == 0).select(
             F.col("vec_id").alias("qid"),
@@ -2320,7 +2195,7 @@ def _ranked_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(q), F.col("vec_id") != F.col("qid")
         ).withColumn(
             "sim",
-            _dot(F.col("embedding"), F.col("qe"))
+            array_dot(F.col("embedding"), F.col("qe"), _EMB_SCALE)
             / F.sqrt(F.col("n1") * F.col("qn1")),
         )
         w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
@@ -2376,14 +2251,14 @@ def retrieval_mrr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RANKED_EVAL_CTES = f"""{_EX_CTE},
 norms AS MATERIALIZED (
-  SELECT vec_id, {_fpsum_sql("x * x")} AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, {sql_dsum("x * x", _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
 ),
 q AS MATERIALIZED (
   SELECT vec_id AS qid, label AS qlabel
   FROM embeddings WHERE vec_id % {_MRR_QMOD} = 0
 ),
 dots AS MATERIALIZED (
-  SELECT a.vec_id, s.qid, {_fpsum_sql("a.x * b.x")} AS dot
+  SELECT a.vec_id, s.qid, {sql_dsum("a.x * b.x", _EMB_SCALE)} AS dot
   FROM ex a JOIN q s ON a.vec_id <> s.qid
        JOIN ex b ON b.vec_id = s.qid AND b.pos = a.pos
   GROUP BY a.vec_id, s.qid

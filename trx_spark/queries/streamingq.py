@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
+from trx_spark.exact import dfinal, fint, sql_dsum
 from trx_spark.queries.relational import _PRICING_SQL
 from trx_spark.streaming import store
 from trx_spark.streaming.incremental import run_catchup
@@ -56,7 +57,7 @@ def streaming_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def reduce_fn(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("value_fp"),
+            F.sum(fint(F.col("value"))).alias("value_fp"),
         )
 
     run_catchup(
@@ -70,14 +71,13 @@ def streaming_incremental_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         reduced_dir=reduced,
     )
     out = spark.read.parquet(reduced)
-    return out.withColumn("sum_value", F.col("value_fp").cast("double") / 1e6).drop("value_fp")
+    return out.withColumn("sum_value", dfinal(F.col("value_fp"))).drop("value_fp")
 
 
-_INCREMENTAL_STATS_SQL = """
+_INCREMENTAL_STATS_SQL = f"""
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS DOUBLE) / 1e6
-         AS sum_value
+       {sql_dsum('value')} AS sum_value
 FROM events GROUP BY event_type
 """
 
@@ -593,11 +593,10 @@ def streaming_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RUNNING_STATS_SQL = """
+_RUNNING_STATS_SQL = f"""
 SELECT event_type,
        CAST(COUNT(value) AS BIGINT) AS n,
-       CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS DOUBLE) / 1e6
-         AS sum_value,
+       {sql_dsum('value')} AS sum_value,
        CAST(MIN(CAST(FLOOR(value * 1e6) AS BIGINT)) AS DOUBLE) / 1e6
          AS min_value,
        CAST(MAX(CAST(FLOOR(value * 1e6) AS BIGINT)) AS DOUBLE) / 1e6

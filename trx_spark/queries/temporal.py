@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from trx_spark.exact import dfinal, fint, sql_fint
 from trx_spark.operators.rangejoin import interval_point_join
 from trx_spark.tables import load_table
 
@@ -440,7 +441,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ev.groupBy("user_id").agg(
         F.max(F.expr("ts_ns DIV 1000")).alias("last_us"),
         F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.floor(F.col("value") * 1e6).cast("long")).alias("monetary_fp"),
+        F.sum(fint(F.col("value"))).alias("monetary_fp"),
     ).localCheckpoint()  # feeds the cuts aggregate AND the assignment
     cuts = per_user.agg(
         F.expr("percentile(last_us, array(0.25, 0.5, 0.75))").alias("rc"),
@@ -463,7 +464,7 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id",
             "last_us",
             "frequency",
-            (F.col("monetary_fp").cast("double") / 1e6).alias("monetary"),
+            dfinal(F.col("monetary_fp")).alias("monetary"),
             "r_q",
             "f_q",
             "m_q",
@@ -474,12 +475,12 @@ def user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RFM_SQL = """
+_RFM_SQL = f"""
 WITH per_user AS (
   SELECT user_id,
          MAX(epoch_us(ts)) AS last_us,
          CAST(COUNT(*) AS BIGINT) AS frequency,
-         CAST(SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS BIGINT) AS monetary_fp
+         CAST(SUM({sql_fint('value')}) AS BIGINT) AS monetary_fp
   FROM events WHERE event_type = 'purchase'
   GROUP BY user_id
 ),

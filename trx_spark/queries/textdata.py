@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
+from trx_spark.exact import dlit_array, dsum, sql_array_dot, sql_array_norm2, sql_dsum
 from trx_spark.tables import fan_out_small_scan, load_table
 
 logger = logging.getLogger(__name__)
@@ -965,8 +966,8 @@ WITH ex AS (
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    (CAST(CAST(SUM(CAST(FLOOR((e.x * q.y) * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT) AS DOUBLE) / {_EMB_SCALE!r}) AS dot,
-    (CAST(CAST(SUM(CAST(FLOOR((e.x * e.x) * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT) AS DOUBLE) / {_EMB_SCALE!r}) AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM ex e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -1049,8 +1050,6 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     products. The scale path for similarity search: candidate pairs are
     an equi-join on bucket instead of a cross join."""
     def build():
-        from trx_spark.exact import dsum
-
         emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
         ex = (
             emb.select("vec_id", F.posexplode("embedding").alias("pos", "x"))
@@ -1104,7 +1103,7 @@ allp AS (
 ),
 dots AS (
   SELECT vec_id, plane,
-    (CAST(CAST(SUM(CAST(FLOOR((x * v) * 1000000000.0) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000000.0) AS dot
+    {sql_dsum('x * v', 1e9)} AS dot
   FROM allp GROUP BY vec_id, plane
 )
 SELECT vec_id,
@@ -1157,7 +1156,7 @@ allp AS (
 ),
 dots0 AS (
   SELECT vec_id, plane,
-    (CAST(CAST(SUM(CAST(FLOOR((x * v) * 1000000000.0) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000000.0) AS dot
+    {sql_dsum('x * v', 1e9)} AS dot
   FROM allp GROUP BY vec_id, plane
 ),
 buckets AS (
@@ -1171,8 +1170,8 @@ ex AS (SELECT e.* FROM ex0 e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex0 WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    (CAST(CAST(SUM(CAST(FLOOR((e.x * q.y) * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT) AS DOUBLE) / {_EMB_SCALE!r}) AS dot,
-    (CAST(CAST(SUM(CAST(FLOOR((e.x * e.x) * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT) AS DOUBLE) / {_EMB_SCALE!r}) AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM ex e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -1239,30 +1238,16 @@ def _exact_topk_within(
     # q0 literal is taken from the UNRESTRICTED frame; when vec 0 is
     # not in ``cand`` the per-table still has no vec-0 row, so nq stays
     # empty and the result is empty — exactly the former semantics.
-    from trx_spark.operators.kmeans import _dlit_sql
-
     if q0 is _Q0_UNSET:
         rows = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
         q0 = [float(v) for v in rows[0][0]] if rows else None
     if cand is not None:
         emb = emb.join(cand, "vec_id", "left_semi")
-    s = _dlit_sql(_EMB_SCALE)
     if q0 is not None:
-        qarr = "array({})".format(
-            ", ".join(_dlit_sql(float(v)) for v in q0)
-        )
-        dot_sql = (
-            f"CAST(aggregate(zip_with(embedding, {qarr}, (x, y) -> "
-            f"CAST(FLOOR((CAST(x AS DOUBLE) * y) * {s}) AS BIGINT)), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE) / {s}"
-        )
+        dot_sql = sql_array_dot("embedding", dlit_array(q0), _EMB_SCALE)
     else:  # no query vector: dot is undefined -> every cos_sim NULL
         dot_sql = "CAST(NULL AS DOUBLE)"
-    n1_sql = (
-        f"CAST(aggregate(transform(embedding, x -> "
-        f"CAST(FLOOR((CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) * {s}) AS BIGINT)), "
-        f"CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE) / {s}"
-    )
+    n1_sql = sql_array_norm2("embedding", _EMB_SCALE)
     per = emb.select(
         "vec_id",
         F.expr(dot_sql).alias("dot"),
@@ -1338,7 +1323,7 @@ allp AS (
 ),
 dots0 AS (
   SELECT vec_id, plane,
-    (CAST(CAST(SUM(CAST(FLOOR((x * v) * 1000000000.0) AS BIGINT)) AS BIGINT) AS DOUBLE) / 1000000000.0) AS dot
+    {sql_dsum('x * v', 1e9)} AS dot
   FROM allp GROUP BY vec_id, plane
 ),
 buckets AS (
@@ -1356,8 +1341,8 @@ ex AS (SELECT e.* FROM ex0 e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex0 WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    (CAST(CAST(SUM(CAST(FLOOR((e.x * q.y) * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT) AS DOUBLE) / {_EMB_SCALE!r}) AS dot,
-    (CAST(CAST(SUM(CAST(FLOOR((e.x * e.x) * {_EMB_SCALE!r}) AS BIGINT)) AS BIGINT) AS DOUBLE) / {_EMB_SCALE!r}) AS n1
+    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
   FROM ex e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),

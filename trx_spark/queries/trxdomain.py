@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
-from trx_spark.exact import sql_davg, sql_dstddev_pop, sql_dsum
+from trx_spark.exact import sql_davg, sql_dstddev_pop, sql_dsum, sql_wdsum
 from trx_spark.operators import azav, cell, filters, reduction
 from trx_spark.tables import load_table
 
@@ -434,11 +434,11 @@ def monitor_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("l_orderkey", "l_linenumber", "monitor", F.col("i").alias("i_norm"))
 
 
-_MONITOR_SQL = """
+_MONITOR_SQL = f"""
 WITH t AS (SELECT l_orderkey, l_linenumber, l_extendedprice AS i FROM lineitem),
 m AS (
   SELECT l_orderkey, l_linenumber, i,
-    (CAST(CAST(SUM(CAST(FLOOR(i * 1000000.0) AS BIGINT)) OVER (PARTITION BY l_orderkey) AS BIGINT) AS DOUBLE) / 1000000.0)
+    {sql_wdsum('i', 'PARTITION BY l_orderkey')}
       / COUNT(i) OVER (PARTITION BY l_orderkey) AS monitor
   FROM t)
 SELECT l_orderkey, l_linenumber, monitor, i / monitor AS i_norm FROM m

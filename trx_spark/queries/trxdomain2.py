@@ -11,7 +11,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from trx_spark.exact import davg, dsum, sql_davg, sql_dsum
+from trx_spark.exact import davg, dsum, sql_davg, sql_dsum, sql_wdsum, wdsum
 from trx_spark.operators import azav, cell, reduction
 from trx_spark.tables import load_table
 
@@ -311,25 +311,22 @@ def running_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate_ns", "o_orderkey")
     cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    from trx_spark.exact import SCALE, fint
-
     return orders.select(
         "o_custkey",
         "o_orderkey",
         F.row_number().over(w).alias("order_seq"),
-        (F.sum(fint(F.col("o_totalprice"))).over(cum).cast("double") / F.lit(SCALE)).alias(
-            "running_total"
-        ),
+        wdsum(F.col("o_totalprice"), cum).alias("running_total"),
     )
 
 
-_RUNNING_SQL = """
+_RUNNING_FRAME = (
+    "PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+)
+_RUNNING_SQL = f"""
 SELECT o_custkey, o_orderkey,
   CAST(row_number() OVER w AS INTEGER) AS order_seq,
-  CAST(CAST(SUM(CAST(FLOOR(o_totalprice * 1000000.0) AS BIGINT))
-       OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS DOUBLE)
-    / 1000000.0 AS running_total
+  {sql_wdsum('o_totalprice', _RUNNING_FRAME)} AS running_total
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """

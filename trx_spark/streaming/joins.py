@@ -83,8 +83,8 @@ def run_interval_join_catchup(
 
     # a stream-stream join builds FOUR state stores per shuffle
     # partition; the drain's replay width sizes them to state volume,
-    # not batch compute width (see tuning.py — 15.7 s → 3.1 s on the
-    # identical replay)
+    # not batch compute width (see store.replay_state_width — 15.7 s
+    # → 3.1 s on the identical replay)
     return store.drain(
         spark,
         landing_dir=landing_dir,

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from trx_spark.exact import SCALE, fint
+from trx_spark.exact import dfinal, fint
 from trx_spark.streaming import store
 from trx_spark.streaming.sketch import _run_catchup
 
@@ -96,18 +96,15 @@ def merged_pricing_view(spark: SparkSession, view_dir: str) -> DataFrame:
     expressions the batch query evaluates, so equality is bit-exact)."""
     m = _merge_partials(spark, view_dir)
 
-    def d(col):  # fixed-point long → double, same op as exact.dsum
-        return F.col(col).cast("double") / F.lit(SCALE)
-
     return m.select(
         *_KEYS,
-        d("fp_qty").alias("sum_qty"),
-        d("fp_base").alias("sum_base_price"),
-        d("fp_disc_price").alias("sum_disc_price"),
-        d("fp_charge").alias("sum_charge"),
-        (d("fp_qty") / F.col("n_qty")).alias("avg_qty"),
-        (d("fp_base") / F.col("n_price")).alias("avg_price"),
-        (d("fp_disc") / F.col("n_disc")).alias("avg_disc"),
+        dfinal(F.col("fp_qty")).alias("sum_qty"),
+        dfinal(F.col("fp_base")).alias("sum_base_price"),
+        dfinal(F.col("fp_disc_price")).alias("sum_disc_price"),
+        dfinal(F.col("fp_charge")).alias("sum_charge"),
+        (dfinal(F.col("fp_qty")) / F.col("n_qty")).alias("avg_qty"),
+        (dfinal(F.col("fp_base")) / F.col("n_price")).alias("avg_price"),
+        (dfinal(F.col("fp_disc")) / F.col("n_disc")).alias("avg_disc"),
         F.col("n").alias("count_order"),
     )
 
