@@ -376,3 +376,32 @@ def test_specfile_facade(spark, tmp_path):
 
     with pytest.raises(ValueError, match="ycol"):
         sf.getScan(1, ycol="nope")
+
+
+def test_doFolder_builds_detector_geometry_once(spark, tmp_path):
+    """The poni geometry table is built once per (session, geometry,
+    detector shape): every FolderPoller poll calls doFolder again."""
+    from trx_spark.cache import MEMO_BUILDS, clear_stage_caches, stage_cache_stats
+
+    folder = tmp_path / "run"
+    folder.mkdir()
+    (folder / "img_0000.edf").write_bytes(encode_edf(np.full((8, 8), 5.0)))
+    # a distance no other test uses, so the first call is a miss
+    poni = dict(dist=0.0731, pixel=200e-6, xcen=4, ycen=4, E=10.0)
+
+    def call(shape=(8, 8), **over):
+        compat.doFolder(
+            spark, str(folder), files="*.edf", nQ=4, qlims=(0.0, 0.2),
+            poni={**poni, **over}, detector_shape=shape,
+        )
+        return sum(1 for b in MEMO_BUILDS if b["name"] == "detector_geometry")
+
+    first = call()
+    assert call() == first
+    assert call(shape=[8, 8]) == first  # the shape keys as a tuple of ints
+    assert call(shape=(8, 9)) == first + 1
+    assert call(dist=0.0732) == first + 2
+    assert stage_cache_stats()["detector_geometry"] >= 3
+    clear_stage_caches()
+    assert "detector_geometry" not in stage_cache_stats()
+    assert call() == first + 3

@@ -1,6 +1,7 @@
 """trx_spark/exact.py as the one owner of the fixed-point decision: no
-other module spells out the fixed-point sum, the array dot fold or the
-double literal by hand, or keeps a private copy of an ``exact`` builder.
+other module spells out the fixed-point sum, the array dot fold, the
+double literal or the Column addend ``F.floor(x * S)`` by hand, keeps a
+private copy of an ``exact`` builder, or defines a scale of its own.
 A second spelling is a second expression tree, and the oracle parity
 rests on the Spark and DuckDB trees staying identical."""
 
@@ -76,6 +77,70 @@ def _strings(tree: ast.AST):
     yield from visit(tree, None)
 
 
+# the two fixed-point scales exact.py owns (SCALE, EMB_SCALE)
+_SCALES = {1e6, 1e12}
+
+# (module, module-level name) -> why a constant with a fixed-point
+# scale's value is a different decision from exact.py's scales
+_EXEMPT_SCALES = {
+    ("queries/lm.py", "_LM_SCALE"): (
+        "the log-prob sum is a decimal(38,0) sum, not a BIGINT "
+        "fixed-point sum"
+    ),
+    ("queries/similarity.py", "_PR_SCALE"): (
+        "integer-mass PageRank (the _pr_round_sql exemption): the "
+        "BIGINT mass is the algorithm's state"
+    ),
+}
+
+
+def _scale_const(node) -> float | None:
+    """The value of a numeric literal, bare or as ``F.lit(<literal>)``."""
+    if (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "lit"
+        and len(node.args) == 1
+    ):
+        node = node.args[0]
+    if isinstance(node, ast.Constant) and isinstance(node.value, (int, float)):
+        return float(node.value)
+    return None
+
+
+def _column_addends(tree: ast.AST) -> list[tuple[int, float]]:
+    """(line, scale) of every ``F.floor(x * <scale>)``: ``exact.fint``
+    spelled by hand in a Column plan."""
+    found = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "floor"
+            and node.args
+            and isinstance(node.args[0], ast.BinOp)
+            and isinstance(node.args[0].op, ast.Mult)
+        ):
+            for side in (node.args[0].left, node.args[0].right):
+                if _scale_const(side) in _SCALES:
+                    found.append((node.lineno, _scale_const(side)))
+    return found
+
+
+def _scale_defs(tree: ast.Module) -> list[tuple[int, str]]:
+    """(line, name) of every module-level name bound to ``EMB_SCALE``'s
+    value. (Names bound to 1e6 are many and mostly not fixed-point sum
+    scales — key offsets, percent bands — so only the embedding scale,
+    which a k-means centroid and its scoring must share, is checked.)"""
+    return [
+        (node.lineno, t.id)
+        for node in tree.body
+        if isinstance(node, ast.Assign) and _scale_const(node.value) == 1e12
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    ]
+
+
 def _hand_spelled(path: pathlib.Path) -> list[str]:
     rel = path.relative_to(_ROOT).as_posix()
     tree = ast.parse(path.read_text(encoding="utf-8"))
@@ -83,6 +148,15 @@ def _hand_spelled(path: pathlib.Path) -> list[str]:
         f"{rel}:{node.lineno}: defines {node.name}"
         for node in ast.walk(tree)
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node.name in _COPIES
+    ]
+    found += [
+        f"{rel}:{line}: F.floor(x * {scale!r}) instead of exact.fint"
+        for line, scale in _column_addends(tree)
+    ]
+    found += [
+        f"{rel}:{line}: {name} redefines a fixed-point scale"
+        for line, name in _scale_defs(tree)
+        if (rel, name) not in _EXEMPT_SCALES
     ]
     for owner, line, text in _strings(tree):
         if (rel, owner) in _EXEMPT:
@@ -111,3 +185,9 @@ def test_every_exemption_still_names_a_live_site():
         if any(o == owner and _FP_SUM.search(t) for o, _, t in _strings(tree)):
             live.add((rel, owner))
     assert live == set(_EXEMPT)
+    defined = set()
+    for rel, name in _EXEMPT_SCALES:
+        tree = ast.parse((_ROOT / rel).read_text(encoding="utf-8"))
+        if any(n == name for _, n in _scale_defs(tree)):
+            defined.add((rel, name))
+    assert defined == set(_EXEMPT_SCALES)

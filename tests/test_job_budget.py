@@ -7,10 +7,14 @@ own; a rewrite that adds a job must raise the budget here with a reason.
 First entry: ``compat.doFolder_dataRed`` over a parquet curve bank and
 an id9 log — the paper's reduction, re-run on the growing bank after
 every folder re-scan in online mode. Every per-group quantity it needs
-(reference pick, reference-ladder edges, per-grain ref totals) comes
-from the window partitions the shot table already has; a summary
-aggregated apart and broadcast back re-runs the whole upstream plan
-(one more bank scan, log scan and job set per summary).
+(reference pick, reference-ladder edges, per-grain ref totals, the
+reference average of the add-back) comes from the window partitions the
+shot table already has; a summary aggregated apart and joined back
+re-runs the whole upstream plan (one more bank scan, log scan and job
+set per summary).
+
+Second entry: one whole ``compat.FolderPoller`` wave — poll, bank,
+log, reduce and ``saveTxt`` — the online mode's unit of work.
 """
 
 from __future__ import annotations
@@ -32,17 +36,21 @@ LOG_HEADER = (
     "# file delay time currentmA pd1ic pd2ic timeic\n"
 )
 
-# doFolder_dataRed(...)["scan"]: the log's slice shuffle and broadcast,
-# the acquisition-index shuffle, the reference-average add-back and the
-# result. The physical plan scans the bank twice: for the shot table and
-# for the add-back's branch. With adaptive execution on, the executed
-# plan reuses the shot table's acquisition-index shuffle for the
-# add-back (a ReusedExchange), so the bank is read once. Every further
-# per-group summary joined back would add a bank scan, a log scan and
-# their jobs.
-REDUCTION_MAX_JOBS = 6
-REDUCTION_MAX_BANK_SCANS = 2
-REDUCTION_MAX_EXECUTED_BANK_SCANS = 1
+# doFolder_dataRed(...)["scan"]: the log's broadcast, the acquisition
+# index's single-partition shuffle and the result. The bank is read once:
+# one shot-table branch (bank ⨝ log), whose window partitions every later
+# window, the scan-point aggregate and the carried reference average
+# reuse. The log is read unsliced, so its branch plans no row_number
+# window (a single-partition shuffle of its own).
+REDUCTION_MAX_JOBS = 3
+REDUCTION_MAX_BANK_SCANS = 1
+
+# One FolderPoller wave after the first (the detector geometry is built
+# once per detector, on the first, so a later poll pays no geometry
+# rebuild): poll 3, bank 1, log 2 (the id9 dtype probe's aggregate),
+# reduce 0 (lazy), saveTxt 3 (the scan above). The scan carries q, so
+# saveTxt joins no (q_bin, q) map read off the bank.
+WAVE_MAX_JOBS = 9
 
 
 def _bank_and_log(spark, tmp_path):
@@ -79,6 +87,26 @@ def _jobs_in_group(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _log_branch(plan: str) -> list[str]:
+    """The operators between the log's text scan and the join that takes
+    it in, read off a plan's tree string (a node's ancestors are the
+    nearest lines above it at a smaller indent)."""
+    lines = plan.splitlines()
+
+    def indent(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    i = next(k for k, line in enumerate(lines) if "FileScan text" in line)
+    depth, path = indent(lines[i]), []
+    for line in reversed(lines[:i]):
+        if indent(line) < depth:
+            if "Join" in line:
+                return path
+            path.append(line.strip())
+            depth = indent(line)
+    raise AssertionError(f"no join above the log scan\n{plan}")
+
+
 def test_doFolder_dataRed_scan_job_budget(spark, tmp_path):
     bank, log = _bank_and_log(spark, tmp_path)
 
@@ -99,8 +127,49 @@ def test_doFolder_dataRed_scan_job_budget(spark, tmp_path):
     final = scan._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final, final[:3000]
     final = final.split("== Initial Plan ==")[0]
-    assert "ReusedExchange" in final, final
-    executed_scans = final.count("Scan parquet")
-    assert executed_scans <= REDUCTION_MAX_EXECUTED_BANK_SCANS, (
-        f"{executed_scans} executed bank scans\n{final}"
+    # one bank scan, feeding one shot-table branch: a single bank ⨝ log
+    # join and no exchange reused by a second branch
+    assert final.count("Scan parquet") == 1, final
+    joins = sum(final.count(j) for j in ("HashJoin", "SortMergeJoin", "NestedLoopJoin"))
+    assert joins == 1 and "ReusedExchange" not in final, final
+    # the unsliced log plans no window
+    assert not [op for op in _log_branch(final) if "Window" in op], final
+
+
+def _wave(folder, log_path, wave: int, per_wave: int = 4) -> None:
+    """``per_wave`` flat EDF frames (off/on alternating) and their log rows."""
+    rows = []
+    for j in range(per_wave):
+        i = wave * per_wave + j
+        d = "off" if j % 2 == 0 else ["100ps", "1ns"][(j // 2) % 2]
+        name = f"img_{i:04d}.edf"
+        level = 50.0 if d == "off" else 60.0 + j
+        (folder / name).write_bytes(encode_edf(np.full((NY, NX), level, dtype="f8")))
+        rows.append(f"{name} {d} 10:00:{i:02d} 190.0 100.0 50.0 1.0\n")
+    with open(log_path, "a") as f:
+        if wave == 0:
+            f.write(LOG_HEADER)
+        f.write("".join(rows))
+
+
+def test_folder_poller_wave_job_budget(spark, tmp_path):
+    folder = tmp_path / "sample" / "run1"
+    folder.mkdir(parents=True)
+    log_path = tmp_path / "waxs.log"
+    poller = compat.FolderPoller(
+        spark, str(folder), store_dir=str(tmp_path / "store"), files="*.edf",
+        nQ=5, qlims=(0.0, 0.2), poni=PONI, detector_shape=(NY, NX),
     )
+
+    def wave():
+        assert poller.poll() == 4
+        bank = poller.bank()
+        res = compat.doFolder_dataRed(bank, read_id9_log(spark, str(log_path)))
+        return compat.saveTxt(res, str(tmp_path / "reduced"), curves=bank)
+
+    for w in range(2):
+        _wave(folder, log_path, w)
+        written, jobs = _jobs_in_group(spark, wave)
+    assert jobs <= WAVE_MAX_JOBS, f"{jobs} jobs in one wave"
+    # the counted wave wrote a real text family: 3 matrices + 3 delays
+    assert len(written) == 3 + 3

@@ -11,9 +11,8 @@ import math
 
 from pyspark.sql import functions as F
 
-from trx_spark.exact import dot_fixed_py
+from trx_spark.exact import EMB_SCALE, dot_fixed_py
 from trx_spark.operators.kmeans import (
-    _SCALE,
     argmax_cell,
     assign_literal,
     collect_codebook,
@@ -70,15 +69,15 @@ def test_update_centroids_literal_matches_python_fold(spark, sf_dir):
     sums: dict = {}
     for _vid, vec in rows:
         best = max(
-            ((dot_fixed_py(vec, c, _SCALE), -cid) for cid, c in cents),
+            ((dot_fixed_py(vec, c, EMB_SCALE), -cid) for cid, c in cents),
         )
         cid = -best[1]
         s, n = sums.setdefault(cid, ([0] * len(vec), 0))
         for pos, x in enumerate(vec):
-            s[pos] += math.floor(float(x) * _SCALE)
+            s[pos] += math.floor(float(x) * EMB_SCALE)
         sums[cid] = (s, n + 1)
     want = sorted(
-        (cid, [(si / _SCALE) / n for si in s]) for cid, (s, n) in sums.items()
+        (cid, [(si / EMB_SCALE) / n for si in s]) for cid, (s, n) in sums.items()
     )
     assert upd == want
 
@@ -118,4 +117,4 @@ def test_dot_fixed_py_matches_jvm_fold(spark, sf_dir):
     vecs = {int(r[0]): [float(v) for v in r[1]] for r in emb.collect()}
     for (vid, cid), dot in jvm.items():
         c = dict(cents)[cid]
-        assert dot_fixed_py(vecs[vid], c, _SCALE) == dot  # bit-equal doubles
+        assert dot_fixed_py(vecs[vid], c, EMB_SCALE) == dot  # bit-equal doubles

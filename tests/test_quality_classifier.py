@@ -126,7 +126,8 @@ def test_gd_round_stats_match_numpy_round1(spark, sf_dir):
     """The fixed-point round-1 statistics (the driver-hashed gate
     surface) must reconstruct the numpy trainer's first gradient to
     within the fixed-point truncation bound (≤ 1/S per addend)."""
-    from trx_spark.queries.classifier import _GD_SCALE, classifier_gd_round_stats
+    from trx_spark.exact import EMB_SCALE
+    from trx_spark.queries.classifier import classifier_gd_round_stats
 
     tbl = pq.read_table(
         f"{sf_dir}/documents.parquet", columns=["doc_id", "text", "source"]
@@ -154,10 +155,10 @@ def test_gd_round_stats_match_numpy_round1(spark, sf_dir):
             continue
         r = got[j]
         # g[dim]·(-1) = (gq_pos - gq_neg)/(2·S); truncation ≤ n_rows/S
-        g_fp = (r["gq_neg"] - r["gq_pos"]) / (2.0 * _GD_SCALE)
-        assert abs(g_fp - g_ref[j]) <= (r["n_rows"] + 1) / _GD_SCALE
-    gb_fp = (got[_BIAS_DIM]["gq_neg"] - got[_BIAS_DIM]["gq_pos"]) / (2.0 * _GD_SCALE)
-    assert gb_fp == pytest.approx(gb_ref, abs=(n + 1) / _GD_SCALE)
+        g_fp = (r["gq_neg"] - r["gq_pos"]) / (2.0 * EMB_SCALE)
+        assert abs(g_fp - g_ref[j]) <= (r["n_rows"] + 1) / EMB_SCALE
+    gb_fp = (got[_BIAS_DIM]["gq_neg"] - got[_BIAS_DIM]["gq_pos"]) / (2.0 * EMB_SCALE)
+    assert gb_fp == pytest.approx(gb_ref, abs=(n + 1) / EMB_SCALE)
 
 
 def test_weight_literal_size_guard_falls_back_to_dataframe(

@@ -15,26 +15,27 @@ from trx_spark.operators.skew import salted_join
 
 def test_diffs_plus_ref_keeps_refless_groups(spark):
     """A group with no reference shots keeps its scan points with a
-    null add-back (trx propagates NaN, dataReduction.py:199) — it must
-    not vanish through an inner join."""
+    null add-back (trx propagates NaN, dataReduction.py:199) — the
+    reference-average column must not drop them."""
     shots = spark.createDataFrame(
         pd.DataFrame(
             {
                 "run": ["a"] * 4 + ["b"] * 2,
+                "scan": ["s"] * 6,
                 "idx": [1, 2, 3, 4, 1, 2],
                 "is_ref": [True, False, True, False, False, False],
                 "i": [1.0, 5.0, 3.0, 7.0, 9.0, 11.0],
+                "diff": [2.0, 6.0, 2.0, 6.0, 10.0, 10.0],
             }
         )
     )
-    sp = spark.createDataFrame(
-        pd.DataFrame({"run": ["a", "b"], "scan": ["s", "s"], "mean_diff": [4.0, 10.0]})
+    shots = reduction.ref_average(shots, group=["run"], is_ref="is_ref", value="i")
+    sp = reduction.average_scan_points(
+        shots, scan="scan", group=["run"], carry=["ref_avg"]
     )
     out = {
         r["run"]: (r["ref_avg"], r["diff_plus_ref"])
-        for r in reduction.diffs_plus_ref(
-            sp, shots, group=["run"], is_ref="is_ref", value="i", diff="mean_diff"
-        ).collect()
+        for r in reduction.diffs_plus_ref(sp).collect()
     }
     assert out["a"] == (2.0, 6.0)
     assert "b" in out, "ref-less group must survive"

@@ -72,6 +72,63 @@ def test_log_slice_multisplit(spark, tmp_path):
     assert got == [f"img_{i:05d}" for i in range(5, 1500)]
 
 
+def _log_rows(spark, path):
+    df = logfile.read_id9_log(spark, str(path), subtract_dark=True)
+    return df.columns, sorted(tuple(r) for r in df.collect())
+
+
+def _respaced(sep: str) -> str:
+    """LOG with every data line's single-space separators replaced by
+    ``sep``, plus a leading and a trailing ``sep``."""
+    return "".join(
+        line + "\n"
+        if line.startswith("#")
+        else sep + line.replace(" ", sep) + sep + "\n"
+        for line in LOG.splitlines()
+    )
+
+
+def test_log_tab_separated_equals_single_space(spark, tmp_path):
+    """genfromtxt's whitespace rule: tabs separate fields like a space,
+    and a leading or trailing tab adds no field."""
+    (tmp_path / "space.log").write_text(LOG)
+    (tmp_path / "tab.log").write_text(_respaced("\t"))
+    assert _log_rows(spark, tmp_path / "tab.log") == _log_rows(
+        spark, tmp_path / "space.log"
+    )
+
+
+def test_log_multi_space_equals_single_space(spark, tmp_path):
+    (tmp_path / "space.log").write_text(LOG)
+    (tmp_path / "wide.log").write_text(_respaced("   "))
+    assert _log_rows(spark, tmp_path / "wide.log") == _log_rows(
+        spark, tmp_path / "space.log"
+    )
+
+
+def test_unsliced_log_read_runs_two_jobs_and_no_window(spark, tmp_path):
+    """No schema-inference job (the text reader has a fixed schema) and
+    no row_number window unless the read is sliced: only the id9 dtype
+    probe's aggregate runs."""
+    import uuid
+
+    p = tmp_path / "waxs.log"
+    p.write_text(LOG)
+    sc = spark.sparkContext
+    group = f"log-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "unsliced log read")
+    try:
+        df = logfile.read_id9_log(spark, str(p))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 2, f"{jobs} jobs"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    sliced = logfile.read_log_file(spark, str(p), skip_first=1)
+    assert "Window" in sliced._jdf.queryExecution().executedPlan().toString()
+
+
 def test_log_converters(spark, tmp_path):
     """S4 converters= map (trx/utils/files.py:31-82): cast-type strings
     and Column-callable converters, applied JVM-side."""

@@ -12,7 +12,8 @@ Signature sources: ``doFolder`` ← trx/azav.py:230-290,
 173-228 getAI) is sources.poni: ``poni="file.poni"`` resolves with
 getAI's search order and generates the per-pixel geometry DataFrame
 (y, x, q, chi, solid_angle, pol_corr) distributed — built once per
-detector and broadcast (SURVEY U8); an explicit geometry DataFrame is
+(session, geometry, detector shape), memoized as ``detector_geometry``
+and broadcast (SURVEY U8); an explicit geometry DataFrame is
 still accepted. The online loop is Structured Streaming
 (trx_spark/streaming/incremental.py) rather than a sleep-poll.
 """
@@ -22,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trx_spark.cache import memo
 from trx_spark.operators import masks as _masks
 from trx_spark.operators.multimodal import decode_image, read_binary_assets
 from trx_spark.pipeline import (
@@ -123,7 +125,15 @@ def doFolder(
                 .collect()[0]
             )
             detector_shape = (int(probe["my"]) + 1, int(probe["mx"]) + 1)
-        geometry = poni_geometry_table(spark, geom, detector_shape)
+        # once per detector: every poll of a FolderPoller calls doFolder
+        # again, and a rebuilt table costs its range-repartition shuffle
+        # before the broadcast (PoniGeometry is frozen, so it keys)
+        shape = (int(detector_shape[0]), int(detector_shape[1]))
+        geometry = memo(
+            "detector_geometry",
+            (spark, geom, shape),
+            lambda: poni_geometry_table(spark, geom, shape).localCheckpoint(),
+        )
     pixels = decode_image(assets, codec="auto").withColumn(
         "file", F.element_at(F.split(F.col("file"), "/"), -1)
     )

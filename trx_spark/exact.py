@@ -19,8 +19,9 @@ The truncation bias (≤ 1/S per addend) is identical on both engines, so
 the correctness gate compares bit-equal values; production paths use
 native double aggregation (faster) — ``exact`` is a per-operator flag.
 
-Scale choice: S=1e6 handles |x| ≤ ~1e12 with ≤ 9e18/1e6-row headroom;
-use S=1e12 for small-magnitude data (embeddings) needing more digits.
+Scale choice: S=1e6 (``SCALE``) handles |x| ≤ ~1e12 with ≤ 9e18/1e6-row
+headroom; ``EMB_SCALE`` = 1e12 serves small-magnitude data (embeddings)
+needing more digits.
 
 The decision comes in three forms, which must stay parallel: the whole
 parity argument rests on identical expression trees.
@@ -56,6 +57,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000.0
+# The embedding scale: |x| <= ~1 for unit-ish embeddings, so per-row
+# addends stay <= 1e12 and a 64-dim dot or a ~9e6-row group sum keeps
+# int64 headroom. Every embedding query and k-means round uses this one
+# value: a centroid scored at one scale and trained at another would
+# not be the oracle's tree.
+EMB_SCALE = 1e12
 
 
 # --- Column builders (Spark side) --------------------------------------

@@ -93,5 +93,7 @@ def ws_parts(col: Column | str) -> Column:
     runs of spaces collapse to one separator) — the genfromtxt
     field-splitting idiom shared by every text-log/chi reader. One
     definition so a tokenization fix (tab handling, trailing comments)
-    lands everywhere at once."""
-    return F.split(F.regexp_replace(F.trim(col), r"\s+", " "), " ")
+    lands everywhere at once. Whitespace collapses BEFORE the trim
+    (which strips spaces only), so a leading or trailing tab yields no
+    empty field."""
+    return F.split(F.trim(F.regexp_replace(col, r"\s+", " ")), " ")

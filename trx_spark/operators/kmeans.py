@@ -27,9 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from trx_spark.exact import array_dot, dfinal, dlit_array, fint, sql_array_dot
-
-_SCALE = 1e12  # == textdata._EMB_SCALE; int64-safe for |x|<=~1, dim 64
+from trx_spark.exact import EMB_SCALE, array_dot, dfinal, dlit_array, fint, sql_array_dot
 
 
 def score_cells(
@@ -38,7 +36,7 @@ def score_cells(
     """(id, cid, dot) for every vector x centroid — broadcast join,
     map-side folds, no shuffle until the consumer aggregates."""
     return emb.crossJoin(F.broadcast(cents)).select(
-        id_col, "cid", array_dot(F.col(vec_col), F.col("cent"), _SCALE).alias("dot")
+        id_col, "cid", array_dot(F.col(vec_col), F.col("cent"), EMB_SCALE).alias("dot")
     )
 
 
@@ -58,11 +56,11 @@ def _update_centroids(
     ex = emb.join(assign.select(id_col, "cid"), id_col).select(
         "cid", F.posexplode(F.col(vec_col)).alias("pos", "x")
     )
-    cent_val = dfinal(F.col("s"), _SCALE) / F.col("n")
+    cent_val = dfinal(F.col("s"), EMB_SCALE) / F.col("n")
     return (
         ex.groupBy("cid", "pos")
         .agg(
-            F.sum(fint(F.col("x").cast("double"), _SCALE)).alias("s"),
+            F.sum(fint(F.col("x").cast("double"), EMB_SCALE)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .withColumn("c", cent_val)
@@ -128,7 +126,7 @@ def best_cell_sql(vec_sql: str, cents: list[tuple[int, list[float]]]) -> str:
     """struct(dot, ncid) of the winning centroid as SQL text (ties ->
     smallest cid; array_max's struct ordering == the groupBy max's)."""
     entries = ", ".join(
-        f"named_struct('dot', {sql_array_dot(vec_sql, dlit_array(c), _SCALE)}, "
+        f"named_struct('dot', {sql_array_dot(vec_sql, dlit_array(c), EMB_SCALE)}, "
         f"'ncid', CAST({-int(cid)} AS BIGINT))"
         for cid, c in cents
     )
@@ -206,11 +204,11 @@ def update_centroids_literal(
         (-F.col("_m.ncid")).alias("cid"),
         F.posexplode(F.col("_v")).alias("pos", "x"),
     )
-    cent_val = dfinal(F.col("s"), _SCALE) / F.col("n")
+    cent_val = dfinal(F.col("s"), EMB_SCALE) / F.col("n")
     return (
         ex.groupBy("cid", "pos")
         .agg(
-            F.sum(fint(F.col("x").cast("double"), _SCALE)).alias("s"),
+            F.sum(fint(F.col("x").cast("double"), EMB_SCALE)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .withColumn("c", cent_val)

@@ -28,9 +28,12 @@ run; each run's shots are one window partition). Per-group quantities (the
 reference ladder's edges, the per-grain reference totals) are full-frame
 columns of those same partitions, never a summary aggregated apart and
 joined back: such a join re-runs the shot table's whole upstream plan
-(scan, log join, acquisition index) once per summary. The one add-back
-join left is :func:`diffs_plus_ref`'s, onto the already-aggregated scan
-points.
+(scan, log join, acquisition index) once per summary. That includes
+the reference average of the add-back (:func:`ref_average`), which the
+scan points carry through their aggregation. The one summary still
+joined back is the group-less scalar layout's total reference count in
+:func:`_mark_subsample` (no key to window over); curve layouts always
+group by q.
 """
 
 from __future__ import annotations
@@ -200,13 +203,16 @@ def average_scan_points(
     diff: str = "diff",
     n_q: int = 1,
     exact: bool = False,
+    carry: list[str] | None = None,
 ) -> DataFrame:
     """Per-scan-point aggregation with the reference's exact semantics.
 
     Input: one row per shot with a precomputed ``diff`` (scalar data,
     n_q=1; for curve data run on the exploded layout and add q to group).
     Output per (group, scan): n_shots, mean_diff, noise (population σ),
-    err_of_mean = noise/sqrt(n_shots_full), mean/max chi2_0.
+    err_of_mean = noise/sqrt(n_shots_full), mean/max chi2_0, plus each
+    ``carry`` column — a per-group column such as :func:`ref_average`'s,
+    constant over each group, passed through unchanged.
 
     cf. trx/dataReduction.py:159-196. ONE window pass + ONE groupBy:
     chi2 comes out of the same aggregation via the algebraic identity
@@ -245,6 +251,9 @@ def average_scan_points(
         sum_fn(used * F.col(diff)).alias("_s2"),
         F.max(used).alias("_dmax"),
         F.min(used).alias("_dmin"),
+        # constant per group, so max is that value (first() would mark
+        # the aggregate non-deterministic for the optimizer)
+        *(F.max(c).alias(c) for c in carry or []),
     )
     m = F.col("mean_diff")
     noise = F.col("noise")
@@ -274,52 +283,37 @@ def ref_average(
 ) -> DataFrame:
     """A9: the average of the REFERENCE shots per group (per q for curve
     layouts) — ``ref_average = nanmean(data[isRef], axis=0)``
-    (trx/dataReduction.py:137). A tiny agg: one row per (run, q)."""
-    group = group or []
-    mean_fn = davg if exact else F.avg
-    agg = mean_fn(F.col(value)).alias(out)
-    filtered = shots.filter(F.col(is_ref))
-    return filtered.groupBy(*group).agg(agg) if group else filtered.agg(agg)
+    (trx/dataReduction.py:137) — added to every shot as the full-frame
+    window column ``out`` over the ``group`` partitions, the ones the
+    interpolation already shuffled to. NULL in a group with no reference
+    shot (the reference propagates NaN there). On the exact path the
+    column is ``wdsum`` / count over the frame, bit-identical to
+    ``davg`` over the group's reference rows. With no ``group`` the
+    frame is the whole table, like the group-less interpolation."""
+    w = Window.partitionBy(*(group or []))
+    ref = F.when(F.col(is_ref), F.col(value))
+    avg = wdsum(ref, w) / F.count(ref).over(w) if exact else F.avg(ref).over(w)
+    return shots.withColumn(out, avg)
 
 
 def diffs_plus_ref(
     scan_points: DataFrame,
-    shots: DataFrame,
     *,
-    group: list[str] | None = None,
-    is_ref: str = "is_ref",
-    value: str = "i",
     diff: str = "mean_diff",
+    ref: str = "ref_avg",
     out: str = "diff_plus_ref",
-    exact: bool = False,
 ) -> DataFrame:
     """F-arr5: add the reference average back onto the averaged diffs —
     ``diffs_plus_ref = diffs + ref_average`` (trx/dataReduction.py:199,
     re-used after filtering at trx/filters.py:47 and written by the S11
     sink as diff_plus_ref_av_matrix, trx/dataReduction.py:256-257).
 
-    ``scan_points`` is the per-(group, scan) output of
-    :func:`average_scan_points`; ``shots`` is the per-shot table the
-    reference average is computed from. The ref average is ≤1 row per
-    group → broadcast join onto the scan points, no reshuffle of either
-    side. Its branch reads ``shots`` a second time, so the physical plan
-    lists the source twice. When ``shots`` comes out of a window stage
-    (as in ``pipeline.data_reduction``) and adaptive execution is on,
-    the executed plan shows a ReusedExchange of that stage's shuffle for
-    this branch (pinned in ``tests/test_job_budget.py``)."""
-    group = group or []
-    ref = ref_average(
-        shots, group=group, is_ref=is_ref, value=value, out="ref_avg", exact=exact
-    )
-    # LEFT join: a group with no reference shots keeps its scan points
-    # with a null add-back (the reference propagates NaN there,
-    # dataReduction.py:199) — an inner join would silently drop them
-    joined = (
-        scan_points.join(F.broadcast(ref), on=group, how="left")
-        if group
-        else scan_points.crossJoin(F.broadcast(ref))
-    )
-    return joined.withColumn(out, F.col(diff) + F.col("ref_avg"))
+    ``scan_points`` is the output of :func:`average_scan_points` over
+    shots that carry :func:`ref_average`'s column, passed through with
+    ``carry=[ref]``: the add-back is a projection, with no summary
+    aggregated apart and joined back. A group with no reference shots
+    keeps its scan points with a NULL add-back."""
+    return scan_points.withColumn(out, F.col(diff) + F.col(ref))
 
 
 def _wsum(col: Column, w, exact: bool) -> Column:

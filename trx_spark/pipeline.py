@@ -121,7 +121,10 @@ def data_reduction(
     stats + chi2 → non-destructive chi2 filter → filtered re-aggregation.
 
     Returns {'shots', 'scan', 'scan_filtered'} lazy DataFrames
-    (trx/id9.py:226-303 doFolder_dataRed + filters.applyFilters).
+    (trx/id9.py:226-303 doFolder_dataRed + filters.applyFilters). For
+    curve data the scan views are keyed by (group, q_bin, q, delay) when
+    the curves carry ``q``, so a sink reads the physical q axis off the
+    scan itself; both views carry ``ref_avg`` and ``diff_plus_ref``.
     ``log`` is one row per image — small per run but proportional to
     the data volume across runs, so the join carries no broadcast hint
     (AQE broadcasts a single run's log, shuffles a 100 TB batch).
@@ -134,8 +137,9 @@ def data_reduction(
     it (the gate queries exercise exactly that shape with a 16-shard run
     key). Every per-group quantity downstream (reference ladder edges,
     per-grain ref totals) is a window over the (group, q) partitions the
-    interpolation already shuffled to — no summary is aggregated apart
-    and joined back, which would re-run the whole upstream plan.
+    interpolation already shuffled to, the reference average of the
+    add-back included — no summary is aggregated apart and joined back,
+    which would re-run the whole upstream plan.
     """
     # Multi-run batches: per-run file names COLLIDE (img_0001 exists in
     # every run), so any extra_group key present on BOTH sides joins the
@@ -192,6 +196,11 @@ def data_reduction(
         use_ratio=cfg.use_ratio,
         lpower=cfg.lpower,
     )
+    # A9: the reference average rides the interpolation's partitions as a
+    # full-frame column; the scan points carry it to the add-back. Taken
+    # BEFORE the chi2 filter: the reference's applyFilters (filters.py:47)
+    # reuses the unfiltered data.ref_average.
+    shots = reduction.ref_average(shots, group=q_group, is_ref="is_ref", value="i")
     n_q = 1
     thr = None if cfg.chi2_threshold in ("auto", None) else float(cfg.chi2_threshold)
     is_curve = "q_bin" in shots.columns
@@ -238,22 +247,18 @@ def data_reduction(
             ~F.coalesce(F.col("chi2_excluded"), F.lit(False))
         ).drop("chi2_0", "noise", "mean_diff", "used_in_avg", "chi2_threshold", "chi2_excluded")
 
-    scan = reduction.average_scan_points(
-        shots, scan=delay, group=q_group, idx="_idx", is_ref="is_ref", diff="diff", n_q=n_q
+    # q rides the scan points: in a curve bank q is the bin centre, a
+    # function of q_bin, so the groups do not change and a sink needs no
+    # second pass over the bank for the (q_bin, q) map
+    scan_group = [*q_group, "q"] if is_curve and "q" in shots.columns else q_group
+    avg = dict(
+        scan=delay, group=scan_group, idx="_idx", is_ref="is_ref", diff="diff",
+        n_q=n_q, carry=["ref_avg"],
     )
     # F6 applyFilters: re-run the aggregation over surviving shots only —
     # in relational form just a WHERE over the provenance column
-    scan_filtered = reduction.average_scan_points(
-        surviving, scan=delay, group=q_group, idx="_idx", is_ref="is_ref", diff="diff", n_q=n_q
-    )
-    # F-arr5: diff + ref_average add-back (dataReduction.py:199). The
-    # filtered view adds back the SAME unfiltered ref_average — the
-    # reference's applyFilters (filters.py:47) reuses data.ref_average
-    # computed before filtering. ≤1 ref row per (group, q) → broadcast.
-    scan = reduction.diffs_plus_ref(
-        scan, shots, group=q_group, is_ref="is_ref", value="i", diff="mean_diff"
-    )
+    scan = reduction.diffs_plus_ref(reduction.average_scan_points(shots, **avg))
     scan_filtered = reduction.diffs_plus_ref(
-        scan_filtered, shots, group=q_group, is_ref="is_ref", value="i", diff="mean_diff"
+        reduction.average_scan_points(surviving, **avg)
     )
-    return {"shots": per_shot, "scan": scan, "scan_filtered": scan_filtered}
+    return {"shots": per_shot.drop("ref_avg"), "scan": scan, "scan_filtered": scan_filtered}

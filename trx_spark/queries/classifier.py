@@ -195,9 +195,6 @@ def quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the trainer — the `lm_bigram_counts` pattern applied to GD)
 # ---------------------------------------------------------------------
 
-_GD_SCALE = 1e12  # |x| ≤ 1 and ≤ ~1e6 rows/dim at gate sf → no overflow
-
-
 def classifier_gd_round_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-1 sufficient statistics of the GD trainer, fixed-point
     exact: at w=0 the sigmoid is exactly 1/2, so the per-row error
@@ -210,10 +207,11 @@ def classifier_gd_round_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit; only the later rounds' exp() stays outside the gate
     (engine-specific transcendental — covered by the numpy pin in
     tests/test_quality_classifier.py)."""
-    from trx_spark.exact import fint
+    from trx_spark.exact import EMB_SCALE, fint
 
     feats = _features(spark, sf_dir)
-    q = fint(F.col("x"), _GD_SCALE)
+    # |x| ≤ 1 and ≤ ~1e6 rows/dim at gate sf → no overflow
+    q = fint(F.col("x"), EMB_SCALE)
     return feats.groupBy("dim").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("y") == 1.0, F.lit(1)).otherwise(F.lit(0)))
@@ -225,13 +223,13 @@ def classifier_gd_round_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _gd_stats_sql() -> str:
-    from trx_spark.exact import sql_fint
+    from trx_spark.exact import EMB_SCALE, sql_fint
     from trx_spark.queries.curation import _DSIR_TARGET_SOURCE
     from trx_spark.queries.ranking import _FH_DIM, _FH_SIGN_A, _FH_SIGN_B, _TOKEN_RE
     from trx_spark.queries.textdata import _P, _tok_hash_sql
 
     tid = _tok_hash_sql("token")
-    q = sql_fint("x", _GD_SCALE)
+    q = sql_fint("x", EMB_SCALE)
     return f"""
 WITH ts AS (
   SELECT doc_id, s.token

@@ -953,15 +953,12 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_s",
         # keep-threshold out of 1e6, via an IEEE tree both engines share
-        F.floor(
+        fint(
             F.lit(float(_MIX_TARGET))
             * F.col("w_s").cast("double")
             / F.col("w_tot").cast("double")
             / F.col("n_s").cast("double")
-            * F.lit(1e6)
-        )
-        .cast("long")
-        .alias("thr"),
+        ).alias("thr"),
     )
     # rates is one row per source — bounded here, but source cardinality
     # is data-dependent at web scale (millions of domains), so no hint

@@ -28,7 +28,7 @@ Scale design (the 100 TB story):
   scale the production spelling is ``approx_percentile`` (t-digest,
   partial-aggregatable) — the quantile query is the only one whose
   exact form buffers per-group values.
-- Fixed-point scale 1e12 (exact.py): |x| < ~1 for unit-ish embeddings
+- Fixed-point scale ``exact.EMB_SCALE`` = 1e12: |x| < ~1 for unit-ish embeddings
   → per-row addends ≤ 1e12, giving ~9e6-row-per-group headroom in the
   int64 accumulator at the gate; production uses native double sums.
 """
@@ -40,10 +40,9 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from trx_spark.exact import dfinal, dsum, sql_dsum, sql_fint
+from trx_spark.exact import EMB_SCALE, dfinal, dsum, sql_dsum, sql_fint
 from trx_spark.tables import fan_out_small_scan, load_table
 
-_EMB_SCALE = 1e12
 _COV_DIMS = 6  # leading block hashed by the gate (21 pairs)
 _QTILES = (0.25, 0.5, 0.75, 0.95)
 
@@ -66,8 +65,8 @@ def embedding_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point sums; min/max are raw doubles — no arithmetic)."""
     d = _dims(spark, sf_dir)
     n = F.count(F.lit(1))
-    s1 = dsum(F.col("v"), _EMB_SCALE)
-    s2 = dsum(F.col("v") * F.col("v"), _EMB_SCALE)
+    s1 = dsum(F.col("v"), EMB_SCALE)
+    s2 = dsum(F.col("v") * F.col("v"), EMB_SCALE)
     var = (s2 - s1 * s1 / n) / n
     return d.groupBy("dim").agg(
         n.alias("n"),
@@ -86,11 +85,11 @@ WITH d AS (
 )
 SELECT dim,
   CAST(COUNT(*) AS BIGINT) AS n,
-  {sql_dsum('v', _EMB_SCALE)} / COUNT(*) AS mean,
+  {sql_dsum('v', EMB_SCALE)} / COUNT(*) AS mean,
   sqrt(greatest(
-    ({sql_dsum('v * v', _EMB_SCALE)}
-     - {sql_dsum('v', _EMB_SCALE)}
-       * {sql_dsum('v', _EMB_SCALE)} / COUNT(*)) / COUNT(*),
+    ({sql_dsum('v * v', EMB_SCALE)}
+     - {sql_dsum('v', EMB_SCALE)}
+       * {sql_dsum('v', EMB_SCALE)} / COUNT(*)) / COUNT(*),
     CAST(0.0 AS DOUBLE))) AS std_pop,
   MIN(v) AS v_min,
   MAX(v) AS v_max
@@ -142,9 +141,9 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p.y").alias("y"),
     )
     n = F.count(F.lit(1))
-    sx = dsum(F.col("x"), _EMB_SCALE)
-    sy = dsum(F.col("y"), _EMB_SCALE)
-    sxy = dsum(F.col("x") * F.col("y"), _EMB_SCALE)
+    sx = dsum(F.col("x"), EMB_SCALE)
+    sy = dsum(F.col("y"), EMB_SCALE)
+    sxy = dsum(F.col("x") * F.col("y"), EMB_SCALE)
     return d.groupBy("dim_i", "dim_j").agg(
         n.alias("n"),
         (sxy / n - (sx / n) * (sy / n)).alias("cov_pop"),
@@ -163,9 +162,9 @@ WITH d AS (
 )
 SELECT dim_i, dim_j,
   CAST(COUNT(*) AS BIGINT) AS n,
-  {sql_dsum('x * y', _EMB_SCALE)} / COUNT(*)
-  - ({sql_dsum('x', _EMB_SCALE)} / COUNT(*))
-    * ({sql_dsum('y', _EMB_SCALE)} / COUNT(*)) AS cov_pop
+  {sql_dsum('x * y', EMB_SCALE)} / COUNT(*)
+  - ({sql_dsum('x', EMB_SCALE)} / COUNT(*))
+    * ({sql_dsum('y', EMB_SCALE)} / COUNT(*)) AS cov_pop
 FROM d GROUP BY dim_i, dim_j
 """
 
@@ -206,12 +205,12 @@ def jl_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"transform(sequence(1, {_JL_DIMS}), j -> named_struct("
         f"'j', CAST(j AS BIGINT), "
         f"'acc', aggregate(sequence(1, size(embedding)), 0L, (acc, i) -> "
-        f"acc + {sql_fint(term, _EMB_SCALE)})))"
+        f"acc + {sql_fint(term, EMB_SCALE)})))"
     )
     return emb.select("vec_id", F.explode(projs).alias("p")).select(
         "vec_id",
         F.col("p.j").alias("out_dim"),
-        dfinal(F.col("p.acc"), _EMB_SCALE).alias("proj"),
+        dfinal(F.col("p.acc"), EMB_SCALE).alias("proj"),
     )
 
 
@@ -222,7 +221,7 @@ WITH d AS (
        UNNEST(generate_series(1, len(embedding))) AS u(i)
 )
 SELECT d.vec_id, CAST(j.j AS BIGINT) AS out_dim,
-  {sql_dsum(f"d.x * {_jl_sign_sql('d.i', 'j.j')}", _EMB_SCALE)} AS proj
+  {sql_dsum(f"d.x * {_jl_sign_sql('d.i', 'j.j')}", EMB_SCALE)} AS proj
 FROM d, UNNEST(generate_series(1, {_JL_DIMS})) AS j(j)
 GROUP BY d.vec_id, j.j
 """
@@ -293,9 +292,9 @@ def pca_leading_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(1, d + 1)
     }
     aggs = [F.count(F.lit(1)).cast("double").alias("n")]
-    aggs += [dsum(xs[i], _EMB_SCALE).alias(f"s_{i}") for i in range(1, d + 1)]
+    aggs += [dsum(xs[i], EMB_SCALE).alias(f"s_{i}") for i in range(1, d + 1)]
     aggs += [
-        dsum(xs[i] * xs[j], _EMB_SCALE).alias(f"s_{i}_{j}")
+        dsum(xs[i] * xs[j], EMB_SCALE).alias(f"s_{i}_{j}")
         for i in range(1, d + 1)
         for j in range(i, d + 1)
     ]
@@ -345,7 +344,7 @@ def pca_leading_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pca_sql() -> str:
     d = _COV_DIMS
-    s = _EMB_SCALE
+    s = EMB_SCALE
     base_cols = ["CAST(COUNT(*) AS DOUBLE) AS n"]
     base_cols += [f"{sql_dsum(f'x{i}', s)} AS s_{i}" for i in range(1, d + 1)]
     base_cols += [

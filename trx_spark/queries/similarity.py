@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
 from trx_spark.exact import (
+    EMB_SCALE,
     array_dot,
     array_norm2,
     dfinal,
@@ -31,12 +32,10 @@ from trx_spark.exact import (
     sql_fint,
 )
 from trx_spark.operators.kmeans import (
-    _SCALE as _KM_SCALE,
     assign_literal,
     lloyd_centroids_collected,
 )
 from trx_spark.queries.textdata import (
-    _EMB_SCALE,
     _LSH_BUCKET_CAP,
     _PLANE_COEF,
     _exact_topk_within,
@@ -63,7 +62,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = (
         ann_lsh_buckets(spark, sf_dir)
         .join(emb, "vec_id")
-        .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
+        .withColumn("n1", array_norm2(F.col("embedding"), EMB_SCALE))
     )
     w = Window.partitionBy("bucket")
     capped = (
@@ -84,7 +83,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n1").alias("nb"),
     )
     pairs = a.join(c, ["bucket"]).filter(F.col("vec_a") < F.col("vec_b"))
-    cos = array_dot(F.col("ea"), F.col("eb"), _EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
+    cos = array_dot(F.col("ea"), F.col("eb"), EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
     return (
         pairs.withColumn("cos_sim", cos)
         .filter(F.col("cos_sim") >= F.lit(float(_NEARDUP_COS)))
@@ -119,7 +118,7 @@ _NEARDUP_SQL = f"""
 WITH {_EX_CTE},
 {_BUCKETS_CTE},
 norms AS (
-  SELECT vec_id, {sql_dsum('x * x', _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, {sql_dsum('x * x', EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
 ),
 bsz AS (SELECT bucket, count(*) AS c FROM buckets GROUP BY bucket),
 capped AS (
@@ -131,7 +130,7 @@ pairs AS (
   FROM capped a JOIN capped b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 ),
 pd AS (
-  SELECT p.vec_a, p.vec_b, {sql_dsum('xa.x * xb.x', _EMB_SCALE)} AS dot
+  SELECT p.vec_a, p.vec_b, {sql_dsum('xa.x * xb.x', EMB_SCALE)} AS dot
   FROM pairs p
   JOIN ex xa ON xa.vec_id = p.vec_a
   JOIN ex xb ON xb.vec_id = p.vec_b AND xb.pos = xa.pos
@@ -229,7 +228,7 @@ def _probe_df(spark: SparkSession, q: list, cents: list) -> DataFrame:
     Catalyst analysis per call; a 2-row local relation costs nothing
     (measured: ~5 ms per py4j call, 2-4 s per big-tree analysis)."""
     ranked = sorted(
-        ((dot_fixed_py(q, c, _KM_SCALE), cid) for cid, c in cents),
+        ((dot_fixed_py(q, c, EMB_SCALE), cid) for cid, c in cents),
         key=lambda t: (-t[0], t[1]),
     )
     return spark.createDataFrame(
@@ -254,7 +253,7 @@ def _query_cell_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CELLS_CTES = f"""{_EX_CTE},
 cents AS (SELECT vec_id AS cid, pos, x AS c FROM ex WHERE vec_id < {_N_CELLS}),
 celldots AS (
-  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', _EMB_SCALE)} AS dot
+  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', EMB_SCALE)} AS dot
   FROM ex e JOIN cents c USING (pos) GROUP BY e.vec_id, c.cid
 ),
 cells AS (
@@ -278,8 +277,8 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -307,7 +306,7 @@ def _lloyd_round_sql(src: str, k: int, sfx: str = "") -> str:
     CTE name carries the suffix ``sfx``."""
     return f"""cents0{sfx} AS (SELECT vec_id AS cid, pos, x AS c FROM {src} WHERE vec_id < {k}),
 cd0{sfx} AS (
-  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', _EMB_SCALE)} AS dot
+  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', EMB_SCALE)} AS dot
   FROM {src} e JOIN cents0{sfx} c USING (pos) GROUP BY e.vec_id, c.cid
 ),
 a0{sfx} AS (
@@ -318,12 +317,12 @@ a0{sfx} AS (
   WHERE rn = 1
 ),
 cents1{sfx} AS (
-  SELECT a.cid, e.pos, {sql_dsum('e.x', _EMB_SCALE)} / COUNT(*) AS c
+  SELECT a.cid, e.pos, {sql_dsum('e.x', EMB_SCALE)} / COUNT(*) AS c
   FROM {src} e JOIN a0{sfx} a USING (vec_id)
   GROUP BY a.cid, e.pos
 ),
 cd1{sfx} AS (
-  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', _EMB_SCALE)} AS dot
+  SELECT e.vec_id, c.cid, {sql_dsum('e.x * c.c', EMB_SCALE)} AS dot
   FROM {src} e JOIN cents1{sfx} c USING (pos) GROUP BY e.vec_id, c.cid
 ),
 a1{sfx} AS (
@@ -439,11 +438,11 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
-nq AS (SELECT {sql_dsum('x * x', _EMB_SCALE)} AS nq FROM ex WHERE vec_id = 0),
+nq AS (SELECT {sql_dsum('x * x', EMB_SCALE)} AS nq FROM ex WHERE vec_id = 0),
 scored AS (SELECT vec_id, dot / SQRT(n1 * nq) AS cos_sim FROM per, nq
           WHERE dot / SQRT(n1 * nq) IS NOT NULL)
 SELECT vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM (
@@ -511,7 +510,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("cid")
         )
         pairable = assign.join(F.broadcast(small_cells), "cid", "left_semi")
-        m = pairable.join(emb, "vec_id").withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
+        m = pairable.join(emb, "vec_id").withColumn("n1", array_norm2(F.col("embedding"), EMB_SCALE))
         a = m.select(
             F.col("vec_id").alias("vec_a"),
             "cid",
@@ -525,7 +524,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n1").alias("nb"),
         )
         pairs = a.join(b, ["cid"]).filter(F.col("vec_a") < F.col("vec_b"))
-        cos = array_dot(F.col("ea"), F.col("eb"), _EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
+        cos = array_dot(F.col("ea"), F.col("eb"), EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
         dropped = (
             pairs.filter(cos >= F.lit(float(_SEMDEDUP_COS)))
             .select(F.col("vec_b").alias("vec_id"))
@@ -548,7 +547,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_SQL = f"""
 WITH {_EX_CTE},
 {_lloyd_round_sql("ex", _N_CELLS)},
-norms AS (SELECT vec_id, {sql_dsum('x * x', _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id),
+norms AS (SELECT vec_id, {sql_dsum('x * x', EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id),
 pairable AS (
   SELECT vec_id, cid FROM (
     SELECT vec_id, cid, count(*) OVER (PARTITION BY cid) AS csz FROM a1) t
@@ -559,7 +558,7 @@ pairs AS (
   FROM pairable a JOIN pairable b ON a.cid = b.cid AND a.vec_id < b.vec_id
 ),
 pd AS (
-  SELECT p.vec_a, p.vec_b, {sql_dsum('xa.x * xb.x', _EMB_SCALE)} AS dot
+  SELECT p.vec_a, p.vec_b, {sql_dsum('xa.x * xb.x', EMB_SCALE)} AS dot
   FROM pairs p
   JOIN ex xa ON xa.vec_id = p.vec_a
   JOIN ex xb ON xb.vec_id = p.vec_b AND xb.pos = xa.pos
@@ -608,7 +607,7 @@ def _pq_group_best_sql(cents: list, m: int, vec_sql: str = "embedding") -> str:
     group's literal centroids (k x dim bounded BY CONSTRUCTION)."""
     sub = _pq_sub_sql(m, vec_sql)
     entries = ", ".join(
-        f"named_struct('dot', {sql_array_dot(sub, dlit_array(c), _KM_SCALE)}, "
+        f"named_struct('dot', {sql_array_dot(sub, dlit_array(c), EMB_SCALE)}, "
         f"'ncid', CAST({-int(cid)} AS BIGINT))"
         for g, cid, c in cents
         if g == m
@@ -654,14 +653,14 @@ def _pq_update_collect(emb: DataFrame, cents: list) -> list:
     upd = (
         ex.groupBy("m", "cid", "pos")
         .agg(
-            F.sum(fint(F.col("x").cast("double"), _KM_SCALE)).alias("s"),
+            F.sum(fint(F.col("x").cast("double"), EMB_SCALE)).alias("s"),
             F.count(F.lit(1)).alias("n"),
         )
         .select(
             "m",
             "cid",
             "pos",
-            (dfinal(F.col("s"), _KM_SCALE) / F.col("n")).alias(
+            (dfinal(F.col("s"), EMB_SCALE) / F.col("n")).alias(
                 "c"
             ),
         )
@@ -717,7 +716,7 @@ def _pq_adc_df(spark: SparkSession, q: list, cents: list) -> DataFrame:
             int(cid),
             int(
                 math.floor(
-                    dot_fixed_py(q[m * _PQ_DIM : (m + 1) * _PQ_DIM], c, _KM_SCALE)
+                    dot_fixed_py(q[m * _PQ_DIM : (m + 1) * _PQ_DIM], c, EMB_SCALE)
                     * _PQ_TSCALE
                 )
             ),
@@ -812,8 +811,8 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -898,11 +897,11 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
-nq AS (SELECT {sql_dsum('x * x', _EMB_SCALE)} AS nq FROM ex WHERE vec_id = 0),
+nq AS (SELECT {sql_dsum('x * x', EMB_SCALE)} AS nq FROM ex WHERE vec_id = 0),
 scored AS (SELECT vec_id, dot / SQRT(n1 * nq) AS cos_sim FROM per, nq
           WHERE dot / SQRT(n1 * nq) IS NOT NULL)
 SELECT vec_id, cos_sim, CAST(rank AS INTEGER) AS rank FROM (
@@ -1118,8 +1117,8 @@ exc AS (SELECT e.* FROM ex e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM exc e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -1209,7 +1208,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = (
             ann_lsh_buckets(spark, sf_dir)
             .join(emb, "vec_id")
-            .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
+            .withColumn("n1", array_norm2(F.col("embedding"), EMB_SCALE))
         )
         w = Window.partitionBy("bucket")
         capped = (
@@ -1230,7 +1229,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n1").alias("nb"),
         )
         pairs = src.join(nbr, ["bucket"]).filter(F.col("src_id") != F.col("nbr_id"))
-        cos = array_dot(F.col("ea"), F.col("eb"), _EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
+        cos = array_dot(F.col("ea"), F.col("eb"), EMB_SCALE) / F.sqrt(F.col("na") * F.col("nb"))
         wk = Window.partitionBy("src_id").orderBy(F.desc("cos_sim"), F.asc("nbr_id"))
         out = (
             pairs.withColumn("cos_sim", cos)
@@ -1253,7 +1252,7 @@ _KNN_SQL = f"""
 WITH {_EX_CTE},
 {_BUCKETS_CTE},
 norms AS (
-  SELECT vec_id, {sql_dsum('x * x', _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, {sql_dsum('x * x', EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
 ),
 bsz AS (SELECT bucket, count(*) AS c FROM buckets GROUP BY bucket),
 capped AS (
@@ -1265,7 +1264,7 @@ pairs AS (
   FROM capped a JOIN capped b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
 ),
 pd AS (
-  SELECT p.src_id, p.nbr_id, {sql_dsum('xa.x * xb.x', _EMB_SCALE)} AS dot
+  SELECT p.src_id, p.nbr_id, {sql_dsum('xa.x * xb.x', EMB_SCALE)} AS dot
   FROM pairs p
   JOIN ex xa ON xa.vec_id = p.src_id
   JOIN ex xb ON xb.vec_id = p.nbr_id AND xb.pos = xa.pos
@@ -1647,7 +1646,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainers)."""
     emb = fan_out_small_scan(
         load_table(spark, sf_dir, "embeddings")
-    ).select("vec_id", "embedding").withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
+    ).select("vec_id", "embedding").withColumn("n1", array_norm2(F.col("embedding"), EMB_SCALE))
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"), F.col("n1").alias("qn")
     )
@@ -1658,7 +1657,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "embedding",
             "n1",
-            (array_dot(F.col("embedding"), F.col("qe"), _EMB_SCALE) / F.sqrt(F.col("n1") * F.col("qn"))).alias("rel"),
+            (array_dot(F.col("embedding"), F.col("qe"), EMB_SCALE) / F.sqrt(F.col("n1") * F.col("qn"))).alias("rel"),
         )
         .localCheckpoint()
     )
@@ -1694,7 +1693,7 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         sim_new = (
-            array_dot(F.col("c.embedding"), F.col("s.embedding"), _EMB_SCALE)
+            array_dot(F.col("c.embedding"), F.col("s.embedding"), EMB_SCALE)
             / F.sqrt(F.col("c.n1") * F.col("s.n1"))
         )
         fold = (
@@ -1739,7 +1738,7 @@ def _mmr_sql() -> str:
     lam = "CAST(0.5 AS DOUBLE)"
     parts = [f"""
 rel0 AS MATERIALIZED (
-  SELECT a.vec_id, {sql_dsum('a.x * q.x', _EMB_SCALE)} AS dot
+  SELECT a.vec_id, {sql_dsum('a.x * q.x', EMB_SCALE)} AS dot
   FROM ex a JOIN ex q ON q.vec_id = 0 AND q.pos = a.pos
   WHERE a.vec_id <> 0 GROUP BY a.vec_id
 ),
@@ -1755,7 +1754,7 @@ sel1 AS MATERIALIZED (SELECT vec_id FROM s1)"""]
         prev = i - 1
         parts.append(f"""
 p{i} AS MATERIALIZED (
-  SELECT a.vec_id, s.vec_id AS sid, {sql_dsum('a.x * b.x', _EMB_SCALE)} AS dot
+  SELECT a.vec_id, s.vec_id AS sid, {sql_dsum('a.x * b.x', EMB_SCALE)} AS dot
   FROM ex a JOIN sel{prev} s ON TRUE JOIN ex b ON b.vec_id = s.vec_id AND b.pos = a.pos
   WHERE a.vec_id <> 0 AND a.vec_id NOT IN (SELECT vec_id FROM sel{prev})
   GROUP BY a.vec_id, s.vec_id
@@ -1778,7 +1777,7 @@ sel{i} AS MATERIALIZED (SELECT vec_id FROM sel{prev} UNION ALL SELECT vec_id FRO
     return (
         "WITH " + _EX_CTE.replace("ex AS (", "ex AS MATERIALIZED (", 1) + """,
 norms AS MATERIALIZED (
-  SELECT vec_id, """ + sql_dsum("x * x", _EMB_SCALE) + """ AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, """ + sql_dsum("x * x", EMB_SCALE) + """ AS n1 FROM ex GROUP BY vec_id
 ),""" + ",".join(parts) + "\n" + union
     )
 
@@ -1817,7 +1816,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = (
         fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
         .select("vec_id", "embedding")
-        .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
+        .withColumn("n1", array_norm2(F.col("embedding"), EMB_SCALE))
         .localCheckpoint()
     )
     seed = emb.filter(F.col("vec_id") == 0)
@@ -1831,7 +1830,7 @@ def kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = (
         F.col("c.n1")
         + F.col("s.n1")
-        - F.lit(2.0) * array_dot(F.col("c.embedding"), F.col("s.embedding"), _EMB_SCALE)
+        - F.lit(2.0) * array_dot(F.col("c.embedding"), F.col("s.embedding"), EMB_SCALE)
     )
     def pick_side(df):
         # the 1-row build side; qualified as "s" so d2's s.* refs bind
@@ -1887,7 +1886,7 @@ def _kcenter_sql() -> str:
         prev = i - 1
         parts.append(f"""
 kp{i} AS MATERIALIZED (
-  SELECT a.vec_id, s.vec_id AS sid, {sql_dsum('a.x * b.x', _EMB_SCALE)} AS dot
+  SELECT a.vec_id, s.vec_id AS sid, {sql_dsum('a.x * b.x', EMB_SCALE)} AS dot
   FROM ex a JOIN sel{prev} s ON TRUE
        JOIN ex b ON b.vec_id = s.vec_id AND b.pos = a.pos
   WHERE a.vec_id NOT IN (SELECT vec_id FROM sel{prev})
@@ -1912,7 +1911,7 @@ sel{i} AS (SELECT vec_id FROM sel{prev} UNION ALL SELECT vec_id FROM ks{i})""")
     return (
         "WITH " + _EX_CTE.replace("ex AS (", "ex AS MATERIALIZED (", 1) + """,
 norms AS MATERIALIZED (
-  SELECT vec_id, """ + sql_dsum("x * x", _EMB_SCALE) + """ AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, """ + sql_dsum("x * x", EMB_SCALE) + """ AS n1 FROM ex GROUP BY vec_id
 ),""" + ",".join(parts) + f"""
 SELECT 1 AS rank, vec_id, CAST(NULL AS DOUBLE) AS min_dist2
 FROM embeddings WHERE vec_id = 0
@@ -2183,7 +2182,7 @@ def _ranked_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = (
             fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
             .select("vec_id", "embedding", "label")
-            .withColumn("n1", array_norm2(F.col("embedding"), _EMB_SCALE))
+            .withColumn("n1", array_norm2(F.col("embedding"), EMB_SCALE))
         )
         q = emb.filter(F.col("vec_id") % _MRR_QMOD == 0).select(
             F.col("vec_id").alias("qid"),
@@ -2195,7 +2194,7 @@ def _ranked_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.broadcast(q), F.col("vec_id") != F.col("qid")
         ).withColumn(
             "sim",
-            array_dot(F.col("embedding"), F.col("qe"), _EMB_SCALE)
+            array_dot(F.col("embedding"), F.col("qe"), EMB_SCALE)
             / F.sqrt(F.col("n1") * F.col("qn1")),
         )
         w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
@@ -2251,14 +2250,14 @@ def retrieval_mrr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RANKED_EVAL_CTES = f"""{_EX_CTE},
 norms AS MATERIALIZED (
-  SELECT vec_id, {sql_dsum("x * x", _EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
+  SELECT vec_id, {sql_dsum("x * x", EMB_SCALE)} AS n1 FROM ex GROUP BY vec_id
 ),
 q AS MATERIALIZED (
   SELECT vec_id AS qid, label AS qlabel
   FROM embeddings WHERE vec_id % {_MRR_QMOD} = 0
 ),
 dots AS MATERIALIZED (
-  SELECT a.vec_id, s.qid, {sql_dsum("a.x * b.x", _EMB_SCALE)} AS dot
+  SELECT a.vec_id, s.qid, {sql_dsum("a.x * b.x", EMB_SCALE)} AS dot
   FROM ex a JOIN q s ON a.vec_id <> s.qid
        JOIN ex b ON b.vec_id = s.qid AND b.pos = a.pos
   GROUP BY a.vec_id, s.qid

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
-from trx_spark.exact import dfinal, fint, sql_dsum
+from trx_spark.exact import dfinal, fint, sql_dfinal, sql_dsum, sql_fint
 from trx_spark.queries.relational import _PRICING_SQL
 from trx_spark.streaming import store
 from trx_spark.streaming.incremental import run_catchup
@@ -535,8 +535,8 @@ def streaming_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``applyInPandasWithState`` (streaming/stateful.py), availableNow
     replay of the events parquet.
 
-    Exactness: the value is fed FIXED-POINT (floor(value*1e6) as an
-    integer-valued double), so the running float sum is exact while
+    Exactness: the value is fed FIXED-POINT (``exact.fint``, floor(value·1e6),
+    as an integer-valued double), so the running float sum is exact while
     |sum| < 2^53 and order-independent — after draining, the final
     state EQUALS the batch GROUP BY, giving the stateful path a full
     DuckDB oracle. Cross-batch accumulation is pinned separately in
@@ -557,7 +557,7 @@ def streaming_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         return running_key_stats(
             stream.select(
                 F.col("event_type").alias("k"),
-                F.floor(F.col("value") * 1e6).cast("double").alias("v"),
+                fint(F.col("value")).cast("double").alias("v"),
             ),
             key="k",
             value="v",
@@ -586,9 +586,9 @@ def streaming_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("k").alias("event_type"),
             "n",
-            (F.col("total") / F.lit(1e6)).alias("sum_value"),
-            (F.col("vmin") / F.lit(1e6)).alias("min_value"),
-            (F.col("vmax") / F.lit(1e6)).alias("max_value"),
+            dfinal(F.col("total")).alias("sum_value"),
+            dfinal(F.col("vmin")).alias("min_value"),
+            dfinal(F.col("vmax")).alias("max_value"),
         )
     )
 
@@ -597,10 +597,8 @@ _RUNNING_STATS_SQL = f"""
 SELECT event_type,
        CAST(COUNT(value) AS BIGINT) AS n,
        {sql_dsum('value')} AS sum_value,
-       CAST(MIN(CAST(FLOOR(value * 1e6) AS BIGINT)) AS DOUBLE) / 1e6
-         AS min_value,
-       CAST(MAX(CAST(FLOOR(value * 1e6) AS BIGINT)) AS DOUBLE) / 1e6
-         AS max_value
+       {sql_dfinal(f"MIN({sql_fint('value')})")} AS min_value,
+       {sql_dfinal(f"MAX({sql_fint('value')})")} AS max_value
 FROM events GROUP BY event_type
 """
 

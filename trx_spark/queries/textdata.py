@@ -19,7 +19,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
-from trx_spark.exact import dlit_array, dsum, sql_array_dot, sql_array_norm2, sql_dsum
+from trx_spark.exact import (
+    EMB_SCALE,
+    dlit_array,
+    dsum,
+    sql_array_dot,
+    sql_array_norm2,
+    sql_dsum,
+)
 from trx_spark.tables import fan_out_small_scan, load_table
 
 logger = logging.getLogger(__name__)
@@ -941,7 +948,6 @@ WHERE len(regexp_extract_all(text, '{_TOKEN_RE}')) > 0
 # ---------------------------------------------------------------------
 
 _TOP_K = 10
-_EMB_SCALE = 1e12
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -966,8 +972,8 @@ WITH ex AS (
 q0 AS (SELECT pos, x AS y FROM ex WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM ex e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -1170,8 +1176,8 @@ ex AS (SELECT e.* FROM ex0 e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex0 WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM ex e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),
@@ -1244,10 +1250,10 @@ def _exact_topk_within(
     if cand is not None:
         emb = emb.join(cand, "vec_id", "left_semi")
     if q0 is not None:
-        dot_sql = sql_array_dot("embedding", dlit_array(q0), _EMB_SCALE)
+        dot_sql = sql_array_dot("embedding", dlit_array(q0), EMB_SCALE)
     else:  # no query vector: dot is undefined -> every cos_sim NULL
         dot_sql = "CAST(NULL AS DOUBLE)"
-    n1_sql = sql_array_norm2("embedding", _EMB_SCALE)
+    n1_sql = sql_array_norm2("embedding", EMB_SCALE)
     per = emb.select(
         "vec_id",
         F.expr(dot_sql).alias("dot"),
@@ -1341,8 +1347,8 @@ ex AS (SELECT e.* FROM ex0 e WHERE e.vec_id IN (SELECT vec_id FROM cand)),
 q0 AS (SELECT pos, x AS y FROM ex0 WHERE vec_id = 0),
 per AS (
   SELECT e.vec_id,
-    {sql_dsum('e.x * q.y', _EMB_SCALE)} AS dot,
-    {sql_dsum('e.x * e.x', _EMB_SCALE)} AS n1
+    {sql_dsum('e.x * q.y', EMB_SCALE)} AS dot,
+    {sql_dsum('e.x * e.x', EMB_SCALE)} AS n1
   FROM ex e JOIN q0 q USING (pos) GROUP BY e.vec_id
 ),
 nq AS (SELECT n1 AS nq FROM per WHERE vec_id = 0),

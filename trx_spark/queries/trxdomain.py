@@ -220,16 +220,18 @@ def diffs_plus_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     trx/dataReduction.py:199 ``diffs_plus_ref = diffs + ref_average``,
     re-used after filtering at trx/filters.py:47 and written by the S11
     sink as diff_plus_ref_av_matrix, trx/dataReduction.py:256-257).
-    The ref average is one row per run → broadcast join onto the
-    per-scan-point means, no reshuffle."""
-    d = _diffs(spark, sf_dir)
+    The ref average is a full-frame window column over the run
+    partitions that the scan points carry to the add-back — no join."""
+    d = reduction.ref_average(
+        _diffs(spark, sf_dir), group=["run"], is_ref="is_ref", value="i", exact=True
+    )
     sp = reduction.average_scan_points(
         d, scan="event_type", group=["run"], idx="idx", is_ref="is_ref", diff="diff",
-        exact=True,
-    ).select("run", "event_type", "mean_diff")
-    return reduction.diffs_plus_ref(
-        sp, d, group=["run"], is_ref="is_ref", value="i", diff="mean_diff", exact=True
-    ).select("run", "event_type", "mean_diff", "ref_avg", "diff_plus_ref")
+        exact=True, carry=["ref_avg"],
+    )
+    return reduction.diffs_plus_ref(sp).select(
+        "run", "event_type", "mean_diff", "ref_avg", "diff_plus_ref"
+    )
 
 
 _DPR_SQL = f"""

@@ -9,8 +9,8 @@ ring-current filter and dark-current subtraction
 
 Spark-first shape: one tiny driver-side preamble scan finds the header
 (the reference reads the whole file into memory — we read only the
-comment prefix), then a schema-explicit ``spark.read.csv`` handles the
-data block distributed; all converters are Column expressions.
+comment prefix), then the fixed-schema text reader tokenizes the data
+block distributed; all converters are Column expressions.
 """
 
 from __future__ import annotations
@@ -66,43 +66,42 @@ def read_log_file(
     ``converters=`` dict of per-column functions
     (trx/utils/files.py:31-82 ``readLogFile``), as Column expressions so
     the conversion runs JVM-side in the scan projection.
-    ``skip_first``/``last`` slice the ordered data block via a
-    row_number window (trx/utils/files.py:59 ``data[skip_first:last]``).
+
+    One path for every log: the fixed-schema text reader (no schema
+    inference job) with genfromtxt's whitespace rule (``ws_parts``: tabs
+    and runs of spaces are one separator), one string column per header
+    name. ``skip_first``/``last`` slice the ordered data block via a
+    row_number window (trx/utils/files.py:59 ``data[skip_first:last]``);
+    an unsliced read plans no window, since that window is a
+    single-partition shuffle wherever the log is used.
     """
     names = read_header_names(path)
-    df = (
-        spark.read.option("comment", "#")
-        .option("sep", " ")
-        .option("ignoreLeadingWhiteSpace", True)
-        .option("ignoreTrailingWhiteSpace", True)
-        .csv(path)
+    rows = spark.read.text(path).filter(
+        ~F.col("value").startswith("#") & F.col("value").rlike(r"\S")
     )
-    # collapse multi-space separation: read as single text column instead
-    # when the naive split disagrees with the header arity
-    if len(df.columns) != len(names):
-        text = spark.read.text(path)
-        rows = text.filter(~F.col("value").startswith("#")).filter(F.trim("value") != "")
-        parts = ws_parts("value")
-        df = rows.select(*[parts.getItem(i).alias(n) for i, n in enumerate(names)])
-    else:
-        df = df.toDF(*names)
-    # Deterministic file-line order even when the scan splits the file:
-    # order splits by their byte offset (`_metadata.file_block_start`),
-    # then rows within a split by monotonically_increasing_id (which IS
-    # monotonic in read order inside one split — it is only across
-    # partitions that it says nothing about position). A bare
-    # mid-ordering would renumber lines arbitrarily on a multi-split
-    # read.
-    w = Window.orderBy(
-        F.col("_metadata.file_path"),
-        F.col("_metadata.file_block_start"),
-        F.monotonically_increasing_id(),
+    if skip_first or last is not None:
+        # Deterministic file-line order even when the scan splits the
+        # file: order splits by their byte offset
+        # (`_metadata.file_block_start`), then rows within a split by
+        # monotonically_increasing_id (which IS monotonic in read order
+        # inside one split — it is only across partitions that it says
+        # nothing about position). A bare mid-ordering would renumber
+        # lines arbitrarily on a multi-split read.
+        w = Window.orderBy(
+            F.col("_metadata.file_path"),
+            F.col("_metadata.file_block_start"),
+            F.monotonically_increasing_id(),
+        )
+        rows = rows.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") > skip_first
+        )
+        if last is not None:
+            rows = rows.filter(F.col("_rn") <= last)
+    # try_element_at: a short line gives NULL fields under ANSI too
+    parts = ws_parts("value")
+    df = rows.select(
+        *[F.try_element_at(parts, F.lit(i + 1)).alias(n) for i, n in enumerate(names)]
     )
-    df = df.withColumn("_rn", F.row_number().over(w))
-    df = df.filter(F.col("_rn") > skip_first)
-    if last is not None:
-        df = df.filter(F.col("_rn") <= last)
-    df = df.drop("_rn")
     for name, conv in (converters or {}).items():
         if name not in df.columns:
             raise ValueError(f"converter for unknown column {name!r}")
