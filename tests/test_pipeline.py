@@ -126,6 +126,17 @@ def test_data_reduction_end_to_end(spark, domain):
     )
 
 
+def test_data_reduction_rejects_a_bank_without_q_bin(spark, domain):
+    """A scalar bank (one value per file, no q axis) is not a curve bank:
+    the reduction raises instead of reducing it under other rules."""
+    _, _, log = domain
+    scalars = spark.createDataFrame(
+        [(f"img_{i:04d}", 50.0 + i) for i in range(N_FILES)], "file string, i double"
+    )
+    with pytest.raises(ValueError, match="q_bin"):
+        data_reduction(scalars, log, ReductionConfig(reference="min", chi2_threshold=None))
+
+
 def test_per_delay_sink_with_diff_plus_ref(spark, domain, tmp_path):
     """S11: the per-delay sink persists the diff, err AND diff_plus_ref
     matrices the reference always writes (trx/dataReduction.py:256-257

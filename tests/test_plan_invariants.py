@@ -287,7 +287,7 @@ def test_global_stats_are_aggregates_not_windows(spark, sf_dir):
     regression to percentile().over(partitionBy(lit(1))) or a count
     window fails here)."""
     from trx_spark.queries.similarity import semantic_dedup
-    from trx_spark.queries.trxdomain2 import filter_outlier_curves
+    from trx_spark.queries.trxdomain import filter_outlier_curves
 
     for name, fn in [
         ("filter_outlier_curves", filter_outlier_curves),

@@ -321,6 +321,18 @@ def _wsum(col: Column, w, exact: bool) -> Column:
     return wdsum(col, w) if exact else F.sum(col).over(w)
 
 
+def _noise_and_mean_used(d: Column, use: Column, w, exact: bool) -> tuple[Column, Column]:
+    """``(noise, mean_used)`` of ``d`` over the full-frame window ``w``:
+    the population σ from the first two moments of every row, and the
+    mean over the rows the W2 flag ``use`` keeps."""
+    n = F.count(d).over(w)
+    s1 = _wsum(d, w, exact)
+    s2 = _wsum(d * d, w, exact)
+    noise = F.sqrt(F.greatest((s2 - s1 * s1 / n) / n, F.lit(0.0)))
+    used = F.when(use, d)
+    return noise, _wsum(used, w, exact) / F.count(used).over(w)
+
+
 def chi2_0_per_shot(
     df: DataFrame,
     *,
@@ -344,12 +356,7 @@ def chi2_0_per_shot(
 
     d = F.col(diff)
     enriched = _mark_subsample(df, keys=keys, ref_keys=group, idx=idx, is_ref=is_ref)
-    n = F.count(d).over(w_full)
-    s1 = _wsum(d, w_full, exact)
-    s2 = _wsum(d * d, w_full, exact)
-    noise = F.sqrt(F.greatest((s2 - s1 * s1 / n) / n, F.lit(0.0)))
-    used = F.when(F.col("_use"), d)
-    mean_used = _wsum(used, w_full, exact) / F.count(used).over(w_full)
+    noise, mean_used = _noise_and_mean_used(d, F.col("_use"), w_full, exact)
     enriched = enriched.withColumns({"_noise": noise, "_mean_used": mean_used})
     z = (d - F.col("_mean_used")) / F.col("_noise")
     # z·z, not pow(z,2): pow is not guaranteed correctly rounded across
@@ -394,12 +401,7 @@ def chi2_0_per_shot_curves(
 
     d = F.col(diff)
     enriched = _mark_subsample(df, keys=keys, ref_keys=[*group, q], idx=idx, is_ref=is_ref)
-    n = F.count(d).over(w_full)
-    s1 = _wsum(d, w_full, exact)
-    s2 = _wsum(d * d, w_full, exact)
-    noise = F.sqrt(F.greatest((s2 - s1 * s1 / n) / n, F.lit(0.0)))
-    used = F.when(F.col("_use"), d)
-    mean_used = _wsum(used, w_full, exact) / F.count(used).over(w_full)
+    noise, mean_used = _noise_and_mean_used(d, F.col("_use"), w_full, exact)
     z = (d - mean_used) / noise
     per_row = enriched.withColumn("_z2", z * z)
     chi2_sum = dsum(F.col("_z2")) if exact else F.sum("_z2")

@@ -8,7 +8,7 @@ E1 (images → curve bank): ``integrate_folder``
     groupBy(file, q_bin) weighted mean → 2θ axes → monitor norm.
 E2 (curves → time-resolved diffs): ``data_reduction``
     curves ⨝ log (J1) → reference pick (P9) → as-of interpolation (J2)
-    → diff/ratio → per-delay aggregation + chi2 (A4-A7) → chi2 filter
+    → diff → per-delay aggregation + chi2 (A4-A7) → chi2 filter
     (F1) → re-aggregated filtered view (F6).
 
 Everything stays one lazy DAG until a sink is invoked — Catalyst sees
@@ -37,18 +37,6 @@ class IntegrationConfig:
     dezinger_factor: float = 1.5
     monitor_q_window: tuple[float, float] | None = None
     mask: object | None = None  # Column predicate, True = excluded
-
-    def as_dict(self) -> dict:
-        return {
-            "q_min": self.q_min,
-            "q_max": self.q_max,
-            "n_bins": self.n_bins,
-            "dark": self.dark,
-            "dezinger_percentile": self.dezinger_percentile,
-            "dezinger_factor": self.dezinger_factor,
-            "monitor_q_window": self.monitor_q_window,
-            "mask": str(self.mask),
-        }
 
 
 def integrate_folder(
@@ -102,10 +90,7 @@ class ReductionConfig:
     (trx/dataReduction.py:88-243)."""
 
     reference: str | float = "min"  # 'min' | 'max' | a delay value
-    use_ratio: bool = False
     chi2_threshold: float | str | None = "auto"
-    q_norm_window: tuple[float, float] | None = None
-    lpower: str | None = None
     extra_group: list[str] = field(default_factory=list)  # e.g. ['angle'] split
 
 
@@ -121,10 +106,12 @@ def data_reduction(
     stats + chi2 → non-destructive chi2 filter → filtered re-aggregation.
 
     Returns {'shots', 'scan', 'scan_filtered'} lazy DataFrames
-    (trx/id9.py:226-303 doFolder_dataRed + filters.applyFilters). For
-    curve data the scan views are keyed by (group, q_bin, q, delay) when
-    the curves carry ``q``, so a sink reads the physical q axis off the
-    scan itself; both views carry ``ref_avg`` and ``diff_plus_ref``.
+    (trx/id9.py:226-303 doFolder_dataRed + filters.applyFilters).
+    ``curves`` is a curve bank, one row per (file, q_bin); a bank
+    without ``q_bin`` raises ``ValueError``. The scan views are keyed by
+    (group, q_bin, q, delay) when the curves carry ``q``, so a sink
+    reads the physical q axis off the scan itself; both views carry
+    ``ref_avg`` and ``diff_plus_ref``.
     ``log`` is one row per image — small per run but proportional to
     the data volume across runs, so the join carries no broadcast hint
     (AQE broadcasts a single run's log, shuffles a 100 TB batch).
@@ -141,6 +128,8 @@ def data_reduction(
     add-back included — no summary is aggregated apart and joined back,
     which would re-run the whole upstream plan.
     """
+    if "q_bin" not in curves.columns:
+        raise ValueError("data_reduction takes a curve bank: the curves carry no q_bin column")
     # Multi-run batches: per-run file names COLLIDE (img_0001 exists in
     # every run), so any extra_group key present on BOTH sides joins the
     # frames alongside the file name — joining on file alone would match
@@ -172,88 +161,52 @@ def data_reduction(
         is_ref = F.round(F.col(delay), 12) == F.round(F.lit(float(cfg.reference)), 12)
     shots = joined.withColumns({"_idx": F.dense_rank().over(w), "is_ref": is_ref})
 
-    if cfg.q_norm_window is not None:
-        # the monitor window partitions by [group, file] — file alone
-        # would pool colliding per-run file names into one median — and
-        # the err column rescales with the data (dataReduction.py:240)
-        shots = azav.monitor_normalize(
-            shots,
-            image=[*group, file],
-            q="q",
-            intensity="i",
-            err="err" if "err" in shots.columns else None,
-            q_window=cfg.q_norm_window,
-            use_median=True,
-        )
-
-    q_group = [*group, "q_bin"] if "q_bin" in shots.columns else group
+    q_group = [*group, "q_bin"]
     shots = reduction.time_resolved_diff(
-        shots,
-        group=q_group,
-        idx="_idx",
-        is_ref="is_ref",
-        value="i",
-        use_ratio=cfg.use_ratio,
-        lpower=cfg.lpower,
+        shots, group=q_group, idx="_idx", is_ref="is_ref", value="i"
     )
     # A9: the reference average rides the interpolation's partitions as a
     # full-frame column; the scan points carry it to the add-back. Taken
     # BEFORE the chi2 filter: the reference's applyFilters (filters.py:47)
     # reuses the unfiltered data.ref_average.
     shots = reduction.ref_average(shots, group=q_group, is_ref="is_ref", value="i")
-    n_q = 1
     thr = None if cfg.chi2_threshold in ("auto", None) else float(cfg.chi2_threshold)
-    is_curve = "q_bin" in shots.columns
-    if is_curve:
-        # Curve data: ONE chi2_0 per shot, summed over the q axis
-        # (trx/dataReduction.py:187-193 — the sum at :190 runs over q), and
-        # chi2Filter excludes WHOLE shots (trx/filters.py:103-120), never
-        # individual (shot, q) points.
-        shot_scores = reduction.chi2_0_per_shot_curves(
-            shots, shot=file, scan=delay, q="q_bin", group=group,
-            idx="_idx", is_ref="is_ref", diff="diff",
-        )
-        if cfg.chi2_threshold is not None:
-            shot_scores = filters.chi2_filter(
-                shot_scores, chi2="chi2_0", threshold=thr, group=group
-            )
-        else:
-            shot_scores = shot_scores.withColumns(
-                {"chi2_threshold": F.lit(None).cast("double"), "chi2_excluded": F.lit(False)}
-            )
-        # one row per shot, joined back onto the exploded (shot, q) rows
-        # (keyed by the full [group, shot, scan] grain — shot ids are only
-        # unique within a run); shots subsampled away by the every-second-ref
-        # rule are never scored (NaN in the reference) and survive the filter.
-        # No broadcast hint: shot_scores scales with the shot count, AQE
-        # broadcasts per-run sizes and shuffles a multi-run batch.
-        per_shot = shots.join(
-            shot_scores, on=[*group, file, delay], how="left"
-        ).withColumn("chi2_excluded", F.coalesce(F.col("chi2_excluded"), F.lit(False)))
-        surviving = per_shot.filter(~F.col("chi2_excluded")).drop(
-            "chi2_0", "n_q", "chi2_threshold", "chi2_excluded"
+    # ONE chi2_0 per shot, summed over the q axis (trx/dataReduction.py:
+    # 187-193 — the sum at :190 runs over q), and chi2Filter excludes
+    # WHOLE shots (trx/filters.py:103-120), never individual (shot, q)
+    # points.
+    shot_scores = reduction.chi2_0_per_shot_curves(
+        shots, shot=file, scan=delay, q="q_bin", group=group,
+        idx="_idx", is_ref="is_ref", diff="diff",
+    )
+    if cfg.chi2_threshold is not None:
+        shot_scores = filters.chi2_filter(
+            shot_scores, chi2="chi2_0", threshold=thr, group=group
         )
     else:
-        per_shot = reduction.chi2_0_per_shot(
-            shots, scan=delay, group=q_group, idx="_idx", is_ref="is_ref", diff="diff", n_q=n_q
+        shot_scores = shot_scores.withColumns(
+            {"chi2_threshold": F.lit(None).cast("double"), "chi2_excluded": F.lit(False)}
         )
-        if cfg.chi2_threshold is not None:
-            per_shot = filters.chi2_filter(
-                per_shot, chi2="chi2_0", threshold=thr, group=group
-            )
-        else:
-            per_shot = per_shot.withColumn("chi2_excluded", F.lit(False))
-        surviving = per_shot.filter(
-            ~F.coalesce(F.col("chi2_excluded"), F.lit(False))
-        ).drop("chi2_0", "noise", "mean_diff", "used_in_avg", "chi2_threshold", "chi2_excluded")
+    # one row per shot, joined back onto the exploded (shot, q) rows
+    # (keyed by the full [group, shot, scan] grain — shot ids are only
+    # unique within a run); shots subsampled away by the every-second-ref
+    # rule are never scored (NaN in the reference) and survive the filter.
+    # No broadcast hint: shot_scores scales with the shot count, AQE
+    # broadcasts per-run sizes and shuffles a multi-run batch.
+    per_shot = shots.join(
+        shot_scores, on=[*group, file, delay], how="left"
+    ).withColumn("chi2_excluded", F.coalesce(F.col("chi2_excluded"), F.lit(False)))
+    surviving = per_shot.filter(~F.col("chi2_excluded")).drop(
+        "chi2_0", "n_q", "chi2_threshold", "chi2_excluded"
+    )
 
     # q rides the scan points: in a curve bank q is the bin centre, a
     # function of q_bin, so the groups do not change and a sink needs no
     # second pass over the bank for the (q_bin, q) map
-    scan_group = [*q_group, "q"] if is_curve and "q" in shots.columns else q_group
+    scan_group = [*q_group, "q"] if "q" in shots.columns else q_group
     avg = dict(
         scan=delay, group=scan_group, idx="_idx", is_ref="is_ref", diff="diff",
-        n_q=n_q, carry=["ref_avg"],
+        carry=["ref_avg"],
     )
     # F6 applyFilters: re-run the aggregation over surviving shots only —
     # in relational form just a WHERE over the provenance column

@@ -337,7 +337,7 @@ a1{sfx} AS (
 # kmeans_cells / ann_ivf_trained_topk / semantic_dedup all train the
 # SAME coarse codebook (lloyd_centroids, k=_N_CELLS, one update), and
 # pq_codes / ann_pq_topk the same grouped PQ codebooks — memoize the
-# localCheckpoint'ed results, like the trxdomain3 curve bank. The codebook is k×dim rows (tiny); what the cache saves
+# localCheckpoint'ed results, like the trxdomain curve bank. The codebook is k×dim rows (tiny); what the cache saves
 # is the training passes over the corpus.
 def _trained_cents(spark: SparkSession, sf_dir: str) -> list:
     """The Lloyd-trained coarse codebook as a collected literal list

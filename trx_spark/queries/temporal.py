@@ -539,7 +539,7 @@ def concurrent_sessions_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (day, peak_concurrent) — day = epoch-day index, one row per
     day that has at least one session start."""
-    from trx_spark.queries.trxdomain2 import sessionize_events
+    from trx_spark.queries.relational import sessionize_events
 
     sess = sessionize_events(spark, sf_dir)
     starts = sess.select(

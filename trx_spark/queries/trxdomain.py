@@ -1,11 +1,23 @@
-"""trx-domain operators exercised on the driver's generic tables.
+"""The E2 reduction family (trx/dataReduction.py:15-205) on the driver's
+generic tables: the as-of reference ladder (J2), the
+every-second-reference rule (W2), the scan-point averages with χ²
+(A4-A9) and the χ²/MAD/curve outlier filters (F1-F3).
 
-The `events` table plays the role of the experiment: `ts` order is the
-acquisition index, `event_type = 'view'` rows are the laser-off
-references, `value` is the (scalar) signal, `event_type` is the scan
-point. `lineitem` plays the pixel table for the binned integration
-(`l_suppkey` = image, `l_extendedprice` = radial coordinate,
-`l_quantity` = intensity, `1 + l_discount` = pixel weight).
+Two experiment shapes carry it:
+
+- Events (scalar shots): ``ts`` order is the acquisition index,
+  ``event_type = 'view'`` rows are the laser-off references, ``value``
+  is the signal, ``event_type`` is the scan point.
+- Curves (the reference's true ``data[n_img, nQ]`` shape): each order
+  with ≥4 line items is one 4-point curve (file = o_orderkey, q_idx =
+  1..4 by deterministic line ordering, i = l_extendedprice); the scan
+  point is o_orderpriority with '1-URGENT' as the reference set;
+  acquisition order is the orderkey rank. Per-shot χ² sums over the q
+  axis (the ``nansum(axis=-1)`` at :190 divided by nQ).
+
+The oracles build the ladder and the W2 marker from one SQL builder
+each (:func:`_asof_sql`, :func:`_w2_sql`), the DuckDB twins of
+:func:`reduction.interp_references` and ``reduction._mark_subsample``.
 """
 
 from __future__ import annotations
@@ -14,9 +26,87 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from trx_spark.cache import memo
-from trx_spark.exact import sql_davg, sql_dstddev_pop, sql_dsum, sql_wdsum
-from trx_spark.operators import azav, cell, filters, reduction
+from trx_spark.exact import davg, dsum, sql_davg, sql_dstddev_pop, sql_dsum
+from trx_spark.operators import filters, reduction
 from trx_spark.tables import load_table
+
+# ---------------------------------------------------------------------
+# Oracle builders: the reference ladder (J2) and the W2 rule
+# ---------------------------------------------------------------------
+
+
+def _asof_sql(src: str, keys: list[str]) -> str:
+    """CTE text ``nb, edges, interp, diffs``: the as-of reference
+    ladder over the shots in ``src`` (columns ``keys``, ``idx``,
+    ``is_ref``, ``i``), one window partition per ``keys`` value.
+    ``interp`` adds ``iref``, ``diffs`` adds ``diff = i - iref``."""
+    k = ", ".join(keys)
+    return f"""nb AS (
+  SELECT *,
+    last_value(CASE WHEN is_ref THEN idx END IGNORE NULLS) OVER w_prev AS prev_ref_idx,
+    last_value(CASE WHEN is_ref THEN i END IGNORE NULLS) OVER w_prev AS prev_ref_val,
+    first_value(CASE WHEN is_ref THEN idx END IGNORE NULLS) OVER w_next AS next_ref_idx,
+    first_value(CASE WHEN is_ref THEN i END IGNORE NULLS) OVER w_next AS next_ref_val,
+    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END)
+      OVER (PARTITION BY {k} ORDER BY idx
+            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ref_rank
+  FROM {src}
+  WINDOW
+    w_prev AS (PARTITION BY {k} ORDER BY idx
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+    w_next AS (PARTITION BY {k} ORDER BY idx
+               ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
+),
+edges AS (
+  SELECT {k}, count(*) AS n_refs,
+         max(CASE WHEN rn = 1 THEN i END) AS first_ref_val,
+         max(CASE WHEN rn = 2 THEN i END) AS second_ref_val,
+         max(CASE WHEN rn = nr THEN i END) AS last_ref_val,
+         max(CASE WHEN rn = nr - 1 THEN i END) AS secondlast_ref_val
+  FROM (SELECT {k}, i,
+               row_number() OVER (PARTITION BY {k} ORDER BY idx) AS rn,
+               count(*) OVER (PARTITION BY {k}) AS nr
+        FROM {src} WHERE is_ref) t
+  GROUP BY {k}
+),
+interp AS (
+  SELECT nb.*,
+    CASE
+      WHEN e.n_refs = 1 THEN e.first_ref_val
+      WHEN nb.is_ref THEN CASE
+           WHEN nb.ref_rank = 1 THEN e.second_ref_val
+           WHEN nb.ref_rank = e.n_refs THEN e.secondlast_ref_val
+           WHEN nb.ref_rank = e.n_refs - 1 THEN nb.i
+           ELSE nb.prev_ref_val
+                + (nb.next_ref_val - nb.prev_ref_val) / (nb.next_ref_idx - nb.prev_ref_idx)
+                  * (nb.idx - nb.prev_ref_idx) END
+      WHEN nb.prev_ref_idx IS NULL THEN e.first_ref_val
+      WHEN nb.next_ref_idx IS NULL THEN e.last_ref_val
+      ELSE nb.prev_ref_val
+           + (nb.next_ref_val - nb.prev_ref_val) / (nb.next_ref_idx - nb.prev_ref_idx)
+             * (nb.idx - nb.prev_ref_idx)
+    END AS iref
+  FROM nb LEFT JOIN edges e USING ({k})
+),
+diffs AS (SELECT *, i - iref AS diff FROM interp)"""
+
+
+def _w2_sql(group: list[str], scan: str) -> str:
+    """CTE text ``marked, used`` over ``diffs``: ``use_row`` is false for
+    every second shot of a scan point whose shots are the whole
+    reference set of their ``group`` (trx/dataReduction.py:177)."""
+    g = ", ".join(group)
+    s = ", ".join([*group, scan])
+    return f"""marked AS (
+  SELECT *,
+    row_number() OVER (PARTITION BY {s} ORDER BY idx) AS rn,
+    min(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY {s}) AS all_ref,
+    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY {s}) AS sp_refs,
+    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY {g}) AS grp_refs
+  FROM diffs
+),
+used AS (SELECT *, (all_ref = 0 OR sp_refs <> grp_refs OR rn % 2 = 1) AS use_row FROM marked)"""
+
 
 # ---------------------------------------------------------------------
 # Shared events→shots base (Spark side) and its oracle CTE (DuckDB side)
@@ -27,15 +117,15 @@ from trx_spark.tables import load_table
 # time). Every window below partitions by run, so at 100 TB each run is
 # an independent window partition and nothing funnels through a single
 # task. (The natural-key variant — run = user_id — is exercised by
-# asof_interp_per_user in trxdomain2.py; a deliberately-global small
-# window survives in relational.slice_skip_first_last for coverage.)
+# asof_interp_per_user; a deliberately-global small window survives in
+# relational.slice_skip_first_last for coverage.)
 # ---------------------------------------------------------------------
 
-_N_RUNS = 16
+_EVENT_RUNS = 16
 
 
 def _events_shots(
-    spark: SparkSession, sf_dir: str, *, n_runs: int = _N_RUNS
+    spark: SparkSession, sf_dir: str, *, n_runs: int = _EVENT_RUNS
 ) -> DataFrame:
     # gate default matches the oracle CTE; a deployment sets n_runs ∝
     # stream volume (events per run ≈ one task's window-sort budget)
@@ -57,69 +147,19 @@ def _events_shots(
 
 _SHOTS_CTE = f"""
 base AS (
-  SELECT event_id, CAST(event_id % {_N_RUNS} AS BIGINT) AS run,
+  SELECT event_id, CAST(event_id % {_EVENT_RUNS} AS BIGINT) AS run,
          value AS i, (event_type = 'view') AS is_ref, event_type,
-         row_number() OVER (PARTITION BY event_id % {_N_RUNS} ORDER BY ts, event_id) AS idx
+         row_number() OVER (PARTITION BY event_id % {_EVENT_RUNS} ORDER BY ts, event_id) AS idx
   FROM events
 )"""
 
-_INTERP_CTE = (
-    _SHOTS_CTE
-    + """,
-nb AS (
-  SELECT *,
-    last_value(CASE WHEN is_ref THEN idx END IGNORE NULLS) OVER w_prev AS prev_ref_idx,
-    last_value(CASE WHEN is_ref THEN i END IGNORE NULLS) OVER w_prev AS prev_ref_val,
-    first_value(CASE WHEN is_ref THEN idx END IGNORE NULLS) OVER w_next AS next_ref_idx,
-    first_value(CASE WHEN is_ref THEN i END IGNORE NULLS) OVER w_next AS next_ref_val,
-    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END)
-      OVER (PARTITION BY run ORDER BY idx
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ref_rank
-  FROM base
-  WINDOW
-    w_prev AS (PARTITION BY run ORDER BY idx
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-    w_next AS (PARTITION BY run ORDER BY idx
-               ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING)
-),
-edges AS (
-  SELECT run, count(*) AS n_refs,
-         max(CASE WHEN rn = 1 THEN i END) AS first_ref_val,
-         max(CASE WHEN rn = 2 THEN i END) AS second_ref_val,
-         max(CASE WHEN rn = nr THEN i END) AS last_ref_val,
-         max(CASE WHEN rn = nr - 1 THEN i END) AS secondlast_ref_val
-  FROM (SELECT run, i, row_number() OVER (PARTITION BY run ORDER BY idx) AS rn,
-               count(*) OVER (PARTITION BY run) AS nr
-        FROM base WHERE is_ref) t
-  GROUP BY run
-),
-interp AS (
-  SELECT nb.*,
-    CASE
-      WHEN e.n_refs = 1 THEN e.first_ref_val
-      WHEN nb.is_ref THEN CASE
-           WHEN nb.ref_rank = 1 THEN e.second_ref_val
-           WHEN nb.ref_rank = e.n_refs THEN e.secondlast_ref_val
-           WHEN nb.ref_rank = e.n_refs - 1 THEN nb.i
-           ELSE nb.prev_ref_val
-                + (nb.next_ref_val - nb.prev_ref_val) / (nb.next_ref_idx - nb.prev_ref_idx)
-                  * (nb.idx - nb.prev_ref_idx) END
-      WHEN nb.prev_ref_idx IS NULL THEN e.first_ref_val
-      WHEN nb.next_ref_idx IS NULL THEN e.last_ref_val
-      ELSE nb.prev_ref_val
-           + (nb.next_ref_val - nb.prev_ref_val) / (nb.next_ref_idx - nb.prev_ref_idx)
-             * (nb.idx - nb.prev_ref_idx)
-    END AS iref
-  FROM nb LEFT JOIN edges e USING (run)
-),
-diffs AS (SELECT *, i - iref AS diff FROM interp)"""
-)
+_INTERP_CTE = _SHOTS_CTE + ",\n" + _asof_sql("base", ["run"])
 
 
 # asof_interp_refs / scanpoint_stats / diffs_plus_ref /
 # chi2_filter_auto all consume the SAME interpolated diff bank over the
 # events shots; memoize its localCheckpoint so one session builds it
-# once (same pattern as the trxdomain3 curve bank).
+# once (same pattern as the curve bank below).
 def _diffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return memo(
         "events_diff_bank",
@@ -149,6 +189,36 @@ WITH {_INTERP_CTE}
 SELECT event_id, run, idx, is_ref, i, iref, diff FROM diffs
 """
 
+
+def asof_interp_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Reference interpolation partitioned by user (run): the scale
+    path — every group is an independent window partition, so the
+    operator parallelizes across runs with no global sort."""
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
+    shots = ev.withColumn("idx", F.row_number().over(w).cast("long")).select(
+        "event_id",
+        "user_id",
+        F.col("value").alias("i"),
+        (F.col("event_type") == "view").alias("is_ref"),
+        "idx",
+    )
+    out = reduction.time_resolved_diff(
+        shots, group=["user_id"], idx="idx", is_ref="is_ref", value="i"
+    )
+    return out.select("event_id", "user_id", "idx", "is_ref", "i", "iref", "diff")
+
+
+_ASOF_USER_SQL = f"""
+WITH base AS (
+  SELECT event_id, user_id, value AS i, (event_type = 'view') AS is_ref,
+         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS idx
+  FROM events
+),
+{_asof_sql("base", ["user_id"])}
+SELECT event_id, user_id, idx, is_ref, i, iref, diff FROM diffs
+"""
+
 # ---------------------------------------------------------------------
 # A4-A7 / W2: scan-point averaging with chi2
 # ---------------------------------------------------------------------
@@ -176,17 +246,11 @@ def scanpoint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_EVENTS_W2 = _w2_sql(["run"], "event_type")
+
 _SCAN_SQL = f"""
 WITH {_INTERP_CTE},
-marked AS (
-  SELECT *,
-    row_number() OVER (PARTITION BY run, event_type ORDER BY idx) AS rn,
-    min(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run, event_type) AS all_ref,
-    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run, event_type) AS sp_refs,
-    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run) AS grp_refs
-  FROM diffs
-),
-used AS (SELECT *, (all_ref = 0 OR sp_refs <> grp_refs OR rn % 2 = 1) AS use_row FROM marked),
+{_EVENTS_W2},
 stats AS (
   SELECT run, event_type,
     CAST(count(*) AS BIGINT) AS n_shots,
@@ -236,15 +300,7 @@ def diffs_plus_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DPR_SQL = f"""
 WITH {_INTERP_CTE},
-marked AS (
-  SELECT *,
-    row_number() OVER (PARTITION BY run, event_type ORDER BY idx) AS rn,
-    min(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run, event_type) AS all_ref,
-    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run, event_type) AS sp_refs,
-    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run) AS grp_refs
-  FROM diffs
-),
-used AS (SELECT *, (all_ref = 0 OR sp_refs <> grp_refs OR rn % 2 = 1) AS use_row FROM marked),
+{_EVENTS_W2},
 stats AS (
   SELECT run, event_type,
     {sql_davg('CASE WHEN use_row THEN diff END')} AS mean_diff
@@ -256,6 +312,33 @@ ref AS (
 SELECT s.run, s.event_type, s.mean_diff, r.ref_avg,
        s.mean_diff + r.ref_avg AS diff_plus_ref
 FROM stats s JOIN ref r USING (run)
+"""
+
+# ---------------------------------------------------------------------
+# A8/A9: global average/median + reference average
+# ---------------------------------------------------------------------
+
+
+def global_curve_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global mean/median over all shots + reference-only mean
+    (SURVEY A8/A9; dataReduction.py:126-127,149)."""
+    ev = load_table(spark, sf_dir, "events")
+    is_ref = F.col("event_type") == "view"
+    return ev.agg(
+        davg(F.col("value")).alias("average"),
+        F.expr("percentile(value, 0.5)").alias("median"),
+        davg(F.when(is_ref, F.col("value"))).alias("ref_average"),
+        F.count(F.lit(1)).alias("n_shots"),
+    )
+
+
+_GLOBAL_STATS_SQL = f"""
+SELECT
+  {sql_davg('value')} AS average,
+  quantile_cont(value, 0.5)::DOUBLE AS median,
+  {sql_davg("CASE WHEN event_type = 'view' THEN value END")} AS ref_average,
+  CAST(COUNT(*) AS BIGINT) AS n_shots
+FROM events
 """
 
 # ---------------------------------------------------------------------
@@ -277,15 +360,7 @@ def chi2_filter_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CHI2_FILTER_SQL = f"""
 WITH {_INTERP_CTE},
-marked AS (
-  SELECT *,
-    row_number() OVER (PARTITION BY run, event_type ORDER BY idx) AS rn,
-    min(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run, event_type) AS all_ref,
-    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run, event_type) AS sp_refs,
-    SUM(CASE WHEN is_ref THEN 1 ELSE 0 END) OVER (PARTITION BY run) AS grp_refs
-  FROM diffs
-),
-used AS (SELECT *, (all_ref = 0 OR sp_refs <> grp_refs OR rn % 2 = 1) AS use_row FROM marked),
+{_EVENTS_W2},
 stats AS (
   SELECT run, event_type,
     {sql_davg('CASE WHEN use_row THEN diff END')} AS mean_used,
@@ -303,147 +378,6 @@ thr AS (SELECT quantile_cont(chi2_0, 0.95)::DOUBLE AS chi2_threshold FROM scored
 SELECT sc.event_id, sc.chi2_0, t.chi2_threshold,
        sc.chi2_0 > t.chi2_threshold AS chi2_excluded
 FROM scored sc, thr t
-"""
-
-# ---------------------------------------------------------------------
-# A1/A2: azimuthal integration as binned weighted aggregation
-# ---------------------------------------------------------------------
-
-_Q_MIN, _Q_MAX, _N_BINS = 900.0, 105000.0, 32
-_STEP = (_Q_MAX - _Q_MIN) / _N_BINS
-_CHI_MIN, _CHI_MAX, _N_CHI = 0.0, 0.11, 5
-_CHI_STEP = (_CHI_MAX - _CHI_MIN) / _N_CHI
-
-
-def azint_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-D azimuthal integration (SURVEY A1; trx/azav.py:131-154) over the
-    lineitem 'pixel table'."""
-    li = load_table(spark, sf_dir, "lineitem")
-    out = azav.integrate_1d(
-        li,
-        image=["l_suppkey"],
-        q="l_extendedprice",
-        intensity="l_quantity",
-        weight=F.lit(1.0) + F.col("l_discount"),
-        q_min=_Q_MIN,
-        q_max=_Q_MAX,
-        n_bins=_N_BINS,
-        exact=True,
-    )
-    return out.select("l_suppkey", "q_bin", "i", "err", "n_pix", "q")
-
-
-_AZINT1D_SQL = f"""
-WITH px AS (
-  SELECT l_suppkey,
-    CAST(LEAST(GREATEST(FLOOR((l_extendedprice - {_Q_MIN!r}) / {_STEP!r}), 0), {_N_BINS - 1}) AS INTEGER) AS q_bin,
-    l_quantity - 0.0 AS sig,
-    1.0 + l_discount AS w
-  FROM lineitem)
-SELECT l_suppkey, q_bin,
-  {sql_dsum('sig * w')} / {sql_dsum('w')} AS i,
-  SQRT({sql_dsum('sig')}) / COUNT(*) AS err,
-  CAST(COUNT(*) AS BIGINT) AS n_pix,
-  CAST({_Q_MIN!r} AS DOUBLE) + (q_bin + CAST(0.5 AS DOUBLE)) * CAST({_STEP!r} AS DOUBLE) AS q
-FROM px GROUP BY l_suppkey, q_bin
-"""
-
-
-def azint_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D (q, chi) cake integration (SURVEY A2; trx/azav.py:156-171)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    out = azav.integrate_2d(
-        li,
-        image=["l_suppkey"],
-        q="l_extendedprice",
-        chi="l_discount",
-        intensity="l_quantity",
-        q_min=_Q_MIN,
-        q_max=_Q_MAX,
-        n_q=_N_BINS,
-        chi_min=_CHI_MIN,
-        chi_max=_CHI_MAX,
-        n_chi=_N_CHI,
-        exact=True,
-    )
-    return out.select("l_suppkey", "q_bin", "chi_bin", "i", "n_pix", "q", "chi")
-
-
-_AZINT2D_SQL = f"""
-WITH px AS (
-  SELECT l_suppkey,
-    CAST(LEAST(GREATEST(FLOOR((l_extendedprice - {_Q_MIN!r}) / {_STEP!r}), 0), {_N_BINS - 1}) AS INTEGER) AS q_bin,
-    CAST(LEAST(GREATEST(FLOOR((l_discount - {_CHI_MIN!r}) / {_CHI_STEP!r}), 0), {_N_CHI - 1}) AS INTEGER) AS chi_bin,
-    l_quantity - 0.0 AS sig
-  FROM lineitem)
-SELECT l_suppkey, q_bin, chi_bin,
-  {sql_dsum('sig * 1.0')} / {sql_dsum('1.0')} AS i,
-  CAST(COUNT(*) AS BIGINT) AS n_pix,
-  CAST({_Q_MIN!r} AS DOUBLE) + (q_bin + CAST(0.5 AS DOUBLE)) * CAST({_STEP!r} AS DOUBLE) AS q,
-  CAST({_CHI_MIN!r} AS DOUBLE) + (chi_bin + CAST(0.5 AS DOUBLE)) * CAST({_CHI_STEP!r} AS DOUBLE) AS chi
-FROM px GROUP BY l_suppkey, q_bin, chi_bin
-"""
-
-# ---------------------------------------------------------------------
-# A3: dezinger (window-percentile outlier flag)
-# ---------------------------------------------------------------------
-
-
-def dezinger_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percentile-baseline zinger flags per (image, bin) neighborhood
-    (SURVEY A3/F4; trx/azav.py:119-129)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    px = li.withColumn(
-        "q_bin", azav.q_bin("l_extendedprice", q_min=_Q_MIN, q_max=_Q_MAX, n_bins=_N_BINS)
-    )
-    out = azav.dezinger(
-        px, image=["l_suppkey"], bin_col="q_bin", intensity="l_quantity",
-        percentile=0.5, factor=1.5, baseline_out="baseline",
-    )
-    return out.select(
-        "l_orderkey", "l_linenumber", "l_suppkey", "q_bin",
-        "baseline", "is_zinger",
-    )
-
-
-_DEZINGER_SQL = f"""
-WITH px AS (
-  SELECT l_orderkey, l_linenumber, l_suppkey, l_quantity,
-    CAST(LEAST(GREATEST(FLOOR((l_extendedprice - {_Q_MIN!r}) / {_STEP!r}), 0), {_N_BINS - 1}) AS INTEGER) AS q_bin
-  FROM lineitem)
-SELECT l_orderkey, l_linenumber, l_suppkey, q_bin,
-  quantile_cont(l_quantity, 0.5) OVER (PARTITION BY l_suppkey, q_bin) AS baseline,
-  l_quantity > 1.5 * (quantile_cont(l_quantity, 0.5) OVER (PARTITION BY l_suppkey, q_bin)) AS is_zinger
-FROM px
-"""
-
-# ---------------------------------------------------------------------
-# A10: monitor normalization
-# ---------------------------------------------------------------------
-
-
-def monitor_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-image monitor normalization (SURVEY A10; trx/azav.py:431-452):
-    each order is an image, lines are its curve points."""
-    li = load_table(spark, sf_dir, "lineitem")
-    out = azav.monitor_normalize(
-        li.select("l_orderkey", "l_linenumber", F.col("l_extendedprice").alias("i")),
-        image=["l_orderkey"],
-        intensity="i",
-        err=None,
-        exact=True,
-    )
-    return out.select("l_orderkey", "l_linenumber", "monitor", F.col("i").alias("i_norm"))
-
-
-_MONITOR_SQL = f"""
-WITH t AS (SELECT l_orderkey, l_linenumber, l_extendedprice AS i FROM lineitem),
-m AS (
-  SELECT l_orderkey, l_linenumber, i,
-    {sql_wdsum('i', 'PARTITION BY l_orderkey')}
-      / COUNT(i) OVER (PARTITION BY l_orderkey) AS monitor
-  FROM t)
-SELECT l_orderkey, l_linenumber, monitor, i / monitor AS i_norm FROM m
 """
 
 # ---------------------------------------------------------------------
@@ -488,99 +422,252 @@ FROM withmad
 """
 
 # ---------------------------------------------------------------------
-# J4/F-math9: crystallographic reflection list (generated table)
+# F3: curve-level outlier filter
 # ---------------------------------------------------------------------
 
-_SI_A = 5.431020504
-_TWO_PI = 6.283185307179586
+
+def filter_outlier_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Whole-curve robust chi2 (SURVEY F3; trx/filters.py:83-101): each
+    user is a curve; global median/MAD; flag curves with mean z² ≥ 2.
+
+    Global scalars are two-pass exact-percentile AGGREGATES broadcast
+    back (operators/filters.py:global_mad_scalars) — no
+    single-partition window; the event rows never funnel through one
+    task. Same expression tree → bit-identical to the window form."""
+    from trx_spark.operators.filters import global_mad_scalars
+
+    ev = load_table(spark, sf_dir, "events")
+    stats = global_mad_scalars(ev, value="value", median_out="_med", mad_out="_mad")
+    df = ev.select("user_id", "value").crossJoin(F.broadcast(stats))
+    z = (F.col("value") - F.col("_med")) / F.col("_mad")
+    df = df.withColumn("_z2", z * z)
+    per_curve = df.groupBy("user_id").agg(
+        (dsum(F.col("_z2")) / F.count("_z2")).alias("curve_chi2"),
+        F.count(F.lit(1)).alias("n_shots"),
+    )
+    return per_curve.withColumn("kept", F.col("curve_chi2") < 2.0)
 
 
-def reflections_cubic_si(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hkl cross-product reflection list for cubic Si (SURVEY J4;
-    trx/cell.py:43-61,106). Grouped by the integer h²+k²+l² (bijective
-    with q for a cubic cell — sidesteps float group keys)."""
-    return cell.reflection_list_cubic(spark, a=_SI_A, max_q=3.0, lim=10)
-
-
-_REFLECTIONS_SQL = f"""
-WITH h AS (SELECT i AS h FROM range(-10, 11) t(i)),
-k AS (SELECT i AS k FROM range(-10, 11) t(i)),
-l AS (SELECT i AS l FROM range(-10, 11) t(i)),
-hkl AS (SELECT h, k, l, h*h + k*k + l*l AS s FROM h, k, l),
-q AS (SELECT s, {_TWO_PI!r} * SQRT(s) / {_SI_A!r} AS q FROM hkl)
-SELECT CAST(s AS BIGINT) AS s, q, CAST(COUNT(*) AS BIGINT) AS multiplicity
-FROM q WHERE q < 3.0 GROUP BY s, q
+_OUTLIER_CURVES_SQL = f"""
+WITH g AS (
+  SELECT user_id, value,
+    quantile_cont(value, 0.5) OVER () AS med
+  FROM events
+),
+z AS (
+  SELECT user_id,
+    ((value - med) / (quantile_cont(ABS(value - med), 0.5) OVER () / 0.6744897501960817))
+    * ((value - med) / (quantile_cont(ABS(value - med), 0.5) OVER () / 0.6744897501960817)) AS z2
+  FROM g
+)
+SELECT user_id,
+  {sql_dsum('z2')} / COUNT(z2) AS curve_chi2,
+  CAST(COUNT(*) AS BIGINT) AS n_shots,
+  ({sql_dsum('z2')} / COUNT(z2)) < 2.0 AS kept
+FROM z GROUP BY user_id
 """
 
 # ---------------------------------------------------------------------
-# F-str1/F-str2/F-str5: delay-string codec round-trip
+# Two-axis (shot × q) reduction over the curve bank
 # ---------------------------------------------------------------------
 
+_NQ = 4
+_REF_PRIORITY = "1-URGENT"
+_CURVE_RUNS = 8
 
-def delay_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delay-string codec (SURVEY F-str1/2/5; trx/utils/string.py:15-47,
-    trx/id9.py:62-67): synthesize delay strings from event ids, parse to
-    seconds, format back."""
-    from trx_spark.functions.strings import delay_to_num, time_to_str
 
-    ev = load_table(spark, sf_dir, "events")
-    n = (F.col("event_id") % 2001 - 1000).cast("long")
-    s = F.when(F.col("event_id") % 7 == 0, F.lit("off")).otherwise(
-        F.concat(n.cast("string"), F.lit("ps"))
+def _curves(spark: SparkSession, sf_dir: str, *, n_runs: int = _CURVE_RUNS) -> DataFrame:
+    """Curve bank sharded into runs (run = o_orderkey % 8): acquisition
+    order is per-run, so every window downstream partitions by run and
+    no global sort survives at scale. Gate default matches the oracle
+    CTE; a deployment sets ``n_runs`` ∝ corpus (curves per run ≈ one
+    task's window-sort budget)."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    w_line = Window.partitionBy("l_orderkey").orderBy(
+        "l_linenumber", "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
     )
-    df = ev.select("event_id").withColumn("delay_str", s)
-    df = df.withColumn("delay_s", delay_to_num("delay_str"))
-    return df.withColumn("roundtrip", time_to_str("delay_s"))
+    # completeness via a count window over the SAME partition as the
+    # rank window — rides the one l_orderkey shuffle instead of a
+    # separate groupBy + semi-join (n ≥ NQ ⇔ the capped order has
+    # exactly NQ points)
+    w_cnt = Window.partitionBy("l_orderkey")
+    lines = (
+        # explicit projection BEFORE the windows: Catalyst does not
+        # prune columns past the dual window frames, so without this
+        # the exchange shuffles all 16 lineitem columns to rank 6
+        # (measured 2.2 s vs 0.7 s at sf0.1)
+        li.select(
+            "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
+            "l_extendedprice", "l_quantity",
+        )
+        .withColumn("q_idx", F.row_number().over(w_line))
+        .withColumn("_n", F.count(F.lit(1)).over(w_cnt))
+        .filter((F.col("q_idx") <= _NQ) & (F.col("_n") >= _NQ))
+        .drop("_n")
+    )
+    full = lines.filter(F.col("q_idx") == 1).select("l_orderkey")
+    w_idx = Window.partitionBy("run").orderBy("o_orderkey")
+    keys = (
+        orders.join(
+            full.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey", "left_semi"
+        )
+        .withColumn("run", (F.col("o_orderkey") % n_runs).cast("long"))
+        .select(
+            "o_orderkey",
+            "run",
+            F.col("o_orderpriority").alias("scan"),
+            F.row_number().over(w_idx).alias("idx"),
+        )
+    )
+    return (
+        # keys is one row per curve — proportional to data volume, so no
+        # broadcast hint (AQE broadcasts at sf0.1, shuffles at 100 TB;
+        # both sides already hash on the same orderkey)
+        lines.join(
+            keys, lines.l_orderkey == keys.o_orderkey
+        )
+        .select(
+            F.col("l_orderkey").alias("file"),
+            "run",
+            "q_idx",
+            F.col("l_extendedprice").alias("i"),
+            "scan",
+            F.col("idx").cast("long").alias("idx"),
+            (F.col("scan") == _REF_PRIORITY).alias("is_ref"),
+        )
+    )
 
 
-_DELAY_SQL = """
-WITH d AS (
-  SELECT event_id,
-    CASE WHEN event_id % 7 = 0 THEN 'off'
-         ELSE CAST(CAST(event_id % 2001 - 1000 AS BIGINT) AS VARCHAR) || 'ps' END AS delay_str,
-    CASE WHEN event_id % 7 = 0 THEN -10.0
-         ELSE CAST(CAST(event_id % 2001 - 1000 AS BIGINT) AS DOUBLE) * 1e-12 END AS delay_s
-  FROM events
+_CURVES_CTE = f"""
+lines AS (
+  SELECT l_orderkey, l_extendedprice AS i,
+         row_number() OVER (PARTITION BY l_orderkey
+            ORDER BY l_linenumber, l_partkey, l_suppkey, l_extendedprice, l_quantity) AS q_idx
+  FROM lineitem
+),
+capped AS (SELECT * FROM lines WHERE q_idx <= {_NQ}),
+full_orders AS (
+  SELECT l_orderkey FROM capped GROUP BY l_orderkey HAVING COUNT(*) = {_NQ}
+),
+keys AS (
+  SELECT o_orderkey, CAST(o_orderkey % {_CURVE_RUNS} AS BIGINT) AS run,
+         o_orderpriority AS scan,
+         row_number() OVER (PARTITION BY o_orderkey % {_CURVE_RUNS} ORDER BY o_orderkey) AS idx
+  FROM orders WHERE o_orderkey IN (SELECT l_orderkey FROM full_orders)
+),
+curves AS (
+  SELECT c.l_orderkey AS file, k.run, c.q_idx, c.i, k.scan, CAST(k.idx AS BIGINT) AS idx,
+         (k.scan = '{_REF_PRIORITY}') AS is_ref
+  FROM capped c
+  JOIN full_orders f ON c.l_orderkey = f.l_orderkey
+  JOIN keys k ON c.l_orderkey = k.o_orderkey
+)"""
+
+_INTERP_2D_CTE = _CURVES_CTE + ",\n" + _asof_sql("curves", ["run", "q_idx"])
+_CURVES_W2 = _w2_sql(["run", "q_idx"], "scan")
+
+
+# Both curve-bank queries consume the SAME interpolated-diff bank; the
+# localCheckpoint is memoized so the second query reuses the
+# materialized blocks instead of rebuilding the 600 k-row bank (the
+# dominant cost of each query).
+def _diffs_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return memo(
+        "curve_diff_bank",
+        (spark, sf_dir),
+        lambda: reduction.time_resolved_diff(
+            _curves(spark, sf_dir), group=["run", "q_idx"], idx="idx",
+            is_ref="is_ref", value="i",
+        ).localCheckpoint(),
+    )
+
+
+def curves_scan_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(scan, q) reduction over the curve bank (A4-A6 on the true
+    two-axis layout — q is just another group key)."""
+    d = _diffs_2d(spark, sf_dir)
+    return reduction.average_scan_points(
+        d, scan="scan", group=["run", "q_idx"], idx="idx", is_ref="is_ref", diff="diff",
+        exact=True,
+    ).select(
+        "run",
+        "scan",
+        F.col("q_idx").cast("long").alias("q_idx"),
+        "n_shots",
+        "n_used",
+        "mean_diff",
+        "noise",
+        "err_of_mean",
+    )
+
+
+_CURVES_STATS_SQL = f"""
+WITH {_INTERP_2D_CTE},
+{_CURVES_W2}
+SELECT run, scan, q_idx,
+  CAST(count(*) AS BIGINT) AS n_shots,
+  CAST(SUM(CASE WHEN use_row THEN 1 ELSE 0 END) AS BIGINT) AS n_used,
+  {sql_davg('CASE WHEN use_row THEN diff END')} AS mean_diff,
+  {sql_dstddev_pop('diff')} AS noise,
+  {sql_dstddev_pop('diff')} / SQRT(count(*)) AS err_of_mean
+FROM used GROUP BY run, scan, q_idx
+"""
+
+
+def curves_chi2_per_shot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-shot chi2_0 with the q-axis sum (A7 at its true grain:
+    Σ_q z² / nQ per shot)."""
+    d = _diffs_2d(spark, sf_dir)
+    return reduction.chi2_0_per_shot_curves(
+        d, shot="file", scan="scan", q="q_idx", group=["run"], idx="idx",
+        is_ref="is_ref", diff="diff", exact=True,
+    )
+
+
+_CURVES_CHI2_SQL = f"""
+WITH {_INTERP_2D_CTE},
+{_CURVES_W2},
+stats AS (
+  SELECT run, scan, q_idx,
+    {sql_davg('CASE WHEN use_row THEN diff END')} AS mean_used,
+    {sql_dstddev_pop('diff')} AS noise
+  FROM used GROUP BY run, scan, q_idx
+),
+z AS (
+  SELECT u.run, u.file, u.scan, u.use_row,
+    ((u.diff - s.mean_used)/s.noise) * ((u.diff - s.mean_used)/s.noise) AS z2
+  FROM used u JOIN stats s ON u.run = s.run AND u.scan = s.scan AND u.q_idx = s.q_idx
 )
-SELECT event_id, delay_str, delay_s,
-  CASE
-    WHEN ABS(delay_s) >= 1 THEN printf('%+.0f', delay_s) || 's'
-    WHEN ABS(delay_s) >= 1e-3 THEN printf('%+.0f', delay_s * 1e3) || 'ms'
-    WHEN ABS(delay_s) >= 1e-6 THEN printf('%+.0f', delay_s * 1e6) || 'us'
-    WHEN ABS(delay_s) >= 1e-9 THEN printf('%+.0f', delay_s * 1e9) || 'ns'
-    WHEN ABS(delay_s) >= 1e-12 THEN printf('%+.0f', delay_s * 1e12) || 'ps'
-    WHEN ABS(delay_s) >= 1e-15 THEN printf('%+.0f', delay_s * 1e12) || 'fs'
-    WHEN ABS(delay_s) >= 1e-18 THEN printf('%+.0f', delay_s * 1e12) || 'as'
-    ELSE CAST(delay_s AS VARCHAR) || 's'
-  END AS roundtrip
-FROM d
+SELECT run, file, scan,
+  {sql_dsum('z2')} / COUNT(*) AS chi2_0,
+  CAST(COUNT(*) AS BIGINT) AS n_q
+FROM z WHERE use_row GROUP BY run, file, scan
 """
 
 
 QUERIES = {
     "asof_interp_refs": asof_interp_refs,
+    "asof_interp_per_user": asof_interp_per_user,
     "scanpoint_stats": scanpoint_stats,
     "diffs_plus_ref": diffs_plus_ref,
+    "global_curve_stats": global_curve_stats,
     "chi2_filter_auto": chi2_filter_auto,
-    "azint_1d": azint_1d,
-    "azint_2d": azint_2d,
-    "dezinger_flags": dezinger_flags,
-    "monitor_norm": monitor_norm,
     "mad_outliers": mad_outliers,
-    "reflections_cubic_si": reflections_cubic_si,
-    "delay_codec": delay_codec,
+    "filter_outlier_curves": filter_outlier_curves,
+    "curves_scan_stats": curves_scan_stats,
+    "curves_chi2_per_shot": curves_chi2_per_shot,
 }
 
 ORACLES = {
     "asof_interp_refs": _ASOF_SQL,
+    "asof_interp_per_user": _ASOF_USER_SQL,
     "scanpoint_stats": _SCAN_SQL,
     "diffs_plus_ref": _DPR_SQL,
+    "global_curve_stats": _GLOBAL_STATS_SQL,
     "chi2_filter_auto": _CHI2_FILTER_SQL,
-    "azint_1d": _AZINT1D_SQL,
-    "azint_2d": _AZINT2D_SQL,
-    "dezinger_flags": _DEZINGER_SQL,
-    "monitor_norm": _MONITOR_SQL,
     "mad_outliers": _MAD_SQL,
-    "reflections_cubic_si": _REFLECTIONS_SQL,
-    "delay_codec": _DELAY_SQL,
+    "filter_outlier_curves": _OUTLIER_CURVES_SQL,
+    "curves_scan_stats": _CURVES_STATS_SQL,
+    "curves_chi2_per_shot": _CURVES_CHI2_SQL,
 }
